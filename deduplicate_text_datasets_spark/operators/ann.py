@@ -109,7 +109,7 @@ def cosine_topk(
 
     def kernel(batches) -> "Iterator[pd.DataFrame]":
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not qids:  # no queries: an empty result
                 continue
             ids = pdf["neighbor_id"].to_numpy(np.int64)
             m = np.stack(
@@ -313,7 +313,6 @@ def cosine_pairs(
     target_recall: float = 0.99999,
     vec_col: str = "embedding",
     max_bucket_size: int = 100_000,
-    copartition: bool = True,
     salted_bucket_max: int = 1_000_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b, cos_mil) with cosine
@@ -346,11 +345,10 @@ def cosine_pairs(
         # consumed by the size agg, the join-back and both self-join sides
         # — persist so the hyperplane kernel runs once (scope-registered,
         # plans.caching), co-partitioned on the bucket key so the consumers
-        # run on the cached partitioning (self_similar copartition design)
-        b = hyperplane_bands(emb, dim, tables, bits, vec_col)
-        if copartition:
-            b = b.repartition("bucket")
-        b = scoped_persist(b)
+        # run on the cached partitioning
+        b = scoped_persist(
+            hyperplane_bands(emb, dim, tables, bits, vec_col).repartition("bucket")
+        )
         # two consumers (fast-path filter + hot-bucket filter)
         sizes = scoped_persist(
             b.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsize"))

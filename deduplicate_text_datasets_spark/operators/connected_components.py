@@ -144,8 +144,8 @@ def connected_components(
                 F.least("src", "dst").alias("v"),
             )
         )
-        # count+collect probe (plans.caching.probe_rows): no CollectLimit
-        # escalation ladder, nothing shipped when the frame is over-guard
+        # single-action probe (plans.caching.probe_rows): one pull, no
+        # CollectLimit escalation ladder; discarded when over the guard
         pdf = probe_rows(raw, driver_max_edges)
         if pdf is not None:
             if len(pdf) == 0:

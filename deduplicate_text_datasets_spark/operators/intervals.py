@@ -68,8 +68,8 @@ def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
     )
     if driver_max > 0:
         pos_p = scoped_persist(pos_narrow)
-        # count+collect probe (plans.caching.probe_rows): no CollectLimit
-        # escalation ladder, nothing shipped when the frame is over-guard
+        # single-action probe (plans.caching.probe_rows): one pull, no
+        # CollectLimit escalation ladder; discarded when over the guard
         pdf = probe_rows(pos_p, driver_max)
         if pdf is not None:
             arr = np.sort(pdf["pos"].to_numpy(np.int64))

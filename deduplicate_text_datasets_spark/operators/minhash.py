@@ -144,9 +144,7 @@ def lsh_buckets(signatures: DataFrame, cfg: MinHashConfig) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    buckets: DataFrame, cfg: MinHashConfig, copartition: bool = True
-) -> DataFrame:
+def candidate_pairs(buckets: DataFrame, cfg: MinHashConfig) -> DataFrame:
     """Distinct (a, b) candidate doc pairs from shared LSH buckets.
 
     Bucket-size policy (north_rule: explicit salting of skewed buckets):
@@ -180,6 +178,7 @@ def candidate_pairs(
     pair_cap = int(
         os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
     )
+    raw = None
     if driver_max > 0:
         raw = scoped_persist(buckets)
         pdf = probe_rows(raw, driver_max)
@@ -196,18 +195,16 @@ def candidate_pairs(
                 # then run the exact-Jaccard verify on the driver too
                 out._driver_pairs_pdf = pairs_pdf
                 return out
-        buckets = raw  # persisted: the distributed plan reuses the cache
+        buckets = raw  # persisted: the repartition below reads the cache
 
     # three consumers (size agg + join-back + both sides of the pair
     # self-join) — persist or the upstream signature kernel re-executes for
-    # each. Co-partitioned on the bucket key before caching (same design as
-    # suffix.self_similar copartition, BASELINE.md round-4 section): the
-    # agg and the self-join then run on the cached partitioning instead of
-    # re-exchanging the bucket frame per consumer — at web scale the
-    # filtered size frame outgrows broadcast and those exchanges are real.
-    if copartition:
-        buckets = buckets.repartition("band", "bucket")
-    buckets = scoped_persist(buckets)
+    # each. Co-partitioned on the bucket key before caching (BASELINE.md
+    # round-4 section): the agg and the self-join then run on the cached
+    # partitioning instead of re-exchanging the bucket frame per consumer —
+    # at web scale the filtered size frame outgrows broadcast and those
+    # exchanges are real.
+    buckets = scoped_persist(buckets.repartition("band", "bucket"))
     # consumed twice (fast-path filter + hot-bucket filter): persist the
     # tiny size frame rather than re-aggregating the bucket frame per use
     sizes = scoped_persist(
@@ -233,6 +230,10 @@ def candidate_pairs(
     has_hot = bool(
         sizes.filter(F.col("bsize") > cfg.max_bucket_size).limit(1).count()
     )
+    # has_hot aggregated every partition of the repartitioned copy, so it
+    # is cached now and the probe-path copy is dead weight
+    if raw is not None:
+        raw.unpersist(blocking=False)
     if not has_hot:
         return pairs.distinct()
     hot = buckets.join(
@@ -247,7 +248,7 @@ def candidate_pairs(
 
 def _bucket_pairs(sized: DataFrame, cfg: MinHashConfig) -> DataFrame:
     """All (a < b) doc pairs within each size-capped bucket via the
-    copartitioned self-join. (A collect_list + Catalyst pair-expansion
+    co-partitioned self-join. (A collect_list + Catalyst pair-expansion
     variant was A/B'd in round 6 and did not beat this once
     preferSortMergeJoin=false let the planner pick a sort-free
     shuffled-hash/broadcast join — the SMJ sorts were the actual cost.)"""
@@ -418,10 +419,7 @@ def verify_pairs(
 
 
 def candidate_pairs_across(
-    buckets_a: DataFrame,
-    buckets_b: DataFrame,
-    cfg: MinHashConfig,
-    copartition: bool = True,
+    buckets_a: DataFrame, buckets_b: DataFrame, cfg: MinHashConfig
 ) -> DataFrame:
     """Distinct (a, b) candidate pairs ACROSS two corpora from shared LSH
     buckets — the doc-level analogue of the reference's across-similar
@@ -453,6 +451,7 @@ def candidate_pairs_across(
     pair_cap = int(
         os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
     )
+    raw_a = raw_b = None
     if driver_max > 0:
         raw_a = scoped_persist(buckets_a)
         raw_b = scoped_persist(buckets_b)
@@ -476,11 +475,8 @@ def candidate_pairs_across(
                 return out
         buckets_a, buckets_b = raw_a, raw_b  # persisted for the plans below
 
-    if copartition:
-        buckets_a = buckets_a.repartition("band", "bucket")
-        buckets_b = buckets_b.repartition("band", "bucket")
-    buckets_a = scoped_persist(buckets_a)
-    buckets_b = scoped_persist(buckets_b)
+    buckets_a = scoped_persist(buckets_a.repartition("band", "bucket"))
+    buckets_b = scoped_persist(buckets_b.repartition("band", "bucket"))
     na = buckets_a.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("na"))
     nb = buckets_b.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("nb"))
     # joint is tiny (bucket-overlap keys only) but feeds the plain AND hot
@@ -500,6 +496,10 @@ def candidate_pairs_across(
     has_hot = bool(
         joint.filter((F.col("na") > cap) | (F.col("nb") > cap)).limit(1).count()
     )
+    # both size aggs read every cached partition: drop the probe-path copies
+    for r in (raw_a, raw_b):
+        if r is not None:
+            r.unpersist(blocking=False)
     if not has_hot:
         return plain.distinct()
     hot_keys = joint.filter(
@@ -517,7 +517,6 @@ def near_duplicate_edges(
     docs: DataFrame,
     cfg: MinHashConfig,
     text_col: str = "text",
-    copartition: bool = True,
 ) -> DataFrame:
     """documents -> verified near-duplicate edges (a, b, jaccard).
 
@@ -531,7 +530,7 @@ def near_duplicate_edges(
 
     shingled = scoped_persist(doc_shingles(docs, cfg, text_col))
     sigs = minhash_signatures(shingled, cfg)
-    pairs = candidate_pairs(lsh_buckets(sigs, cfg), cfg, copartition)
+    pairs = candidate_pairs(lsh_buckets(sigs, cfg), cfg)
     return verify_pairs(pairs, shingled, cfg)
 
 
@@ -540,7 +539,6 @@ def near_duplicate_edges_across(
     docs_b: DataFrame,
     cfg: MinHashConfig,
     text_col: str = "text",
-    copartition: bool = True,
 ) -> DataFrame:
     """Verified near-duplicate pairs ACROSS two corpora:
     (a from docs_a, b from docs_b, inter, union, jaccard) with exact
@@ -562,5 +560,5 @@ def near_duplicate_edges_across(
     shb = scoped_persist(doc_shingles(docs_b, cfg, text_col))
     ba = lsh_buckets(minhash_signatures(sha, cfg), cfg)
     bb = lsh_buckets(minhash_signatures(shb, cfg), cfg)
-    pairs = candidate_pairs_across(ba, bb, cfg, copartition)
+    pairs = candidate_pairs_across(ba, bb, cfg)
     return verify_pairs_across(pairs, sha, shb, cfg)

@@ -25,7 +25,6 @@ def jaccard_pairs(
     threshold_den: int = 5,
     text_col: str = "text",
     max_shingle_df: int = 10000,
-    copartition: bool = True,
     salted_shingle_df: int = 100_000,
 ) -> DataFrame:
     """All doc pairs with shingle-Jaccard >= threshold_num/threshold_den.
@@ -59,11 +58,8 @@ def jaccard_pairs(
     )
     # pruned postings feed BOTH sides of the shingle-key self-join:
     # co-partition on g before caching so the join co-locates without
-    # re-exchanging each side (suffix.self_similar copartition design)
-    kept = inv.join(dfc.select("g"), "g")
-    if copartition:
-        kept = kept.repartition("g")
-    kept = scoped_persist(kept)
+    # re-exchanging each side
+    kept = scoped_persist(inv.join(dfc.select("g"), "g").repartition("g"))
     a = kept.select(F.col("g").alias("g"), F.col("doc_id").alias("a"))
     b = kept.select(F.col("g").alias("g"), F.col("doc_id").alias("b"))
     plain = a.join(b, "g").filter(F.col("a") < F.col("b")).select("a", "b")

@@ -53,6 +53,7 @@ from .suffix import (
     POSITIONS_SCHEMA,
     QUERY_HITS_SCHEMA,
     _batched_match_lens,
+    _count_with_baseline,
     _sa_range,
     suffix_array,
 )
@@ -241,27 +242,12 @@ def count_occurrences_indexed(
                     continue
                 rows.append((qid, int(len(owned)), int(owned.min())))
         out = pd.DataFrame(rows, columns=["query_id", "cnt", "first_pos"])
-        yield out.astype({"query_id": "int64", "cnt": "int64"})
+        yield out.astype(
+            {"query_id": "int64", "cnt": "int64", "first_pos": "int64"}
+        )
 
-    # baseline (qid, 0, null) rows ride the same aggregation as a local
-    # relation: every query reaches the groupBy even with zero hits, so
-    # the result needs no left join back against a query frame (round-6 —
-    # one broadcast join less per call; sum/min treat them as identity)
-    spark = index.sparkSession
-    baseline = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": np.array([qid for qid, _ in qarr], np.int64),
-                "cnt": np.zeros(len(qarr), np.int64),
-                "first_pos": pd.array([None] * len(qarr), dtype="Int64"),
-            }
-        ),
-        QUERY_HITS_SCHEMA,
-    )  # pandas input -> local relation (a list parallelizes into RDD slices)
     hits = index.mapInPandas(kernel, QUERY_HITS_SCHEMA)
-    return hits.unionByName(baseline).groupBy("query_id").agg(
-        F.sum("cnt").alias("count"), F.min("first_pos").alias("first_pos")
-    )
+    return _count_with_baseline(hits, [qid for qid, _ in qarr])
 
 
 def find_positions_indexed(

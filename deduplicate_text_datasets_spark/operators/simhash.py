@@ -88,7 +88,6 @@ def simhash_candidates(
     fingerprints: DataFrame,
     cfg: SimHashConfig,
     max_bucket_size: int = 5000,
-    copartition: bool = True,
     salted_bucket_max: int = 50_000,
 ) -> DataFrame:
     """Candidate pairs agreeing on >= 1 of the k+1 blocks (complete for
@@ -110,9 +109,8 @@ def simhash_candidates(
     # consumed by the size agg, the join-back, and both sides of the pair
     # self-join — persist or the fingerprint kernel re-executes for each;
     # scope-registered (plans.caching) so a cache_scope() caller reclaims
-    # it. Co-partitioned on the block key before caching (the
-    # suffix.self_similar copartition design) so the consumers run on the
-    # cached partitioning instead of re-exchanging per consumer.
+    # it. Co-partitioned on the block key before caching so the consumers
+    # run on the cached partitioning instead of re-exchanging per consumer.
     def exploded_from(src: DataFrame) -> DataFrame:
         return src.select(
             "doc_id",
@@ -203,9 +201,7 @@ def simhash_candidates(
         # cached fingerprint frame (the kernel never re-runs)
         exploded = exploded_from(raw)
 
-    if copartition:
-        exploded = exploded.repartition("block", "value")
-    exploded = scoped_persist(exploded)
+    exploded = scoped_persist(exploded.repartition("block", "value"))
     # two consumers (fast-path filter + hot-bucket filter)
     sizes = scoped_persist(
         exploded.groupBy("block", "value").agg(

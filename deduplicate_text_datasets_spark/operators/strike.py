@@ -174,9 +174,12 @@ def apply_removals(
     if fast is not None:
         import os
 
+        from ..plans.caching import scoped_broadcast
+
         t_ids, t_a, t_b, t_off = fast
         spark = docs_with_offsets.sparkSession
-        bc = spark.sparkContext.broadcast((t_ids, t_a, t_b, t_off))
+        # scope-registered: destroyed at cache_scope exit (plans.caching)
+        bc = scoped_broadcast(spark.sparkContext, (t_ids, t_a, t_b, t_off))
         # Single-pass variant: when the whole corpus is small (total-bytes
         # memo under the guard), ship EVERY doc through one splice kernel
         # — untouched rows pass through byte-unchanged — instead of the

@@ -6,13 +6,13 @@ sorted order so equal length-L windows become *adjacent runs*
 (cmd_self_similar main.rs:807-960). The global SA is an artifact of
 single-machine design — at 10^12 docs it is petabytes streamed through one
 node (main.rs:817-826). The Spark-native equivalent of "group positions
-whose length-L windows are identical" is a **groupBy on a 128-bit window
+whose length-L windows are identical" is a **clustering on a 128-bit window
 fingerprint**:
 
   per shard (Arrow kernel, no per-row Python):
       rolling polynomial hash of every length-L window     O(n) vectorized
   global:
-      groupBy(h1, h2) with map-side partial aggregation    1 shuffle of
+      repartition(h1, h2) + sorted run-length pass         1 shuffle of
                                                            24 B/position
 
 Equality of fingerprints == equality of windows up to hash collisions;
@@ -273,19 +273,13 @@ def _apply_shard_kernel(
     kernel,
     schema: T.StructType,
 ) -> DataFrame:
-    """Run a per-shard iterator kernel under the configured layout.
-
-    Default (`range`): `_shards_one_per_task` — explicit range layout so
-    few-shard corpora (production 64 MiB widths) get one shard per task
-    instead of hash-colliding onto one reducer. Its cost is the range
-    partitioner's sampling job, one extra pass over the (cheap, cached)
-    shard projection. `SPARK_GRAFT_SHARD_LAYOUT=groupby` keeps the legacy
-    hash-groupBy layout for A/B runs; the SAME kernel serves both because
-    `_iter_shard_groups` degenerates to one group under groupBy.
+    """Run a per-shard iterator kernel over `_shards_one_per_task`: an
+    explicit range layout so few-shard corpora (production 64 MiB widths)
+    get one shard per task instead of hash-colliding onto one reducer. Its
+    cost is the range partitioner's sampling job, one extra pass over the
+    (cheap, cached) shard projection.
     """
     proj = shards.select("shard_id", "doc_id", "byte_start", "text")
-    if os.environ.get("SPARK_GRAFT_SHARD_LAYOUT", "range") == "groupby":
-        return proj.groupBy("shard_id").applyInPandas(kernel, schema)
     return _shards_one_per_task(proj, total, shard_bytes).mapInPandas(
         kernel, schema
     )
@@ -397,42 +391,6 @@ def window_keys(
                                WINDOW_KEY_SCHEMA)
 
 
-def find_duplicates(fingerprints: DataFrame, cfg: ExactSubstrConfig) -> DataFrame:
-    """Self-similar (cmd_self_similar, main.rs:807-960): group positions by
-    window fingerprint; clusters of size >= 2 (and > frequency_threshold,
-    main.rs:914) are duplicates.
-
-    Plan shape: groupBy(h1, h2) with map-side partial aggregation
-    (count+min combine before the exchange, so the paper's 60,000x-repeated
-    C4 boilerplate window — README.md:10 — contributes one row per mapper,
-    not 10^8 rows to one reducer), then the filtered duplicate-key stats
-    join back onto the fingerprint frame. The join's hot keys are split by
-    AQE skew-join handling; the round-1 count-over-window variant pinned
-    every member of a hot window in one unsplittable WindowExec partition.
-
-    ``fingerprints`` is consumed twice (agg + join-back) — callers must
-    persist it or the shard fingerprint kernels re-run (see self_similar).
-
-    Returns duplicates(pos, cluster_id, cluster_size), cluster_id = min
-    member position (deterministic; reference numbering is order-dependent
-    so we fix min-member, SURVEY.md §7).
-    """
-    stats = (
-        fingerprints.groupBy("h1", "h2")
-        .agg(
-            F.count(F.lit(1)).alias("cluster_size"),
-            F.min("pos").alias("cluster_id"),
-        )
-        .filter(
-            (F.col("cluster_size") >= 2)
-            & (F.col("cluster_size") > cfg.frequency_threshold)
-        )
-    )
-    return fingerprints.join(stats, ["h1", "h2"]).select(
-        "pos", "cluster_id", "cluster_size"
-    )
-
-
 DUPLICATES_SCHEMA = T.StructType(
     [
         T.StructField("pos", T.LongType(), False),
@@ -467,24 +425,25 @@ def _dup_group_rows(pdf: pd.DataFrame, min_count: int) -> pd.DataFrame:
 def find_duplicates_mappass(
     fingerprints: DataFrame, cfg: ExactSubstrConfig
 ) -> DataFrame:
-    """Single-pass variant of find_duplicates: same output contract
-    (pos, cluster_id=min member, cluster_size; size >= 2 and >
-    frequency_threshold), different physical plan.
+    """Self-similar (cmd_self_similar, main.rs:807-960): group positions by
+    window fingerprint; clusters of size >= 2 (and > frequency_threshold,
+    main.rs:914) are duplicates.
 
     repartition(h1, h2) -> sortWithinPartitions(h1, h2, pos) -> ONE
     vectorized Arrow pass per partition. Every (h1, h2) group is
     contiguous in its sorted partition, so cluster_size is a run length
     and cluster_id is the run head — no hash aggregation, no join-back,
     and the fingerprint frame has exactly ONE consumer (no persist, no
-    second kernel run). Exchange: the same single 24 B/position shuffle
-    as the copartition plan; the agg exchange (~32 B/position of
-    mostly-unique keys that defeat map-side combine) disappears.
+    second kernel run). Exchange: one 24 B/position shuffle.
+
+    Returns duplicates(pos, cluster_id, cluster_size), cluster_id = min
+    member position (deterministic; reference numbering is order-dependent
+    so we fix min-member, SURVEY.md §7).
 
     Memory: the kernel buffers at most one straddling group between Arrow
     batches (60k-dup C4 boilerplate window ~= 1.4 MB; a pathological
-    10^8-member group ~= 2.4 GB — the same rows the agg plan's join-back
-    routes through AQE skew-split tasks, so the exposure is a buffer
-    instead of a task, bounded by the hottest single window's dup count).
+    10^8-member group ~= 2.4 GB, bounded by the hottest single window's
+    dup count).
     """
     min_count = max(2, cfg.frequency_threshold + 1)
     clustered = fingerprints.repartition("h1", "h2").sortWithinPartitions(
@@ -530,122 +489,52 @@ def find_duplicates_mappass(
     return clustered.mapInPandas(kernel, DUPLICATES_SCHEMA)
 
 
-def _prefilter_sketch_bc(
-    dup_keys: DataFrame, max_keys: int, sketch_mode: str | None = None
-):
-    """Dup-key frame -> broadcast membership sketch (None = no prefilter).
+def _key_sketch_bc(dup_keys: DataFrame, max_keys: int):
+    """Dup-key frame -> broadcast membership sketch.
 
-    Modes (env SPARK_GRAFT_FP_SKETCH):
-      * ``auto`` (default) — exact sorted-int64 set while it fits the
-        broadcast guard (``max_keys``), **Bloom filter above it** — the
-        round-4 cliff (guard exceeded -> prefilter silently off, exactly
-        in the dup-dense regime) is gone: Bloom false positives only ADD
-        candidate positions (discarded by the exact post-shuffle (h1, h2)
-        stats filter), false negatives are impossible, so recall is exact
-        at ANY key count with a bounded broadcast
-        (SPARK_GRAFT_FP_BLOOM_MAX_BYTES, default 64 MiB).
-      * ``set``  — round-4 behavior (set or give up), kept A/B-able.
-      * ``bloom`` — force the Bloom path at any size (benches/tests).
+    An exact sorted-int64 set while it fits the broadcast guard
+    (``max_keys``), a Bloom filter above it: Bloom false positives only ADD
+    candidate positions (discarded by the exact post-shuffle (h1, h2)
+    grouping), false negatives are impossible, so recall is exact at ANY
+    key count with a bounded broadcast (SPARK_GRAFT_FP_BLOOM_MAX_BYTES,
+    default 64 MiB).
     """
-    import os
-    import warnings
-
-    if sketch_mode is None:
-        sketch_mode = os.environ.get("SPARK_GRAFT_FP_SKETCH", "auto")
-    sc = dup_keys.sparkSession.sparkContext
-    if sketch_mode != "set":
-        # the key frame feeds up to three jobs on the Bloom path (guard
-        # probe, count, slice build) — persist it once, scope-reclaimed
-        from ..plans.caching import scoped_persist
-
-        dup_keys = scoped_persist(dup_keys)
-    if sketch_mode != "bloom":
-        key_pdf = dup_keys.limit(max_keys + 1).toPandas()
-        if len(key_pdf) <= max_keys:
-            keys = np.sort(key_pdf["k"].to_numpy(np.int64))
-            return sc.broadcast(keys)
-        if sketch_mode == "set":
-            warnings.warn(
-                f"self_similar prefilter: dup-key set exceeds "
-                f"{max_keys} keys (corpus is dup-dense); falling "
-                "back to the copartition plan",
-                stacklevel=3,
-            )
-            return None
+    from ..plans.caching import scoped_broadcast, scoped_persist
     from .sketch import build_bloom_sketch
 
+    sc = dup_keys.sparkSession.sparkContext
+    # the key frame feeds up to three jobs on the Bloom path (guard probe,
+    # count, slice build) — persist it once, scope-reclaimed
+    dup_keys = scoped_persist(dup_keys)
+    key_pdf = dup_keys.limit(max_keys + 1).toPandas()
+    if len(key_pdf) <= max_keys:
+        return scoped_broadcast(sc, np.sort(key_pdf["k"].to_numpy(np.int64)))
     n = dup_keys.count()
-    if n == 0:
-        return sc.broadcast(np.empty(0, dtype=np.int64))
     max_bytes = int(
         os.environ.get("SPARK_GRAFT_FP_BLOOM_MAX_BYTES", str(64 << 20))
     )
-    return sc.broadcast(build_bloom_sketch(dup_keys, n, max_bytes=max_bytes))
+    return scoped_broadcast(
+        sc, build_bloom_sketch(dup_keys, n, max_bytes=max_bytes)
+    )
 
 
 def self_similar(
     docs: DataFrame,
     cfg: ExactSubstrConfig,
     total: int | None = None,
-    persist_fp: bool | None = None,
-    copartition: bool | None = None,
     prefilter: bool | None = None,
     prefilter_max_keys: int | None = None,
-    prefilter_sketch: str | None = None,
-    dedup_pass: str | None = None,
 ) -> DataFrame:
     """documents -> duplicates(pos, cluster_id, cluster_size).
 
-    dedup_pass selects the clustering plan over the fingerprint frame
-    (env SPARK_GRAFT_FP_DEDUP):
+    Plan: the shard fingerprint kernels feed find_duplicates_mappass — one
+    (h1, h2) exchange, sorted partitions, a single vectorized Arrow pass.
+    The fingerprint frame has one consumer, so it is never persisted.
 
-    * ``mappass`` (default, round-5) — find_duplicates_mappass: one
-      (h1, h2) exchange -> sorted partitions -> single vectorized Arrow
-      pass. The fingerprint frame becomes single-consumer, so
-      persist_fp/copartition are moot and skipped (no 24 B/position
-      cache at all); the prefilter still composes (pass-2 frame shrinks
-      identically). Motivation: the stress profile at 30k docs/64 MiB
-      shards showed the agg plan's stats+join-back at 44% of all CPU;
-      measured at sf0.1 mappass is 0.70x wall at identical exchange
-      bytes and identical output (scripts/measure_exchange.py
-      --modes=copart,mappass; BASELINE.md round-5).
-    * ``agg`` — find_duplicates: groupBy stats + join-back, fingerprint
-      frame persisted/copartitioned per the kwargs below (round-4 plan;
-      kept A/B-able — it routes pathological single-window hot groups
-      through AQE skew-split tasks instead of one kernel buffer).
-
-    find_duplicates consumes the fingerprint frame twice (stats agg +
-    join-back). Two strategies:
-
-    * persist_fp=True (default): persist MEMORY_AND_DISK — the rolling-hash
-      kernels run once; the frame (24 B/position) is written to and read
-      from storage. Right when executors bring their own disks/memory
-      (real cluster) or the kernel input scan is expensive.
-    * persist_fp=False: recompute the kernels for the second consumer —
-      pure CPU that scales with cores, trading ~2x kernel compute for zero
-      storage traffic. Right on storage-bandwidth-bound hosts (this
-      sandbox's single shared disk) when the doc frame is already cached.
-
-    copartition=True (default, with persist_fp): hash-repartition the
-    persisted frame by (h1, h2) BEFORE caching, so BOTH consumers are
-    already clustered on the group key — the stats agg runs exchange-free
-    (HashPartitioning(h1,h2) satisfies its ClusteredDistribution) and the
-    join-back co-locates without re-shuffling the fingerprint side (the
-    initial adaptive plan may still carry ENSURE exchanges — AQE elides
-    them at runtime once the cache materializes). Net: ONE 24 B/position
-    exchange total, vs the partial-agg exchange (~32 B/position:
-    mostly-unique keys defeat map-side combine) PLUS a possible
-    24 B/position join exchange when the dup-key frame outgrows broadcast
-    (boilerplate-heavy webtext at 100 TB). Measured: 1.79x fewer exchange
-    bytes and 1.43x wall in the no-broadcast regime, parity (+8%) when
-    the dup-key frame broadcasts — scripts/measure_exchange.py,
-    BASELINE.md round-4 section; output parity pinned by
-    tests/test_round4.py.
-
-    prefilter=True (the at-scale mode; round-4 verdict item 1): at real-
-    corpus dup density (<1% of C4 positions, README.md:10 context) ~99% of
-    fingerprints are singletons that the stats filter discards only AFTER
-    riding the 24 B/position exchange. Two passes instead:
+    prefilter=True (the at-scale mode; env SPARK_GRAFT_FP_PREFILTER=1): at
+    real-corpus dup density (<1% of C4 positions, README.md:10 context)
+    ~99% of fingerprints are singletons that the clustering pass discards
+    only AFTER riding the 24 B/position exchange. Two passes instead:
 
       pass 1  h1-only key kernel (half the hash work) -> groupBy(k)
               count >= max(2, freq_threshold+1). Exchange: one 8 B key
@@ -659,48 +548,31 @@ def self_similar(
     Recall is exact: equal windows have equal h1, so every true duplicate
     position survives pass 2; h1 collisions only ADD candidate positions
     (expected extra pairs ~P^2/2^64 — ~10^8 rows at P=10^14, noise), and
-    find_duplicates' exact (h1, h2) grouping then drops them. Net at 1%
-    dup density: ~16 B/position total exchange vs copartition's 24
-    (1.5x) and the broadcast-unavailable two-exchange plan's 48 (3x) —
-    plus the join-back and stats stages now run on a ~100x smaller frame.
+    the exact (h1, h2) clustering then drops them. Net at 1% dup density:
+    ~16 B/position total exchange instead of 24 (1.5x).
 
     The dup-key set is collected driver-side (limit-guarded:
     ``prefilter_max_keys``, default 2^24 keys = 128 MB broadcast; env
     SPARK_GRAFT_FP_PREFILTER_MAX_KEYS). Above the guard the sketch
-    degrades to a bounded-size Bloom filter instead of switching off
-    (``prefilter_sketch`` / SPARK_GRAFT_FP_SKETCH, see
-    _prefilter_sketch_bc): false positives only add candidates the exact
-    post-shuffle stats filter discards, so recall stays exact at any
-    dup-key count.
-
-    Env overrides for benches: SPARK_GRAFT_FP_PERSIST=0/1,
-    SPARK_GRAFT_FP_COPART=0/1, SPARK_GRAFT_FP_PREFILTER=0/1,
-    SPARK_GRAFT_FP_SKETCH=auto/set/bloom.
+    degrades to a bounded-size Bloom filter instead of switching off (see
+    _key_sketch_bc): false positives only add candidates the exact
+    clustering discards, so recall stays exact at any dup-key count.
     """
-    import os
-
     from ..plans.caching import scoped_persist
 
-    if persist_fp is None:
-        persist_fp = os.environ.get("SPARK_GRAFT_FP_PERSIST", "1") != "0"
-    if copartition is None:
-        copartition = os.environ.get("SPARK_GRAFT_FP_COPART", "1") != "0"
     if prefilter is None:
         prefilter = os.environ.get("SPARK_GRAFT_FP_PREFILTER", "0") == "1"
     if prefilter_max_keys is None:
         prefilter_max_keys = int(
             os.environ.get("SPARK_GRAFT_FP_PREFILTER_MAX_KEYS", str(1 << 24))
         )
-    if dedup_pass is None:
-        dedup_pass = os.environ.get("SPARK_GRAFT_FP_DEDUP", "mappass")
-    if dedup_pass not in ("agg", "mappass"):
-        raise ValueError(f"dedup_pass must be 'agg' or 'mappass': {dedup_pass}")
 
     if "byte_start" not in docs.columns:
         docs = scoped_persist(with_offsets(docs, cfg.with_separators))
     if total is None:
         total = corpus_total_bytes(docs)
 
+    dup_keys_bc = None
     if prefilter:
         min_count = max(2, cfg.frequency_threshold + 1)
         dup_keys = (
@@ -710,27 +582,10 @@ def self_similar(
             .filter(F.col("c") >= min_count)
             .select("k")
         )
-        dup_keys_bc = _prefilter_sketch_bc(
-            dup_keys, prefilter_max_keys, sketch_mode=prefilter_sketch
-        )
-    else:
-        dup_keys_bc = None
+        dup_keys_bc = _key_sketch_bc(dup_keys, prefilter_max_keys)
 
-    # the prefiltered frame honors copartition/persist too: in the
-    # no-broadcast (100-TB) regime its stats agg + join-back still want the
-    # single (h1, h2)-clustered exchange, just over a ~dup_fraction frame
     fp = window_fingerprints(docs, cfg, total, dup_keys_bc)
-    if dedup_pass == "mappass":
-        # single consumer: no persist, no pre-repartition — the mappass
-        # operator owns the one (h1, h2) exchange + partition sort
-        return find_duplicates_mappass(fp, cfg)
-    if copartition and persist_fp:
-        # only with persist: uncached, each consumer would re-run the
-        # repartition exchange anyway (no saving over the status quo)
-        fp = fp.repartition("h1", "h2")
-    if persist_fp:
-        fp = scoped_persist(fp)
-    return find_duplicates(fp, cfg)
+    return find_duplicates_mappass(fp, cfg)
 
 
 CLUSTER_SAMPLE_SCHEMA = T.StructType(
@@ -1083,20 +938,28 @@ def count_occurrences(
         .groupBy("shard_id")
         .applyInPandas(kernel, QUERY_HITS_SCHEMA)
     )
-    # baseline (qid, 0, null) rows ride the same aggregation as a local
-    # relation so absent queries report 0 without a left join back against
-    # a query frame (round-6 — one broadcast join less per call)
-    spark = docs.sparkSession
-    baseline = spark.createDataFrame(
+    return _count_with_baseline(hits, [qid for qid, _ in queries])
+
+
+def _count_with_baseline(hits: DataFrame, qids: list[int]) -> DataFrame:
+    """(query_id, cnt, first_pos) hits -> (query_id, count, first_pos) with
+    one row per query id; absent queries report count 0, first_pos null.
+
+    Baseline (qid, 0, null) rows ride the same aggregation as a local
+    relation, so no left join back against a query frame is needed (one
+    broadcast join less per call). The pandas baseline holds only int64
+    columns and the null first_pos is added in Spark: a nullable pandas
+    Int64 column only converts on the Arrow path of createDataFrame."""
+    baseline = hits.sparkSession.createDataFrame(
         pd.DataFrame(
             {
-                "query_id": np.array([qid for qid, _ in queries], np.int64),
-                "cnt": np.zeros(len(queries), np.int64),
-                "first_pos": pd.array([None] * len(queries), dtype="Int64"),
+                "query_id": np.array(qids, np.int64),
+                "cnt": np.zeros(len(qids), np.int64),
             }
         ),
-        QUERY_HITS_SCHEMA,
-    )  # pandas input -> local relation (a list parallelizes into RDD slices)
+        "query_id long, cnt long",
+    ).withColumn("first_pos", F.lit(None).cast("long"))
+    # pandas input -> local relation (a list parallelizes into RDD slices)
     return hits.unionByName(baseline).groupBy("query_id").agg(
         F.sum("cnt").alias("count"), F.min("first_pos").alias("first_pos")
     )

@@ -11,7 +11,8 @@ accumulate until someone calls spark.catalog.clearCache().
 ``cache_scope()`` closes that gap: every frame persisted through
 ``scoped_persist`` (which all operator modules use) while a scope is
 active on the current thread is registered with the innermost scope and
-unpersisted when the scope exits. Consume inside the scope:
+unpersisted when the scope exits; every broadcast made through
+``scoped_broadcast`` is destroyed. Consume inside the scope:
 
     with cache_scope():
         ranges, deduped = exactsubstr_dedup(docs, cfg)
@@ -33,12 +34,13 @@ import threading
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 
 _local = threading.local()
 
 
-def _stack() -> list[list[DataFrame]]:
+def _stack() -> list[list[DataFrame | Broadcast]]:
     st = getattr(_local, "stack", None)
     if st is None:
         st = []
@@ -52,11 +54,20 @@ def scoped_persist(
 ) -> DataFrame:
     """persist(df, level); if a cache_scope is active on this thread, the
     frame is unpersisted automatically at scope exit."""
-    out = df.persist(level)
+    return _register(df.persist(level))
+
+
+def scoped_broadcast(sc, value) -> Broadcast:
+    """sc.broadcast(value); if a cache_scope is active on this thread, the
+    broadcast is destroyed automatically at scope exit."""
+    return _register(sc.broadcast(value))
+
+
+def _register(obj):
     st = _stack()
     if st:
-        st[-1].append(out)
-    return out
+        st[-1].append(obj)
+    return obj
 
 
 def probe_rows(df: DataFrame, guard: int):
@@ -92,18 +103,21 @@ def probe_rows(df: DataFrame, guard: int):
 def cache_scope():
     """Bound the lifetime of operator-persisted intermediates to a block.
 
-    Scopes nest: each frame belongs to the innermost scope active when it
-    was persisted. Yields the (mutable) list of registered frames, mostly
-    useful for tests/observability.
+    Scopes nest: each frame or broadcast belongs to the innermost scope
+    active when it was registered. Yields the (mutable) list of registered
+    frames and broadcasts, mostly useful for tests/observability.
     """
-    frames: list[DataFrame] = []
-    _stack().append(frames)
+    held: list[DataFrame | Broadcast] = []
+    _stack().append(held)
     try:
-        yield frames
+        yield held
     finally:
         _stack().pop()
-        for df in frames:
+        for obj in held:
             try:
-                df.unpersist(blocking=False)
+                if isinstance(obj, Broadcast):
+                    obj.destroy(blocking=False)
+                else:
+                    obj.unpersist(blocking=False)
             except Exception:
                 pass  # session already stopped — nothing to release

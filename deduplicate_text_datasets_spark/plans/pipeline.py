@@ -85,7 +85,6 @@ def neardup_clusters(
     docs: DataFrame,
     cfg: EngineConfig,
     store: StageStore | None = None,
-    copartition: bool = True,
 ) -> DataFrame:
     """NearDup flagship: documents -> clusters(doc_id, url, cluster_id,
     is_duplicate, keep).
@@ -107,7 +106,7 @@ def neardup_clusters(
         # min-label CC; pinned by test). With a StageStore, or when any
         # memo/guard is missing, the distributed graph below runs
         # unchanged, reusing the SAME mh frame (no double construction).
-        mh_frame = near_duplicate_edges(docs, cfg.minhash, copartition=copartition)
+        mh_frame = near_duplicate_edges(docs, cfg.minhash)
         assign = _driver_neardup_assign(docs, mh_frame)
     if assign is None:
 
@@ -115,7 +114,7 @@ def neardup_clusters(
             mh_f = (
                 mh_frame
                 if mh_frame is not None
-                else near_duplicate_edges(docs, cfg.minhash, copartition=copartition)
+                else near_duplicate_edges(docs, cfg.minhash)
             )
             mh = mh_f.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             ex = exact_duplicate_edges(docs)
@@ -254,10 +253,8 @@ def across_dedup(
     docs_a: DataFrame,
     docs_b: DataFrame,
     cfg: EngineConfig,
-    copartition: bool = True,
     prefilter: bool | None = None,
     prefilter_max_keys: int | None = None,
-    prefilter_sketch: str | None = None,
 ) -> AcrossDedupResult:
     """Cross-corpus contamination pipeline (README.md:324-340:
     across-similar + collect + strike — the reference runs collect/finish
@@ -288,8 +285,8 @@ def across_dedup(
     and so could never match a B window); h1 collisions only ADD big-side
     candidates, which the exact (h1, h2) semi-join then discards. Above
     the broadcast guard the key set degrades to a bounded Bloom sketch
-    instead of switching off (prefilter_sketch / SPARK_GRAFT_FP_SKETCH,
-    suffix._prefilter_sketch_bc) — recall stays exact at any key count.
+    instead of switching off (suffix._key_sketch_bc) — recall stays
+    exact at any key count.
     """
     import os
 
@@ -317,17 +314,15 @@ def across_dedup(
 
     bc_a = bc_b = None  # pass-2 map-side filters for fp_a / fp_b
     if prefilter:
-        from ..operators.suffix import _prefilter_sketch_bc
+        from ..operators.suffix import _key_sketch_bc
 
         small_is_b = total_b <= total_a
         key_docs, key_total = (db, total_b) if small_is_b else (da, total_a)
         keys_df = window_keys(key_docs, cfg.exact, key_total).distinct()
         # same sketch policy as self_similar: exact set under the guard,
         # Bloom above it (recall exact — FPs only add big-side candidates
-        # the exact (h1, h2) semi-join discards), set-mode for A/B
-        bc = _prefilter_sketch_bc(
-            keys_df, prefilter_max_keys, sketch_mode=prefilter_sketch
-        )
+        # the exact (h1, h2) semi-join discards)
+        bc = _key_sketch_bc(keys_df, prefilter_max_keys)
         if small_is_b:
             bc_a = bc
         else:
@@ -335,16 +330,15 @@ def across_dedup(
 
     # each fingerprint frame feeds both the distinct-keys side and the
     # semi-join probe side — persist or the shard kernels run twice per
-    # side. Co-partitioned on the window key (self_similar copartition
-    # design): the distinct aggs run on the cached partitioning and the
-    # two semi-joins co-locate without re-exchanging either side.
-    fp_a = window_fingerprints(da, cfg.exact, total_a, bc_a)
-    fp_b = window_fingerprints(db, cfg.exact, total_b, bc_b)
-    if copartition:
-        fp_a = fp_a.repartition("h1", "h2")
-        fp_b = fp_b.repartition("h1", "h2")
-    fp_a = scoped_persist(fp_a)
-    fp_b = scoped_persist(fp_b)
+    # side. Co-partitioned on the window key: the distinct aggs run on the
+    # cached partitioning and the two semi-joins co-locate without
+    # re-exchanging either side.
+    fp_a = scoped_persist(
+        window_fingerprints(da, cfg.exact, total_a, bc_a).repartition("h1", "h2")
+    )
+    fp_b = scoped_persist(
+        window_fingerprints(db, cfg.exact, total_b, bc_b).repartition("h1", "h2")
+    )
     dups_a, dups_b = across_similar(fp_a, fp_b, cfg.exact)
     L = cfg.exact.length_threshold
     # ranges/deduped as memoized thunks: coalesce_positions may probe its
@@ -374,7 +368,6 @@ def contamination_report(
     docs_train: DataFrame,
     docs_eval: DataFrame,
     cfg: EngineConfig,
-    copartition: bool = True,
 ) -> DataFrame:
     """Per-eval-doc contamination scorecard vs a training corpus — the
     reference repo's headline use case (README.md:10: measuring how much
@@ -408,14 +401,12 @@ def contamination_report(
         .withColumn("exact_dup", F.lit(True))
     )
     near = (
-        near_duplicate_edges_across(
-            eval_docs, docs_train, cfg.minhash, copartition=copartition
-        )
+        near_duplicate_edges_across(eval_docs, docs_train, cfg.minhash)
         .groupBy("a")
         .agg(F.min("b").alias("near_dup_match"))
         .withColumnRenamed("a", "doc_id")
     )
-    res = across_dedup(docs_train, eval_docs, cfg, copartition=copartition)
+    res = across_dedup(docs_train, eval_docs, cfg)
     # ranges_b live in B-corpus global byte coordinates; with_offsets is a
     # pure function of the doc frame, so this reconstructs the exact
     # coordinate system across_dedup used

@@ -60,16 +60,15 @@ def with_offsets(docs: DataFrame, with_separators: bool = True) -> DataFrame:
     # SPARK_GRAFT_OFFSETS_DRIVER_MAX, default 2^20 docs = a bounded 16 MB
     # Arrow pull) compute it on the driver and broadcast-join it back —
     # the per-block window, block-totals window and broadcast-totals join
-    # all collapse into one limit-probe. The probe costs one capped scan;
-    # above the guard the hierarchical window path runs unchanged (the
-    # 10^12-doc design). Identical offsets either way (pytest + gate).
+    # all collapse into one probe. Above the guard the hierarchical window
+    # path runs unchanged (the 10^12-doc design). Identical offsets either
+    # way (pytest + gate).
     guard = int(os.environ.get("SPARK_GRAFT_OFFSETS_DRIVER_MAX", str(1 << 20)))
     if guard > 0:
         from ..plans.caching import probe_rows
 
-        # count+collect probe: the count prunes every column (parquet row
-        # count / cached batch counts — no text IO), the collect then runs
-        # the narrow (doc_id, doc_len) projection exactly once
+        # single-action probe (plans.caching.probe_rows): one pull of the
+        # narrow (doc_id, doc_len) projection, discarded when over the guard
         probe = probe_rows(lens, guard)
         if probe is not None:
             pdf = probe.sort_values("doc_id", ignore_index=True)

@@ -195,6 +195,48 @@ def test_count_occurrences(spark, docs, fixture_pdf, oracle_corpus):
         assert got[qid] == pyref.count_occurrences(corpus, q), f"query {qid}"
 
 
+def test_count_family_arrow_off_parity(spark, docs, fixture_pdf):
+    """contains / count_occurrences / count_occurrences_indexed return the
+    same rows with Arrow conversion off as on — including absent queries
+    (count 0, null first_pos)."""
+    from deduplicate_text_datasets_spark.operators.sa_index import (
+        build_suffix_index,
+        count_occurrences_indexed,
+    )
+    from deduplicate_text_datasets_spark.operators.suffix import contains
+
+    t0 = fixture_pdf["text"][0]
+    queries = [(0, t0[5:40].encode()), (1, b"zzzz-not-present-zzzz")]
+    index = build_suffix_index(docs, CFG).cache()
+
+    def run():
+        return (
+            sorted(tuple(r) for r in contains(docs, queries, CFG).collect()),
+            sorted(tuple(r) for r in count_occurrences(docs, queries, CFG).collect()),
+            sorted(
+                tuple(r)
+                for r in count_occurrences_indexed(index, queries).collect()
+            ),
+        )
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        on = run()
+        spark.conf.set(key, "false")
+        off = run()
+    finally:
+        spark.conf.set(key, old)
+        index.unpersist()
+    assert off == on
+    present, counts, indexed = on
+    assert present == [(0, True), (1, False)]
+    assert counts == indexed
+    assert counts[0][1] > 0 and counts[0][2] is not None
+    assert counts[1] == (1, 0, None)
+
+
 def test_count_occurrences_overlapping(spark):
     """"aaaa".count("aa") == 3 semantics (main.rs:629-632)."""
     from deduplicate_text_datasets_spark.sources.documents import EPOCH

@@ -62,6 +62,14 @@ def test_cosine_topk_exact(spark, emb):
         assert ranked == expect, f"query {q}"
 
 
+def test_cosine_topk_empty_queries(spark, emb):
+    df, _ = emb
+    queries = spark.createDataFrame([], "query_id long, embedding array<float>")
+    out = cosine_topk(df, queries, k=5)
+    assert out.columns == ["query_id", "rank", "neighbor_id", "cosine"]
+    assert out.count() == 0
+
+
 def test_cosine_topk_lsh_recall(spark, emb):
     """Random-hyperplane LSH must recover truly-similar neighbors (the
     agreement probability per bit is 1-θ/π, ≈0.99 at cosine 0.999); random

@@ -197,9 +197,8 @@ def test_union_intervals_no_global_window(spark):
 
 def test_hot_window_skew_fixture(spark):
     """The C4 60,000x-repeated-sequence scenario (README.md:10) in
-    miniature: one 100+-byte sentence planted in every doc. The de-skewed
-    find_duplicates (partial agg + AQE-splittable join) must return the
-    right cluster size for the hot window."""
+    miniature: one 100+-byte sentence planted in every doc. The mappass
+    clustering must return the right cluster size for the hot window."""
     hot = "the quick brown fox jumps over the lazy dog again and again " * 3
     rng = np.random.RandomState(11)
     rows = []

@@ -349,6 +349,41 @@ def test_cache_scope_nesting_and_outside_behavior(spark):
     assert cm.isEmpty()
 
 
+def test_cache_scope_releases_strike_broadcast(spark, fixture_pdf):
+    """The strike driver fast path broadcasts its span arrays; scope exit
+    must destroy that broadcast and leave no cached block behind."""
+    from pyspark.broadcast import Broadcast
+
+    from deduplicate_text_datasets_spark.operators.intervals import (
+        coalesce_positions,
+    )
+    from deduplicate_text_datasets_spark.operators.suffix import self_similar
+    from deduplicate_text_datasets_spark.plans.caching import cache_scope
+
+    cfg = ExactSubstrConfig(
+        length_threshold=50, shard_bytes=4096, overlap_bytes=64,
+        with_separators=True,
+    )
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty()
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    n_rdds = rdds.size()
+    with cache_scope() as registered:
+        d = with_offsets(
+            spark.createDataFrame(fixture_pdf, schema=DOCUMENTS_SCHEMA), True
+        )
+        ranges = coalesce_positions(self_similar(d, cfg), 50)
+        out = apply_removals(d, ranges, cfg)
+        assert out.count() == len(fixture_pdf)
+        bcs = [b for b in registered if isinstance(b, Broadcast)]
+        assert bcs, "strike fast path did not run (no broadcast registered)"
+        assert all(b._jbroadcast.isValid() for b in bcs)
+    assert not any(b._jbroadcast.isValid() for b in bcs)
+    assert cm.isEmpty(), "scope exit must unpersist every operator cache"
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == n_rdds
+
+
 # --- SA fallback guards (round-3 ADVICE) ------------------------------------
 
 
@@ -403,43 +438,6 @@ def test_suffix_array_2e32_guard(monkeypatch):
     with pytest.raises(ValueError, match="pydivsufsort"):
         sfx.suffix_array(buf)
     del buf
-
-
-# --- fingerprint co-partitioning (one exchange instead of two+) -------------
-
-
-def test_self_similar_copartition_plan_and_parity(spark, docs):
-    """Copartition mode (default) materializes the persisted fingerprint
-    frame through a REPARTITION_BY_COL (h1, h2) exchange. The initial
-    adaptive plan may still show ENSURE_REQUIREMENTS exchanges on the
-    consumers (the un-materialized cached plan reports unknown
-    partitioning at static planning) — AQE elides them at runtime once
-    the cache exists, which is pinned by MEASURED exchange bytes in
-    scripts/measure_exchange.py + BASELINE.md (1.79x fewer bytes in the
-    no-broadcast regime), not by plan text. Here: the shape marker must
-    be present, and output parity vs the un-copartitioned plan is exact.
-    """
-    from deduplicate_text_datasets_spark.operators.suffix import self_similar
-
-    cfg = ExactSubstrConfig(
-        length_threshold=100, shard_bytes=4096, overlap_bytes=512,
-        with_separators=True,
-    )
-    spark.catalog.clearCache()
-    out = self_similar(docs, cfg, copartition=True, dedup_pass="agg")
-    got = sorted(
-        (r["pos"], r["cluster_id"], r["cluster_size"]) for r in out.collect()
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_COL" in plan, "copartition exchange missing"
-    spark.catalog.clearCache()
-    want = sorted(
-        (r["pos"], r["cluster_id"], r["cluster_size"])
-        for r in self_similar(docs, cfg, copartition=False,
-                              dedup_pass="agg").collect()
-    )
-    assert got == want
-    spark.catalog.clearCache()
 
 
 # --- SA index: memoized overlap guard ---------------------------------------
@@ -525,41 +523,3 @@ def test_across_dedup_tokenized_e2e(spark, tok_docs, fixture_pdf):
             if w != packed_by_id[uid]:
                 changed += 1
         assert changed > 0, "no token-mode strike landed on this side"
-
-
-def test_copartition_modes_identical_outputs(spark, docs):
-    """copartition=True must be a pure physical-plan choice: candidate /
-    pair sets from every bucketed operator are identical either way
-    (the sf0.1 A/B asserts this once per run — scripts/ab_neardup.py —
-    this pins it at fixture scale forever)."""
-    from deduplicate_text_datasets_spark.config import (
-        MinHashConfig,
-        SimHashConfig,
-    )
-    from deduplicate_text_datasets_spark.operators.minhash import (
-        candidate_pairs,
-        doc_shingles,
-        lsh_buckets,
-        minhash_signatures,
-    )
-    from deduplicate_text_datasets_spark.operators.ngram import jaccard_pairs
-    from deduplicate_text_datasets_spark.operators.simhash import (
-        simhash_candidates,
-        simhash_fingerprints,
-    )
-
-    mh = MinHashConfig()
-    buckets = lsh_buckets(minhash_signatures(doc_shingles(docs, mh), mh), mh)
-    fps = simhash_fingerprints(docs)
-
-    def pairs(df):
-        return sorted((r["a"], r["b"]) for r in df.select("a", "b").collect())
-
-    for name, fn in (
-        ("minhash", lambda c: candidate_pairs(buckets, mh, copartition=c)),
-        ("simhash", lambda c: simhash_candidates(fps, SimHashConfig(), copartition=c)),
-        ("ngram", lambda c: jaccard_pairs(docs, mh, copartition=c)),
-    ):
-        on, off = pairs(fn(True)), pairs(fn(False))
-        assert on == off and on, f"{name}: copartition changed the output"
-        spark.catalog.clearCache()

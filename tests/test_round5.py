@@ -76,8 +76,7 @@ SS_CFG = ExactSubstrConfig(
 
 
 def test_self_similar_prefilter_parity(spark, docs):
-    """prefilter mode must be bit-identical to the copartition plan, and
-    the guard-exceeded fallback must warn and still return it."""
+    """prefilter mode must be bit-identical to the default plan."""
     from deduplicate_text_datasets_spark.operators.suffix import self_similar
 
     base = sorted(tuple(r) for r in self_similar(docs, SS_CFG).collect())
@@ -87,13 +86,6 @@ def test_self_similar_prefilter_parity(spark, docs):
         tuple(r) for r in self_similar(docs, SS_CFG, prefilter=True).collect()
     )
     assert pre == base
-    spark.catalog.clearCache()
-    with pytest.warns(UserWarning, match="dup-key"):
-        fb = self_similar(
-            docs, SS_CFG, prefilter=True, prefilter_max_keys=1,
-            prefilter_sketch="set",
-        )
-    assert sorted(tuple(r) for r in fb.collect()) == base
     spark.catalog.clearCache()
 
 
@@ -632,7 +624,7 @@ def _across_key(res):
 
 def test_across_dedup_prefilter_parity(spark):
     """prefilter mode must be bit-identical to the default plan on all six
-    output frames, and the guard-exceeded fallback must warn and match."""
+    output frames."""
     from deduplicate_text_datasets_spark.config import EngineConfig
     from deduplicate_text_datasets_spark.plans.pipeline import across_dedup
 
@@ -643,14 +635,6 @@ def test_across_dedup_prefilter_parity(spark):
     spark.catalog.clearCache()
     pre = _across_key(across_dedup(docs_a, docs_b, cfg, prefilter=True))
     assert pre == base
-    spark.catalog.clearCache()
-    with pytest.warns(UserWarning, match="key set"):
-        fb = across_dedup(
-            docs_a, docs_b, cfg, prefilter=True, prefilter_max_keys=1,
-            prefilter_sketch="set",
-        )
-        fb_key = _across_key(fb)
-    assert fb_key == base
     spark.catalog.clearCache()
 
 
@@ -1171,23 +1155,29 @@ def test_duplicate_window_census_vs_bruteforce(spark):
 # --- mappass dedup pass (round-5: drop the stats agg + join-back) ------------
 
 
-def test_mappass_parity_with_agg_plan(spark, docs):
-    """find_duplicates_mappass must be a pure physical-plan choice: output
-    identical to the agg+join-back plan, including frequency_threshold
-    semantics (size > threshold, main.rs:914)."""
+def _oracle_clusters(fixture_pdf, cfg):
+    """pyref.self_similar_clusters as sorted (pos, cluster_id, cluster_size)
+    rows: cluster_id is the min member position."""
+    from deduplicate_text_datasets_spark.oracle import pyref
+
+    texts = [t.encode("utf-8") for t in fixture_pdf["text"]]
+    corpus, _ = pyref.build_corpus(texts, cfg.with_separators)
+    clusters = pyref.self_similar_clusters(
+        corpus, cfg.length_threshold, cfg.frequency_threshold
+    )
+    return sorted((p, min(ps), len(ps)) for ps in clusters.values() for p in ps)
+
+
+def test_mappass_parity_with_oracle(spark, docs, fixture_pdf):
+    """self_similar (the mappass plan) must equal the pure-Python
+    reference clusters, including frequency_threshold semantics (size >
+    threshold, main.rs:914)."""
     from deduplicate_text_datasets_spark.operators.suffix import self_similar
 
-    spark.catalog.clearCache()
-    base = sorted(
-        tuple(r)
-        for r in self_similar(docs, SS_CFG, dedup_pass="agg").collect()
-    )
+    base = _oracle_clusters(fixture_pdf, SS_CFG)
     assert len(base) > 0
     spark.catalog.clearCache()
-    got = sorted(
-        tuple(r)
-        for r in self_similar(docs, SS_CFG, dedup_pass="mappass").collect()
-    )
+    got = sorted(tuple(r) for r in self_similar(docs, SS_CFG).collect())
     assert got == base
     spark.catalog.clearCache()
 
@@ -1201,48 +1191,67 @@ def test_mappass_parity_with_agg_plan(spark, docs):
         overlap_bytes=SS_CFG.overlap_bytes,
         with_separators=SS_CFG.with_separators,
     )
-    want_t = [t for t in base if t[2] > thr]
-    got_t = sorted(
-        tuple(r)
-        for r in self_similar(docs, cfg_t, dedup_pass="mappass").collect()
-    )
+    want_t = _oracle_clusters(fixture_pdf, cfg_t)
+    assert want_t == [t for t in base if t[2] > thr]
+    got_t = sorted(tuple(r) for r in self_similar(docs, cfg_t).collect())
     assert got_t == want_t and len(got_t) < len(base)
     spark.catalog.clearCache()
 
 
-def test_mappass_group_straddles_arrow_batches(spark, docs):
+def test_mappass_group_straddles_arrow_batches(spark, docs, fixture_pdf):
     """Force 3-row Arrow batches so every real cluster straddles batch
     boundaries inside the kernel — the pending-group reassembly must keep
     output exact; and with prefilter composed on top."""
     from deduplicate_text_datasets_spark.operators.suffix import self_similar
 
-    spark.catalog.clearCache()
-    base = sorted(
-        tuple(r)
-        for r in self_similar(docs, SS_CFG, dedup_pass="agg").collect()
-    )
+    base = _oracle_clusters(fixture_pdf, SS_CFG)
     assert any(t[2] > 3 for t in base), "fixture needs a >3-member cluster"
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
         spark.catalog.clearCache()
-        got = sorted(
-            tuple(r)
-            for r in self_similar(docs, SS_CFG, dedup_pass="mappass").collect()
-        )
+        got = sorted(tuple(r) for r in self_similar(docs, SS_CFG).collect())
         assert got == base
         spark.catalog.clearCache()
         pre = sorted(
             tuple(r)
-            for r in self_similar(
-                docs, SS_CFG, dedup_pass="mappass", prefilter=True
-            ).collect()
+            for r in self_similar(docs, SS_CFG, prefilter=True).collect()
         )
         assert pre == base
     finally:
         spark.conf.set(key, old)
         spark.catalog.clearCache()
+
+
+def test_mappass_hot_window_spans_many_arrow_batches(spark):
+    """One document of 10^6 identical bytes: every window is the same, so
+    the single cluster's rows span ~100 Arrow batches at the default batch
+    size and the kernel must carry one pending group across all of them.
+    Checked with Spark aggregates (no 10^6-row collect)."""
+    from deduplicate_text_datasets_spark.operators.suffix import self_similar
+
+    n, L = 10**6, 50
+    cfg = ExactSubstrConfig(length_threshold=L, with_separators=False)
+    df = spark.createDataFrame(
+        [(0, "u0", "a" * n)], "doc_id long, url string, text string"
+    )
+    spark.catalog.clearCache()
+    row = self_similar(df, cfg).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.min("pos").alias("pos_lo"),
+        F.max("pos").alias("pos_hi"),
+        F.min("cluster_size").alias("size_lo"),
+        F.max("cluster_size").alias("size_hi"),
+        F.min("cluster_id").alias("id_lo"),
+        F.max("cluster_id").alias("id_hi"),
+    ).collect()[0]
+    m = n - L + 1
+    assert row["rows"] == m
+    assert (row["pos_lo"], row["pos_hi"]) == (0, m - 1)
+    assert (row["size_lo"], row["size_hi"]) == (m, m)
+    assert (row["id_lo"], row["id_hi"]) == (0, 0)
+    spark.catalog.clearCache()
 
 
 def test_mappass_plan_has_no_join_or_agg(spark, docs):

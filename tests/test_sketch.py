@@ -92,8 +92,8 @@ def test_sketch_contains_dispatch():
 
 
 def test_self_similar_bloom_parity(spark, docs):
-    """Forcing the Bloom path (guard of 1 key, auto mode -> bloom) must be
-    bit-identical to the unfiltered plan — no warning, no fallback."""
+    """Forcing the Bloom path (guard of 1 key) must be bit-identical to the
+    unfiltered plan — no warning, no fallback."""
     import warnings
 
     from deduplicate_text_datasets_spark.operators.suffix import self_similar
@@ -102,13 +102,10 @@ def test_self_similar_bloom_parity(spark, docs):
     assert base
     spark.catalog.clearCache()
     with warnings.catch_warnings():
-        # auto mode must NOT warn on bloom (ResourceWarnings from py4j
+        # the Bloom path must NOT warn (ResourceWarnings from py4j
         # socket teardown are unrelated — only escalate UserWarning)
         warnings.simplefilter("error", UserWarning)
-        bl = self_similar(
-            docs, SS_CFG, prefilter=True, prefilter_max_keys=1,
-            prefilter_sketch="auto",
-        )
+        bl = self_similar(docs, SS_CFG, prefilter=True, prefilter_max_keys=1)
         got = sorted(tuple(r) for r in bl.collect())
     assert got == base
     spark.catalog.clearCache()
@@ -138,10 +135,7 @@ def test_across_dedup_bloom_parity(spark):
     assert base[0] and base[1]
     spark.catalog.clearCache()
     got = key(
-        across_dedup(
-            docs_a, docs_b, cfg, prefilter=True, prefilter_max_keys=1,
-            prefilter_sketch="bloom",
-        )
+        across_dedup(docs_a, docs_b, cfg, prefilter=True, prefilter_max_keys=1)
     )
     assert got == base
     spark.catalog.clearCache()
