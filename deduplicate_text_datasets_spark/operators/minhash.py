@@ -14,11 +14,11 @@ Plan shape (all DataFrame; one vectorized Arrow kernel for signatures):
 
 Skew: webtext boilerplate creates giant buckets. Buckets above
 ``max_bucket_size`` pair through the EXACT grid-salted self-join
-(``_salted_pairs`` — per-task pair work stays bounded by cap^2, recall
-unchanged); only buckets beyond ``salted_bucket_max`` are dropped with a
-logged count (the analogue of frequency_threshold, main.rs:914) — their
-members still pair via other bands or the exact-dup path. AQE skew-join
-splitting handles the rest.
+(``salted_join.grid_salted_self_pairs`` — per-task pair work stays bounded
+by cap^2, recall unchanged); only buckets beyond ``salted_bucket_max`` are
+dropped with a logged count (the analogue of frequency_threshold,
+main.rs:914) — their members still pair via other bands or the exact-dup
+path. AQE skew-join splitting handles the rest.
 """
 
 from __future__ import annotations
@@ -145,131 +145,18 @@ def lsh_buckets(signatures: DataFrame, cfg: MinHashConfig) -> DataFrame:
 
 
 def candidate_pairs(buckets: DataFrame, cfg: MinHashConfig) -> DataFrame:
-    """Distinct (a, b) candidate doc pairs from shared LSH buckets.
+    """Distinct (a, b) candidate doc pairs from shared LSH buckets: the
+    bucket self-join of salted_join.bucket_self_pairs on (band, bucket).
+    Buckets up to ``max_bucket_size`` pair in one reducer task, buckets up
+    to ``salted_bucket_max`` through the exact grid-salted self-join, and
+    larger ones are excluded (observable via ``oversized_buckets``). Under
+    the LSH driver guard the result carries the driver-resident pairs
+    (``_driver_pairs_pdf``) that verify_pairs_across reads."""
+    from .salted_join import bucket_self_pairs
 
-    Bucket-size policy (north_rule: explicit salting of skewed buckets):
-    buckets up to ``max_bucket_size`` self-join in one reducer task;
-    buckets up to ``salted_bucket_max`` go through the EXACT grid-salted
-    self-join (``_salted_pairs``) so the quadratic pair work is spread
-    over ~k^2/2 tasks instead of one; only buckets beyond that are
-    excluded (count observable via ``oversized_buckets``). Sizing is a
-    groupBy (map-side partial agg — a boilerplate bucket with 10^8 members
-    contributes one row per mapper, not 10^8 rows to one reducer) joined
-    back onto the bucket frame; the filtered size frame is small enough
-    for AQE to broadcast, and if not, AQE skew-join splitting applies —
-    neither holds for a WindowExec partition, which is why this is not a
-    count-over-window.
-    """
-    import os
-
-    from ..plans.caching import probe_rows, scoped_persist
-    from .salted_join import driver_bucket_pairs
-
-    # Size-adaptive driver fast path (round-6, same guard family as the
-    # driver CC / interval / offsets paths): the bucket frame is tiny next
-    # to the corpus (24 B x docs x bands), and at or below the guard the
-    # whole candidate machinery — bucket exchange, size agg, join-back,
-    # hot probe, pair self-join, salted grid, distinct — collapses into
-    # one bounded Arrow pull plus a numpy pass producing the identical
-    # distinct pair set (salted_join.driver_bucket_pairs; parity pinned by
-    # test). Above the row guard or the pair budget the distributed plan
-    # runs unchanged from the same persisted frame (the 100-TB path).
-    driver_max = int(os.environ.get("SPARK_GRAFT_LSH_DRIVER_MAX", str(1 << 22)))
-    pair_cap = int(
-        os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
+    return bucket_self_pairs(
+        buckets, ["band", "bucket"], cfg.max_bucket_size, cfg.salted_bucket_max
     )
-    raw = None
-    if driver_max > 0:
-        raw = scoped_persist(buckets)
-        pdf = probe_rows(raw, driver_max)
-        if pdf is not None:
-            pairs_pdf = driver_bucket_pairs(
-                pdf, ["band", "bucket"], cfg.salted_bucket_max, pair_cap
-            )
-            if pairs_pdf is not None:
-                raw.unpersist(blocking=False)
-                out = buckets.sparkSession.createDataFrame(
-                    pairs_pdf, "a long, b long"
-                )
-                # driver-resident pairs, memoized: verify_pairs_across can
-                # then run the exact-Jaccard verify on the driver too
-                out._driver_pairs_pdf = pairs_pdf
-                return out
-        buckets = raw  # persisted: the repartition below reads the cache
-
-    # three consumers (size agg + join-back + both sides of the pair
-    # self-join) — persist or the upstream signature kernel re-executes for
-    # each. Co-partitioned on the bucket key before caching (BASELINE.md
-    # round-4 section): the agg and the self-join then run on the cached
-    # partitioning instead of re-exchanging the bucket frame per consumer —
-    # at web scale the filtered size frame outgrows broadcast and those
-    # exchanges are real.
-    buckets = scoped_persist(buckets.repartition("band", "bucket"))
-    # consumed twice (fast-path filter + hot-bucket filter): persist the
-    # tiny size frame rather than re-aggregating the bucket frame per use
-    sizes = scoped_persist(
-        buckets.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("bsize")
-        )
-    )
-    sized = buckets.join(
-        sizes.filter(
-            (F.col("bsize") >= 2) & (F.col("bsize") <= cfg.max_bucket_size)
-        ),
-        ["band", "bucket"],
-    )
-    pairs = _bucket_pairs(sized, cfg)
-    # Hot-bucket short-circuit (round-6): the salted-grid branch exists for
-    # boilerplate-heavy webtext, but when the (persisted, tiny) size frame
-    # shows NO bucket above the cap — the common clean-corpus case — the
-    # whole branch (join-back + grid explode + union) is dead plan weight:
-    # several stages whose fixed cost dominates at small scale and whose
-    # scans are pure waste at large. One cheap probe on the cached sizes
-    # frame prunes it; the salted path is unchanged whenever any hot
-    # bucket exists (pair set identical either way, pytest-pinned).
-    has_hot = bool(
-        sizes.filter(F.col("bsize") > cfg.max_bucket_size).limit(1).count()
-    )
-    # has_hot aggregated every partition of the repartitioned copy, so it
-    # is cached now and the probe-path copy is dead weight
-    if raw is not None:
-        raw.unpersist(blocking=False)
-    if not has_hot:
-        return pairs.distinct()
-    hot = buckets.join(
-        sizes.filter(
-            (F.col("bsize") > cfg.max_bucket_size)
-            & (F.col("bsize") <= cfg.salted_bucket_max)
-        ),
-        ["band", "bucket"],
-    )
-    return pairs.unionByName(_salted_pairs(hot, cfg)).distinct()
-
-
-def _bucket_pairs(sized: DataFrame, cfg: MinHashConfig) -> DataFrame:
-    """All (a < b) doc pairs within each size-capped bucket via the
-    co-partitioned self-join. (A collect_list + Catalyst pair-expansion
-    variant was A/B'd in round 6 and did not beat this once
-    preferSortMergeJoin=false let the planner pick a sort-free
-    shuffled-hash/broadcast join — the SMJ sorts were the actual cost.)"""
-    left = sized.select("band", "bucket", F.col("doc_id").alias("a"))
-    right = sized.select("band", "bucket", F.col("doc_id").alias("b"))
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-
-
-def _salted_pairs(hot: DataFrame, cfg: MinHashConfig) -> DataFrame:
-    """EXACT all-pairs inside oversized buckets via grid salting — see
-    operators/salted_join.py for the decomposition and its exactness
-    argument. Per-task pair work stays bounded by ~max_bucket_size^2
-    regardless of bucket size; recall is unchanged (the pair set is
-    bit-identical to an uncapped plain self-join, pinned by test)."""
-    from .salted_join import grid_salted_self_pairs
-
-    return grid_salted_self_pairs(hot, ["band", "bucket"], cfg.max_bucket_size)
 
 
 def oversized_buckets(buckets: DataFrame, cfg: MinHashConfig) -> DataFrame:
@@ -471,7 +358,7 @@ def candidate_pairs_across(
                 out = buckets_a.sparkSession.createDataFrame(
                     pairs_pdf, "a long, b long"
                 )
-                out._driver_pairs_pdf = pairs_pdf  # see candidate_pairs
+                out._driver_pairs_pdf = pairs_pdf  # see bucket_self_pairs
                 return out
         buckets_a, buckets_b = raw_a, raw_b  # persisted for the plans below
 

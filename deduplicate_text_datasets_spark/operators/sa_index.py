@@ -18,6 +18,10 @@ The trailing build-config columns let readers validate queries against the
 overlap guarantee (a query longer than overlap_bytes+1 would undercount
 boundary-straddling occurrences — the indexed query operators raise).
 
+The query operators run the same per-shard lookups as the live operators
+in suffix.py (suffix._shard_counts / _shard_positions / _shard_match_lens);
+only the source of each shard's (lo, own_hi, buf, sa) differs.
+
 ``buf`` is the shard's corpus bytes including the trailing overlap
 (HACKSIZE design, make_suffix_array.py:23,47); ``sa`` is the suffix array
 of ``buf`` as little-endian int32 for shards under 2 GiB (int64 above) —
@@ -42,20 +46,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import ExactSubstrConfig
-from ..sources.corpus import (
-    assemble_shard_buffer,
-    assign_shards,
-    corpus_total_bytes,
-    with_offsets,
-)
+from ..sources.corpus import assign_shards, corpus_total_bytes, with_offsets
 from .suffix import (
     MATCH_LEN_SCHEMA,
     POSITIONS_SCHEMA,
     QUERY_HITS_SCHEMA,
-    _batched_match_lens,
+    _apply_shard_kernel,
+    _check_query_lengths,
     _count_with_baseline,
-    _sa_range,
-    suffix_array,
+    _iter_shard_groups,
+    _per_shard,
+    _query_arrays,
+    _shard_counts,
+    _shard_match_lens,
+    _shard_positions,
+    _shard_sa,
 )
 
 SA_INDEX_SCHEMA = T.StructType(
@@ -66,7 +71,7 @@ SA_INDEX_SCHEMA = T.StructType(
         T.StructField("buf", T.BinaryType(), False),
         T.StructField("sa", T.BinaryType(), False),
         # build config persisted per row so readers can validate queries
-        # against the overlap guarantee (see _check_query_lengths)
+        # against the overlap guarantee (see _check_index_queries)
         T.StructField("shard_bytes", T.LongType(), False),
         T.StructField("overlap_bytes", T.LongType(), False),
         T.StructField("with_separators", T.BooleanType(), False),
@@ -102,24 +107,12 @@ def _index_overlap_bytes(index: DataFrame) -> int | None:
     return memo[0]
 
 
-def _check_query_lengths(index: DataFrame, queries: list[tuple[int, bytes]]) -> None:
-    """A query longer than overlap_bytes+1 can straddle a shard-ownership
-    boundary without being resident in the owning shard's buffer — the
-    live path raises (suffix.py count_occurrences); the indexed path must
-    too, from the config persisted at build time. Pre-r03 indexes without
-    the config columns skip the check (documented weaker guarantee)."""
-    if "overlap_bytes" not in index.columns:
-        return
-    max_q = max((len(q) for _, q in queries), default=0)
-    if max_q == 0:
-        return
-    overlap = _index_overlap_bytes(index)
-    if overlap is not None and max_q > int(overlap) + 1:
-        raise ValueError(
-            f"query of {max_q} bytes exceeds the index's overlap_bytes+1="
-            f"{int(overlap) + 1}; rebuild the index with a larger "
-            "ExactSubstrConfig.overlap_bytes"
-        )
+def _check_index_queries(index: DataFrame, queries: list[tuple[int, bytes]]) -> None:
+    """The live operators' overlap guard (suffix._check_query_lengths),
+    fed the overlap persisted at build time. Pre-r03 indexes without the
+    config columns skip the check (documented weaker guarantee)."""
+    if "overlap_bytes" in index.columns:
+        _check_query_lengths(queries, lambda: _index_overlap_bytes(index))
 
 
 def build_suffix_index(
@@ -139,46 +132,33 @@ def build_suffix_index(
     if total is None:
         total = corpus_total_bytes(docs)
 
-    def one_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = int(pdf["shard_id"].iloc[0])
-        lo, buf = assemble_shard_buffer(
-            pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
-        )
-        sa = suffix_array(buf)
-        # width-compressed pointers (the reference's ceil(log2 n / 8)
-        # encoding, main.rs:571, quantized to 4/8 bytes): readers infer
-        # the width from len(sa_bytes) / len(buf)
-        width = "<i4" if len(buf) < (1 << 31) else "<i8"
-        return pd.DataFrame(
-            {
-                "shard_id": [s],
-                "lo": [lo],
-                "own_hi": [min((s + 1) * cfg.shard_bytes, total)],
-                "buf": [buf.tobytes()],
-                "sa": [sa.astype(width).tobytes()],
-                "shard_bytes": [cfg.shard_bytes],
-                "overlap_bytes": [cfg.overlap_bytes],
-                "with_separators": [cfg.with_separators],
-            }
-        )
-
-    def kernel(batches):
-        from .suffix import _iter_shard_groups
-
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for g in _iter_shard_groups(batches):
-            yield one_shard(g)
+            lo, own_hi, buf, sa = _shard_sa(g, cfg, total)
+            # width-compressed pointers (the reference's ceil(log2 n / 8)
+            # encoding, main.rs:571, quantized to 4/8 bytes): readers infer
+            # the width from len(sa_bytes) / len(buf)
+            width = "<i4" if len(buf) < (1 << 31) else "<i8"
+            yield pd.DataFrame(
+                {
+                    "shard_id": [lo // cfg.shard_bytes],
+                    "lo": [lo],
+                    "own_hi": [own_hi],
+                    "buf": [buf.tobytes()],
+                    "sa": [sa.astype(width).tobytes()],
+                    "shard_bytes": [cfg.shard_bytes],
+                    "overlap_bytes": [cfg.overlap_bytes],
+                    "with_separators": [cfg.with_separators],
+                }
+            )
 
-    # range layout, one shard per task (suffix._shards_one_per_task): the
-    # hash-groupBy layout let AQE coalesce the tiny shard exchange to ONE
-    # post-shuffle partition, serializing every SA construction in a
-    # single task (measured: the whole build ran as 1 task at sf0.1);
-    # repartitionByRange with an explicit partition count is not coalesced
-    from .suffix import _shards_one_per_task
-
+    # range layout, one shard per task: the hash-groupBy layout let AQE
+    # coalesce the tiny shard exchange to ONE post-shuffle partition,
+    # serializing every SA construction in a single task (measured: the
+    # whole build ran as 1 task at sf0.1)
     shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-    proj = shards.select("shard_id", "doc_id", "byte_start", "text")
-    return _shards_one_per_task(proj, total, cfg.shard_bytes).mapInPandas(
-        kernel, SA_INDEX_SCHEMA
+    return _apply_shard_kernel(
+        shards, total, cfg.shard_bytes, kernel, SA_INDEX_SCHEMA
     )
 
 
@@ -218,36 +198,24 @@ def _iter_shards(
             )
 
 
+def _index_query(index: DataFrame, schema: T.StructType, fn, *args) -> DataFrame:
+    """Run the per-shard lookup ``fn`` over every stored shard."""
+    return index.mapInPandas(
+        lambda batches: _per_shard(_iter_shards(batches), fn, *args), schema
+    )
+
+
 def count_occurrences_indexed(
     index: DataFrame, queries: list[tuple[int, bytes]]
 ) -> DataFrame:
     """Point lookup against a prebuilt index (main.rs:623-672 semantics:
     overlapping occurrences, owned-start ownership). Returns
     (query_id, count, first_pos); absent queries report count 0."""
-    _check_query_lengths(index, queries)
-    qarr = [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows: list[tuple] = []
-        for lo, own_hi, buf, sa in _iter_shards(batches):
-            for qid, q in qarr:
-                if len(q) == 0:
-                    continue
-                first, last = _sa_range(buf, sa, q)
-                if last <= first:
-                    continue
-                starts = sa[first:last] + lo
-                owned = starts[starts < own_hi]
-                if len(owned) == 0:
-                    continue
-                rows.append((qid, int(len(owned)), int(owned.min())))
-        out = pd.DataFrame(rows, columns=["query_id", "cnt", "first_pos"])
-        yield out.astype(
-            {"query_id": "int64", "cnt": "int64", "first_pos": "int64"}
-        )
-
-    hits = index.mapInPandas(kernel, QUERY_HITS_SCHEMA)
-    return _count_with_baseline(hits, [qid for qid, _ in qarr])
+    _check_index_queries(index, queries)
+    hits = _index_query(
+        index, QUERY_HITS_SCHEMA, _shard_counts, _query_arrays(queries)
+    )
+    return _count_with_baseline(hits, [qid for qid, _ in queries])
 
 
 def find_positions_indexed(
@@ -255,26 +223,10 @@ def find_positions_indexed(
 ) -> DataFrame:
     """All owned occurrence positions per query (table.rs:250-307), from
     the prebuilt index."""
-    _check_query_lengths(index, queries)
-    qarr = [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_q: list[int] = []
-        out_p: list[int] = []
-        for lo, own_hi, buf, sa in _iter_shards(batches):
-            for qid, q in qarr:
-                if len(q) == 0:
-                    continue
-                first, last = _sa_range(buf, sa, q)
-                starts = sa[first:last] + lo
-                owned = starts[starts < own_hi]
-                out_q.extend([qid] * len(owned))
-                out_p.extend(owned.tolist())
-        yield pd.DataFrame({"query_id": out_q, "pos": out_p}).astype(
-            {"query_id": "int64", "pos": "int64"}
-        )
-
-    return index.mapInPandas(kernel, POSITIONS_SCHEMA)
+    _check_index_queries(index, queries)
+    return _index_query(
+        index, POSITIONS_SCHEMA, _shard_positions, _query_arrays(queries)
+    )
 
 
 def find_training_data_indexed(
@@ -292,27 +244,10 @@ def find_training_data_indexed(
     so it needs no overlap-length guard — a cross-boundary match longer
     than the buffer reports the in-buffer prefix, the documented
     HACKSIZE-class approximation (suffix.find_training_data)."""
-    qarr = [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = []
-        for _lo, _own_hi, buf, sa in _iter_shards(batches):
-            for qid, q in qarr:
-                qpos = np.arange(0, len(q), step, dtype=np.int64)
-                lens = _batched_match_lens(buf, sa, q, qpos, probe_cap)
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "qpos": qpos, "match_len": lens}
-                    )
-                )
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-        else:
-            yield pd.DataFrame(
-                {"query_id": [], "qpos": [], "match_len": []}
-            ).astype({"query_id": "int64", "qpos": "int64", "match_len": "int64"})
-
-    per_shard = index.mapInPandas(kernel, MATCH_LEN_SCHEMA)
+    per_shard = _index_query(
+        index, MATCH_LEN_SCHEMA, _shard_match_lens,
+        _query_arrays(queries), probe_cap, step,
+    )
     return per_shard.groupBy("query_id", "qpos").agg(
         F.max("match_len").alias("match_len")
     )

@@ -199,6 +199,122 @@ def driver_bucket_pairs(
     return pd.DataFrame(out)
 
 
+def bucket_self_pairs(
+    buckets: DataFrame,
+    key_cols: Sequence[str],
+    max_bucket_size: int,
+    salted_bucket_max: int,
+    payload: Sequence[str] = (),
+) -> DataFrame:
+    """Distinct (a < b, <p>_a, <p>_b ...) pairs of ``doc_id`` values that
+    share a ``key_cols`` bucket — the LSH self-join behind both MinHash
+    band buckets and SimHash block buckets.
+
+    Bucket-size policy: buckets up to ``max_bucket_size`` self-join in one
+    reducer task; buckets up to ``salted_bucket_max`` go through the exact
+    grid-salted self-join (:func:`grid_salted_self_pairs`), so their
+    quadratic pair work is spread over ~k^2/2 tasks; larger buckets are
+    dropped. Sizing is a groupBy (map-side partial agg — a boilerplate
+    bucket with 10^8 members contributes one row per mapper, not 10^8 rows
+    to one reducer) joined back onto the bucket frame; the filtered size
+    frame is small enough for AQE to broadcast, and if not, AQE skew-join
+    splitting applies — neither holds for a WindowExec partition, which is
+    why this is not a count-over-window.
+
+    Size-adaptive driver fast path (env SPARK_GRAFT_LSH_DRIVER_MAX bucket
+    rows, 0 = always distributed): the bucket frame is tiny next to the
+    corpus, and at or below the guard the whole plan collapses into one
+    bounded Arrow pull plus :func:`driver_bucket_pairs`, which yields the
+    identical distinct pair set. The result then carries the pairs as a
+    pandas memo, ``_driver_pairs_pdf``, so a driver-side verify can follow.
+    Above the row guard or the pair budget (SPARK_GRAFT_LSH_DRIVER_PAIR_MAX)
+    the distributed plan runs from the same persisted frame.
+    """
+    import os
+
+    from ..plans.caching import probe_rows, scoped_persist
+
+    keys = list(key_cols)
+    driver_max = int(os.environ.get("SPARK_GRAFT_LSH_DRIVER_MAX", str(1 << 22)))
+    pair_cap = int(
+        os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
+    )
+    raw = None
+    if driver_max > 0:
+        raw = scoped_persist(buckets)
+        pdf = probe_rows(raw, driver_max)
+        if pdf is not None:
+            pairs_pdf = driver_bucket_pairs(
+                pdf, keys, salted_bucket_max, pair_cap, payload=payload
+            )
+            if pairs_pdf is not None:
+                raw.unpersist(blocking=False)
+                out = buckets.sparkSession.createDataFrame(
+                    pairs_pdf, ", ".join(f"{c} long" for c in pairs_pdf.columns)
+                )
+                out._driver_pairs_pdf = pairs_pdf
+                return out
+        buckets = raw  # persisted: the repartition below reads the cache
+
+    # three consumers (size agg + join-back + both sides of the pair
+    # self-join) — persist or the upstream kernel re-executes for each.
+    # Co-partitioned on the bucket key before caching (BASELINE.md round-4
+    # section): the agg and the self-join then run on the cached
+    # partitioning instead of re-exchanging the bucket frame per consumer.
+    buckets = scoped_persist(buckets.repartition(*keys))
+    # consumed twice (plain filter + hot-bucket filter)
+    sizes = scoped_persist(
+        buckets.groupBy(*keys).agg(F.count(F.lit(1)).alias("bsize"))
+    )
+    sized = buckets.join(
+        sizes.filter(
+            (F.col("bsize") >= 2) & (F.col("bsize") <= max_bucket_size)
+        ),
+        keys,
+    )
+    # plain co-partitioned self-join (a collect_list + Catalyst
+    # pair-expansion variant did not beat it once preferSortMergeJoin=false
+    # let the planner pick a sort-free join)
+    left = sized.select(
+        *keys,
+        F.col("doc_id").alias("a"),
+        *[F.col(p).alias(f"{p}_a") for p in payload],
+    )
+    right = sized.select(
+        *keys,
+        F.col("doc_id").alias("b"),
+        *[F.col(p).alias(f"{p}_b") for p in payload],
+    )
+    out_cols = ["a", "b", *[f"{p}_{s}" for p in payload for s in "ab"]]
+    pairs = (
+        left.join(right, keys)
+        .filter(F.col("a") < F.col("b"))
+        .select(*out_cols)
+    )
+    # Hot-bucket short-circuit: when the cached size frame shows NO bucket
+    # above the cap — the common clean-corpus case — the salted branch
+    # (join-back + grid explode + union) is dead plan weight. One cheap
+    # probe prunes it; the pair set is identical either way.
+    has_hot = bool(
+        sizes.filter(F.col("bsize") > max_bucket_size).limit(1).count()
+    )
+    # has_hot aggregated every partition of the repartitioned copy, so it
+    # is cached now and the probe-path copy is dead weight
+    if raw is not None:
+        raw.unpersist(blocking=False)
+    if not has_hot:
+        return pairs.distinct()
+    hot = buckets.join(
+        sizes.filter(
+            (F.col("bsize") > max_bucket_size)
+            & (F.col("bsize") <= salted_bucket_max)
+        ),
+        keys,
+    )
+    salted = grid_salted_self_pairs(hot, keys, max_bucket_size, payload=payload)
+    return pairs.unionByName(salted).distinct()
+
+
 def driver_bucket_cross_pairs(
     pdf_a: pd.DataFrame,
     pdf_b: pd.DataFrame,
@@ -294,7 +410,7 @@ def grid_salted_cross_pairs(
         .cast("int")
         .alias("_ci"),
         F.explode(F.sequence(F.lit(0), F.col("_kb") - F.lit(1))).alias("_cj"),
-        F.col(id_col).alias("a"),
+        F.col("doc_id").alias("a"),
     )
     rhs = gb.select(
         *keys,
@@ -302,6 +418,6 @@ def grid_salted_cross_pairs(
         F.pmod(F.xxhash64(id_col, F.lit(SALT_SEED)), F.col("_kb"))
         .cast("int")
         .alias("_cj"),
-        F.col(id_col).alias("b"),
+        F.col("doc_id").alias("b"),
     )
     return lhs.join(rhs, keys + ["_ci", "_cj"]).select("a", "b")

@@ -90,167 +90,43 @@ def simhash_candidates(
     max_bucket_size: int = 5000,
     salted_bucket_max: int = 50_000,
 ) -> DataFrame:
-    """Candidate pairs agreeing on >= 1 of the k+1 blocks (complete for
-    Hamming distance <= k by pigeonhole). Hot (block, value) buckets up to
-    ``salted_bucket_max`` pair through the exact grid-salted self-join
-    (operators/salted_join.py — same policy as minhash.candidate_pairs,
-    fingerprints riding as payload); only buckets beyond that are dropped
-    (skew guard).
+    """Candidate pairs (a, b, fa, fb) agreeing on >= 1 of the k+1 blocks
+    (complete for Hamming distance <= k by pigeonhole): the LSH bucket
+    self-join of salted_join.bucket_self_pairs on (block, value), with the
+    fingerprints riding as payload — the same plan, skew policy and driver
+    fast path as minhash.candidate_pairs. The driver guard counts exploded
+    (doc, block) rows. Under it the result carries the driver-resident
+    candidates (``_driver_pairs_pdf``) that simhash_pairs verifies in
+    numpy."""
+    from .salted_join import bucket_self_pairs
 
-    Bucket sizing is a groupBy (map-side partial agg) joined back onto a
-    persisted exploded-block frame — NOT a count-over-window: boilerplate
-    webtext makes near-identical fingerprints, so hot (block, value) keys
-    are the norm, and a WindowExec partition can neither be split by AQE
-    nor partially aggregated. Same shape as minhash.candidate_pairs.
-    """
-    from ..plans.caching import scoped_persist
-
-    blocks = _blocks(cfg)
-    # consumed by the size agg, the join-back, and both sides of the pair
-    # self-join — persist or the fingerprint kernel re-executes for each;
-    # scope-registered (plans.caching) so a cache_scope() caller reclaims
-    # it. Co-partitioned on the block key before caching so the consumers
-    # run on the cached partitioning instead of re-exchanging per consumer.
-    def exploded_from(src: DataFrame) -> DataFrame:
-        return src.select(
-            "doc_id",
-            "fingerprint",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned("fingerprint", shift).bitwiseAND(
-                            F.lit((1 << width) - 1)
-                        )
-                        for shift, width in blocks
-                    ]
-                )
-            ).alias("block", "value"),
-        )
-
-    exploded = exploded_from(fingerprints)
-    # Size-adaptive driver fast path (round-6, same design as
-    # minhash.candidate_pairs): under the guard, the block explode, block
-    # exchange, size agg, join-back, hot probe, pair self-join, salted
-    # grid and distinct collapse into one bounded Arrow pull of the
-    # PER-DOC fingerprint frame (1 row/doc — the explode happens in numpy
-    # with the same unsigned shift/mask as the Catalyst expression) + a
-    # numpy pass emitting the identical distinct (a, b, fa, fb) set.
-    # Above the row guard or pair budget, the distributed plan runs
-    # unchanged, reusing the probed fingerprint cache under its exploded
-    # projection.
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from ..plans.caching import probe_rows
-    from .salted_join import driver_bucket_pairs
-
-    driver_max = int(os.environ.get("SPARK_GRAFT_LSH_DRIVER_MAX", str(1 << 22)))
-    pair_cap = int(
-        os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
-    )
-    if driver_max > 0:
-        raw = scoped_persist(fingerprints)
-        pdf = probe_rows(raw, driver_max)
-        if pdf is not None:
-            fp_u = pdf["fingerprint"].to_numpy(np.int64).view(np.uint64)
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            exp = pd.DataFrame(
-                {
-                    "doc_id": np.tile(ids, len(blocks)),
-                    "fingerprint": np.tile(
-                        fp_u.view(np.int64), len(blocks)
-                    ),
-                    "block": np.repeat(
-                        np.arange(len(blocks), dtype=np.int64), len(ids)
-                    ),
-                    "value": np.concatenate(
-                        [
-                            (
-                                (fp_u >> np.uint64(shift))
-                                & np.uint64((1 << width) - 1)
-                            ).view(np.int64)
-                            for shift, width in blocks
-                        ]
+    exploded = fingerprints.select(
+        "doc_id",
+        "fingerprint",
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftrightunsigned("fingerprint", shift).bitwiseAND(
+                        F.lit((1 << width) - 1)
                     )
-                    if len(ids)
-                    else np.empty(0, np.int64),
-                }
+                    for shift, width in _blocks(cfg)
+                ]
             )
-            pairs_pdf = driver_bucket_pairs(
-                exp,
-                ["block", "value"],
-                salted_bucket_max,
-                pair_cap,
-                payload=("fingerprint",),
-            )
-            if pairs_pdf is not None:
-                raw.unpersist(blocking=False)
-                pairs_pdf = pairs_pdf.rename(
-                    columns={"fingerprint_a": "fa", "fingerprint_b": "fb"}
-                )
-                out = fingerprints.sparkSession.createDataFrame(
-                    pairs_pdf, "a long, b long, fa long, fb long"
-                )
-                # driver-resident candidates, memoized: simhash_pairs can
-                # then run the hamming verify in numpy too
-                out._driver_pairs_pdf = pairs_pdf
-                return out
-        # persisted: the distributed plan's exploded projection reuses the
-        # cached fingerprint frame (the kernel never re-runs)
-        exploded = exploded_from(raw)
-
-    exploded = scoped_persist(exploded.repartition("block", "value"))
-    # two consumers (fast-path filter + hot-bucket filter)
-    sizes = scoped_persist(
-        exploded.groupBy("block", "value").agg(
-            F.count(F.lit(1)).alias("bsize")
-        )
+        ).alias("block", "value"),
     )
-    sized = exploded.join(
-        sizes.filter(
-            (F.col("bsize") >= 2) & (F.col("bsize") <= max_bucket_size)
-        ),
+    pairs = bucket_self_pairs(
+        exploded,
         ["block", "value"],
+        max_bucket_size,
+        salted_bucket_max,
+        payload=("fingerprint",),
     )
-    left = sized.select(
-        "block", "value", F.col("doc_id").alias("a"), F.col("fingerprint").alias("fa")
-    )
-    right = sized.select(
-        "block", "value", F.col("doc_id").alias("b"), F.col("fingerprint").alias("fb")
-    )
-    plain = (
-        left.join(right, ["block", "value"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "fa", "fb")
-    )
-    # Hot-block short-circuit (round-6, same as minhash.candidate_pairs):
-    # prune the salted-grid branch when the size frame shows no block over
-    # the cap — identical pair set, several fewer stages.
-    has_hot = bool(
-        sizes.filter(F.col("bsize") > max_bucket_size).limit(1).count()
-    )
-    if not has_hot:
-        return plain.distinct()
-    from .salted_join import grid_salted_self_pairs
-
-    hot = exploded.join(
-        sizes.filter(
-            (F.col("bsize") > max_bucket_size)
-            & (F.col("bsize") <= salted_bucket_max)
-        ),
-        ["block", "value"],
-    )
-    salted = grid_salted_self_pairs(
-        hot, ["block", "value"], max_bucket_size, payload=("fingerprint",)
-    ).select(
-        "a",
-        "b",
-        F.col("fingerprint_a").alias("fa"),
-        F.col("fingerprint_b").alias("fb"),
-    )
-    return plain.unionByName(salted).distinct()
+    names = {"fingerprint_a": "fa", "fingerprint_b": "fb"}
+    out = pairs.withColumnsRenamed(names)
+    memo = getattr(pairs, "_driver_pairs_pdf", None)
+    if memo is not None:
+        out._driver_pairs_pdf = memo.rename(columns=names)
+    return out
 
 
 def simhash_pairs(

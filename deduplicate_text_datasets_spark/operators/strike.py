@@ -7,10 +7,12 @@ ranges (:141-147), map each onto documents via the `.size` offsets with the
 (:66-69), rebuild the dataset (:74-124). finish_single_file.py:20-37 is the
 single-file splice variant.
 
-Spark plan: interval join (chunked equi-join) -> per-doc clamped local
-spans -> groupBy(doc).collect spans -> splice kernel. Documents with no
-spans bypass Python entirely (anti-join + union), so the kernel only ever
-sees the (small) affected subset.
+Distributed plan: interval join (chunked equi-join) -> per-doc clamped
+local spans -> groupBy(doc).collect spans -> splice kernel. Documents with
+no spans bypass Python entirely (anti-join + union), so the kernel only
+ever sees the (small) affected subset. Under the driver size guards the
+spans are computed on the driver instead and every document goes through
+one splice pass (see apply_removals).
 """
 
 from __future__ import annotations
@@ -125,6 +127,20 @@ def _driver_spans(
     )
 
 
+def _splice(text: str | bytes, starts, ends) -> bytes:
+    """One doc's bytes with the [starts[i], ends[i]) spans deleted. Spans
+    come sorted ascending and are cut right-to-left so earlier offsets stay
+    valid (finish_dedup_wiki40b.py:66-69)."""
+    raw = (
+        bytes(text)
+        if isinstance(text, (bytes, bytearray))
+        else text.encode("utf-8")
+    )
+    for a, b in zip(starts[::-1], ends[::-1]):
+        raw = raw[: int(a)] + raw[int(b) :]
+    return raw
+
+
 def apply_removals(
     docs_with_offsets: DataFrame,
     remove_ranges: DataFrame,
@@ -162,106 +178,37 @@ def apply_removals(
     # with_offsets size-guarded fast paths attach), the whole span
     # assignment — chunk explode, range join, clamp, span groupBy — is two
     # numpy searchsorted calls on the driver. The span arrays ride an
-    # executor broadcast into the splice kernel; the touched/untouched
-    # split joins only a FLAT (doc_id) local relation, so the plan has
-    # ZERO exchanges (a nested array<struct> local frame was measured at
-    # seconds of Python->JVM row conversion — flat arrays avoid it). Work
+    # executor broadcast into ONE splice pass over every doc (untouched
+    # rows pass through byte-unchanged): zero joins, zero exchanges. Work
     # and memory stay bounded by the upstream guards (ranges <= 2^20,
     # docs <= 2^20; ranges are disjoint so overlap pairs <= ranges +
-    # docs). Above either guard a memo is absent and the distributed join
-    # plan below runs unchanged. Identical output (pytest-pinned).
+    # docs). Every doc's text crosses the Python boundary once here; the
+    # offsets guard bounds how many docs that is. Above either guard a
+    # memo is absent and the distributed join plan below runs. Identical
+    # output (pytest-pinned).
     fast = _driver_spans(docs_with_offsets, remove_ranges, cfg)
     if fast is not None:
-        import os
-
         from ..plans.caching import scoped_broadcast
 
-        t_ids, t_a, t_b, t_off = fast
-        spark = docs_with_offsets.sparkSession
         # scope-registered: destroyed at cache_scope exit (plans.caching)
-        bc = scoped_broadcast(spark.sparkContext, (t_ids, t_a, t_b, t_off))
-        # Single-pass variant: when the whole corpus is small (total-bytes
-        # memo under the guard), ship EVERY doc through one splice kernel
-        # — untouched rows pass through byte-unchanged — instead of the
-        # touched/untouched join split: one 32-task stage, zero joins.
-        # The guard matters because the split exists to keep untouched
-        # text out of the Python boundary at scale; under 256 MB the
-        # round trip is cheaper than the second branch + union.
-        total_memo = getattr(docs_with_offsets, "_corpus_total_memo", None)
-        single_max = int(
-            os.environ.get("SPARK_GRAFT_STRIKE_SINGLE_MAX", str(1 << 28))
-        )
-        if total_memo is not None and total_memo <= single_max:
+        bc = scoped_broadcast(docs_with_offsets.sparkSession.sparkContext, fast)
 
-            def splice_all(
-                batches: Iterator[pd.DataFrame],
-            ) -> Iterator[pd.DataFrame]:
-                import numpy as _np
-
-                ids_, a_, b_, off_ = bc.value
-                for pdf in batches:
-                    out = []
-                    for doc_id, url, text in zip(
-                        pdf["doc_id"], pdf["url"], pdf["text"]
-                    ):
-                        raw = (
-                            bytes(text)
-                            if isinstance(text, (bytes, bytearray))
-                            else text.encode("utf-8")
-                        )
-                        k = int(_np.searchsorted(ids_, doc_id))
-                        if k < len(ids_) and ids_[k] == doc_id:
-                            for j in range(
-                                int(off_[k + 1]) - 1, int(off_[k]) - 1, -1
-                            ):
-                                raw = raw[: int(a_[j])] + raw[int(b_[j]) :]
-                        out.append((int(doc_id), url, raw))
-                    yield pd.DataFrame(
-                        out, columns=["doc_id", "url", "deduped"]
-                    )
-
-            return docs.mapInPandas(splice_all, STRIKE_SCHEMA)
-
-        ids_df = F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"doc_id": t_ids}), "doc_id long"
-            )
-        )
-
-        def splice_bc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as _np
-
+        def splice_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ids_, a_, b_, off_ = bc.value
             for pdf in batches:
                 out = []
                 for doc_id, url, text in zip(
                     pdf["doc_id"], pdf["url"], pdf["text"]
                 ):
-                    raw = (
-                        bytes(text)
-                        if isinstance(text, (bytes, bytearray))
-                        else text.encode("utf-8")
-                    )
-                    k = int(_np.searchsorted(ids_, doc_id))
-                    # right-to-left so earlier offsets stay valid
-                    # (finish_dedup_wiki40b.py:66-69); spans are stored
-                    # ascending by (a, b)
-                    for j in range(int(off_[k + 1]) - 1, int(off_[k]) - 1, -1):
-                        raw = raw[: int(a_[j])] + raw[int(b_[j]) :]
+                    k = int(np.searchsorted(ids_, doc_id))
+                    lo = hi = 0
+                    if k < len(ids_) and ids_[k] == doc_id:
+                        lo, hi = off_[k], off_[k + 1]
+                    raw = _splice(text, a_[lo:hi], b_[lo:hi])
                     out.append((int(doc_id), url, raw))
                 yield pd.DataFrame(out, columns=["doc_id", "url", "deduped"])
 
-        struck = docs.join(ids_df, "doc_id").mapInPandas(
-            splice_bc, STRIKE_SCHEMA
-        )
-        untouched = docs.join(ids_df, "doc_id", "left_anti").select(
-            "doc_id",
-            "url",
-            (
-                F.col("text") if text_is_binary else F.encode("text", "UTF-8")
-            ).alias("deduped"),
-        )
-        return struck.unionByName(untouched)
+        return docs.mapInPandas(splice_all, STRIKE_SCHEMA)
 
     # Persist: the spans frame is small (affected docs only) but feeds TWO
     # consumers — the splice join and the untouched anti-join. Beyond the
@@ -288,16 +235,9 @@ def apply_removals(
             for doc_id, url, text, spans_ in zip(
                 pdf["doc_id"], pdf["url"], pdf["text"], pdf["spans"]
             ):
-                raw = (
-                    bytes(text)
-                    if isinstance(text, (bytes, bytearray))
-                    else text.encode("utf-8")
-                )
-                # right-to-left so earlier offsets stay valid
-                # (finish_dedup_wiki40b.py:66-69)
-                for s in sorted(spans_, key=lambda r: r["a"], reverse=True):
-                    raw = raw[: int(s["a"])] + raw[int(s["b"]) :]
-                out.append((int(doc_id), url, raw))
+                starts = [sp["a"] for sp in spans_]
+                ends = [sp["b"] for sp in spans_]
+                out.append((int(doc_id), url, _splice(text, starts, ends)))
             yield pd.DataFrame(out, columns=["doc_id", "url", "deduped"])
 
     struck = touched.mapInPandas(splice, STRIKE_SCHEMA)

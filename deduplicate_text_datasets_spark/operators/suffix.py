@@ -21,9 +21,11 @@ P positions is ~P^2/2^128 (< 1e-10 even at P = 10^14). The reference
 accepts an analogous approximation class via HACKSIZE (main.rs:1208-1216).
 
 Point queries (count-occurrences, find-training-data) keep a real per-shard
-suffix array: a prefix-doubling SA built with numpy argsort inside the
-kernel — the distributed "global SA" is the union of shard SAs plus the
-overlap ownership rule (SURVEY.md §4.3).
+suffix array — the distributed "global SA" is the union of shard SAs plus
+the overlap ownership rule (SURVEY.md §4.3). One per-shard lookup per query
+kind (_shard_counts, _shard_positions, _shard_match_lens) serves both the
+live operators here, which build each shard's SA in the same task
+(_shard_sa, the only SA builder), and the prebuilt index in sa_index.py.
 """
 
 from __future__ import annotations
@@ -880,6 +882,137 @@ QUERY_HITS_SCHEMA = T.StructType(
 )
 
 
+def _check_query_lengths(queries: list[tuple[int, bytes]], overlap) -> None:
+    """A match is counted by the shard owning its start position, and the
+    shard buffer extends ``overlap`` bytes past the owned range: a query
+    longer than overlap+1 bytes can straddle an ownership boundary without
+    being resident in the owning shard, so the count/position operators
+    refuse it. ``overlap`` is the width, or a callable returning it (None
+    skips the check) so an index is only scanned when a non-empty query
+    needs it."""
+    max_q = max((len(q) for _, q in queries), default=0)
+    if max_q == 0:
+        return
+    if callable(overlap):
+        overlap = overlap()
+    if overlap is not None and max_q > int(overlap) + 1:
+        raise ValueError(
+            f"query of {max_q} bytes exceeds overlap_bytes+1="
+            f"{int(overlap) + 1}; raise ExactSubstrConfig.overlap_bytes "
+            "(and rebuild a prebuilt index)"
+        )
+
+
+def _query_arrays(queries: list[tuple[int, bytes]]) -> list[tuple[int, np.ndarray]]:
+    return [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
+
+
+# --- per-shard lookups -----------------------------------------------------
+#
+# One function per query kind, each over one shard's (lo, own_hi, buf, sa):
+# the live operators below feed them a suffix array built in the same task
+# (_shard_sa), the sa_index operators one read from the prebuilt index.
+
+
+def _owned_starts(
+    lo: int, own_hi: int, buf: np.ndarray, sa: np.ndarray, q: np.ndarray
+) -> np.ndarray:
+    """Global start offsets of q's occurrences that this shard owns."""
+    first, last = _sa_range(buf, sa, q)
+    starts = sa[first:last] + lo
+    return starts[starts < own_hi]
+
+
+def _shard_counts(lo, own_hi, buf, sa, qarr) -> pd.DataFrame:
+    """(query_id, cnt, first_pos) per query with an owned occurrence."""
+    rows = []
+    for qid, q in qarr:
+        if len(q) == 0:
+            continue
+        owned = _owned_starts(lo, own_hi, buf, sa, q)
+        if len(owned):
+            rows.append((qid, int(len(owned)), int(owned.min())))
+    return pd.DataFrame(rows, columns=["query_id", "cnt", "first_pos"]).astype(
+        {"query_id": "int64", "cnt": "int64", "first_pos": "int64"}
+    )
+
+
+def _shard_positions(lo, own_hi, buf, sa, qarr) -> pd.DataFrame:
+    """(query_id, pos) for every owned occurrence."""
+    out_q: list[int] = []
+    out_p: list[int] = []
+    for qid, q in qarr:
+        if len(q) == 0:
+            continue
+        owned = _owned_starts(lo, own_hi, buf, sa, q)
+        out_q.extend([qid] * len(owned))
+        out_p.extend(owned.tolist())
+    return pd.DataFrame({"query_id": out_q, "pos": out_p}).astype(
+        {"query_id": "int64", "pos": "int64"}
+    )
+
+
+def _shard_match_lens(lo, own_hi, buf, sa, qarr, probe_cap, step) -> pd.DataFrame:
+    """(query_id, qpos, match_len): per query offset, the longest prefix
+    of that query suffix occurring anywhere in the shard buffer."""
+    frames = []
+    for qid, q in qarr:
+        qpos = np.arange(0, len(q), step, dtype=np.int64)
+        lens = _batched_match_lens(buf, sa, q, qpos, probe_cap)
+        frames.append(
+            pd.DataFrame({"query_id": qid, "qpos": qpos, "match_len": lens})
+        )
+    if not frames:
+        cols = ("query_id", "qpos", "match_len")
+        return pd.DataFrame({c: np.empty(0, np.int64) for c in cols})
+    return pd.concat(frames, ignore_index=True)
+
+
+def _per_shard(shards, fn, *args) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: ``fn(lo, own_hi, buf, sa, *args)`` for every
+    (lo, own_hi, buf, sa) shard, one output frame per partition."""
+    frames = [fn(*shard, *args) for shard in shards]
+    if frames:
+        yield pd.concat(frames, ignore_index=True)
+
+
+def _shard_sa(
+    pdf: pd.DataFrame, cfg: ExactSubstrConfig, total: int
+) -> tuple[int, int, np.ndarray, np.ndarray]:
+    """One shard's doc rows -> (lo, own_hi, buf, sa): the shard buffer
+    with its trailing overlap, and its suffix array."""
+    s = int(pdf["shard_id"].iloc[0])
+    lo, buf = assemble_shard_buffer(
+        pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
+    )
+    own_hi = min((s + 1) * cfg.shard_bytes, total)
+    return lo, own_hi, buf, suffix_array(buf)
+
+
+def _live_sa_query(
+    docs: DataFrame,
+    cfg: ExactSubstrConfig,
+    total: int | None,
+    schema: T.StructType,
+    fn,
+    *args,
+) -> DataFrame:
+    """Run the per-shard lookup ``fn`` over shard suffix arrays built in
+    the same Python task: buf and sa never cross the Arrow boundary (the
+    indexed operators pay that crossing once, at index build)."""
+    if "byte_start" not in docs.columns:
+        docs = with_offsets(docs, cfg.with_separators)
+    if total is None:
+        total = corpus_total_bytes(docs)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        shards = (_shard_sa(g, cfg, total) for g in _iter_shard_groups(batches))
+        return _per_shard(shards, fn, *args)
+
+    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
+    return _apply_shard_kernel(shards, total, cfg.shard_bytes, kernel, schema)
+
+
 def count_occurrences(
     docs: DataFrame,
     queries: list[tuple[int, bytes]],
@@ -897,46 +1030,9 @@ def count_occurrences(
 
     Returns (query_id, count, first_pos).
     """
-    max_q = max((len(q) for _, q in queries), default=0)
-    if max_q > cfg.overlap_bytes + 1:
-        raise ValueError(
-            f"query of {max_q} bytes exceeds overlap_bytes+1="
-            f"{cfg.overlap_bytes + 1}; raise ExactSubstrConfig.overlap_bytes"
-        )
-    if "byte_start" not in docs.columns:
-        docs = with_offsets(docs, cfg.with_separators)
-    if total is None:
-        total = corpus_total_bytes(docs)
-    qarr = [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = int(pdf["shard_id"].iloc[0])
-        lo, buf = assemble_shard_buffer(
-            pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
-        )
-        own_hi = min((s + 1) * cfg.shard_bytes, total)
-        sa = suffix_array(buf)
-        rows = []
-        for qid, q in qarr:
-            if len(q) == 0:
-                continue
-            first, last = _sa_range(buf, sa, q)
-            if last <= first:
-                continue
-            starts = sa[first:last] + lo
-            owned = starts[starts < own_hi]
-            if len(owned) == 0:
-                continue
-            rows.append((qid, int(len(owned)), int(owned.min())))
-        return pd.DataFrame(rows, columns=["query_id", "cnt", "first_pos"]).astype(
-            {"query_id": "int64", "cnt": "int64", "first_pos": "int64"}
-        )
-
-    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-    hits = (
-        shards.select("shard_id", "doc_id", "byte_start", "text")
-        .groupBy("shard_id")
-        .applyInPandas(kernel, QUERY_HITS_SCHEMA)
+    _check_query_lengths(queries, cfg.overlap_bytes)
+    hits = _live_sa_query(
+        docs, cfg, total, QUERY_HITS_SCHEMA, _shard_counts, _query_arrays(queries)
     )
     return _count_with_baseline(hits, [qid for qid, _ in queries])
 
@@ -1178,37 +1274,9 @@ def find_training_data(
     reference's HACKSIZE): a match longer than shard_bytes+overlap that
     straddles an ownership boundary reports the in-buffer prefix length.
     """
-    if "byte_start" not in docs.columns:
-        docs = with_offsets(docs, cfg.with_separators)
-    if total is None:
-        total = corpus_total_bytes(docs)
-    qarr = [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        lo, buf = assemble_shard_buffer(
-            pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
-        )
-        sa = suffix_array(buf)
-        frames = []
-        for qid, q in qarr:
-            qpos = np.arange(0, len(q), step, dtype=np.int64)
-            lens = _batched_match_lens(buf, sa, q, qpos, probe_cap)
-            frames.append(
-                pd.DataFrame(
-                    {"query_id": qid, "qpos": qpos, "match_len": lens}
-                )
-            )
-        if not frames:
-            return pd.DataFrame(
-                {"query_id": [], "qpos": [], "match_len": []}
-            ).astype({"query_id": "int64", "qpos": "int64", "match_len": "int64"})
-        return pd.concat(frames, ignore_index=True)
-
-    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-    per_shard = (
-        shards.select("shard_id", "doc_id", "byte_start", "text")
-        .groupBy("shard_id")
-        .applyInPandas(kernel, MATCH_LEN_SCHEMA)
+    per_shard = _live_sa_query(
+        docs, cfg, total, MATCH_LEN_SCHEMA, _shard_match_lens,
+        _query_arrays(queries), probe_cap, step,
     )
     return per_shard.groupBy("query_id", "qpos").agg(
         F.max("match_len").alias("match_len")
@@ -1232,43 +1300,9 @@ def find_positions(
     """All occurrence positions of each query (SuffixTable::positions,
     src/table.rs:250-307): the same per-shard double binary search as
     count_occurrences, emitting every owned start offset."""
-    max_q = max((len(q) for _, q in queries), default=0)
-    if max_q > cfg.overlap_bytes + 1:
-        raise ValueError(
-            f"query of {max_q} bytes exceeds overlap_bytes+1="
-            f"{cfg.overlap_bytes + 1}"
-        )
-    if "byte_start" not in docs.columns:
-        docs = with_offsets(docs, cfg.with_separators)
-    if total is None:
-        total = corpus_total_bytes(docs)
-    qarr = [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = int(pdf["shard_id"].iloc[0])
-        lo, buf = assemble_shard_buffer(
-            pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
-        )
-        own_hi = min((s + 1) * cfg.shard_bytes, total)
-        sa = suffix_array(buf)
-        out_q, out_p = [], []
-        for qid, q in qarr:
-            if len(q) == 0:
-                continue
-            first, last = _sa_range(buf, sa, q)
-            starts = sa[first:last] + lo
-            owned = starts[starts < own_hi]
-            out_q.extend([qid] * len(owned))
-            out_p.extend(owned.tolist())
-        return pd.DataFrame({"query_id": out_q, "pos": out_p}).astype(
-            {"query_id": "int64", "pos": "int64"}
-        )
-
-    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-    return (
-        shards.select("shard_id", "doc_id", "byte_start", "text")
-        .groupBy("shard_id")
-        .applyInPandas(kernel, POSITIONS_SCHEMA)
+    _check_query_lengths(queries, cfg.overlap_bytes)
+    return _live_sa_query(
+        docs, cfg, total, POSITIONS_SCHEMA, _shard_positions, _query_arrays(queries)
     )
 
 

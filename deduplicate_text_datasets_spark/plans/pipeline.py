@@ -34,6 +34,10 @@ from ..sources.corpus import corpus_total_bytes, with_offsets
 from .checkpoints import StageStore, config_fingerprint
 
 
+# Not a duplicate of connected_components' own driver path: with this twin
+# removed (CC's driver path taking over), the `pipeline` benchmark workload
+# was slower in 8 of 8 interleaved pairs on 4 cores — wall_s median
+# 7.62 -> 8.23 s, cpu_s +8%, shuffle_mb +7%.
 def _driver_neardup_assign(docs, mh):
     """Driver twin of the neardup edge-union + CC stage, or None when any
     fast-path ingredient is missing. MinHash edges must already be

@@ -22,7 +22,6 @@ longer than the longest potential match, everything will work out").
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -81,13 +80,11 @@ def with_offsets(docs: DataFrame, with_separators: bool = True) -> DataFrame:
                 "doc_id long, doc_len long, byte_start long, byte_end long",
             )
             out = docs.join(F.broadcast(offs), "doc_id")
-            # Driver-resident byproducts, memoized on the frame (round-6):
-            # the exact corpus total (max byte_end = last cumsum entry) and
-            # the offset arrays themselves. corpus_total_bytes and the
-            # strike fast path read these instead of re-running an agg /
-            # join over the cluster. persist() returns the same object, so
-            # the memo survives the callers' scoped_persist.
-            out._corpus_total_memo = int(ends[-1]) if len(pdf) else 0
+            # Driver-resident offset arrays, memoized on the frame
+            # (round-6): corpus_total_bytes (last byte_end) and the strike
+            # fast path read them instead of re-running an agg / join over
+            # the cluster. persist() returns the same object, so the memo
+            # survives the callers' scoped_persist.
             out._offsets_memo = (
                 pdf["doc_id"].to_numpy(np.int64),
                 pdf["byte_start"].to_numpy(np.int64),
@@ -138,9 +135,10 @@ def auto_shard_bytes(
 
 
 def corpus_total_bytes(docs_with_offsets: DataFrame) -> int:
-    memo = getattr(docs_with_offsets, "_corpus_total_memo", None)
+    memo = getattr(docs_with_offsets, "_offsets_memo", None)
     if memo is not None:
-        return int(memo)
+        byte_end = memo[2]
+        return int(byte_end[-1]) if len(byte_end) else 0
     row = docs_with_offsets.agg(F.max("byte_end").alias("t")).collect()[0]
     return int(row["t"] or 0)
 
@@ -221,27 +219,3 @@ def assemble_shard_buffer(
             "(missing docs — offsets/sharding invariant violated)"
         )
     return lo, buf
-
-
-def iter_shard_groups(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Regroup mapInPandas batches by shard_id (rows for one shard are
-    contiguous after a repartition+sort by shard_id). Prefer
-    groupBy().applyInPandas in operators; this helper exists for kernels
-    that want streaming control."""
-    pending: pd.DataFrame | None = None
-    for pdf in batches:
-        if pending is not None:
-            pdf = pd.concat([pending, pdf], ignore_index=True)
-            pending = None
-        if len(pdf) == 0:
-            continue
-        last = pdf["shard_id"].iloc[-1]
-        full = pdf[pdf["shard_id"] != last]
-        pending = pdf[pdf["shard_id"] == last]
-        for _, g in full.groupby("shard_id", sort=True):
-            yield g
-    if pending is not None and len(pending):
-        for _, g in pending.groupby("shard_id", sort=True):
-            yield g

@@ -18,7 +18,6 @@ ALLOWED = {
     "SPARK_GRAFT_VERIFY_DRIVER_MAX",
     "SPARK_GRAFT_CC_DRIVER_MAX",
     "SPARK_GRAFT_INTERVALS_DRIVER_MAX",
-    "SPARK_GRAFT_STRIKE_SINGLE_MAX",
     # ExactSubstr prefilters and their Bloom sketch
     "SPARK_GRAFT_FP_PREFILTER",
     "SPARK_GRAFT_FP_PREFILTER_MAX_KEYS",

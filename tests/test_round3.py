@@ -235,6 +235,10 @@ def test_sa_index_overlap_guard(spark, docs, tmp_path_factory):
         read_suffix_index,
         write_suffix_index,
     )
+    from deduplicate_text_datasets_spark.operators.suffix import (
+        count_occurrences,
+        find_positions,
+    )
 
     cfg = ExactSubstrConfig(
         length_threshold=50, shard_bytes=4096, overlap_bytes=64,
@@ -250,15 +254,24 @@ def test_sa_index_overlap_guard(spark, docs, tmp_path_factory):
     row = index.select("shard_bytes", "overlap_bytes").first()
     assert (row["shard_bytes"], row["overlap_bytes"]) == (4096, 64)
     # a query longer than overlap+1 could miss boundary-straddling
-    # occurrences -> both indexed query operators must refuse it
+    # occurrences -> the indexed and the live count/position operators
+    # must all refuse it
+    ops = {
+        "count_occurrences_indexed": lambda q: count_occurrences_indexed(index, q),
+        "find_positions_indexed": lambda q: find_positions_indexed(index, q),
+        "count_occurrences": lambda q: count_occurrences(docs, q, cfg),
+        "find_positions": lambda q: find_positions(docs, q, cfg),
+    }
     long_q = b"x" * 66
-    with pytest.raises(ValueError, match="overlap"):
-        count_occurrences_indexed(index, [(0, long_q)]).collect()
-    with pytest.raises(ValueError, match="overlap"):
-        find_positions_indexed(index, [(0, long_q)]).collect()
-    # at the limit it works
-    ok = count_occurrences_indexed(index, [(0, b"y" * 65)])
-    assert ok.collect()[0]["count"] == 0
+    for name, op in ops.items():
+        with pytest.raises(ValueError, match="overlap"):
+            op([(0, long_q)]).collect()
+    # at the limit they work
+    at_limit = [(0, b"y" * 65)]
+    for name in ("count_occurrences_indexed", "count_occurrences"):
+        assert ops[name](at_limit).collect()[0]["count"] == 0, name
+    for name in ("find_positions_indexed", "find_positions"):
+        assert ops[name](at_limit).collect() == [], name
 
 
 # --- exact-frame evidence for the two rows-only gate queries ---------------

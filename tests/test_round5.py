@@ -815,7 +815,9 @@ def test_salted_grid_replication_factor(spark):
     diagonal shared): the exchange cost of salting is linear in k, not
     quadratic."""
     from deduplicate_text_datasets_spark.config import MinHashConfig
-    from deduplicate_text_datasets_spark.operators.minhash import _salted_pairs
+    from deduplicate_text_datasets_spark.operators.salted_join import (
+        grid_salted_self_pairs,
+    )
     from pyspark.sql import functions as F
 
     cfg = MinHashConfig(max_bucket_size=16, salted_bucket_max=1000)
@@ -825,7 +827,7 @@ def test_salted_grid_replication_factor(spark):
     # = k + 1 = 8 rows per member, 800 total tagged rows
     g = hot.withColumn("k", F.ceil(F.col("bsize") / F.lit(16)).cast("int"))
     assert g.select(F.max("k")).first()[0] == 7
-    pairs = _salted_pairs(hot, cfg)
+    pairs = grid_salted_self_pairs(hot, ["band", "bucket"], cfg.max_bucket_size)
     assert pairs.count() == 100 * 99 // 2  # exact, duplicate-free
     assert pairs.distinct().count() == 100 * 99 // 2
 

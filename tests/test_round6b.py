@@ -33,6 +33,19 @@ def _docs(spark, n=60, planted=True):
     return spark.createDataFrame(rows, "doc_id long, url string, text string")
 
 
+def _driver_rows(df):
+    """Sorted rows of the driver-resident pair memo; fails when the driver
+    path did not fire."""
+    memo = getattr(df, "_driver_pairs_pdf", None)
+    assert memo is not None, "driver fast path did not fire"
+    return sorted(map(tuple, memo.to_numpy().tolist()))
+
+
+def _is_local_relation(df):
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
 def test_candidate_pairs_driver_vs_distributed(spark, monkeypatch):
     from deduplicate_text_datasets_spark.operators.minhash import (
         doc_shingles,
@@ -45,13 +58,13 @@ def test_candidate_pairs_driver_vs_distributed(spark, monkeypatch):
     buckets = lsh_buckets(
         minhash_signatures(doc_shingles(_docs(spark), cfg), cfg), cfg
     )
-    fast = sorted(
-        (r["a"], r["b"]) for r in candidate_pairs(buckets, cfg).collect()
-    )
+    fast_df = candidate_pairs(buckets, cfg)
+    fast = sorted((r["a"], r["b"]) for r in fast_df.collect())
+    assert _driver_rows(fast_df) == fast  # the driver path really ran
     monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
-    slow = sorted(
-        (r["a"], r["b"]) for r in candidate_pairs(buckets, cfg).collect()
-    )
+    slow_df = candidate_pairs(buckets, cfg)
+    assert not hasattr(slow_df, "_driver_pairs_pdf")
+    slow = sorted((r["a"], r["b"]) for r in slow_df.collect())
     assert fast == slow and fast
 
 
@@ -113,18 +126,30 @@ def test_simhash_candidates_driver_vs_distributed(spark, monkeypatch):
     from deduplicate_text_datasets_spark.operators.simhash import (
         simhash_fingerprints,
         simhash_candidates,
+        simhash_pairs,
     )
 
     cfg = SimHashConfig()
-    fps = simhash_fingerprints(_docs(spark))
-    fast = sorted(
-        map(tuple, simhash_candidates(fps, cfg).collect())
-    )
+    docs = _docs(spark)
+    fps = simhash_fingerprints(docs)
+    fast_df = simhash_candidates(fps, cfg)
+    fast = sorted(map(tuple, fast_df.collect()))
+    # the driver path ran and its memo survived the fa/fb rename, so
+    # simhash_pairs verifies Hamming distance on the driver: its result is
+    # a bare local relation, with no distributed bit_count filter
+    assert _driver_rows(fast_df) == fast
+    fast_hd = simhash_pairs(docs, cfg)
+    assert _is_local_relation(fast_hd)
     monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
-    slow = sorted(
-        map(tuple, simhash_candidates(fps, cfg).collect())
-    )
+    slow_df = simhash_candidates(fps, cfg)
+    assert not hasattr(slow_df, "_driver_pairs_pdf")
+    slow = sorted(map(tuple, slow_df.collect()))
     assert fast == slow and fast
+    slow_hd = simhash_pairs(docs, cfg)
+    assert not _is_local_relation(slow_hd)
+    assert sorted(map(tuple, fast_hd.collect())) == sorted(
+        map(tuple, slow_hd.collect())
+    )
 
 
 def test_simhash_driver_path_salted_region_parity(spark, monkeypatch):
@@ -137,12 +162,9 @@ def test_simhash_driver_path_salted_region_parity(spark, monkeypatch):
 
     cfg = SimHashConfig()
     fps = simhash_fingerprints(_docs(spark, n=40))
-    fast = sorted(
-        map(
-            tuple,
-            simhash_candidates(fps, cfg, max_bucket_size=4).collect(),
-        )
-    )
+    fast_df = simhash_candidates(fps, cfg, max_bucket_size=4)
+    fast = sorted(map(tuple, fast_df.collect()))
+    assert _driver_rows(fast_df) == fast
     monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
     slow = sorted(
         map(
@@ -195,7 +217,7 @@ def test_offsets_memo_matches_agg(spark, monkeypatch):
 
     d = _docs(spark, n=30)
     fast = with_offsets(d)
-    assert hasattr(fast, "_corpus_total_memo")
+    assert hasattr(fast, "_offsets_memo")
     total_memo = corpus_total_bytes(fast)
     # strip the memo -> the agg path must agree
     agg_total = int(
@@ -205,7 +227,7 @@ def test_offsets_memo_matches_agg(spark, monkeypatch):
     # distributed offsets path: same totals, no memo
     monkeypatch.setenv("SPARK_GRAFT_OFFSETS_DRIVER_MAX", "0")
     slow = with_offsets(d)
-    assert not hasattr(slow, "_corpus_total_memo")
+    assert not hasattr(slow, "_offsets_memo")
     assert corpus_total_bytes(slow) == total_memo
 
 
