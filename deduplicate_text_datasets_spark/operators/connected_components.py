@@ -14,8 +14,6 @@ plans/pipeline.py for the checkpointed variant with lineage counters).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -23,13 +21,13 @@ from pyspark.sql import functions as F
 
 
 def _canon(edges: DataFrame) -> DataFrame:
+    """(u > v) edges without self-loops; duplicates kept."""
     return (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .filter(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
-        .distinct()
     )
 
 
@@ -110,56 +108,35 @@ def connected_components(
     component = min node id of the component. Nodes absent from any edge
     (singletons) are included iff ``nodes`` is given.
 
-    Size-adaptive plan: the canonical (distinct, src!=dst) edge frame is
-    materialized once (localCheckpoint — required either way to truncate
-    the iterative lineage) and counted. At or below ``driver_max_edges``
-    (env SPARK_GRAFT_CC_DRIVER_MAX, default 2^22 edges = a bounded ~64 MB
-    Arrow pull, the same guard class as the Bloom sketch), the components
-    are solved on the driver in a few vectorized numpy passes instead of
-    O(log n) star rounds of ~6 shuffles each — dup-cluster graphs are
-    usually tiny next to the corpus, and the star rounds' per-round fixed
-    cost dominates exactly there. Above the guard the Kiveris star rounds
-    run unchanged (the 100-TB path). Both paths produce the identical
-    min-member assignment; parity is pytest-pinned.
+    Size-adaptive plan: at or below ``driver_max_edges`` (default: the CC
+    guard, ``plans.caching.driver_guard("cc")``) the components are solved
+    on the driver in a few vectorized numpy passes instead of O(log n)
+    star rounds of ~6 shuffles each — dup-cluster graphs are usually tiny
+    next to the corpus, and the star rounds' per-round fixed cost
+    dominates exactly there. Above it the Kiveris star rounds run (the
+    100-TB path). Both paths produce the identical min-member assignment;
+    parity is pytest-pinned.
     """
-    spark = edges.sparkSession
-    if driver_max_edges is None:
-        driver_max_edges = int(
-            os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", str(1 << 22))
-        )
-    if driver_max_edges > 0:
-        # Probe on the NARROW canonical projection without the distinct —
-        # greatest/least/filter are map-side, so the fast path costs zero
-        # exchanges: persist -> count -> bounded Arrow pull. The guard
-        # counts raw (pre-distinct) edges, which both bounds the actual
-        # pull and upper-bounds the distinct count the star rounds would
-        # see. numpy min-propagation is indifferent to duplicate edges.
-        from ..plans.caching import probe_rows, scoped_persist
+    from ..plans.caching import driver_guard, local_frame, probe
 
-        raw = scoped_persist(
-            edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-            .filter(F.col("src") != F.col("dst"))
-            .select(
-                F.greatest("src", "dst").alias("u"),
-                F.least("src", "dst").alias("v"),
-            )
-        )
-        # single-action probe (plans.caching.probe_rows): one pull, no
-        # CollectLimit escalation ladder; discarded when over the guard
-        pdf = probe_rows(raw, driver_max_edges)
-        if pdf is not None:
-            if len(pdf) == 0:
-                assign = spark.createDataFrame([], "node long, component long")
-            else:
-                assign = spark.createDataFrame(
-                    _driver_components(pdf), "node long, component long"
-                )
-            raw.unpersist(blocking=False)
-            return _with_singletons(assign, nodes)
-        e = raw.distinct().localCheckpoint()
+    if driver_max_edges is None:
+        driver_max_edges = driver_guard("cc")
+    # Probe on the NARROW canonical projection without the distinct —
+    # greatest/least/filter are map-side, so the fast path costs zero
+    # exchanges. The guard counts raw (pre-distinct) edges, which both
+    # bounds the pull and upper-bounds the distinct count the star rounds
+    # would see; numpy min-propagation is indifferent to duplicate edges.
+    raw = _canon(edges)
+    pdf = probe("connected_components", raw, driver_max_edges)
+    if pdf is not None:
         raw.unpersist(blocking=False)
-    else:
-        e = _canon(edges).localCheckpoint()
+        assign = local_frame(
+            edges.sparkSession, _driver_components(pdf), "node long, component long"
+        )
+        return _with_singletons(assign, nodes)
+    e = raw.distinct().localCheckpoint()
+    if raw.is_cached:  # the probe's copy: the checkpoint replaces it
+        raw.unpersist(blocking=False)
     prev_sig = None
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint()

@@ -39,6 +39,20 @@ def _fold_positions(pos: np.ndarray, length: int) -> np.ndarray:
     return np.stack([starts, ends], axis=1)
 
 
+def _ranges_frame(spark, arr: np.ndarray) -> DataFrame:
+    """A (k, 2) range array as a local (start, end) frame that keeps the
+    ranges driver-resident."""
+    from ..plans.caching import local_frame
+
+    return local_frame(
+        spark,
+        pd.DataFrame(
+            {"start": arr[:, 0].astype(np.int64), "end": arr[:, 1].astype(np.int64)}
+        ),
+        "start long, end long",
+    )
+
+
 def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
     """duplicate positions (col ``pos``) -> remove_ranges(start, end).
 
@@ -51,44 +65,20 @@ def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
              so a C4-scale remove list (millions of ranges) never funnels
              through one partition.
 
-    Size-adaptive (round-6): below the SPARK_GRAFT_INTERVALS_DRIVER_MAX
-    guard (default 2^20 positions = a bounded 8 MB Arrow pull) the whole
-    fold is one numpy pass on the driver — the sampling job +
-    range exchange + per-partition fold + seam machinery all collapse
-    into persist/count/collect. The input is persisted before the probe
-    so its (possibly expensive) lineage runs exactly once on either path.
+    Size-adaptive: under the intervals guard the whole fold is one numpy
+    pass on the driver — the sampling job, range exchange, per-partition
+    fold and seam machinery all collapse into the probe. The probe
+    persists its input, so the (possibly expensive) lineage runs exactly
+    once on either path. The driver result keeps its ranges resident for
+    the strike fast path (strike.apply_removals).
     """
-    import os
-
-    from ..plans.caching import probe_rows, scoped_persist
+    from ..plans.caching import driver_guard, probe
 
     pos_narrow = positions.select(F.col("pos").cast("long"))
-    driver_max = int(
-        os.environ.get("SPARK_GRAFT_INTERVALS_DRIVER_MAX", str(1 << 20))
-    )
-    if driver_max > 0:
-        pos_p = scoped_persist(pos_narrow)
-        # single-action probe (plans.caching.probe_rows): one pull, no
-        # CollectLimit escalation ladder; discarded when over the guard
-        pdf = probe_rows(pos_p, driver_max)
-        if pdf is not None:
-            arr = np.sort(pdf["pos"].to_numpy(np.int64))
-            folded = _fold_positions(arr, length)
-            out = positions.sparkSession.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "start": folded[:, 0].astype(np.int64),
-                        "end": folded[:, 1].astype(np.int64),
-                    }
-                ),
-                "start long, end long",
-            )
-            # driver-resident ranges, memoized on the frame: the strike
-            # fast path (strike.apply_removals) maps them onto the doc
-            # offsets without any join (round-6)
-            out._driver_ranges_memo = folded
-            return out
-        pos_narrow = pos_p  # persisted: sampling + exchange reuse it
+    pdf = probe("intervals.coalesce", pos_narrow, driver_guard("intervals"))
+    if pdf is not None:
+        folded = _fold_positions(np.sort(pdf["pos"].to_numpy(np.int64)), length)
+        return _ranges_frame(positions.sparkSession, folded)
     parts = pos_narrow.repartitionByRange(
         "pos"
     ).sortWithinPartitions("pos")
@@ -187,45 +177,28 @@ def _merge_sorted_partitions(
     # itself unpersisted, everything above it. Measured at the 30k-doc
     # stress profile: the same 229 MB position exchange was written 4x
     # and re-read ~12x through here before this persist.
-    import os
-
-    from ..plans.caching import probe_rows, scoped_persist
+    from ..plans.caching import driver_guard, probe, scoped_persist
 
     p = scoped_persist(ranges.mapInPandas(local, merged_schema))
     # Size-adaptive seam merge: the locally-merged frame is one row per
     # locally-MAXIMAL range, already orders of magnitude smaller than the
-    # input positions. At or below the guard (env
-    # SPARK_GRAFT_INTERVALS_DRIVER_MAX, default 2^20 ranges = a bounded
-    # 16 MB Arrow pull) the seam merge is one vectorized _local_merge on
-    # the driver instead of ~8 stages of stats windows + broadcast joins —
-    # whose per-stage fixed cost dominates exactly when the range list is
-    # small. Above the guard (C4-scale remove lists) the hierarchical pass
-    # runs unchanged. Both paths are the same associative interval union;
-    # parity is pytest-pinned.
-    driver_max = int(
-        os.environ.get("SPARK_GRAFT_INTERVALS_DRIVER_MAX", str(1 << 20))
-    )
-    pdf = (
-        probe_rows(p.select("start", "end"), driver_max)
-        if driver_max > 0
-        else None
+    # input positions. Under the intervals guard the seam merge is one
+    # vectorized _local_merge on the driver instead of ~8 stages of stats
+    # windows + broadcast joins — whose per-stage fixed cost dominates
+    # exactly when the range list is small. Above it (C4-scale remove
+    # lists) the hierarchical pass runs. Both paths are the same
+    # associative interval union; parity is pytest-pinned.
+    pdf = probe(
+        "intervals.merge",
+        p.select("start", "end"),
+        driver_guard("intervals"),
+        persist=False,
     )
     if pdf is not None:
         arr = pdf.to_numpy(dtype=np.int64)
         if len(arr):
             arr = arr[np.lexsort((arr[:, 1], arr[:, 0]))]
-        merged = _local_merge(arr, adjacency, gap)
-        out = ranges.sparkSession.createDataFrame(
-            pd.DataFrame(
-                {
-                    "start": merged[:, 0].astype(np.int64),
-                    "end": merged[:, 1].astype(np.int64),
-                }
-            ),
-            "start long, end long",
-        )
-        out._driver_ranges_memo = merged  # see coalesce_positions
-        return out
+        return _ranges_frame(ranges.sparkSession, _local_merge(arr, adjacency, gap))
     stats = p.groupBy("pid").agg(
         F.max("end").alias("_pmax"), F.sum(F.lit(1)).alias("_cnt")
     )

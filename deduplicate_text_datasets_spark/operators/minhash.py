@@ -150,8 +150,8 @@ def candidate_pairs(buckets: DataFrame, cfg: MinHashConfig) -> DataFrame:
     Buckets up to ``max_bucket_size`` pair in one reducer task, buckets up
     to ``salted_bucket_max`` through the exact grid-salted self-join, and
     larger ones are excluded (observable via ``oversized_buckets``). Under
-    the LSH driver guard the result carries the driver-resident pairs
-    (``_driver_pairs_pdf``) that verify_pairs_across reads."""
+    the LSH driver guard the pairs stay driver-resident
+    (``plans.caching.resident``) for verify_pairs_across."""
     from .salted_join import bucket_self_pairs
 
     return bucket_self_pairs(
@@ -228,50 +228,45 @@ def verify_pairs_across(
     ``shingled_a`` ONLY and side ``b`` against ``shingled_b`` — the two
     frames may use overlapping doc_id spaces (e.g. a new crawl batch vs a
     persisted index) without cross-contamination."""
-    import os
-
     from fractions import Fraction
+
+    from ..plans.caching import driver_guard, local_frame, probe, resident
 
     frac = Fraction(cfg.jaccard_threshold).limit_denominator(1_000_000)
     num, den = frac.numerator, frac.denominator
 
-    # Driver fast path (round-6): when the candidate pairs are already
-    # driver-resident (the LSH driver path fired) and the pair count is
-    # modest, pull the shingle frames (cached — they fed the signature
-    # kernel) and verify in numpy: the two joins, their broadcasts and the
-    # verify stage collapse into bounded pulls + a local relation.
-    # Integer threshold + int/int double division are computed identically,
-    # so the edge set AND the reported jaccard are bit-equal (pinned by
-    # test). Above the pair/row guards or when the memo is absent, the
-    # distributed joins below run unchanged.
-    pairs_pdf = getattr(pairs, "_driver_pairs_pdf", None)
-    verify_max = int(
-        os.environ.get("SPARK_GRAFT_VERIFY_DRIVER_MAX", str(1 << 16))
-    )
-    if pairs_pdf is not None and len(pairs_pdf) <= verify_max:
-        from ..plans.caching import probe_rows
-
-        row_guard = int(
-            os.environ.get("SPARK_GRAFT_LSH_DRIVER_MAX", str(1 << 22))
+    # Driver fast path: when the candidate pairs are driver-resident (the
+    # LSH driver path fired) and within the verify guard, pull the shingle
+    # frames (cached — they fed the signature kernel; the LSH guard bounds
+    # the pull) and verify in numpy: the two joins, their broadcasts and
+    # the verify stage collapse into bounded pulls + a local relation.
+    # Integer threshold + int/int double division are computed
+    # identically, so the edge set AND the reported jaccard are bit-equal
+    # (pinned by test). The edges stay resident for neardup_clusters'
+    # driver CC fast path.
+    pairs_pdf = resident(pairs)
+    if pairs_pdf is not None and len(pairs_pdf) <= driver_guard("verify"):
+        guard = driver_guard("lsh")
+        sh_a = probe(
+            "minhash.verify", shingled_a.select("doc_id", "sh"), guard, persist=False
         )
-        sh_a = probe_rows(shingled_a.select("doc_id", "sh"), row_guard)
-        if sh_a is not None:
-            sh_b = (
-                None
-                if shingled_b is shingled_a
-                else probe_rows(shingled_b.select("doc_id", "sh"), row_guard)
+        same = shingled_b is shingled_a
+        sh_b = (
+            None
+            if same or sh_a is None
+            else probe(
+                "minhash.verify",
+                shingled_b.select("doc_id", "sh"),
+                guard,
+                persist=False,
             )
-            if shingled_b is shingled_a or sh_b is not None:
-                edges_pdf = _driver_verify_pairs(
-                    pairs_pdf, sh_a, sh_b, num, den
-                )
-                out = pairs.sparkSession.createDataFrame(
-                    edges_pdf,
-                    "a long, b long, inter int, `union` int, jaccard double",
-                )
-                # memoized for neardup_clusters' driver CC fast path
-                out._driver_edges_pdf = edges_pdf
-                return out
+        )
+        if sh_a is not None and (same or sh_b is not None):
+            return local_frame(
+                pairs.sparkSession,
+                _driver_verify_pairs(pairs_pdf, sh_a, sh_b, num, den),
+                "a long, b long, inter int, `union` int, jaccard double",
+            )
     sa = shingled_a.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))
     sb = shingled_b.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b"))
     j = (
@@ -320,47 +315,38 @@ def candidate_pairs_across(
     bipartite block grid (salted_join.grid_salted_cross_pairs); larger
     ones are dropped (observable via ``oversized_buckets`` per side).
     """
-    import os
-
-    from ..plans.caching import probe_rows, scoped_persist
+    from ..plans.caching import driver_guard, local_frame, probe, scoped_persist
     from .salted_join import (
         driver_bucket_cross_pairs,
         grid_salted_cross_pairs,
     )
 
-    # Size-adaptive driver fast path (round-6): same design as
-    # candidate_pairs — both bucket frames under the guard collapse the
-    # joint-size agg, both join-backs, the cross-join and the salted grid
-    # into two bounded pulls + one numpy pass with the identical distinct
-    # pair set. Above either guard or the pair budget, the distributed
-    # plan runs unchanged from the same persisted frames.
-    driver_max = int(os.environ.get("SPARK_GRAFT_LSH_DRIVER_MAX", str(1 << 22)))
-    pair_cap = int(
-        os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
+    # Size-adaptive driver fast path: same design as candidate_pairs —
+    # both bucket frames under the guard collapse the joint-size agg, both
+    # join-backs, the cross-join and the salted grid into two bounded
+    # pulls + one numpy pass with the identical distinct pair set. Above
+    # either guard or the pair budget, the distributed plan runs from the
+    # same persisted frames.
+    guard = driver_guard("lsh")
+    pdf_a = probe("lsh.candidates_across", buckets_a, guard)
+    pdf_b = (
+        probe("lsh.candidates_across", buckets_b, guard)
+        if pdf_a is not None
+        else None
     )
-    raw_a = raw_b = None
-    if driver_max > 0:
-        raw_a = scoped_persist(buckets_a)
-        raw_b = scoped_persist(buckets_b)
-        pdf_a = probe_rows(raw_a, driver_max)
-        pdf_b = probe_rows(raw_b, driver_max) if pdf_a is not None else None
-        if pdf_a is not None and pdf_b is not None:
-            pairs_pdf = driver_bucket_cross_pairs(
-                pdf_a,
-                pdf_b,
-                ["band", "bucket"],
-                cfg.salted_bucket_max,
-                pair_cap,
-            )
-            if pairs_pdf is not None:
-                raw_a.unpersist(blocking=False)
-                raw_b.unpersist(blocking=False)
-                out = buckets_a.sparkSession.createDataFrame(
-                    pairs_pdf, "a long, b long"
-                )
-                out._driver_pairs_pdf = pairs_pdf  # see bucket_self_pairs
-                return out
-        buckets_a, buckets_b = raw_a, raw_b  # persisted for the plans below
+    if pdf_a is not None and pdf_b is not None:
+        pairs_pdf = driver_bucket_cross_pairs(
+            pdf_a,
+            pdf_b,
+            ["band", "bucket"],
+            cfg.salted_bucket_max,
+            driver_guard("lsh_pairs"),
+        )
+        if pairs_pdf is not None:
+            buckets_a.unpersist(blocking=False)
+            buckets_b.unpersist(blocking=False)
+            return local_frame(buckets_a.sparkSession, pairs_pdf, "a long, b long")
+    probed = (buckets_a, buckets_b)
 
     buckets_a = scoped_persist(buckets_a.repartition("band", "bucket"))
     buckets_b = scoped_persist(buckets_b.repartition("band", "bucket"))
@@ -383,9 +369,9 @@ def candidate_pairs_across(
     has_hot = bool(
         joint.filter((F.col("na") > cap) | (F.col("nb") > cap)).limit(1).count()
     )
-    # both size aggs read every cached partition: drop the probe-path copies
-    for r in (raw_a, raw_b):
-        if r is not None:
+    # both size aggs read every cached partition: drop the probe's copies
+    if guard > 0:
+        for r in probed:
             r.unpersist(blocking=False)
     if not has_hot:
         return plain.distinct()

@@ -49,7 +49,7 @@ def grid_salted_self_pairs(
     """Exact per-bucket all-pairs over ``hot`` = bucket members carrying a
     precomputed ``bsize`` column (bucket size, > cap for every row).
 
-    Returns (a, b, <p>_a, <p>_b ...) with a < b; each unordered pair
+    Returns (a, b, <p>a, <p>b ...) with a < b; each unordered pair
     appears exactly once. ``payload`` columns ride the join and are
     swapped together with the ids during order normalization.
     """
@@ -86,8 +86,8 @@ def grid_salted_self_pairs(
     ]
     for p in payload:
         pa, pb = F.col(f"_pa_{p}"), F.col(f"_pb_{p}")
-        cols.append(F.when(fwd, pa).otherwise(pb).alias(f"{p}_a"))
-        cols.append(F.when(fwd, pb).otherwise(pa).alias(f"{p}_b"))
+        cols.append(F.when(fwd, pa).otherwise(pb).alias(f"{p}a"))
+        cols.append(F.when(fwd, pb).otherwise(pa).alias(f"{p}b"))
     return j.select(*cols)
 
 
@@ -162,7 +162,7 @@ def driver_bucket_pairs(
     2..``max_group`` (buckets above it dropped — same policy as the
     salted_bucket_max cutoff), computed in numpy from the collected bucket
     frame. ``payload`` columns (int64, functions of the id) ride along as
-    <p>_a/<p>_b. Returns None when the pair count exceeds ``pair_cap`` —
+    <p>a/<p>b. Returns None when the pair count exceeds ``pair_cap`` —
     the caller falls back to the distributed plan, so the driver never
     materializes more than pair_cap pairs.
 
@@ -175,8 +175,8 @@ def driver_bucket_pairs(
     if len(pdf) == 0:
         out = {"a": np.empty(0, np.int64), "b": np.empty(0, np.int64)}
         for p in payload:
-            out[f"{p}_a"] = np.empty(0, np.int64)
-            out[f"{p}_b"] = np.empty(0, np.int64)
+            out[f"{p}a"] = np.empty(0, np.int64)
+            out[f"{p}b"] = np.empty(0, np.int64)
         return pd.DataFrame(out)
     order, starts, ends = _group_bounds(pdf, key_cols)
     ids = pdf[id_col].to_numpy(np.int64)[order]
@@ -194,8 +194,8 @@ def driver_bucket_pairs(
     uniq, idx = np.unique(ab, return_index=True)
     out = {"a": uniq["a"].astype(np.int64), "b": uniq["b"].astype(np.int64)}
     for p in payload:
-        out[f"{p}_a"] = pa[p][ok][idx]
-        out[f"{p}_b"] = pb[p][ok][idx]
+        out[f"{p}a"] = pa[p][ok][idx]
+        out[f"{p}b"] = pb[p][ok][idx]
     return pd.DataFrame(out)
 
 
@@ -206,7 +206,7 @@ def bucket_self_pairs(
     salted_bucket_max: int,
     payload: Sequence[str] = (),
 ) -> DataFrame:
-    """Distinct (a < b, <p>_a, <p>_b ...) pairs of ``doc_id`` values that
+    """Distinct (a < b, <p>a, <p>b ...) pairs of ``doc_id`` values that
     share a ``key_cols`` bucket — the LSH self-join behind both MinHash
     band buckets and SimHash block buckets.
 
@@ -221,40 +221,31 @@ def bucket_self_pairs(
     splitting applies — neither holds for a WindowExec partition, which is
     why this is not a count-over-window.
 
-    Size-adaptive driver fast path (env SPARK_GRAFT_LSH_DRIVER_MAX bucket
-    rows, 0 = always distributed): the bucket frame is tiny next to the
-    corpus, and at or below the guard the whole plan collapses into one
-    bounded Arrow pull plus :func:`driver_bucket_pairs`, which yields the
-    identical distinct pair set. The result then carries the pairs as a
-    pandas memo, ``_driver_pairs_pdf``, so a driver-side verify can follow.
-    Above the row guard or the pair budget (SPARK_GRAFT_LSH_DRIVER_PAIR_MAX)
-    the distributed plan runs from the same persisted frame.
+    Size-adaptive driver fast path: under the LSH guard (bucket rows) the
+    whole plan collapses into one bounded Arrow pull plus
+    :func:`driver_bucket_pairs`, which yields the identical distinct pair
+    set, and the result keeps the pairs driver-resident so a driver-side
+    verify can follow. Above the row guard or the pair budget (the
+    ``lsh_pairs`` guard) the distributed plan runs from the same
+    persisted frame.
     """
-    import os
-
-    from ..plans.caching import probe_rows, scoped_persist
+    from ..plans.caching import driver_guard, local_frame, probe, scoped_persist
 
     keys = list(key_cols)
-    driver_max = int(os.environ.get("SPARK_GRAFT_LSH_DRIVER_MAX", str(1 << 22)))
-    pair_cap = int(
-        os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
-    )
-    raw = None
-    if driver_max > 0:
-        raw = scoped_persist(buckets)
-        pdf = probe_rows(raw, driver_max)
-        if pdf is not None:
-            pairs_pdf = driver_bucket_pairs(
-                pdf, keys, salted_bucket_max, pair_cap, payload=payload
+    guard = driver_guard("lsh")
+    pdf = probe("lsh.candidates", buckets, guard)
+    if pdf is not None:
+        pairs_pdf = driver_bucket_pairs(
+            pdf, keys, salted_bucket_max, driver_guard("lsh_pairs"), payload=payload
+        )
+        if pairs_pdf is not None:
+            buckets.unpersist(blocking=False)
+            return local_frame(
+                buckets.sparkSession,
+                pairs_pdf,
+                ", ".join(f"{c} long" for c in pairs_pdf.columns),
             )
-            if pairs_pdf is not None:
-                raw.unpersist(blocking=False)
-                out = buckets.sparkSession.createDataFrame(
-                    pairs_pdf, ", ".join(f"{c} long" for c in pairs_pdf.columns)
-                )
-                out._driver_pairs_pdf = pairs_pdf
-                return out
-        buckets = raw  # persisted: the repartition below reads the cache
+    probed = buckets
 
     # three consumers (size agg + join-back + both sides of the pair
     # self-join) — persist or the upstream kernel re-executes for each.
@@ -278,14 +269,14 @@ def bucket_self_pairs(
     left = sized.select(
         *keys,
         F.col("doc_id").alias("a"),
-        *[F.col(p).alias(f"{p}_a") for p in payload],
+        *[F.col(p).alias(f"{p}a") for p in payload],
     )
     right = sized.select(
         *keys,
         F.col("doc_id").alias("b"),
-        *[F.col(p).alias(f"{p}_b") for p in payload],
+        *[F.col(p).alias(f"{p}b") for p in payload],
     )
-    out_cols = ["a", "b", *[f"{p}_{s}" for p in payload for s in "ab"]]
+    out_cols = ["a", "b", *[f"{p}{s}" for p in payload for s in "ab"]]
     pairs = (
         left.join(right, keys)
         .filter(F.col("a") < F.col("b"))
@@ -299,9 +290,9 @@ def bucket_self_pairs(
         sizes.filter(F.col("bsize") > max_bucket_size).limit(1).count()
     )
     # has_hot aggregated every partition of the repartitioned copy, so it
-    # is cached now and the probe-path copy is dead weight
-    if raw is not None:
-        raw.unpersist(blocking=False)
+    # is cached now and the probe's copy is dead weight
+    if guard > 0:
+        probed.unpersist(blocking=False)
     if not has_hot:
         return pairs.distinct()
     hot = buckets.join(

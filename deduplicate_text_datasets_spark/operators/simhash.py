@@ -95,14 +95,14 @@ def simhash_candidates(
     self-join of salted_join.bucket_self_pairs on (block, value), with the
     fingerprints riding as payload — the same plan, skew policy and driver
     fast path as minhash.candidate_pairs. The driver guard counts exploded
-    (doc, block) rows. Under it the result carries the driver-resident
-    candidates (``_driver_pairs_pdf``) that simhash_pairs verifies in
+    (doc, block) rows. Under it the candidates stay driver-resident
+    (``plans.caching.resident``) and simhash_pairs verifies them in
     numpy."""
     from .salted_join import bucket_self_pairs
 
     exploded = fingerprints.select(
         "doc_id",
-        "fingerprint",
+        F.col("fingerprint").alias("f"),
         F.posexplode(
             F.array(
                 *[
@@ -114,28 +114,24 @@ def simhash_candidates(
             )
         ).alias("block", "value"),
     )
-    pairs = bucket_self_pairs(
+    return bucket_self_pairs(
         exploded,
         ["block", "value"],
         max_bucket_size,
         salted_bucket_max,
-        payload=("fingerprint",),
+        payload=("f",),
     )
-    names = {"fingerprint_a": "fa", "fingerprint_b": "fb"}
-    out = pairs.withColumnsRenamed(names)
-    memo = getattr(pairs, "_driver_pairs_pdf", None)
-    if memo is not None:
-        out._driver_pairs_pdf = memo.rename(columns=names)
-    return out
 
 
 def simhash_pairs(
     docs: DataFrame, cfg: SimHashConfig, text_col: str = "text"
 ) -> DataFrame:
     """documents -> (a, b, hamming) pairs with popcount(xor) <= k."""
+    from ..plans.caching import local_frame, resident
+
     fps = simhash_fingerprints(docs, text_col)
     cand = simhash_candidates(fps, cfg)
-    cand_pdf = getattr(cand, "_driver_pairs_pdf", None)
+    cand_pdf = resident(cand)
     if cand_pdf is not None:
         # hamming verify on the driver-resident candidates: popcount of
         # the int64 xor, bit-identical to Catalyst bit_count(fa ^ fb) —
@@ -160,9 +156,7 @@ def simhash_pairs(
                 "hamming": pc[keep],
             }
         )
-        return docs.sparkSession.createDataFrame(
-            out_pdf, "a long, b long, hamming int"
-        )
+        return local_frame(docs.sparkSession, out_pdf, "a long, b long, hamming int")
     return (
         cand.withColumn(
             "hamming",

@@ -73,19 +73,23 @@ def _driver_spans(
     cfg: ExactSubstrConfig,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray] | None:
     """Per-doc text-local spans for affected docs, computed on the driver
-    from the ranges/offsets memos — or None when either memo is absent
-    (caller runs the distributed join plan). Exact twin of doc_spans +
-    groupBy(collect_set): ranges are disjoint and each (doc, range)
-    overlap meets in exactly one place here, so no dedup is needed.
+    from the driver-resident ranges and offsets — or None when either is
+    not resident (caller runs the distributed join plan). Exact twin of
+    doc_spans + groupBy(collect_set): ranges are disjoint and each (doc,
+    range) overlap meets in exactly one place here, so no dedup is needed.
 
     Returns (touched_doc_ids sorted, a, b, group_offsets): doc i's spans
     are a[group_offsets[i]:group_offsets[i+1]] (ascending — splicing them
     right-to-left preserves earlier offsets, as the reference does)."""
-    ranges_arr = getattr(remove_ranges, "_driver_ranges_memo", None)
-    offs = getattr(docs_with_offsets, "_offsets_memo", None)
-    if ranges_arr is None or offs is None:
+    from ..plans.caching import resident
+
+    ranges = resident(remove_ranges)
+    offs = resident(docs_with_offsets)
+    if ranges is None or offs is None:
         return None
-    doc_ids, d_start, d_end = offs
+    doc_ids, d_start, d_end = (
+        offs[c].to_numpy(np.int64) for c in ("doc_id", "byte_start", "byte_end")
+    )
     sep = SEP_BYTES if cfg.with_separators else 0
     empty = (
         np.empty(0, np.int64),
@@ -93,10 +97,10 @@ def _driver_spans(
         np.empty(0, np.int64),
         np.zeros(1, np.int64),
     )
-    if len(ranges_arr) == 0 or len(doc_ids) == 0:
+    if len(ranges) == 0 or len(doc_ids) == 0:
         return empty
-    starts = ranges_arr[:, 0]
-    ends = ranges_arr[:, 1]
+    starts = ranges["start"].to_numpy(np.int64)
+    ends = ranges["end"].to_numpy(np.int64)
     # docs overlapping range i: byte_start < end_i AND byte_end > start_i
     # (the interval_join filter) — offsets are cumulative, so both bounds
     # come from one searchsorted each
@@ -173,9 +177,9 @@ def apply_removals(
         ).alias("url"),
         "text",
     )
-    # Driver fast path (round-6): when BOTH the remove ranges and the doc
-    # offsets are already driver-resident (the memos the coalesce /
-    # with_offsets size-guarded fast paths attach), the whole span
+    # Driver fast path: when BOTH the remove ranges and the doc offsets
+    # are driver-resident (the coalesce / with_offsets driver placements
+    # keep them, plans.caching.resident), the whole span
     # assignment — chunk explode, range join, clamp, span groupBy — is two
     # numpy searchsorted calls on the driver. The span arrays ride an
     # executor broadcast into ONE splice pass over every doc (untouched
@@ -183,9 +187,9 @@ def apply_removals(
     # and memory stay bounded by the upstream guards (ranges <= 2^20,
     # docs <= 2^20; ranges are disjoint so overlap pairs <= ranges +
     # docs). Every doc's text crosses the Python boundary once here; the
-    # offsets guard bounds how many docs that is. Above either guard a
-    # memo is absent and the distributed join plan below runs. Identical
-    # output (pytest-pinned).
+    # offsets guard bounds how many docs that is. Above either guard one
+    # side is not resident and the distributed join plan below runs.
+    # Identical output (pytest-pinned).
     fast = _driver_spans(docs_with_offsets, remove_ranges, cfg)
     if fast is not None:
         from ..plans.caching import scoped_broadcast

@@ -501,15 +501,15 @@ def _key_sketch_bc(dup_keys: DataFrame, max_keys: int):
     key count with a bounded broadcast (SPARK_GRAFT_FP_BLOOM_MAX_BYTES,
     default 64 MiB).
     """
-    from ..plans.caching import scoped_broadcast, scoped_persist
+    from ..plans.caching import probe, scoped_broadcast, scoped_persist
     from .sketch import build_bloom_sketch
 
     sc = dup_keys.sparkSession.sparkContext
     # the key frame feeds up to three jobs on the Bloom path (guard probe,
     # count, slice build) — persist it once, scope-reclaimed
     dup_keys = scoped_persist(dup_keys)
-    key_pdf = dup_keys.limit(max_keys + 1).toPandas()
-    if len(key_pdf) <= max_keys:
+    key_pdf = probe("suffix.key_sketch", dup_keys, max_keys, persist=False)
+    if key_pdf is not None:
         return scoped_broadcast(sc, np.sort(key_pdf["k"].to_numpy(np.int64)))
     n = dup_keys.count()
     max_bytes = int(

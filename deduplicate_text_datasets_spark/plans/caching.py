@@ -1,4 +1,5 @@
-"""Scoped cache lifecycle for operator-persisted intermediates.
+"""Scoped cache lifecycle for operator-persisted intermediates, and the
+one placement mechanism for size-adaptive stages.
 
 Operators persist() frames that feed two consumers (shingles, LSH buckets,
 window fingerprints, ...). Those frames must stay cached until the CALLER
@@ -26,18 +27,34 @@ scaling legs do exactly that).
 Storage memory at scale: unpersist(blocking=False) only unlinks the
 blocks; executors evict lazily under their normal LRU pressure, so scope
 exit is O(#frames) driver work, never a cluster barrier.
+
+Placement: a size-adaptive stage runs a numpy twin on the driver when its
+input is small and its distributed plan otherwise. Every such decision
+goes through ``probe(stage, df, driver_guard(name))``: a bounded
+count-then-pull that logs one record per decision. A driver-computed
+result comes back as ``local_frame(...)``, whose pandas copy a later stage
+reads with ``resident(df)`` instead of pulling the frame again.
 """
 
 from __future__ import annotations
 
+import logging
+import os
 import threading
+import weakref
 from contextlib import contextmanager
 
+import pandas as pd
 from pyspark import StorageLevel
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 
+PLACEMENT_LOG = "deduplicate_text_datasets_spark.placement"
+
 _local = threading.local()
+_log = logging.getLogger(PLACEMENT_LOG)
+# DataFrame -> its driver-resident pandas copy; entries die with the frame
+_resident: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _stack() -> list[list[DataFrame | Broadcast]]:
@@ -71,32 +88,88 @@ def _register(obj):
 
 
 def probe_rows(df: DataFrame, guard: int):
-    """Size-probe a frame the caller will consume ENTIRELY when small:
-    pull it as ONE pandas frame and return it if it holds at most
-    ``guard`` rows, else None (caller runs its distributed plan).
+    """Pull a frame that :func:`probe` has counted at ``guard`` rows or
+    fewer to the driver as ONE pandas frame (one Arrow collect job).
 
-    Replaces the limit(guard+1).toPandas() probe pattern (round-6): under
-    AQE, CollectLimit's incremental execution turned each probe into a
-    3-4 job escalation ladder (scan 1 partition, then 4x more per retry —
-    measured as a chain of ~0.4 s jobs per probe at bench scale). A plain
-    toPandas is ONE job; ``spark.driver.maxResultSize`` (default 1 GiB)
-    is the hard backstop for the over-guard case — a frame too big to
-    ship aborts the collect with the documented error, which is caught
-    and treated as "over guard" (the caller's distributed plan runs; one
-    materialization was spent learning that, the same job a count-based
-    probe would have spent). Frames between the row guard and the result
-    cap are pulled once and discarded — bounded waste, driver-safe by
-    construction. Call on a persisted frame (or one whose lineage is
-    cheap): the probe materializes it for the fallback plan."""
-    try:
-        pdf = df.toPandas()
-    except Exception as exc:  # over the driver result cap => over guard
-        if "maxResultSize" not in str(exc):
-            raise
-        return None
-    if len(pdf) > guard:
-        return None
+    Only :func:`probe` calls this, through the module global, and only
+    after the count: no frame over the guard is ever pulled. The guard is
+    checked once more on the pulled frame, so a frame whose row count
+    changed between the two jobs still falls back to the distributed
+    plan (None)."""
+    pdf = df.toPandas()
+    return pdf if len(pdf) <= guard else None
+
+
+def driver_guard(name: str) -> int:
+    """Row limit under which stage ``name`` runs on the driver (0 = always
+    the distributed plan). Read from the environment at every decision, so
+    a caller may flip a guard between two runs in one session."""
+    env = {
+        "offsets": os.environ.get("SPARK_GRAFT_OFFSETS_DRIVER_MAX", str(1 << 20)),
+        "intervals": os.environ.get("SPARK_GRAFT_INTERVALS_DRIVER_MAX", str(1 << 20)),
+        "lsh": os.environ.get("SPARK_GRAFT_LSH_DRIVER_MAX", str(1 << 22)),
+        "lsh_pairs": os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22)),
+        "verify": os.environ.get("SPARK_GRAFT_VERIFY_DRIVER_MAX", str(1 << 16)),
+        "cc": os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", str(1 << 22)),
+    }
+    return int(env[name])
+
+
+def probe(
+    stage: str, df: DataFrame, guard: int, persist: bool = True
+) -> pd.DataFrame | None:
+    """The placement decision of a size-adaptive stage: ``df`` as one
+    pandas frame when it holds at most ``guard`` rows (the caller runs its
+    numpy twin), else None (the caller runs its distributed plan).
+
+    A guard <= 0 runs no job. Otherwise ``df`` is persisted in place
+    (persist returns the same object, so the caller's distributed plan
+    reuses the materialized frame), counted, and pulled only when the
+    count is within the guard. A count rather than ``limit(guard + 1)``:
+    the limit shuffles every probed row, and under AQE its incremental
+    collect escalates into a ladder of jobs. Pass ``persist=False`` when
+    ``df`` is, or cheaply projects, an already-cached frame: its count is
+    then a cache scan and nothing is cached twice.
+
+    Every decision logs one record on ``PLACEMENT_LOG``: stage,
+    placement, probed rows (None when no probe ran) and guard."""
+    pdf = rows = None
+    if guard > 0:
+        if persist:
+            scoped_persist(df)
+        rows = df.count()
+        if rows <= guard:
+            pdf = probe_rows(df, guard)
+    placement = "distributed" if pdf is None else "driver"
+    _log.info(
+        "%s: %s (rows=%s, guard=%d)",
+        stage,
+        placement,
+        rows,
+        guard,
+        extra={"stage": stage, "placement": placement, "rows": rows, "guard": guard},
+    )
     return pdf
+
+
+def local_frame(spark, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """``spark.createDataFrame(pdf, schema)`` with ``pdf`` registered as
+    its driver-resident copy (see :func:`resident`)."""
+    return keep_resident(spark.createDataFrame(pdf, schema), pdf)
+
+
+def keep_resident(df: DataFrame, pdf: pd.DataFrame) -> DataFrame:
+    """Register ``pdf`` as the driver-resident copy of ``df``: all of
+    ``df``'s rows, a subset of its columns. Keyed by object identity, so
+    it survives ``persist()`` (which returns the same object) but not a
+    derived frame such as ``df.select(...)``."""
+    _resident[df] = pdf
+    return df
+
+
+def resident(df: DataFrame) -> pd.DataFrame | None:
+    """The driver-resident pandas copy of ``df``, or None."""
+    return _resident.get(df)
 
 
 @contextmanager

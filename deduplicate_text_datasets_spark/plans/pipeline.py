@@ -41,23 +41,24 @@ from .checkpoints import StageStore, config_fingerprint
 def _driver_neardup_assign(docs, mh):
     """Driver twin of the neardup edge-union + CC stage, or None when any
     fast-path ingredient is missing. MinHash edges must already be
-    driver-resident (verify fast path memo on ``mh``); exact-dup edges
-    come from one bounded pull of the (doc_id, md5) projection; components
-    from the CC module's numpy kernel (same min-label contract as the
-    star rounds)."""
-    import os
-
+    driver-resident (the verify driver path); exact-dup edges come from
+    one bounded pull of the (doc_id, md5) projection; components from the
+    CC module's numpy kernel (same min-label contract as the star
+    rounds)."""
     import numpy as np
     import pandas as pd
 
     from ..operators.connected_components import _driver_components
-    from ..plans.caching import probe_rows
+    from .caching import driver_guard, local_frame, probe, resident
 
-    mh_pdf = getattr(mh, "_driver_edges_pdf", None)
+    mh_pdf = resident(mh)
     if mh_pdf is None:
         return None
-    guard = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", str(1 << 22)))
-    hp = probe_rows(docs.select("doc_id", F.md5("text").alias("h")), guard)
+    hp = probe(
+        "neardup.assign",
+        docs.select("doc_id", F.md5("text").alias("h")),
+        driver_guard("cc"),
+    )
     if hp is None:
         return None
     # exact_duplicate_edges twin: per md5 group, (min doc_id, member) for
@@ -81,7 +82,7 @@ def _driver_neardup_assign(docs, mh):
     # plan otherwise picks SMJ and AQE may materialize that exchange
     # before re-planning)
     return F.broadcast(
-        docs.sparkSession.createDataFrame(assign_pdf, "node long, component long")
+        local_frame(docs.sparkSession, assign_pdf, "node long, component long")
     )
 
 
@@ -101,15 +102,15 @@ def neardup_clusters(
     assign = None
     mh_frame = None
     if store is None:
-        # Driver CC fast path (round-6): when the MinHash edge set came out
-        # of the driver verify path (memoized pandas frame), the exact-dup
+        # Driver CC fast path: when the MinHash edge set came out of the
+        # driver verify path (a driver-resident pandas frame), the exact-dup
         # edges reduce to one bounded pull of the (doc_id, md5) projection
         # and the component assignment is one numpy pass — the edge union,
         # CC's own probe and the md5 groupBy/join-back all collapse. The
         # assignment is identical (same edge set into the same
-        # min-label CC; pinned by test). With a StageStore, or when any
-        # memo/guard is missing, the distributed graph below runs
-        # unchanged, reusing the SAME mh frame (no double construction).
+        # min-label CC; pinned by test). With a StageStore, or when the
+        # edges are not resident or over a guard, the distributed graph runs
+        # below, reusing the SAME mh frame (no double construction).
         mh_frame = near_duplicate_edges(docs, cfg.minhash)
         assign = _driver_neardup_assign(docs, mh_frame)
     if assign is None:

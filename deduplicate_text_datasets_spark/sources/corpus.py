@@ -47,50 +47,34 @@ def with_offsets(docs: DataFrame, with_separators: bool = True) -> DataFrame:
     rides a window exchange — and the result is joined back on doc_id
     (plain co-partitioned shuffle join, AQE-managed).
     """
-    import os
+    from ..plans.caching import driver_guard, keep_resident, local_frame, probe
 
     sep = SEP_BYTES if with_separators else 0
     lens = docs.select(
         "doc_id",
         (F.octet_length("text") + F.lit(sep)).cast("long").alias("doc_len"),
     )
-    # Size-adaptive (round-6): the offsets are one exact integer prefix sum
-    # over (doc_id, doc_len). Below the guard (env
-    # SPARK_GRAFT_OFFSETS_DRIVER_MAX, default 2^20 docs = a bounded 16 MB
-    # Arrow pull) compute it on the driver and broadcast-join it back —
-    # the per-block window, block-totals window and broadcast-totals join
-    # all collapse into one probe. Above the guard the hierarchical window
-    # path runs unchanged (the 10^12-doc design). Identical offsets either
-    # way (pytest + gate).
-    guard = int(os.environ.get("SPARK_GRAFT_OFFSETS_DRIVER_MAX", str(1 << 20)))
-    if guard > 0:
-        from ..plans.caching import probe_rows
-
-        # single-action probe (plans.caching.probe_rows): one pull of the
-        # narrow (doc_id, doc_len) projection, discarded when over the guard
-        probe = probe_rows(lens, guard)
-        if probe is not None:
-            pdf = probe.sort_values("doc_id", ignore_index=True)
-            dl = pdf["doc_len"].to_numpy(np.int64)
-            ends = np.cumsum(dl)
-            pdf["byte_start"] = ends - dl
-            pdf["byte_end"] = ends
-            offs = docs.sparkSession.createDataFrame(
-                pdf,
-                "doc_id long, doc_len long, byte_start long, byte_end long",
-            )
-            out = docs.join(F.broadcast(offs), "doc_id")
-            # Driver-resident offset arrays, memoized on the frame
-            # (round-6): corpus_total_bytes (last byte_end) and the strike
-            # fast path read them instead of re-running an agg / join over
-            # the cluster. persist() returns the same object, so the memo
-            # survives the callers' scoped_persist.
-            out._offsets_memo = (
-                pdf["doc_id"].to_numpy(np.int64),
-                pdf["byte_start"].to_numpy(np.int64),
-                pdf["byte_end"].to_numpy(np.int64),
-            )
-            return out
+    # Size-adaptive: the offsets are one exact integer prefix sum over
+    # (doc_id, doc_len). Under the offsets guard it runs on the driver and
+    # is broadcast-joined back — the per-block window, block-totals window
+    # and broadcast-totals join all collapse into one probe. Above it the
+    # hierarchical window path runs (the 10^12-doc design). Identical
+    # offsets either way (pytest + gate). The result keeps the offsets
+    # frame resident: corpus_total_bytes and the strike fast path read it
+    # instead of re-running an agg / join over the cluster.
+    pdf = probe("corpus.offsets", lens, driver_guard("offsets"))
+    if pdf is not None:
+        pdf = pdf.sort_values("doc_id", ignore_index=True)
+        dl = pdf["doc_len"].to_numpy(np.int64)
+        ends = np.cumsum(dl)
+        pdf["byte_start"] = ends - dl
+        pdf["byte_end"] = ends
+        offs = local_frame(
+            docs.sparkSession,
+            pdf,
+            "doc_id long, doc_len long, byte_start long, byte_end long",
+        )
+        return keep_resident(docs.join(F.broadcast(offs), "doc_id"), pdf)
     # integer `div`, not floor(double /): double division loses exactness
     # past 2^53 and doc counts are designed for 10^12
     lens = lens.withColumn("_block", F.expr(f"doc_id div {BLOCK_DOCS}"))
@@ -135,10 +119,11 @@ def auto_shard_bytes(
 
 
 def corpus_total_bytes(docs_with_offsets: DataFrame) -> int:
-    memo = getattr(docs_with_offsets, "_offsets_memo", None)
-    if memo is not None:
-        byte_end = memo[2]
-        return int(byte_end[-1]) if len(byte_end) else 0
+    from ..plans.caching import resident
+
+    offs = resident(docs_with_offsets)
+    if offs is not None:
+        return int(offs["byte_end"].iloc[-1]) if len(offs) else 0
     row = docs_with_offsets.agg(F.max("byte_end").alias("t")).collect()[0]
     return int(row["t"] or 0)
 

@@ -1,7 +1,12 @@
 """Env-knob ratchet (Spark-free): every environment variable the package
 reads is on a written allowlist, so a new knob fails the suite instead of
 landing silently. Add a knob here only together with its documentation;
-prefer an ``EngineConfig`` field over a new variable."""
+prefer an ``EngineConfig`` field over a new variable.
+
+The placement ratchet keeps every driver-or-distributed decision in
+``plans/caching.py``: the driver guards are read there only, every pull to
+the driver goes through its probe, and no stage carries a driver result on
+an ad-hoc DataFrame attribute."""
 
 from __future__ import annotations
 
@@ -9,6 +14,7 @@ import ast
 from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parent.parent / "deduplicate_text_datasets_spark"
+CACHING = Path("plans") / "caching.py"
 
 ALLOWED = {
     # size guards that move a stage onto the driver (0 = distributed plan)
@@ -80,3 +86,51 @@ def test_env_reads_match_allowlist():
         f"new: {sorted(set(found) - ALLOWED)}, "
         f"gone: {sorted(ALLOWED - set(found))}"
     )
+
+
+# the size guards that move a stage onto the driver
+GUARDS = {k for k in ALLOWED if "_DRIVER_" in k and k.endswith("_MAX")}
+
+
+def _memo_attribute(name: str) -> bool:
+    return name.startswith("_driver_") or name == "_offsets_memo"
+
+
+def test_placement_goes_through_caching():
+    assert len(GUARDS) == 6
+    guard_reads, pulls, memos = [], [], []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for key in _env_reads(tree):
+            if rel != CACHING and getattr(key, "value", None) in GUARDS:
+                guard_reads.append(f"{rel}:{key.lineno}")
+        for node in ast.walk(tree):
+            if (
+                rel != CACHING
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "toPandas"
+            ):
+                pulls.append(f"{rel}:{node.lineno}")
+            targets = []
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            for t in targets:
+                for sub in ast.walk(t):
+                    if isinstance(sub, ast.Attribute) and _memo_attribute(sub.attr):
+                        memos.append(f"{rel}:{sub.lineno}")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "setattr"
+                and len(node.args) > 1
+                and isinstance(node.args[1], ast.Constant)
+                and _memo_attribute(str(node.args[1].value))
+            ):
+                memos.append(f"{rel}:{node.lineno}")
+    assert not guard_reads, f"driver guard read outside {CACHING}: {guard_reads}"
+    assert not pulls, f"toPandas outside {CACHING} (use caching.probe): {pulls}"
+    assert not memos, f"driver result on a DataFrame attribute: {memos}"

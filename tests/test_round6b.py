@@ -1,5 +1,5 @@
 """Round-6 (second wave) parity tests: driver LSH candidate fast paths,
-the memo-fed strike fast path, the offsets/total memos, and the
+the strike fast path fed by resident ranges and offsets, and the
 count+collect probe — every fast path must produce bit-identical output
 to the distributed plan it bypasses.
 """
@@ -17,6 +17,7 @@ from deduplicate_text_datasets_spark.config import (
     MinHashConfig,
     SimHashConfig,
 )
+from deduplicate_text_datasets_spark.plans.caching import local_frame, resident
 
 
 def _docs(spark, n=60, planted=True):
@@ -34,11 +35,11 @@ def _docs(spark, n=60, planted=True):
 
 
 def _driver_rows(df):
-    """Sorted rows of the driver-resident pair memo; fails when the driver
+    """Sorted rows of the driver-resident pairs; fails when the driver
     path did not fire."""
-    memo = getattr(df, "_driver_pairs_pdf", None)
-    assert memo is not None, "driver fast path did not fire"
-    return sorted(map(tuple, memo.to_numpy().tolist()))
+    pdf = resident(df)
+    assert pdf is not None, "driver fast path did not fire"
+    return sorted(map(tuple, pdf.to_numpy().tolist()))
 
 
 def _is_local_relation(df):
@@ -63,7 +64,7 @@ def test_candidate_pairs_driver_vs_distributed(spark, monkeypatch):
     assert _driver_rows(fast_df) == fast  # the driver path really ran
     monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
     slow_df = candidate_pairs(buckets, cfg)
-    assert not hasattr(slow_df, "_driver_pairs_pdf")
+    assert resident(slow_df) is None
     slow = sorted((r["a"], r["b"]) for r in slow_df.collect())
     assert fast == slow and fast
 
@@ -134,15 +135,15 @@ def test_simhash_candidates_driver_vs_distributed(spark, monkeypatch):
     fps = simhash_fingerprints(docs)
     fast_df = simhash_candidates(fps, cfg)
     fast = sorted(map(tuple, fast_df.collect()))
-    # the driver path ran and its memo survived the fa/fb rename, so
-    # simhash_pairs verifies Hamming distance on the driver: its result is
-    # a bare local relation, with no distributed bit_count filter
+    # the driver path ran and its pairs are resident under the fa/fb
+    # names, so simhash_pairs verifies Hamming distance on the driver: its
+    # result is a bare local relation, with no distributed bit_count filter
     assert _driver_rows(fast_df) == fast
     fast_hd = simhash_pairs(docs, cfg)
     assert _is_local_relation(fast_hd)
     monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
     slow_df = simhash_candidates(fps, cfg)
-    assert not hasattr(slow_df, "_driver_pairs_pdf")
+    assert resident(slow_df) is None
     slow = sorted(map(tuple, slow_df.collect()))
     assert fast == slow and fast
     slow_hd = simhash_pairs(docs, cfg)
@@ -217,24 +218,26 @@ def test_offsets_memo_matches_agg(spark, monkeypatch):
 
     d = _docs(spark, n=30)
     fast = with_offsets(d)
-    assert hasattr(fast, "_offsets_memo")
+    offs = resident(fast)
+    assert offs is not None
+    assert list(offs.columns) == ["doc_id", "doc_len", "byte_start", "byte_end"]
     total_memo = corpus_total_bytes(fast)
-    # strip the memo -> the agg path must agree
+    # the agg path over the same frame must agree
     agg_total = int(
         fast.agg(F.max("byte_end").alias("t")).collect()[0]["t"]
     )
     assert total_memo == agg_total
-    # distributed offsets path: same totals, no memo
+    # distributed offsets path: same totals, nothing resident
     monkeypatch.setenv("SPARK_GRAFT_OFFSETS_DRIVER_MAX", "0")
     slow = with_offsets(d)
-    assert not hasattr(slow, "_offsets_memo")
+    assert resident(slow) is None
     assert corpus_total_bytes(slow) == total_memo
 
 
 def test_strike_driver_fastpath_vs_join_plan(spark, monkeypatch):
-    """exactsubstr_dedup end to end: the memo-fed strike fast path (driver
+    """exactsubstr_dedup end to end: the resident-fed strike fast path (driver
     spans, broadcast local relation) must produce byte-identical deduped
-    docs vs the interval-join plan (memos stripped via the env guards)."""
+    docs vs the interval-join plan (nothing resident: env guards at 0)."""
     from deduplicate_text_datasets_spark.plans.pipeline import (
         exactsubstr_dedup,
     )
@@ -250,7 +253,7 @@ def test_strike_driver_fastpath_vs_join_plan(spark, monkeypatch):
     fast = sorted(
         (r["doc_id"], r["url"], bytes(r["deduped"])) for r in dedup_f.collect()
     )
-    # disable every driver fast path -> no memos -> join plan
+    # disable every driver fast path -> nothing resident -> join plan
     monkeypatch.setenv("SPARK_GRAFT_OFFSETS_DRIVER_MAX", "0")
     monkeypatch.setenv("SPARK_GRAFT_INTERVALS_DRIVER_MAX", "0")
     ranges_s, dedup_s = exactsubstr_dedup(d, cfg)
@@ -286,16 +289,16 @@ def test_driver_spans_matches_doc_spans(spark):
         "doc_id long, url string, text string",
     )
     off = with_offsets(d, cfg.with_separators)
-    assert hasattr(off, "_offsets_memo")
+    assert resident(off) is not None
     # ranges spanning doc boundaries, separator-only spans, in-doc spans
     arr = np.array(
         [[0, 9], [20, 55], [60, 62], [100, 140], [300, 301]], dtype=np.int64
     )
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         pd.DataFrame({"start": arr[:, 0], "end": arr[:, 1]}),
         "start long, end long",
     )
-    ranges._driver_ranges_memo = arr
     got = _driver_spans(off, ranges, cfg)
     assert got is not None
     t_ids, t_a, t_b, t_off = got
@@ -319,13 +322,62 @@ def test_driver_spans_matches_doc_spans(spark):
     assert fast == slow and fast
 
 
-def test_probe_rows_under_and_over_guard(spark):
-    from deduplicate_text_datasets_spark.plans.caching import probe_rows
+def test_probe_rows_under_and_over_guard(spark, monkeypatch):
+    """The probe pulls a frame within the guard, never pulls one over it,
+    and runs no job at all when the guard is 0."""
+    from deduplicate_text_datasets_spark.plans.caching import probe
 
     df = spark.range(0, 100).select(F.col("id").cast("long"))
-    got = probe_rows(df, 100)
+    cls = type(df)
+    pulls, counts = [], []
+    to_pandas, count = cls.toPandas, cls.count
+
+    def pull(self):
+        pdf = to_pandas(self)
+        pulls.append(len(pdf))
+        return pdf
+
+    def counted(self):
+        counts.append(1)
+        return count(self)
+
+    monkeypatch.setattr(cls, "toPandas", pull)
+    monkeypatch.setattr(cls, "count", counted)
+    got = probe("test", df, 100)
     assert got is not None and sorted(got["id"]) == list(range(100))
-    assert probe_rows(df, 99) is None
+    assert pulls == [100]
+    assert probe("test", df, 99) is None
+    assert pulls == [100]  # the over-guard frame never reached the driver
+    n = len(counts)
+    assert probe("test", df, 0) is None
+    assert pulls == [100] and len(counts) == n  # guard 0: no job
+
+
+def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
+    """One log record per placement decision: default placement puts the
+    LSH stage of a small neardup_clusters on the driver; with its guard at
+    0 the stage is distributed and no probe runs."""
+    import logging
+
+    from deduplicate_text_datasets_spark.plans.caching import PLACEMENT_LOG
+    from deduplicate_text_datasets_spark.plans.pipeline import neardup_clusters
+
+    def lsh_records():
+        return [
+            r for r in caplog.records if getattr(r, "stage", None) == "lsh.candidates"
+        ]
+
+    d = _docs(spark)
+    with caplog.at_level(logging.INFO, logger=PLACEMENT_LOG):
+        neardup_clusters(d, EngineConfig())
+        (rec,) = lsh_records()
+        assert rec.placement == "driver" and 0 < rec.rows <= rec.guard
+        caplog.clear()
+        monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
+        neardup_clusters(d, EngineConfig())
+        (rec,) = lsh_records()
+        assert rec.placement == "distributed"
+        assert rec.rows is None and rec.guard == 0
 
 
 def test_ann_partial_topk_many_batches(spark):
