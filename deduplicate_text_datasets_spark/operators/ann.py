@@ -325,6 +325,9 @@ def cosine_pairs(
     ``target_recall``; every candidate is exactly verified by a JVM-side
     dot product on pre-normalized vectors, so false positives are
     impossible and the only approximation is the sized LSH miss rate.
+    The bucket self-join is salted_join.skewed_self_pairs with cap
+    ``max_bucket_size`` and ceiling ``salted_bucket_max``, so a hot bucket
+    (a near-identical embedding farm) is paired, not dropped.
 
     method='exact': all-pairs verification (a<b crossJoin) — the oracle
     path for small vector sets and the correctness baseline for recall
@@ -339,6 +342,7 @@ def cosine_pairs(
         )
     elif method == "lsh":
         from ..plans.caching import scoped_persist
+        from .salted_join import skewed_self_pairs
 
         if tables is None:
             tables = lsh_tables_for(threshold, bits, target_recall)
@@ -349,39 +353,18 @@ def cosine_pairs(
         b = scoped_persist(
             hyperplane_bands(emb, dim, tables, bits, vec_col).repartition("bucket")
         )
-        # two consumers (fast-path filter + hot-bucket filter)
         sizes = scoped_persist(
             b.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsize"))
         )
-        sized = b.join(
-            sizes.filter(
-                (F.col("bsize") >= 2) & (F.col("bsize") <= max_bucket_size)
-            ),
-            "bucket",
-        )
-        plain = (
-            sized.select("bucket", F.col("vec_id").alias("a"))
-            .join(sized.select("bucket", F.col("vec_id").alias("b")), "bucket")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-        )
-        # hot hyperplane buckets (near-identical embedding farms) pair via
-        # the exact grid-salted self-join instead of being dropped — pairs
-        # are id-only here (unit vectors join back below), so replication
-        # cost is k+1 small rows per member (operators/salted_join.py)
-        from .salted_join import grid_salted_self_pairs
-
-        hot = b.join(
-            sizes.filter(
-                (F.col("bsize") > max_bucket_size)
-                & (F.col("bsize") <= salted_bucket_max)
-            ),
-            "bucket",
-        )
-        salted = grid_salted_self_pairs(
-            hot, ["bucket"], max_bucket_size, id_col="vec_id"
-        )
-        pairs = plain.unionByName(salted).distinct()
+        # id-only through the join; unit vectors join below
+        pairs = skewed_self_pairs(
+            b,
+            sizes,
+            ["bucket"],
+            max_bucket_size,
+            salted_bucket_max,
+            id_col="vec_id",
+        ).distinct()
     else:
         raise ValueError(f"unknown method {method!r} (want 'lsh' or 'exact')")
     ua = u.select(F.col("vec_id").alias("a"), F.col("unit").alias("ua"))

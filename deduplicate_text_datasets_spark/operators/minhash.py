@@ -12,13 +12,12 @@ Plan shape (all DataFrame; one vectorized Arrow kernel for signatures):
        ── groupBy bucket (size-capped)    ──► candidate pairs (self-join)
        ── exact Jaccard on shingle sets   ──► edges(a, b, jaccard >= τ)
 
-Skew: webtext boilerplate creates giant buckets. Buckets above
-``max_bucket_size`` pair through the EXACT grid-salted self-join
-(``salted_join.grid_salted_self_pairs`` — per-task pair work stays bounded
-by cap^2, recall unchanged); only buckets beyond ``salted_bucket_max`` are
-dropped with a logged count (the analogue of frequency_threshold,
+Skew: webtext boilerplate creates giant buckets. The bucket join and its
+skew policy live in ``salted_join`` (cap ``max_bucket_size``, ceiling
+``salted_bucket_max``); buckets beyond the ceiling are dropped, observable
+via ``oversized_buckets`` (the analogue of frequency_threshold,
 main.rs:914) — their members still pair via other bands or the exact-dup
-path. AQE skew-join splitting handles the rest.
+path.
 """
 
 from __future__ import annotations
@@ -307,83 +306,17 @@ def candidate_pairs_across(
     buckets — the doc-level analogue of the reference's across-similar
     substring runs (main.rs:962-1158): corpus-A ids never pair with each
     other, only with corpus-B ids (train-vs-eval contamination shape).
+    The bipartite join of salted_join.bucket_cross_pairs on (band, bucket),
+    with the skew policy and driver fast path of ``candidate_pairs``."""
+    from .salted_join import bucket_cross_pairs
 
-    Only buckets present in BOTH corpora matter (inner join of the two
-    size frames). Skew policy mirrors ``candidate_pairs``: buckets whose
-    sides both fit ``max_bucket_size`` cross-join in one reducer task;
-    buckets up to ``salted_bucket_max`` per side go through the exact
-    bipartite block grid (salted_join.grid_salted_cross_pairs); larger
-    ones are dropped (observable via ``oversized_buckets`` per side).
-    """
-    from ..plans.caching import driver_guard, local_frame, probe, scoped_persist
-    from .salted_join import (
-        driver_bucket_cross_pairs,
-        grid_salted_cross_pairs,
+    return bucket_cross_pairs(
+        buckets_a,
+        buckets_b,
+        ["band", "bucket"],
+        cfg.max_bucket_size,
+        cfg.salted_bucket_max,
     )
-
-    # Size-adaptive driver fast path: same design as candidate_pairs —
-    # both bucket frames under the guard collapse the joint-size agg, both
-    # join-backs, the cross-join and the salted grid into two bounded
-    # pulls + one numpy pass with the identical distinct pair set. Above
-    # either guard or the pair budget, the distributed plan runs from the
-    # same persisted frames.
-    guard = driver_guard("lsh")
-    pdf_a = probe("lsh.candidates_across", buckets_a, guard)
-    pdf_b = (
-        probe("lsh.candidates_across", buckets_b, guard)
-        if pdf_a is not None
-        else None
-    )
-    if pdf_a is not None and pdf_b is not None:
-        pairs_pdf = driver_bucket_cross_pairs(
-            pdf_a,
-            pdf_b,
-            ["band", "bucket"],
-            cfg.salted_bucket_max,
-            driver_guard("lsh_pairs"),
-        )
-        if pairs_pdf is not None:
-            buckets_a.unpersist(blocking=False)
-            buckets_b.unpersist(blocking=False)
-            return local_frame(buckets_a.sparkSession, pairs_pdf, "a long, b long")
-    probed = (buckets_a, buckets_b)
-
-    buckets_a = scoped_persist(buckets_a.repartition("band", "bucket"))
-    buckets_b = scoped_persist(buckets_b.repartition("band", "bucket"))
-    na = buckets_a.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("na"))
-    nb = buckets_b.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("nb"))
-    # joint is tiny (bucket-overlap keys only) but feeds the plain AND hot
-    # branches — persist it so the two size aggs run once (round-6)
-    joint = scoped_persist(na.join(nb, ["band", "bucket"]))
-    cap, smax = cfg.max_bucket_size, cfg.salted_bucket_max
-    plain_keys = joint.filter((F.col("na") <= cap) & (F.col("nb") <= cap))
-    pa = buckets_a.join(plain_keys.select("band", "bucket"), ["band", "bucket"])
-    pb = buckets_b.join(plain_keys.select("band", "bucket"), ["band", "bucket"])
-    plain = (
-        pa.select("band", "bucket", F.col("doc_id").alias("a"))
-        .join(pb.select("band", "bucket", F.col("doc_id").alias("b")),
-              ["band", "bucket"])
-        .select("a", "b")
-    )
-    # hot-bucket short-circuit (round-6, same as candidate_pairs)
-    has_hot = bool(
-        joint.filter((F.col("na") > cap) | (F.col("nb") > cap)).limit(1).count()
-    )
-    # both size aggs read every cached partition: drop the probe's copies
-    if guard > 0:
-        for r in probed:
-            r.unpersist(blocking=False)
-    if not has_hot:
-        return plain.distinct()
-    hot_keys = joint.filter(
-        ((F.col("na") > cap) | (F.col("nb") > cap))
-        & (F.col("na") <= smax)
-        & (F.col("nb") <= smax)
-    ).select("band", "bucket", "na", "nb")
-    ha = buckets_a.join(hot_keys, ["band", "bucket"])
-    hb = buckets_b.join(hot_keys, ["band", "bucket"])
-    salted = grid_salted_cross_pairs(ha, hb, ["band", "bucket"], cap)
-    return plain.unionByName(salted).distinct()
 
 
 def near_duplicate_edges(

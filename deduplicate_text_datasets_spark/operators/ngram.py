@@ -29,18 +29,18 @@ def jaccard_pairs(
 ) -> DataFrame:
     """All doc pairs with shingle-Jaccard >= threshold_num/threshold_den.
 
-    Hot-shingle policy: postings for shingles with df <= max_shingle_df
-    self-join in one reducer task per shingle; shingles up to
-    ``salted_shingle_df`` go through the EXACT grid-salted self-join
-    (operators/salted_join.py) — this matters for correctness, not just
-    skew: each shared shingle contributes 1 to a pair's intersection
-    count, so a DROPPED hot shingle undercounts Jaccard and can lose true
-    pairs, while the salted join keeps counts exact. Only shingles beyond
+    Hot-shingle policy: the shingle-key self-join is
+    salted_join.skewed_self_pairs with cap ``max_shingle_df`` and ceiling
+    ``salted_shingle_df``. Salting matters for correctness, not just skew:
+    each shared shingle contributes 1 to a pair's intersection count, so a
+    DROPPED hot shingle undercounts Jaccard and can lose true pairs, while
+    the salted join keeps counts exact. Only shingles beyond
     ``salted_shingle_df`` are skipped (stopword-shingle guard; quadratic
     pair fan-out must cap somewhere). Output: (a, b, inter, size_a,
     size_b) — integers only.
     """
     from ..plans.caching import scoped_persist
+    from .salted_join import skewed_self_pairs
 
     sh = scoped_persist(doc_shingles(docs, cfg, text_col))
     sizes = sh.select("doc_id", F.size("sh").alias("nsh"))
@@ -48,39 +48,19 @@ def jaccard_pairs(
     # document frequency per shingle via groupBy (map-side partial agg; a
     # count-over-window would pin a stopword-shingle's postings in one
     # WindowExec partition). df >= 2 prunes every unique shingle — the
-    # overwhelming majority of webtext shingles — before the self-join;
-    # df <= cap is the stopword-shingle skew guard.
-    dfc_all = scoped_persist(
-        inv.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+    # overwhelming majority of webtext shingles — before the self-join.
+    dfc = scoped_persist(
+        inv.groupBy("g")
+        .agg(F.count(F.lit(1)).alias("bsize"))
+        .filter(F.col("bsize") >= 2)
     )
-    dfc = dfc_all.filter(
-        (F.col("df") >= 2) & (F.col("df") <= max_shingle_df)
-    )
-    # pruned postings feed BOTH sides of the shingle-key self-join:
+    # pruned postings feed both sides of the shingle-key self-join:
     # co-partition on g before caching so the join co-locates without
     # re-exchanging each side
     kept = scoped_persist(inv.join(dfc.select("g"), "g").repartition("g"))
-    a = kept.select(F.col("g").alias("g"), F.col("doc_id").alias("a"))
-    b = kept.select(F.col("g").alias("g"), F.col("doc_id").alias("b"))
-    plain = a.join(b, "g").filter(F.col("a") < F.col("b")).select("a", "b")
-    # hot shingles: exact grid-salted self-join so their postings still
-    # contribute 1 per shared shingle to the intersection counts (see
-    # docstring — dropping them would undercount Jaccard)
-    from .salted_join import grid_salted_self_pairs
-
-    hot = inv.join(
-        dfc_all.filter(
-            (F.col("df") > max_shingle_df)
-            & (F.col("df") <= salted_shingle_df)
-        ).select("g", F.col("df").alias("bsize")),
-        "g",
-    )
-    salted = grid_salted_self_pairs(hot, ["g"], max_shingle_df)
-    inter = (
-        plain.unionByName(salted)
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    # one row per shared shingle: the multiplicity IS the intersection
+    pairs = skewed_self_pairs(kept, dfc, ["g"], max_shingle_df, salted_shingle_df)
+    inter = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("nsh").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("nsh").alias("size_b"))
     out = inter.join(sa, "a").join(sb, "b")

@@ -1,10 +1,16 @@
-"""Grid-salted EXACT all-pairs self-join for skewed bucket keys.
+"""One bucket-pair join for every blocking detector, and the one home of
+its bucket-size skew policy.
 
-north_rule names "explicit salting of skewed LSH buckets": webtext
-boilerplate concentrates near-identical documents into a handful of hot
-LSH buckets / SimHash blocks, and a plain self-join on the bucket key
-puts a size-n bucket's n^2/2 pairs into ONE reducer task. This module
-redistributes that exact pair set over a k x k grid of salt cells:
+A plain join on the bucket key puts a size-n bucket's n^2/2 pairs into ONE
+reducer task, and webtext boilerplate makes such hot buckets. The policy,
+for a cap and a ceiling smax: buckets sized 2..cap join plainly, buckets
+up to smax go through an exact grid-salted join, larger ones are dropped.
+``skewed_self_pairs`` and ``skewed_cross_pairs`` apply it to caller-built
+frames; ``bucket_self_pairs`` and ``bucket_cross_pairs`` put the LSH
+driver path (the numpy twins ``driver_bucket_pairs`` and
+``driver_bucket_cross_pairs``) in front of them.
+
+The grid redistributes a hot bucket's exact pair set over k x k cells:
 
   k = ceil(n / cap) salt groups, g(doc) = hash(doc_id) mod k
   pair (a, b) with groups (p, q) belongs to cell (min(p,q), max(p,q))
@@ -16,9 +22,9 @@ order-normalized so (a, b) == (b, a) collapse); the diagonal cell pairs a
 group with itself (deduped by a < b). Each unordered pair is generated
 exactly once, in exactly one cell, so this is a physical re-distribution
 of the plain self-join — recall and output semantics are bit-identical
-(pinned by tests/test_round5.py) while per-task pair work stays bounded
-by ~cap^2 regardless of bucket size. Replication cost is linear: each
-member appears in k+1 tagged rows.
+(pinned by tests/test_salted_join.py) while per-task pair work stays
+bounded by ~cap^2 regardless of bucket size. Replication cost is linear:
+each member appears in k+1 tagged rows.
 
 This is the standard theta-join skew decomposition (Okcan & Riedewald,
 SIGMOD'11 "1-Bucket-Theta") specialized to the self-join diagonal; the
@@ -199,81 +205,40 @@ def driver_bucket_pairs(
     return pd.DataFrame(out)
 
 
-def bucket_self_pairs(
+def skewed_self_pairs(
     buckets: DataFrame,
+    sizes: DataFrame,
     key_cols: Sequence[str],
-    max_bucket_size: int,
-    salted_bucket_max: int,
+    cap: int,
+    smax: int,
+    id_col: str = "doc_id",
     payload: Sequence[str] = (),
 ) -> DataFrame:
-    """Distinct (a < b, <p>a, <p>b ...) pairs of ``doc_id`` values that
-    share a ``key_cols`` bucket — the LSH self-join behind both MinHash
-    band buckets and SimHash block buckets.
+    """(a, b, <p>a, <p>b ...) with a < b: one row per pair of ``id_col``
+    values sharing a ``key_cols`` bucket, per shared bucket (no distinct).
 
-    Bucket-size policy: buckets up to ``max_bucket_size`` self-join in one
-    reducer task; buckets up to ``salted_bucket_max`` go through the exact
-    grid-salted self-join (:func:`grid_salted_self_pairs`), so their
-    quadratic pair work is spread over ~k^2/2 tasks; larger buckets are
-    dropped. Sizing is a groupBy (map-side partial agg — a boilerplate
-    bucket with 10^8 members contributes one row per mapper, not 10^8 rows
-    to one reducer) joined back onto the bucket frame; the filtered size
-    frame is small enough for AQE to broadcast, and if not, AQE skew-join
-    splitting applies — neither holds for a WindowExec partition, which is
-    why this is not a count-over-window.
-
-    Size-adaptive driver fast path: under the LSH guard (bucket rows) the
-    whole plan collapses into one bounded Arrow pull plus
-    :func:`driver_bucket_pairs`, which yields the identical distinct pair
-    set, and the result keeps the pairs driver-resident so a driver-side
-    verify can follow. Above the row guard or the pair budget (the
-    ``lsh_pairs`` guard) the distributed plan runs from the same
-    persisted frame.
+    ``sizes`` holds each bucket's size in ``bsize``, from a groupBy (its
+    map-side partial agg keeps a 10^8-member bucket off one reducer,
+    which a count-over-window would not). The caller partitions and
+    persists both frames: the plain branch, the one hot-bucket probe job
+    and the salted branch read them. With no bucket over ``cap`` the
+    salted branch is left out of the plan.
     """
-    from ..plans.caching import driver_guard, local_frame, probe, scoped_persist
-
     keys = list(key_cols)
-    guard = driver_guard("lsh")
-    pdf = probe("lsh.candidates", buckets, guard)
-    if pdf is not None:
-        pairs_pdf = driver_bucket_pairs(
-            pdf, keys, salted_bucket_max, driver_guard("lsh_pairs"), payload=payload
-        )
-        if pairs_pdf is not None:
-            buckets.unpersist(blocking=False)
-            return local_frame(
-                buckets.sparkSession,
-                pairs_pdf,
-                ", ".join(f"{c} long" for c in pairs_pdf.columns),
-            )
-    probed = buckets
-
-    # three consumers (size agg + join-back + both sides of the pair
-    # self-join) — persist or the upstream kernel re-executes for each.
-    # Co-partitioned on the bucket key before caching (BASELINE.md round-4
-    # section): the agg and the self-join then run on the cached
-    # partitioning instead of re-exchanging the bucket frame per consumer.
-    buckets = scoped_persist(buckets.repartition(*keys))
-    # consumed twice (plain filter + hot-bucket filter)
-    sizes = scoped_persist(
-        buckets.groupBy(*keys).agg(F.count(F.lit(1)).alias("bsize"))
-    )
     sized = buckets.join(
-        sizes.filter(
-            (F.col("bsize") >= 2) & (F.col("bsize") <= max_bucket_size)
-        ),
-        keys,
+        sizes.filter((F.col("bsize") >= 2) & (F.col("bsize") <= cap)), keys
     )
     # plain co-partitioned self-join (a collect_list + Catalyst
     # pair-expansion variant did not beat it once preferSortMergeJoin=false
     # let the planner pick a sort-free join)
     left = sized.select(
         *keys,
-        F.col("doc_id").alias("a"),
+        F.col(id_col).alias("a"),
         *[F.col(p).alias(f"{p}a") for p in payload],
     )
     right = sized.select(
         *keys,
-        F.col("doc_id").alias("b"),
+        F.col(id_col).alias("b"),
         *[F.col(p).alias(f"{p}b") for p in payload],
     )
     out_cols = ["a", "b", *[f"{p}{s}" for p in payload for s in "ab"]]
@@ -282,28 +247,88 @@ def bucket_self_pairs(
         .filter(F.col("a") < F.col("b"))
         .select(*out_cols)
     )
-    # Hot-bucket short-circuit: when the cached size frame shows NO bucket
-    # above the cap — the common clean-corpus case — the salted branch
-    # (join-back + grid explode + union) is dead plan weight. One cheap
-    # probe prunes it; the pair set is identical either way.
-    has_hot = bool(
-        sizes.filter(F.col("bsize") > max_bucket_size).limit(1).count()
+    if not sizes.filter(F.col("bsize") > cap).limit(1).count():
+        return pairs
+    hot = buckets.join(
+        sizes.filter((F.col("bsize") > cap) & (F.col("bsize") <= smax)), keys
     )
-    # has_hot aggregated every partition of the repartitioned copy, so it
-    # is cached now and the probe's copy is dead weight
+    return pairs.unionByName(
+        grid_salted_self_pairs(hot, keys, cap, id_col=id_col, payload=payload)
+    )
+
+
+def _driver_pairs(stage: str, frames: Sequence[DataFrame], guard: int, twin):
+    """The LSH driver path: ``twin(*pdfs, pair_budget)`` on the pulled
+    ``frames`` as a driver-resident frame, or None when a probe or the
+    ``lsh_pairs`` budget (logged as a veto) sends ``stage`` distributed."""
+    from ..plans.caching import driver_guard, local_frame, probe, veto
+
+    pdfs = []
+    for df in frames:
+        pdf = probe(stage, df, guard)
+        if pdf is None:
+            return None
+        pdfs.append(pdf)
+    budget = driver_guard("lsh_pairs")
+    pairs_pdf = twin(*pdfs, budget)
+    if pairs_pdf is None:
+        veto(stage, sum(map(len, pdfs)), budget, "pair budget exceeded")
+        return None
+    for df in frames:
+        df.unpersist(blocking=False)
+    return local_frame(
+        frames[0].sparkSession,
+        pairs_pdf,
+        ", ".join(f"{c} long" for c in pairs_pdf.columns),
+    )
+
+
+def bucket_self_pairs(
+    buckets: DataFrame,
+    key_cols: Sequence[str],
+    max_bucket_size: int,
+    salted_bucket_max: int,
+    payload: Sequence[str] = (),
+) -> DataFrame:
+    """Distinct (a < b, <p>a, <p>b ...) pairs of ``doc_id`` values that
+    share a ``key_cols`` bucket: :func:`skewed_self_pairs` behind the LSH
+    driver path, for MinHash band buckets and SimHash block buckets.
+
+    Under the LSH guard (bucket rows) and the pair budget, one bounded
+    Arrow pull plus :func:`driver_bucket_pairs` yields the identical pair
+    set, kept driver-resident so a driver-side verify can follow.
+    Otherwise the distributed plan runs from the same persisted frame.
+    """
+    from ..plans.caching import driver_guard, scoped_persist
+
+    keys = list(key_cols)
+    guard = driver_guard("lsh")
+    local = _driver_pairs(
+        "lsh.candidates",
+        [buckets],
+        guard,
+        lambda pdf, budget: driver_bucket_pairs(
+            pdf, keys, salted_bucket_max, budget, payload=payload
+        ),
+    )
+    if local is not None:
+        return local
+    probed = buckets
+    # Co-partitioned on the bucket key before caching (BASELINE.md round-4
+    # section): the size agg and the self-join then run on the cached
+    # partitioning instead of re-exchanging the bucket frame per consumer.
+    buckets = scoped_persist(buckets.repartition(*keys))
+    sizes = scoped_persist(
+        buckets.groupBy(*keys).agg(F.count(F.lit(1)).alias("bsize"))
+    )
+    pairs = skewed_self_pairs(
+        buckets, sizes, keys, max_bucket_size, salted_bucket_max, payload=payload
+    )
+    # the core's hot-bucket probe aggregated every partition of the
+    # repartitioned copy, so it is cached now and the probe's copy is dead
     if guard > 0:
         probed.unpersist(blocking=False)
-    if not has_hot:
-        return pairs.distinct()
-    hot = buckets.join(
-        sizes.filter(
-            (F.col("bsize") > max_bucket_size)
-            & (F.col("bsize") <= salted_bucket_max)
-        ),
-        keys,
-    )
-    salted = grid_salted_self_pairs(hot, keys, max_bucket_size, payload=payload)
-    return pairs.unionByName(salted).distinct()
+    return pairs.distinct()
 
 
 def driver_bucket_cross_pairs(
@@ -314,7 +339,7 @@ def driver_bucket_cross_pairs(
     pair_cap: int,
     id_col: str = "doc_id",
 ) -> pd.DataFrame | None:
-    """Driver-side twin of candidate_pairs_across' distributed plan: the
+    """Driver-side twin of bucket_cross_pairs' distributed plan: the
     exact distinct bipartite (a, b) pair set over buckets present in BOTH
     frames whose sides are each sized <= ``max_group`` (plain cells need
     both sides <= cap and salted cells cover the rest up to
@@ -372,7 +397,6 @@ def grid_salted_cross_pairs(
     hot_b: DataFrame,
     key_cols: Sequence[str],
     cap: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact bipartite all-pairs (A x B) inside hot buckets — the
     across-corpus analogue of :func:`grid_salted_self_pairs` (no diagonal,
@@ -385,19 +409,14 @@ def grid_salted_cross_pairs(
     reducer task handles at most ~cap^2 pairs. Output: (a, b).
     """
     keys = list(key_cols)
-    ga = hot_a.withColumn(
-        "_ka", F.ceil(F.col("na") / F.lit(cap)).cast("int")
-    ).withColumn(
-        "_kb", F.ceil(F.col("nb") / F.lit(cap)).cast("int")
-    )
-    gb = hot_b.withColumn(
-        "_ka", F.ceil(F.col("na") / F.lit(cap)).cast("int")
-    ).withColumn(
-        "_kb", F.ceil(F.col("nb") / F.lit(cap)).cast("int")
+    ga, gb = (
+        h.withColumn("_ka", F.ceil(F.col("na") / F.lit(cap)).cast("int"))
+        .withColumn("_kb", F.ceil(F.col("nb") / F.lit(cap)).cast("int"))
+        for h in (hot_a, hot_b)
     )
     lhs = ga.select(
         *keys,
-        F.pmod(F.xxhash64(id_col, F.lit(SALT_SEED)), F.col("_ka"))
+        F.pmod(F.xxhash64("doc_id", F.lit(SALT_SEED)), F.col("_ka"))
         .cast("int")
         .alias("_ci"),
         F.explode(F.sequence(F.lit(0), F.col("_kb") - F.lit(1))).alias("_cj"),
@@ -406,9 +425,101 @@ def grid_salted_cross_pairs(
     rhs = gb.select(
         *keys,
         F.explode(F.sequence(F.lit(0), F.col("_ka") - F.lit(1))).alias("_ci"),
-        F.pmod(F.xxhash64(id_col, F.lit(SALT_SEED)), F.col("_kb"))
+        F.pmod(F.xxhash64("doc_id", F.lit(SALT_SEED)), F.col("_kb"))
         .cast("int")
         .alias("_cj"),
         F.col("doc_id").alias("b"),
     )
     return lhs.join(rhs, keys + ["_ci", "_cj"]).select("a", "b")
+
+
+def skewed_cross_pairs(
+    buckets_a: DataFrame,
+    buckets_b: DataFrame,
+    joint: DataFrame,
+    key_cols: Sequence[str],
+    cap: int,
+    smax: int,
+) -> DataFrame:
+    """(a from ``buckets_a``, b from ``buckets_b``): one row per pair of
+    ``doc_id`` values sharing a ``key_cols`` bucket, per shared bucket (no
+    distinct) — the bipartite twin of :func:`skewed_self_pairs`.
+
+    ``joint`` holds one row per bucket present on BOTH sides, with the
+    side sizes ``na`` and ``nb``; a bucket is hot when either side is over
+    ``cap``. The caller partitions and persists the frames.
+    """
+    keys = list(key_cols)
+    plain_keys = joint.filter(
+        (F.col("na") <= cap) & (F.col("nb") <= cap)
+    ).select(*keys)
+    pairs = (
+        buckets_a.join(plain_keys, keys)
+        .select(*keys, F.col("doc_id").alias("a"))
+        .join(
+            buckets_b.join(plain_keys, keys).select(
+                *keys, F.col("doc_id").alias("b")
+            ),
+            keys,
+        )
+        .select("a", "b")
+    )
+    over = (F.col("na") > cap) | (F.col("nb") > cap)
+    if not joint.filter(over).limit(1).count():
+        return pairs
+    hot_keys = joint.filter(
+        over & (F.col("na") <= smax) & (F.col("nb") <= smax)
+    ).select(*keys, "na", "nb")
+    return pairs.unionByName(
+        grid_salted_cross_pairs(
+            buckets_a.join(hot_keys, keys),
+            buckets_b.join(hot_keys, keys),
+            keys,
+            cap,
+        )
+    )
+
+
+def bucket_cross_pairs(
+    buckets_a: DataFrame,
+    buckets_b: DataFrame,
+    key_cols: Sequence[str],
+    max_bucket_size: int,
+    salted_bucket_max: int,
+) -> DataFrame:
+    """Distinct (a from ``buckets_a``, b from ``buckets_b``) pairs of
+    ``doc_id`` values sharing a ``key_cols`` bucket:
+    :func:`skewed_cross_pairs` behind the LSH driver path (two bounded
+    pulls plus :func:`driver_bucket_cross_pairs`, as in
+    :func:`bucket_self_pairs`).
+    """
+    from ..plans.caching import driver_guard, scoped_persist
+
+    keys = list(key_cols)
+    guard = driver_guard("lsh")
+    local = _driver_pairs(
+        "lsh.candidates_across",
+        [buckets_a, buckets_b],
+        guard,
+        lambda pdf_a, pdf_b, budget: driver_bucket_cross_pairs(
+            pdf_a, pdf_b, keys, salted_bucket_max, budget
+        ),
+    )
+    if local is not None:
+        return local
+    probed = (buckets_a, buckets_b)
+    buckets_a = scoped_persist(buckets_a.repartition(*keys))
+    buckets_b = scoped_persist(buckets_b.repartition(*keys))
+    na = buckets_a.groupBy(*keys).agg(F.count(F.lit(1)).alias("na"))
+    nb = buckets_b.groupBy(*keys).agg(F.count(F.lit(1)).alias("nb"))
+    # tiny (bucket-overlap keys only), but read by both branches and the
+    # hot-bucket probe: persist so the two size aggs run once
+    joint = scoped_persist(na.join(nb, keys))
+    pairs = skewed_cross_pairs(
+        buckets_a, buckets_b, joint, keys, max_bucket_size, salted_bucket_max
+    )
+    # both size aggs read every cached partition: drop the probe's copies
+    if guard > 0:
+        for r in probed:
+            r.unpersist(blocking=False)
+    return pairs.distinct()

@@ -15,10 +15,9 @@ Scale shape — every stage is an existing audited primitive:
      spherical k-means on a bounded driver sample + ivf_assign's one
      matmul per Arrow batch); embeddings cross ONE exchange, partitioned
      by list_id;
-  2. within-cluster pairs = per-cluster self-join with the same bucket-cap
-     + grid-salted-overflow policy as cosine_pairs (a mega-cluster of
-     near-identical embeddings distributes over ~cap^2-bounded tasks
-     instead of one reducer);
+  2. within-cluster pairs = salted_join.skewed_self_pairs keyed by cluster
+     (a mega-cluster of near-identical embeddings pairs through the
+     salted grid instead of one reducer);
   3. duplicate groups = connected_components (large/small-star) over the
      eps-edges — SemDeDup's per-cluster greedy keep is order-dependent;
      CC over the same edge set is its deterministic, partition-invariant
@@ -41,7 +40,7 @@ from pyspark.sql import functions as F
 
 from .ann import _dot, ivf_assign, train_centroids
 from .connected_components import connected_components
-from .salted_join import grid_salted_self_pairs
+from .salted_join import skewed_self_pairs
 
 
 def semantic_dup_pairs(
@@ -53,53 +52,31 @@ def semantic_dup_pairs(
     """(a, b) with a < b: within-cluster pairs at cosine >= eps over an
     ivf_assign frame (vec_id, list_id, unit, csim).
 
-    Clusters up to ``max_cluster_size`` self-join directly; bigger ones
-    (embedding farms) go through the exact grid-salted join id-only, unit
-    vectors joined back for verification — no pair is dropped below
-    ``salted_cluster_max`` and every emitted pair is exactly verified.
+    Clusters pair through salted_join.skewed_self_pairs id-only, with cap
+    ``max_cluster_size`` and ceiling ``salted_cluster_max``; unit vectors
+    are joined onto the pairs for verification, so every emitted pair is
+    exactly verified.
 
-    ``assigned`` is consumed by four plan branches — callers persist it
-    (semantic_dedup does, via scoped_persist).
+    ``assigned`` is read by the size agg, the hot-cluster probe, both pair
+    branches and the unit join-backs — callers persist it (semantic_dedup does, via
+    scoped_persist).
     """
-    a = assigned.select("vec_id", "list_id", "unit")
+    a = assigned.select("vec_id", "list_id")
     sizes = a.groupBy("list_id").agg(F.count(F.lit(1)).alias("bsize"))
-    sized = a.join(
-        sizes.filter((F.col("bsize") >= 2) & (F.col("bsize") <= max_cluster_size)),
-        "list_id",
+    ids = skewed_self_pairs(
+        a,
+        sizes,
+        ["list_id"],
+        max_cluster_size,
+        salted_cluster_max,
+        id_col="vec_id",
     )
-    plain = (
-        sized.select(
-            "list_id", F.col("vec_id").alias("a"), F.col("unit").alias("ua")
-        )
-        .join(
-            sized.select(
-                "list_id", F.col("vec_id").alias("b"), F.col("unit").alias("ub")
-            ),
-            "list_id",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "ua", "ub")
-    )
-    hot = a.join(
-        sizes.filter(
-            (F.col("bsize") > max_cluster_size)
-            & (F.col("bsize") <= salted_cluster_max)
-        ),
-        "list_id",
-    )
-    salted_ids = grid_salted_self_pairs(
-        hot, ["list_id"], max_cluster_size, id_col="vec_id"
-    )
-    u = a.select("vec_id", "unit")
-    salted = (
-        salted_ids.join(
-            u.select(F.col("vec_id").alias("a"), F.col("unit").alias("ua")), "a"
-        ).join(
-            u.select(F.col("vec_id").alias("b"), F.col("unit").alias("ub")), "b"
-        )
-    )
+    u = assigned.select("vec_id", "unit")
+    ua = u.select(F.col("vec_id").alias("a"), F.col("unit").alias("ua"))
+    ub = u.select(F.col("vec_id").alias("b"), F.col("unit").alias("ub"))
     return (
-        plain.unionByName(salted)
+        ids.join(ua, "a")
+        .join(ub, "b")
         .withColumn("cosine", _dot("ua", "ub"))
         .filter(F.col("cosine") >= eps)
         .select("a", "b")

@@ -132,7 +132,8 @@ def probe(
     then a cache scan and nothing is cached twice.
 
     Every decision logs one record on ``PLACEMENT_LOG``: stage,
-    placement, probed rows (None when no probe ran) and guard."""
+    placement, probed rows (None when no probe ran) and guard; a later
+    veto of a driver placement logs one more (:func:`veto`)."""
     pdf = rows = None
     if guard > 0:
         if persist:
@@ -140,16 +141,36 @@ def probe(
         rows = df.count()
         if rows <= guard:
             pdf = probe_rows(df, guard)
-    placement = "distributed" if pdf is None else "driver"
+    _record(stage, "distributed" if pdf is None else "driver", rows, guard)
+    return pdf
+
+
+def veto(stage: str, rows: int, guard: int, reason: str) -> None:
+    """Log that ``stage``, placed on the driver by :func:`probe`, runs its
+    distributed plan after all because its driver twin exceeded
+    ``guard``: one more ``distributed`` record carrying the probed rows
+    and a ``reason``, so the stage's last record is its placement."""
+    _record(stage, "distributed", rows, guard, reason)
+
+
+def _record(
+    stage: str, placement: str, rows: int | None, guard: int, reason: str | None = None
+) -> None:
     _log.info(
-        "%s: %s (rows=%s, guard=%d)",
+        "%s: %s (rows=%s, guard=%d%s)",
         stage,
         placement,
         rows,
         guard,
-        extra={"stage": stage, "placement": placement, "rows": rows, "guard": guard},
+        f", {reason}" if reason else "",
+        extra={
+            "stage": stage,
+            "placement": placement,
+            "rows": rows,
+            "guard": guard,
+            "reason": reason,
+        },
     )
-    return pdf
 
 
 def local_frame(spark, pdf: pd.DataFrame, schema: str) -> DataFrame:

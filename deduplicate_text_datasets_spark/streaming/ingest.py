@@ -8,8 +8,8 @@ the OLD corpus". Here: a file-source stream of new document parquet,
 processed per micro-batch with foreachBatch; each batch runs
 
   new docs ──► exact-dup semi-join vs indexed corpus fingerprints
-          ──► skew-guarded MinHash LSH bucket probe vs indexed buckets
-              (hot buckets via the bipartite salted grid, never one task)
+          ──► MinHash LSH bucket probe vs indexed buckets
+              (salted_join's bipartite skew-policy join)
           ──► intra-batch near-dup pass (first-seen-wins inside the batch)
           ──► verified near-dup decision per new doc
           ──► NOVEL docs appended to the index (idempotent per batch)
@@ -112,42 +112,25 @@ def _probe_candidates(
     cfg: MinHashConfig,
 ) -> DataFrame:
     """(a = new doc, b = index doc) candidate pairs from shared LSH
-    buckets, with the engine's skew policy (same thresholds as
-    minhash.candidate_pairs_across): buckets whose sides both fit
-    ``max_bucket_size`` join plainly (AQE broadcasts the micro-batch
-    side); hot buckets up to ``salted_bucket_max`` per side go through the
-    exact bipartite salted grid — a boilerplate bucket with 10^6 index
-    members never lands in one reducer task; larger buckets are dropped
-    (consistent with the batch path). ``idx_sizes`` is precomputed at
-    index-build/append time, so probing never re-aggregates the index."""
-    from ..operators.salted_join import grid_salted_cross_pairs
+    buckets: salted_join.skewed_cross_pairs with the engine's thresholds
+    (``max_bucket_size``, ``salted_bucket_max``), so a boilerplate bucket
+    with 10^6 index members never lands in one reducer task.
+    ``idx_sizes`` is precomputed at index-build/append time, so probing
+    never re-aggregates the index."""
+    from ..operators.salted_join import skewed_cross_pairs
+    from ..plans.caching import scoped_persist
 
-    na = new_buckets.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("na")
-    )
+    keys = ["band", "bucket"]
+    na = new_buckets.groupBy(*keys).agg(F.count(F.lit(1)).alias("na"))
     # one increment per batch => several size rows per bucket: fold first
-    nb = idx_sizes.groupBy("band", "bucket").agg(F.sum("nb").alias("nb"))
-    keys = na.join(nb, ["band", "bucket"])
+    nb = idx_sizes.groupBy(*keys).agg(F.sum("nb").alias("nb"))
+    # read by both branches and the hot-bucket probe: persist so the two
+    # size aggs run once
+    joint = scoped_persist(na.join(nb, keys))
     cap, smax = cfg.max_bucket_size, cfg.salted_bucket_max
-    cool_keys = keys.filter((F.col("na") <= cap) & (F.col("nb") <= cap))
-    hot_keys = keys.filter(
-        ((F.col("na") > cap) | (F.col("nb") > cap))
-        & (F.col("na") <= smax)
-        & (F.col("nb") <= smax)
-    ).select("band", "bucket", "na", "nb")
-    cool = (
-        new_buckets.join(cool_keys.select("band", "bucket"), ["band", "bucket"])
-        .select("band", "bucket", F.col("doc_id").alias("a"))
-        .join(
-            idx_buckets.select("band", "bucket", F.col("doc_id").alias("b")),
-            ["band", "bucket"],
-        )
-        .select("a", "b")
-    )
-    ha = new_buckets.join(hot_keys, ["band", "bucket"])
-    hb = idx_buckets.join(hot_keys, ["band", "bucket"])
-    salted = grid_salted_cross_pairs(ha, hb, ["band", "bucket"], cap)
-    return cool.unionByName(salted).distinct()
+    return skewed_cross_pairs(
+        new_buckets, idx_buckets, joint, keys, cap, smax
+    ).distinct()
 
 
 def dedup_batch(

@@ -6,7 +6,11 @@ prefer an ``EngineConfig`` field over a new variable.
 The placement ratchet keeps every driver-or-distributed decision in
 ``plans/caching.py``: the driver guards are read there only, every pull to
 the driver goes through its probe, and no stage carries a driver result on
-an ad-hoc DataFrame attribute."""
+an ad-hoc DataFrame attribute.
+
+The skew-policy ratchet keeps the bucket-size skew policy in
+``operators/salted_join.py``: only it calls the grid-salted joins and the
+numpy twins that the policy is built from."""
 
 from __future__ import annotations
 
@@ -15,6 +19,7 @@ from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parent.parent / "deduplicate_text_datasets_spark"
 CACHING = Path("plans") / "caching.py"
+SALTED_JOIN = Path("operators") / "salted_join.py"
 
 ALLOWED = {
     # size guards that move a stage onto the driver (0 = distributed plan)
@@ -40,6 +45,12 @@ ALLOWED = {
     "SPARK_GRAFT_LOCAL_DIR",
     "SPARK_GRAFT_PRETOUCH",
 }
+
+
+def _package_trees():
+    """(path relative to the package, parsed module) for every module."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield path.relative_to(PACKAGE), ast.parse(path.read_text(), filename=str(path))
 
 
 def _is_environ(node: ast.AST) -> bool:
@@ -74,10 +85,9 @@ def _env_reads(tree: ast.AST):
 
 def test_env_reads_match_allowlist():
     found: dict[str, list[str]] = {}
-    for path in sorted(PACKAGE.rglob("*.py")):
-        tree = ast.parse(path.read_text(), filename=str(path))
+    for rel, tree in _package_trees():
         for key in _env_reads(tree):
-            where = f"{path.relative_to(PACKAGE)}:{key.lineno}"
+            where = f"{rel}:{key.lineno}"
             assert isinstance(key, ast.Constant) and isinstance(
                 key.value, str
             ), f"non-literal environment key at {where}"
@@ -99,9 +109,7 @@ def _memo_attribute(name: str) -> bool:
 def test_placement_goes_through_caching():
     assert len(GUARDS) == 6
     guard_reads, pulls, memos = [], [], []
-    for path in sorted(PACKAGE.rglob("*.py")):
-        rel = path.relative_to(PACKAGE)
-        tree = ast.parse(path.read_text(), filename=str(path))
+    for rel, tree in _package_trees():
         for key in _env_reads(tree):
             if rel != CACHING and getattr(key, "value", None) in GUARDS:
                 guard_reads.append(f"{rel}:{key.lineno}")
@@ -134,3 +142,24 @@ def test_placement_goes_through_caching():
     assert not guard_reads, f"driver guard read outside {CACHING}: {guard_reads}"
     assert not pulls, f"toPandas outside {CACHING} (use caching.probe): {pulls}"
     assert not memos, f"driver result on a DataFrame attribute: {memos}"
+
+
+# the building blocks of the bucket-size skew policy
+POLICY_CALLS = {
+    "grid_salted_self_pairs",
+    "grid_salted_cross_pairs",
+    "driver_bucket_pairs",
+    "driver_bucket_cross_pairs",
+}
+
+
+def test_skew_policy_lives_in_salted_join():
+    outside = []
+    for rel, tree in _package_trees():
+        for node in ast.walk(tree):
+            if rel != SALTED_JOIN and isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in POLICY_CALLS:
+                    outside.append(f"{rel}:{node.lineno}")
+    assert not outside, f"skew-policy join outside {SALTED_JOIN}: {outside}"

@@ -6,7 +6,6 @@ Covered here:
   * connected_components driver fast path vs the distributed star rounds
   * intervals driver seam-merge vs the hierarchical distributed pass
   * cosine_topk numpy kernel vs the Catalyst HOF formula (exact doubles)
-  * candidate_pairs hot-branch short-circuit (with and without hot buckets)
 """
 
 from __future__ import annotations
@@ -15,8 +14,6 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-from deduplicate_text_datasets_spark.config import MinHashConfig
 
 
 def _cc(spark, driver_max):
@@ -160,41 +157,6 @@ def test_cosine_topk_matches_hof_formula(spark):
     got = sorted(map(tuple, cosine_topk(emb, queries, k=5).collect()))
     exp = sorted(map(tuple, hof.collect()))
     assert got == exp
-
-
-def test_candidate_pairs_hot_skip_parity(spark):
-    """The hot-branch short-circuit must not change the pair set: run the
-    same buckets with a cap small enough to create hot buckets (salted
-    path taken) and with the default cap (branch pruned) — pair sets over
-    the plain region must agree with a brute-force bucket self-join."""
-    from deduplicate_text_datasets_spark.operators.minhash import (
-        candidate_pairs,
-    )
-
-    rows = []
-    for b in range(3):
-        members = range(b * 10, b * 10 + 14)  # bucket of 14 docs
-        rows += [(int(m), 0, int(b)) for m in members]
-    buckets = spark.createDataFrame(rows, "doc_id long, band int, bucket long")
-    base_cfg = MinHashConfig()  # cap 5000 -> no hot buckets, branch pruned
-    import dataclasses
-
-    hot_cfg = dataclasses.replace(base_cfg, max_bucket_size=6)  # all hot
-    plain = sorted(
-        (r["a"], r["b"]) for r in candidate_pairs(buckets, base_cfg).collect()
-    )
-    salted = sorted(
-        (r["a"], r["b"]) for r in candidate_pairs(buckets, hot_cfg).collect()
-    )
-    brute = sorted(
-        {
-            (a, b)
-            for blk in range(3)
-            for a in range(blk * 10, blk * 10 + 14)
-            for b in range(a + 1, blk * 10 + 14)
-        }
-    )
-    assert plain == brute and salted == brute
 
 
 def test_sa_index_int64_layout_backcompat(spark, tmp_path):

@@ -115,12 +115,21 @@ def test_candidate_pairs_across_driver_vs_distributed(spark, monkeypatch):
         (r["a"], r["b"])
         for r in candidate_pairs_across(ba, bb, cfg).collect()
     )
+    # every shared bucket over the cap: the distributed side runs the
+    # bipartite salted grid
+    hot_cfg = MinHashConfig(max_bucket_size=2, salted_bucket_max=10**6)
+    hot_fast = _driver_rows(candidate_pairs_across(ba, bb, hot_cfg))
     monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
     slow = sorted(
         (r["a"], r["b"])
         for r in candidate_pairs_across(ba, bb, cfg).collect()
     )
     assert fast == slow and fast
+    hot_slow = sorted(
+        (r["a"], r["b"])
+        for r in candidate_pairs_across(ba, bb, hot_cfg).collect()
+    )
+    assert hot_fast == hot_slow == fast
 
 
 def test_simhash_candidates_driver_vs_distributed(spark, monkeypatch):
@@ -356,7 +365,8 @@ def test_probe_rows_under_and_over_guard(spark, monkeypatch):
 def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
     """One log record per placement decision: default placement puts the
     LSH stage of a small neardup_clusters on the driver; with its guard at
-    0 the stage is distributed and no probe runs."""
+    0 the stage is distributed and no probe runs; a pair budget the driver
+    twin exceeds vetoes the driver placement with one more record."""
     import logging
 
     from deduplicate_text_datasets_spark.plans.caching import PLACEMENT_LOG
@@ -378,6 +388,14 @@ def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
         (rec,) = lsh_records()
         assert rec.placement == "distributed"
         assert rec.rows is None and rec.guard == 0
+        caplog.clear()
+        monkeypatch.delenv("SPARK_GRAFT_LSH_DRIVER_MAX")
+        monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", "1")
+        neardup_clusters(d, EngineConfig())
+        probed, vetoed = lsh_records()
+        assert probed.placement == "driver"
+        assert vetoed.placement == "distributed" and vetoed.guard == 1
+        assert vetoed.rows == probed.rows and vetoed.reason
 
 
 def test_ann_partial_topk_many_batches(spark):
