@@ -46,12 +46,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import ExactSubstrConfig
-from ..sources.corpus import assign_shards, corpus_total_bytes, with_offsets
+from ..sources.corpus import corpus_total_bytes, with_offsets
 from .suffix import (
     MATCH_LEN_SCHEMA,
     POSITIONS_SCHEMA,
     QUERY_HITS_SCHEMA,
-    _apply_shard_kernel,
     _check_query_lengths,
     _count_with_baseline,
     _iter_shard_groups,
@@ -61,6 +60,7 @@ from .suffix import (
     _shard_match_lens,
     _shard_positions,
     _shard_sa,
+    shard_layout,
 )
 
 SA_INDEX_SCHEMA = T.StructType(
@@ -156,10 +156,7 @@ def build_suffix_index(
     # coalesce the tiny shard exchange to ONE post-shuffle partition,
     # serializing every SA construction in a single task (measured: the
     # whole build ran as 1 task at sf0.1)
-    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-    return _apply_shard_kernel(
-        shards, total, cfg.shard_bytes, kernel, SA_INDEX_SCHEMA
-    )
+    return shard_layout(docs, cfg, total).mapInPandas(kernel, SA_INDEX_SCHEMA)
 
 
 def write_suffix_index(index: DataFrame, path: str) -> None:

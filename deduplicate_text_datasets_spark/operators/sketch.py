@@ -1,18 +1,17 @@
-"""Broadcastable key-membership sketches for the fingerprint prefilter.
+"""Broadcastable key-membership sketches for ExactSubstr's minimizer keys.
 
-The self_similar / across_dedup prefilter (round-4 verdict item 1) ships a
-probable-duplicate-key set to every fingerprint kernel so only candidate
-positions ride the big exchange. The exact sorted-array set is capped by a
-broadcast guard (default 2^24 keys = 128 MB); beyond it the round-4 code
-fell back to NO prefilter — a cliff exactly where the mode matters most
-(a 100-TB corpus at 1% dup density has ~10^9 distinct dup keys).
+self_similar's pass 2 (and across_dedup's big side) ships a window only if
+its minimizer key is in a broadcast set, so only candidate positions ride
+the (h1, h2) exchange. The exact sorted-array set is capped by a broadcast
+guard (default 2^24 keys = 128 MB); a 100-TB corpus at 1% dup density has
+far more repeated keys than that.
 
-This module removes the cliff with a **Bloom filter fallback**: a fixed-
-budget bitmap (default cap 64 MiB) whose false positives only ADD
-candidate positions — the post-shuffle exact (h1, h2) stats filter
-discards them — and whose zero false negatives keep recall exact. At the
-cap the filter holds ~53M keys at <1% FP; past that FP rises gracefully
-(the exchange grows, correctness never moves).
+Above the guard the set becomes a **Bloom filter**: a fixed-budget bitmap
+(default cap 64 MiB) whose false positives only ADD candidate positions —
+the post-shuffle exact (h1, h2) grouping discards them — and whose zero
+false negatives keep recall exact. At the cap the filter holds ~53M keys
+at <1% FP; past that FP rises gracefully (the exchange grows toward one
+row per position, correctness never moves).
 
 Build is distributed and driver-light: each dup key maps to k probe bit
 positions inside an Arrow batch kernel, positions shuffle ONCE grouped by

@@ -11,9 +11,11 @@ fingerprint**:
 
   per shard (Arrow kernel, no per-row Python):
       rolling polynomial hash of every length-L window     O(n) vectorized
+      and of every k-gram, sliding argmin = minimizers     O(n) vectorized
   global:
-      repartition(h1, h2) + sorted run-length pass         1 shuffle of
-                                                           24 B/position
+      pass 1: count minimizer keys                         ~4% of positions
+      pass 2: repartition(h1, h2) of the windows whose     24 B/candidate
+      minimizer key repeats + sorted run-length pass       position
 
 Equality of fingerprints == equality of windows up to hash collisions;
 with two independent 64-bit rolling hashes the collision probability over
@@ -159,50 +161,139 @@ def window_hashes(
     return out
 
 
+#: windows per sliding_argmin chunk: about ten scratch arrays of this many
+#: elements, a few MB, whatever the shard width
+_ARGMIN_CHUNK = 1 << 16
+
+
+def sliding_argmin(a: np.ndarray, w: int) -> np.ndarray:
+    """Index of the leftmost minimum of every length-``w`` window of the
+    integer array ``a`` (``len(a) - w + 1`` windows), in O(n).
+
+    van Herk / Gil-Werman: cut ``a`` into blocks of w. A window starting
+    inside a block is the block's suffix from the window start plus the
+    next block's prefix up to the window end, so its minimum is the
+    smaller of one suffix minimum and one prefix minimum. Each minimum
+    carries its leftmost argmin; on a tie the suffix side, which lies to
+    the left, wins. Runs in chunks of windows so the scratch arrays stay
+    cache-sized whatever the length of ``a``.
+    """
+    n = len(a)
+    m = n - w + 1
+    if m <= 0:
+        return np.empty(0, dtype=np.int64)
+    out = np.empty(m, dtype=np.int64)
+    top = np.iinfo(a.dtype).max
+    col = np.arange(w, dtype=np.int64)
+    chunk = max(_ARGMIN_CHUNK, w)
+    for s in range(0, m, chunk):
+        c = min(chunk, m - s)  # windows s .. s+c-1 read a[s : s+c+w-1]
+        nb = -(-(c + w - 1) // w)
+        blk = np.full(nb * w, top, dtype=a.dtype)
+        blk[: c + w - 1] = a[s : s + c + w - 1]
+        blk = blk.reshape(nb, w)
+        base = (np.arange(nb, dtype=np.int64) * w)[:, None]
+        # prefix minima: the leftmost argmin moves only on a strict drop
+        pre = np.minimum.accumulate(blk, axis=1)
+        drop = np.ones(blk.shape, dtype=bool)
+        drop[:, 1:] = blk[:, 1:] < pre[:, :-1]
+        pre_i = np.maximum.accumulate(np.where(drop, col, 0), axis=1) + base
+        # suffix minima: ties go left, so the argmin moves on <=
+        suf = np.minimum.accumulate(blk[:, ::-1], axis=1)[:, ::-1]
+        take = np.ones(blk.shape, dtype=bool)
+        take[:, :-1] = blk[:, :-1] <= suf[:, 1:]
+        suf_i = np.minimum.accumulate(
+            np.where(take, col, w)[:, ::-1], axis=1
+        )[:, ::-1] + base
+        left = suf.ravel()[:c] <= pre.ravel()[w - 1 : w - 1 + c]
+        out[s : s + c] = s + np.where(
+            left, suf_i.ravel()[:c], pre_i.ravel()[w - 1 : w - 1 + c]
+        )
+    return out
+
+
+def minimizer_width(length: int) -> int:
+    """k-grams per window minimizer, w = L // 2, so k = L - w + 1: the
+    density 2/(w+1) of selected positions against a k long enough that
+    unrelated k-grams rarely share a key."""
+    return max(1, length // 2)
+
+
+def _window_minimizers(
+    buf: np.ndarray, length: int, a: int, b: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Minimizers of the length-L windows starting at buf[a:b].
+
+    A window's minimizer is the leftmost lowest hash among its w
+    overlapping k-grams, so identical windows choose the same k-gram at
+    the same offset. Returns (keys, run): the k-gram hash at each distinct
+    minimizer position in order (one key per run of windows that share a
+    position, since argmins never move left), and for each window the
+    index of its run in ``keys``. Both ExactSubstr passes call this, so
+    they key every window alike.
+    """
+    w = minimizer_width(length)
+    kh = window_hashes(buf[a : b + length - 1], length - w + 1, ROLLHASH_X1)
+    idx = sliding_argmin(kh, w)
+    new = np.empty(len(idx), dtype=bool)
+    new[:1] = True
+    np.not_equal(idx[1:], idx[:-1], out=new[1:])
+    return kh[idx[new]].view(np.int64), np.cumsum(new) - 1
+
+
+def _owned_windows(shard_pdf: pd.DataFrame, cfg: ExactSubstrConfig, total: int):
+    """One shard -> (own_lo, buf, a, b): the shard buffer and the slice
+    buf[a:b] of window starts it owns. Owned = [s*S, min((s+1)*S,
+    total - L + 1)); the trailing overlap is read, never emitted
+    (ownership rule, the analogue of the merge-time overlap skip,
+    main.rs:1262-1278)."""
+    s = int(shard_pdf["shard_id"].iloc[0])
+    lo, buf = assemble_shard_buffer(
+        shard_pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
+    )
+    own_lo = s * cfg.shard_bytes
+    own_hi = min((s + 1) * cfg.shard_bytes, total - cfg.length_threshold + 1)
+    return own_lo, buf, own_lo - lo, max(own_hi, own_lo) - lo
+
+
 def _fingerprint_kernel(
     shard_pdf: pd.DataFrame,
     cfg: ExactSubstrConfig,
     total: int,
     dup_keys_bc=None,
 ) -> pd.DataFrame:
-    """One shard -> (h1, h2, pos) for every *owned* position whose length-L
-    window is fully inside the corpus. Owned = [s*S, min((s+1)*S, total));
-    the trailing overlap is read, never emitted (ownership rule, the
-    analogue of the merge-time overlap skip, main.rs:1262-1278).
+    """One shard -> (h1, h2, pos) for every owned position whose length-L
+    window is fully inside the corpus.
 
-    ``dup_keys_bc`` (optional broadcast membership sketch of probable-
-    duplicate h1 keys: a SORTED int64 array or a sketch.BloomSketch) is
-    the prefilter's pass-2 map-side filter: only positions whose h1 hits
-    the sketch are emitted, so the exchange ships probable-dup positions
-    instead of every position."""
+    ``dup_keys_bc`` (optional broadcast membership sketch of minimizer
+    keys: a SORTED int64 array or a sketch.BloomSketch) is pass 2's
+    map-side filter: only windows whose minimizer key hits the sketch are
+    emitted, so the exchange ships candidate positions instead of every
+    position."""
     L = cfg.length_threshold
-    s = int(shard_pdf["shard_id"].iloc[0])
-    lo, buf = assemble_shard_buffer(
-        shard_pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
-    )
-    own_lo = s * cfg.shard_bytes
-    own_hi = min((s + 1) * cfg.shard_bytes, total - L + 1)
-    if own_hi <= own_lo:
-        return pd.DataFrame({"h1": [], "h2": [], "pos": []}).astype(
-            {"h1": "int64", "h2": "int64", "pos": "int64"}
-        )
-    h1 = window_hashes(buf, L, ROLLHASH_X1)
-    a, b = own_lo - lo, own_hi - lo
-    h1v = h1[a:b].view(np.int64)
-    pos = np.arange(own_lo, own_hi, dtype=np.int64)
+    own_lo, buf, a, b = _owned_windows(shard_pdf, cfg, total)
+    keep = slice(None)
     if dup_keys_bc is not None:
         from .sketch import sketch_contains
 
-        mask = sketch_contains(dup_keys_bc.value, h1v)
-        h1v, pos = h1v[mask], pos[mask]
-        # h2 only for survivors' slice — but window_hashes is whole-buffer
-        # vectorized; slicing after is still the cheap path
-        h2 = window_hashes(buf, L, ROLLHASH_X2)
-        h2v = h2[a:b].view(np.int64)[mask]
-    else:
-        h2 = window_hashes(buf, L, ROLLHASH_X2)
-        h2v = h2[a:b].view(np.int64)
-    return pd.DataFrame({"h1": h1v, "h2": h2v, "pos": pos})
+        keys, run = _window_minimizers(buf, L, a, b)
+        keep = sketch_contains(dup_keys_bc.value, keys)[run]
+    return pd.DataFrame(
+        {
+            "h1": window_hashes(buf, L, ROLLHASH_X1)[a:b].view(np.int64)[keep],
+            "h2": window_hashes(buf, L, ROLLHASH_X2)[a:b].view(np.int64)[keep],
+            "pos": np.arange(own_lo, own_lo + b - a, dtype=np.int64)[keep],
+        }
+    )
+
+
+def _key_kernel(
+    shard_pdf: pd.DataFrame, cfg: ExactSubstrConfig, total: int
+) -> pd.DataFrame:
+    """Pass 1: one shard -> the minimizer key of every distinct minimizer
+    position its owned windows select, about 2/(w+1) of positions."""
+    _, buf, a, b = _owned_windows(shard_pdf, cfg, total)
+    return pd.DataFrame({"k": _window_minimizers(buf, cfg.length_threshold, a, b)[0]})
 
 
 FINGERPRINT_SCHEMA = T.StructType(
@@ -212,6 +303,7 @@ FINGERPRINT_SCHEMA = T.StructType(
         T.StructField("pos", T.LongType(), False),
     ]
 )
+WINDOW_KEY_SCHEMA = T.StructType([T.StructField("k", T.LongType(), False)])
 
 # Kernel RETURN batching: classic applyInPandas serializes one Arrow batch
 # per group, so a production 64 MiB shard's fingerprint frame (~64Mi
@@ -232,6 +324,34 @@ def _emit_chunks(out: pd.DataFrame, rows: int | None = None):
         yield out.iloc[lo : lo + rows]
 
 
+def _offsets_and_total(
+    docs: DataFrame, cfg: ExactSubstrConfig, total: int | None
+) -> tuple[DataFrame, int]:
+    """``docs`` with offsets, and the corpus size. Offsets are added (and
+    scope-persisted: they feed both the total-bytes action and the shard
+    layout) only when ``docs`` does not already carry them."""
+    if "byte_start" not in docs.columns:
+        from ..plans.caching import scoped_persist
+
+        docs = scoped_persist(with_offsets(docs, cfg.with_separators))
+    if total is None:
+        total = corpus_total_bytes(docs)
+    return docs, total
+
+
+def _map_shards(layout: DataFrame, fn, schema: T.StructType, emit_rows=None):
+    """``fn(shard_pdf) -> pdf`` over every shard of a :func:`shard_layout`
+    frame. Shards stream IN one complete group at a time (the kernels need
+    the whole shard buffer) and results stream OUT in bounded slices (see
+    _EMIT_ROWS)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for g in _iter_shard_groups(batches):
+            yield from _emit_chunks(fn(g), emit_rows)
+
+    return layout.mapInPandas(kernel, schema)
+
+
 def window_fingerprints(
     docs: DataFrame,
     cfg: ExactSubstrConfig,
@@ -240,57 +360,39 @@ def window_fingerprints(
     emit_rows: int | None = None,
 ) -> DataFrame:
     """documents -> (h1, h2, pos) fingerprint frame (one row per corpus
-    position — or per probable-dup position when ``dup_keys_bc`` is set).
+    position — or per candidate position when ``dup_keys_bc`` is set).
     ``docs`` may already carry offsets; if not they are added."""
-    if "byte_start" not in docs.columns:
-        # cache: the offsets frame feeds both the total-bytes action and the
-        # fingerprint job (avoids recomputing the cumsum windows);
-        # scope-registered so a cache_scope() caller reclaims it
-        from ..plans.caching import scoped_persist
-
-        docs = scoped_persist(with_offsets(docs, cfg.with_separators))
-    if total is None:
-        total = corpus_total_bytes(docs)
-    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-
-    emit_rows = emit_rows or _EMIT_ROWS
-
-    def fp_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # shards stream IN one complete group at a time (the kernel needs
-        # the whole shard buffer) and the position frame streams OUT in
-        # bounded slices (see _EMIT_ROWS)
-        for g in _iter_shard_groups(batches):
-            yield from _emit_chunks(
-                _fingerprint_kernel(g, cfg, total, dup_keys_bc), emit_rows
-            )
-
-    return _apply_shard_kernel(shards, total, cfg.shard_bytes, fp_kernel,
-                               FINGERPRINT_SCHEMA)
-
-
-def _apply_shard_kernel(
-    shards: DataFrame,
-    total: int,
-    shard_bytes: int,
-    kernel,
-    schema: T.StructType,
-) -> DataFrame:
-    """Run a per-shard iterator kernel over `_shards_one_per_task`: an
-    explicit range layout so few-shard corpora (production 64 MiB widths)
-    get one shard per task instead of hash-colliding onto one reducer. Its
-    cost is the range partitioner's sampling job, one extra pass over the
-    (cheap, cached) shard projection.
-    """
-    proj = shards.select("shard_id", "doc_id", "byte_start", "text")
-    return _shards_one_per_task(proj, total, shard_bytes).mapInPandas(
-        kernel, schema
+    docs, total = _offsets_and_total(docs, cfg, total)
+    return _map_shards(
+        shard_layout(docs, cfg, total),
+        lambda g: _fingerprint_kernel(g, cfg, total, dup_keys_bc),
+        FINGERPRINT_SCHEMA,
+        emit_rows,
     )
 
 
-def _shards_one_per_task(
-    shards: DataFrame, total: int, shard_bytes: int
+def window_keys(
+    docs: DataFrame,
+    cfg: ExactSubstrConfig,
+    total: int | None = None,
+    emit_rows: int | None = None,
 ) -> DataFrame:
-    """Lay the exploded shard frame out ~one shard per task.
+    """documents -> (k) minimizer-key frame (pass 1): one row per distinct
+    minimizer position per shard."""
+    docs, total = _offsets_and_total(docs, cfg, total)
+    return _map_shards(
+        shard_layout(docs, cfg, total),
+        lambda g: _key_kernel(g, cfg, total),
+        WINDOW_KEY_SCHEMA,
+        emit_rows,
+    )
+
+
+def shard_layout(
+    docs_with_offsets: DataFrame, cfg: ExactSubstrConfig, total: int
+) -> DataFrame:
+    """Lay the exploded shard frame (shard_id, doc_id, byte_start, text)
+    out ~one shard per task, for per-shard iterator kernels.
 
     groupBy("shard_id").applyInPandas hash-partitions the shard keys, and
     with FEW shards — a mid-size corpus at the production 64 MiB width,
@@ -301,12 +403,17 @@ def _shards_one_per_task(
     shuffle.partitions) partitions gives ~one shard per task instead; at
     web scale (#shards >> #partitions) both layouts pack many shards per
     task and the exchanged bytes are identical, so this is never worse.
+    Its cost is the range partitioner's sampling job plus the text
+    exchange; a caller running two kernels persists the layout once.
     Rows are sorted by (shard_id, byte_start) within each partition so a
     mapInPandas kernel can stream one complete shard at a time (see
     _iter_shard_groups) holding one shard's rows in memory, exactly like
     the groupBy form did.
     """
-    n_shards = max(1, -(-total // shard_bytes))
+    shards = assign_shards(
+        docs_with_offsets, cfg.shard_bytes, cfg.overlap_bytes
+    ).select("shard_id", "doc_id", "byte_start", "text")
+    n_shards = max(1, -(-total // cfg.shard_bytes))
     try:
         default_parts = int(
             shards.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -344,53 +451,6 @@ def _iter_shard_groups(
             pend.append(seg)
     if pend:
         yield pd.concat(pend, ignore_index=True)
-
-
-WINDOW_KEY_SCHEMA = T.StructType([T.StructField("k", T.LongType(), False)])
-
-
-def _key_kernel(
-    shard_pdf: pd.DataFrame, cfg: ExactSubstrConfig, total: int
-) -> pd.DataFrame:
-    """Prefilter pass 1: one shard -> the h1 window key of every owned
-    position (no pos, no h2 — half the hash work, a third of the bytes)."""
-    L = cfg.length_threshold
-    s = int(shard_pdf["shard_id"].iloc[0])
-    lo, buf = assemble_shard_buffer(
-        shard_pdf, cfg.shard_bytes, cfg.overlap_bytes, total, cfg.with_separators
-    )
-    own_lo = s * cfg.shard_bytes
-    own_hi = min((s + 1) * cfg.shard_bytes, total - L + 1)
-    if own_hi <= own_lo:
-        return pd.DataFrame({"k": []}).astype({"k": "int64"})
-    h1 = window_hashes(buf, L, ROLLHASH_X1)
-    a, b = own_lo - lo, own_hi - lo
-    return pd.DataFrame({"k": h1[a:b].view(np.int64)})
-
-
-def window_keys(
-    docs: DataFrame,
-    cfg: ExactSubstrConfig,
-    total: int | None = None,
-    emit_rows: int | None = None,
-) -> DataFrame:
-    """documents -> (k) single-column window-key frame (prefilter pass 1)."""
-    if "byte_start" not in docs.columns:
-        from ..plans.caching import scoped_persist
-
-        docs = scoped_persist(with_offsets(docs, cfg.with_separators))
-    if total is None:
-        total = corpus_total_bytes(docs)
-    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-
-    emit_rows = emit_rows or _EMIT_ROWS
-
-    def key_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for g in _iter_shard_groups(batches):
-            yield from _emit_chunks(_key_kernel(g, cfg, total), emit_rows)
-
-    return _apply_shard_kernel(shards, total, cfg.shard_bytes, key_kernel,
-                               WINDOW_KEY_SCHEMA)
 
 
 DUPLICATES_SCHEMA = T.StructType(
@@ -436,7 +496,9 @@ def find_duplicates_mappass(
     contiguous in its sorted partition, so cluster_size is a run length
     and cluster_id is the run head — no hash aggregation, no join-back,
     and the fingerprint frame has exactly ONE consumer (no persist, no
-    second kernel run). Exchange: one 24 B/position shuffle.
+    second kernel run). Exchange: 24 B per input row — every position
+    for a plain window_fingerprints frame, only the candidate positions
+    when self_similar feeds it its pass-2 frame.
 
     Returns duplicates(pos, cluster_id, cluster_size), cluster_id = min
     member position (deterministic; reference numbering is order-dependent
@@ -491,15 +553,19 @@ def find_duplicates_mappass(
     return clustered.mapInPandas(kernel, DUPLICATES_SCHEMA)
 
 
-def _key_sketch_bc(dup_keys: DataFrame, max_keys: int):
-    """Dup-key frame -> broadcast membership sketch.
+#: largest minimizer-key set broadcast as an exact sorted array (128 MB);
+#: above it the set becomes a Bloom sketch
+SKETCH_MAX_KEYS = 1 << 24
 
-    An exact sorted-int64 set while it fits the broadcast guard
-    (``max_keys``), a Bloom filter above it: Bloom false positives only ADD
-    candidate positions (discarded by the exact post-shuffle (h1, h2)
-    grouping), false negatives are impossible, so recall is exact at ANY
-    key count with a bounded broadcast (SPARK_GRAFT_FP_BLOOM_MAX_BYTES,
-    default 64 MiB).
+
+def _key_sketch_bc(dup_keys: DataFrame, max_keys: int):
+    """Key frame -> broadcast membership sketch.
+
+    An exact sorted-int64 set while it fits ``max_keys``, a Bloom filter
+    above it: Bloom false positives only ADD candidate positions
+    (discarded by the exact post-shuffle (h1, h2) grouping), false
+    negatives are impossible, so recall is exact at ANY key count with a
+    bounded broadcast (SPARK_GRAFT_FP_BLOOM_MAX_BYTES, default 64 MiB).
     """
     from ..plans.caching import probe, scoped_broadcast, scoped_persist
     from .sketch import build_bloom_sketch
@@ -524,69 +590,51 @@ def self_similar(
     docs: DataFrame,
     cfg: ExactSubstrConfig,
     total: int | None = None,
-    prefilter: bool | None = None,
-    prefilter_max_keys: int | None = None,
+    prefilter_max_keys: int = SKETCH_MAX_KEYS,
 ) -> DataFrame:
     """documents -> duplicates(pos, cluster_id, cluster_size).
 
-    Plan: the shard fingerprint kernels feed find_duplicates_mappass — one
-    (h1, h2) exchange, sorted partitions, a single vectorized Arrow pass.
-    The fingerprint frame has one consumer, so it is never persisted.
+    Two passes keyed by window minimizers (Schleimer, Wilkerson and
+    Aiken, *Winnowing*, SIGMOD 2003) over one scope-persisted
+    shard_layout, so the range sampling and the text exchange run once:
 
-    prefilter=True (the at-scale mode; env SPARK_GRAFT_FP_PREFILTER=1): at
-    real-corpus dup density (<1% of C4 positions, README.md:10 context)
-    ~99% of fingerprints are singletons that the clustering pass discards
-    only AFTER riding the 24 B/position exchange. Two passes instead:
+      pass 1  _key_kernel: one minimizer key per distinct minimizer
+              position per shard (about 2/(w+1) of positions, w = L // 2)
+              -> groupBy(k), keep count >= max(2, frequency_threshold+1)
+              -> _key_sketch_bc broadcasts the keys (an exact sorted set
+              up to ``prefilter_max_keys``, Bloom above).
+      pass 2  the fingerprint kernel emits (h1, h2, pos) only for windows
+              whose minimizer key is in the set; find_duplicates_mappass
+              then clusters them exactly as it would the full frame.
 
-      pass 1  h1-only key kernel (half the hash work) -> groupBy(k)
-              count >= max(2, freq_threshold+1). Exchange: one 8 B key
-              (+8 B partial count) per map-side-distinct key — and never
-              the positions.
-      pass 2  full fingerprint kernel re-runs (cheap, CPU-bound, scales
-              with cores) with the dup-key set broadcast as a sorted
-              int64 array; each shard emits ONLY positions whose h1 is in
-              the set. Exchange: 24 B x dup_fraction per position.
-
-    Recall is exact: equal windows have equal h1, so every true duplicate
-    position survives pass 2; h1 collisions only ADD candidate positions
-    (expected extra pairs ~P^2/2^64 — ~10^8 rows at P=10^14, noise), and
-    the exact (h1, h2) clustering then drops them. Net at 1% dup density:
-    ~16 B/position total exchange instead of 24 (1.5x).
-
-    The dup-key set is collected driver-side (limit-guarded:
-    ``prefilter_max_keys``, default 2^24 keys = 128 MB broadcast; env
-    SPARK_GRAFT_FP_PREFILTER_MAX_KEYS). Above the guard the sketch
-    degrades to a bounded-size Bloom filter instead of switching off (see
-    _key_sketch_bc): false positives only add candidates the exact
-    clustering discards, so recall stays exact at any dup-key count.
+    Recall is exact: identical windows choose the same minimizer k-gram
+    at the same offset, so a window occurring n times selects its
+    minimizer at n distinct positions and its key reaches the count.
+    Hash collisions, and positions counted twice at a shard seam, only
+    add candidates, which the exact (h1, h2) clustering drops. Measured
+    on the dedup-distributed benchmark corpora (L = 100): pass 2 keeps
+    about a third of positions where 0.31-0.34 are true duplicates, and
+    pass 1 selects 4%, so the exchange is about 9 B per position instead
+    of 24.
     """
     from ..plans.caching import scoped_persist
 
-    if prefilter is None:
-        prefilter = os.environ.get("SPARK_GRAFT_FP_PREFILTER", "0") == "1"
-    if prefilter_max_keys is None:
-        prefilter_max_keys = int(
-            os.environ.get("SPARK_GRAFT_FP_PREFILTER_MAX_KEYS", str(1 << 24))
-        )
-
-    if "byte_start" not in docs.columns:
-        docs = scoped_persist(with_offsets(docs, cfg.with_separators))
-    if total is None:
-        total = corpus_total_bytes(docs)
-
-    dup_keys_bc = None
-    if prefilter:
-        min_count = max(2, cfg.frequency_threshold + 1)
-        dup_keys = (
-            window_keys(docs, cfg, total)
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= min_count)
-            .select("k")
-        )
-        dup_keys_bc = _key_sketch_bc(dup_keys, prefilter_max_keys)
-
-    fp = window_fingerprints(docs, cfg, total, dup_keys_bc)
+    docs, total = _offsets_and_total(docs, cfg, total)
+    layout = scoped_persist(shard_layout(docs, cfg, total))
+    min_count = max(2, cfg.frequency_threshold + 1)
+    dup_keys = (
+        _map_shards(layout, lambda g: _key_kernel(g, cfg, total), WINDOW_KEY_SCHEMA)
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= min_count)
+        .select("k")
+    )
+    dup_keys_bc = _key_sketch_bc(dup_keys, prefilter_max_keys)
+    fp = _map_shards(
+        layout,
+        lambda g: _fingerprint_kernel(g, cfg, total, dup_keys_bc),
+        FINGERPRINT_SCHEMA,
+    )
     return find_duplicates_mappass(fp, cfg)
 
 
@@ -1009,8 +1057,7 @@ def _live_sa_query(
         shards = (_shard_sa(g, cfg, total) for g in _iter_shard_groups(batches))
         return _per_shard(shards, fn, *args)
 
-    shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
-    return _apply_shard_kernel(shards, total, cfg.shard_bytes, kernel, schema)
+    return shard_layout(docs, cfg, total).mapInPandas(kernel, schema)
 
 
 def count_occurrences(

@@ -4,7 +4,8 @@ modules. Optionally checkpointed stage-by-stage (StageStore) so any stage
 resumes mid-run (north_rule).
 
 Cache lifetime contract: operators persist() intermediates that feed two
-consumers (shingles, fingerprints, LSH buckets) through
+consumers (shingles, the ExactSubstr shard layout, LSH buckets, and
+prepare_training_data's policy flags) through
 ``plans.caching.scoped_persist``. Wrap pipeline construction AND the
 consuming actions in ``plans.caching.cache_scope()`` and every such frame
 is unpersisted at scope exit — the supported pattern for long-lived
@@ -272,30 +273,31 @@ def across_dedup(
     prefilter=True (the at-scale mode; env SPARK_GRAFT_ACROSS_PREFILTER):
     the production shape is wildly asymmetric — A = the 100-TB train
     corpus, B = a GB-scale eval set (the reference's wiki40b-vs-C4 runs).
-    Both semi-joins only care about window keys present in BOTH corpora,
-    and every such key's h1 appears in the SMALL side's key set. So:
+    Both semi-joins only care about windows present in BOTH corpora, and
+    such a window has the same minimizer key on both sides (the key
+    self_similar counts in its pass 1). So:
 
-      pass 1  h1-only key kernel over the smaller corpus -> distinct ->
-              collect + broadcast (guarded by ``prefilter_max_keys``,
-              default 2^24 = 128 MB; env
+      pass 1  the minimizer-key kernel over the smaller corpus ->
+              distinct -> collect + broadcast (guarded by
+              ``prefilter_max_keys``, default 2^24 = 128 MB; env
               SPARK_GRAFT_ACROSS_PREFILTER_MAX_KEYS).
-      pass 2  the BIG side's fingerprint kernel re-runs with that set as
-              a map-side filter: only positions whose h1 occurs in the
-              small corpus ride the exchange — 24 B x contamination
-              fraction per position instead of 24 B per position.
+      pass 2  the BIG side's fingerprint kernel runs with that set as a
+              map-side filter: only windows whose minimizer key occurs in
+              the small corpus ride the exchange.
 
-    Exactness: equal windows share h1, so every true cross-corpus match
-    survives on both sides (dups_b semi-joins against the PREFILTERED
-    keys_a, but an A key dropped by the prefilter has h1 absent from B
-    and so could never match a B window); h1 collisions only ADD big-side
-    candidates, which the exact (h1, h2) semi-join then discards. Above
-    the broadcast guard the key set degrades to a bounded Bloom sketch
-    instead of switching off (suffix._key_sketch_bc) — recall stays
-    exact at any key count.
+    Exactness: equal windows share their minimizer key, so every true
+    cross-corpus match survives on both sides (dups_b semi-joins against
+    the PREFILTERED keys_a, but an A window dropped by the prefilter has
+    a key absent from B and so could never match a B window); key
+    collisions only ADD big-side candidates, which the exact (h1, h2)
+    semi-join then discards. Above the broadcast guard the key set
+    degrades to a bounded Bloom sketch instead of switching off
+    (suffix._key_sketch_bc) — recall stays exact at any key count.
     """
     import os
 
     from ..operators.suffix import (
+        SKETCH_MAX_KEYS,
         across_similar,
         window_fingerprints,
         window_keys,
@@ -308,7 +310,7 @@ def across_dedup(
     if prefilter_max_keys is None:
         prefilter_max_keys = int(
             os.environ.get(
-                "SPARK_GRAFT_ACROSS_PREFILTER_MAX_KEYS", str(1 << 24)
+                "SPARK_GRAFT_ACROSS_PREFILTER_MAX_KEYS", SKETCH_MAX_KEYS
             )
         )
 
@@ -501,6 +503,7 @@ def prepare_training_data(
     (make_suffix_array.py:59-86 verify loop).
     """
     from ..operators.textstats import lang_id, quality_score, repetition_stats
+    from .caching import scoped_persist
 
     flags_plan = (
         docs.select("doc_id")
@@ -525,8 +528,13 @@ def prepare_training_data(
         )
     )
 
+    # persisted: the flags feed the filter, and through it every action of
+    # the round (LSH and md5 probes, offsets, fingerprints, stage_counts);
+    # unpersisted, each one re-ran the textstats joins
     flags = (
-        store.stage("policy_flags", lambda: flags_plan) if store else flags_plan
+        store.stage("policy_flags", lambda: flags_plan)
+        if store
+        else scoped_persist(flags_plan)
     )
     filtered = docs.join(
         flags.filter(F.col("policy_ok")).select("doc_id"), "doc_id"

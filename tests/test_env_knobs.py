@@ -30,8 +30,6 @@ ALLOWED = {
     "SPARK_GRAFT_CC_DRIVER_MAX",
     "SPARK_GRAFT_INTERVALS_DRIVER_MAX",
     # ExactSubstr prefilters and their Bloom sketch
-    "SPARK_GRAFT_FP_PREFILTER",
-    "SPARK_GRAFT_FP_PREFILTER_MAX_KEYS",
     "SPARK_GRAFT_ACROSS_PREFILTER",
     "SPARK_GRAFT_ACROSS_PREFILTER_MAX_KEYS",
     "SPARK_GRAFT_FP_BLOOM_MAX_BYTES",

@@ -21,13 +21,15 @@ from deduplicate_text_datasets_spark.operators.intervals import (
 )
 from deduplicate_text_datasets_spark.operators.strike import apply_removals
 from deduplicate_text_datasets_spark.operators.suffix import (
+    across_similar,
     count_occurrences,
     find_training_data,
+    minimizer_width,
     self_similar,
+    sliding_argmin,
     suffix_array,
     window_fingerprints,
     window_hashes,
-    across_similar,
 )
 from deduplicate_text_datasets_spark.sources.corpus import (
     corpus_total_bytes,
@@ -304,3 +306,169 @@ def test_window_hashes_block_invariant():
     ref = window_hashes(buf, L, ROLLHASH_X1, block=len(buf) + 10)
     for blk in (1, 7, 37, 256, 999, 1000):
         assert np.array_equal(window_hashes(buf, L, ROLLHASH_X1, block=blk), ref), blk
+
+
+# --- minimizer-keyed two-pass plan -----------------------------------------
+
+
+def _brute_argmin(a, w):
+    """Leftmost argmin of every length-w window, O(n*w)."""
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    return np.argmin(sliding_window_view(a, w), axis=1) + np.arange(len(a) - w + 1)
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["random_bytes", "periodic_below_w", "all_identical", "w_is_one"],
+)
+def test_sliding_argmin_matches_bruteforce(case):
+    rng = np.random.RandomState(11)
+    a, w = {
+        # longer than one argmin chunk, so chunk seams are crossed
+        "random_bytes": (rng.randint(0, 256, size=70_000).astype(np.uint8), 50),
+        "periodic_below_w": (np.tile(rng.randint(0, 2**62, size=7).astype(np.uint64), 3000), 50),
+        "all_identical": (np.full(5000, 42, dtype=np.uint64), 13),
+        "w_is_one": (rng.randint(0, 4, size=1000).astype(np.int64), 1),
+    }[case]
+    assert np.array_equal(sliding_argmin(a, w), _brute_argmin(a, w))
+
+
+def _minimizer_keys(corpus: bytes, length: int) -> np.ndarray:
+    """Brute-force minimizer key of every length-L window of ``corpus``:
+    the lowest hash among its w k-grams."""
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    w = minimizer_width(length)
+    kh = window_hashes(
+        np.frombuffer(corpus, dtype=np.uint8), length - w + 1, ROLLHASH_X1
+    )
+    return sliding_window_view(kh, w).min(axis=1).view(np.int64)
+
+
+def _oracle_rows(pdf, cfg):
+    """pyref.self_similar_clusters as sorted (pos, cluster_id, cluster_size)
+    rows; cluster_id is the min member position."""
+    corpus, _ = pyref.build_corpus(
+        [t.encode("utf-8") for t in pdf["text"]], cfg.with_separators
+    )
+    clusters = pyref.self_similar_clusters(
+        corpus, cfg.length_threshold, cfg.frequency_threshold
+    )
+    return sorted((p, min(ps), len(ps)) for ps in clusters.values() for p in ps)
+
+
+def _docs_frame(spark, texts):
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.arange(len(texts), dtype=np.int64),
+            "url": [f"u{i}" for i in range(len(texts))],
+            "text": texts,
+        }
+    )
+    return pdf, spark.createDataFrame(pdf, "doc_id long, url string, text string")
+
+
+@pytest.mark.parametrize("case", ["periodic", "shard_seams", "frequency_threshold"])
+def test_self_similar_minimizer_plan_matches_oracle(spark, case):
+    """The two-pass plan equals the pure-Python clusters where minimizers
+    are hardest: periodic text (one window holds its minimum k-gram many
+    times), duplicate windows straddling many shard seams, and
+    frequency_threshold > 0 (pass 1 keeps keys counted > 2)."""
+    rng = np.random.RandomState(5)
+    words = ["alpha", "beta", "gamma", "delta", "omega", "kappa", "zeta"]
+
+    def prose(n):
+        return " ".join(rng.choice(words, size=n))
+
+    L = 50
+    if case == "periodic":
+        cfg = ExactSubstrConfig(
+            length_threshold=L, shard_bytes=1024, overlap_bytes=64
+        )
+        texts = ["abcde" * 60, "xyz" * 40 + prose(10), prose(15) + "abcde" * 20,
+                 "q" * 120, prose(20)]
+    elif case == "shard_seams":
+        cfg = ExactSubstrConfig(
+            length_threshold=L, shard_bytes=128, overlap_bytes=L - 1
+        )
+        shared = prose(30)
+        texts = [prose(5) + shared + prose(4), shared, prose(12),
+                 prose(3) + shared[40:] + prose(6), prose(8) + shared]
+    else:
+        cfg = ExactSubstrConfig(
+            length_threshold=L, frequency_threshold=2, shard_bytes=512,
+            overlap_bytes=64,
+        )
+        two, three = prose(20), prose(20)
+        texts = [two, prose(6) + two, three, three + prose(3), prose(4) + three,
+                 prose(25)]
+    pdf, docs = _docs_frame(spark, texts)
+    want = _oracle_rows(pdf, cfg)
+    assert want, "fixture must contain duplicates"
+    if case == "frequency_threshold":
+        assert min(t[2] for t in want) == 3
+    got = sorted(tuple(r) for r in self_similar(docs, cfg).collect())
+    assert got == want
+    spark.catalog.clearCache()
+
+
+SS_CFG = ExactSubstrConfig(
+    length_threshold=50, shard_bytes=4096, overlap_bytes=64,
+    with_separators=True,
+)
+
+
+@pytest.fixture(scope="module")
+def small_pdf():
+    return synth_documents_pandas(40, size_lo=30, size_hi=120)
+
+
+@pytest.fixture(scope="module")
+def small_docs(spark, small_pdf):
+    return spark.createDataFrame(small_pdf, schema=DOCUMENTS_SCHEMA)
+
+
+def test_self_similar_prefilter_parity(spark, small_docs, small_pdf):
+    """The two-pass plan is bit-identical to the pure-Python clusters."""
+    got = sorted(tuple(r) for r in self_similar(small_docs, SS_CFG).collect())
+    assert got and got == _oracle_rows(small_pdf, SS_CFG)
+    spark.catalog.clearCache()
+
+
+def test_prefilter_pass2_ships_only_candidates(spark, small_docs, small_pdf):
+    """Pass 2 emits EXACTLY the windows whose minimizer key pass 1 kept:
+    every true duplicate window, and fewer rows than positions, so the
+    singleton majority never enters the exchange."""
+    from pyspark.sql import functions as F
+
+    from deduplicate_text_datasets_spark.operators.suffix import window_keys
+
+    key_pdf = (
+        window_keys(small_docs, SS_CFG)
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter("c >= 2")
+        .select("k")
+        .toPandas()
+    )
+    keys = np.sort(key_pdf["k"].to_numpy(np.int64))
+    bc = spark.sparkContext.broadcast(keys)
+    got = sorted(
+        r["pos"]
+        for r in window_fingerprints(small_docs, SS_CFG, dup_keys_bc=bc)
+        .select("pos")
+        .collect()
+    )
+    corpus, _ = pyref.build_corpus(
+        [t.encode("utf-8") for t in small_pdf["text"]], True
+    )
+    mk = _minimizer_keys(corpus, SS_CFG.length_threshold)
+    assert got == np.nonzero(np.isin(mk, keys))[0].tolist()
+    dups = pyref.self_similar_positions(corpus, SS_CFG.length_threshold)
+    assert set(dups) <= set(got)
+    assert len(got) < len(mk), "fixture has no singleton windows? test is vacuous"
+    bc.destroy()
+    spark.catalog.clearCache()

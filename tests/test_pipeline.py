@@ -363,3 +363,23 @@ def test_prepare_training_data_end_to_end(spark, tmp_path_factory):
         res2 = prepare_training_data(all_docs, cfg, store=store)
         counts2 = {r["stage"]: r["rows"] for r in res2.stage_counts.collect()}
     assert counts2 == counts
+
+
+def test_prepare_training_data_flags_persisted_in_scope(spark, docs):
+    """Without a store the policy flags are computed once: persisted for
+    the round's actions inside the cache_scope, released when it exits."""
+    from deduplicate_text_datasets_spark.config import ExactSubstrConfig
+    from deduplicate_text_datasets_spark.plans.caching import cache_scope
+    from deduplicate_text_datasets_spark.plans.pipeline import (
+        prepare_training_data,
+    )
+
+    cfg = EngineConfig(
+        exact=ExactSubstrConfig(
+            length_threshold=30, shard_bytes=4096, overlap_bytes=256
+        )
+    )
+    with cache_scope():
+        res = prepare_training_data(docs, cfg)
+        assert res.filter_flags.is_cached
+    assert not res.filter_flags.is_cached

@@ -66,62 +66,10 @@ def test_overlap_memo_survives_reread(spark, docs, tmp_path_factory):
     assert sx._OVERLAP_BY_PATH.get(path) == 64
 
 
-# --- self_similar dup-key prefilter (round-4 verdict item 1) -----------------
-
-
 SS_CFG = ExactSubstrConfig(
     length_threshold=50, shard_bytes=4096, overlap_bytes=64,
     with_separators=True,
 )
-
-
-def test_self_similar_prefilter_parity(spark, docs):
-    """prefilter mode must be bit-identical to the default plan."""
-    from deduplicate_text_datasets_spark.operators.suffix import self_similar
-
-    base = sorted(tuple(r) for r in self_similar(docs, SS_CFG).collect())
-    assert len(base) > 0
-    spark.catalog.clearCache()
-    pre = sorted(
-        tuple(r) for r in self_similar(docs, SS_CFG, prefilter=True).collect()
-    )
-    assert pre == base
-    spark.catalog.clearCache()
-
-
-def test_prefilter_pass2_ships_only_candidates(spark, docs):
-    """The pass-2 fingerprint frame must contain EXACTLY the positions
-    whose h1 key is globally non-unique — i.e. the singleton ~majority
-    never enters the exchange (the whole point of the prefilter)."""
-    from deduplicate_text_datasets_spark.operators.suffix import (
-        window_fingerprints,
-        window_keys,
-    )
-
-    fp_full = window_fingerprints(docs, SS_CFG).cache()
-    n_all = fp_full.count()
-    expected = (
-        fp_full.groupBy("h1")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter("c >= 2")
-        .agg(F.sum("c").alias("s"))
-        .collect()[0]["s"]
-    ) or 0
-    key_pdf = (
-        window_keys(docs, SS_CFG)
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter("c >= 2")
-        .select("k")
-        .toPandas()
-    )
-    keys = np.sort(key_pdf["k"].to_numpy(np.int64))
-    bc = spark.sparkContext.broadcast(keys)
-    n_pre = window_fingerprints(docs, SS_CFG, dup_keys_bc=bc).count()
-    assert n_pre == expected
-    assert n_pre < n_all, "fixture has no singleton windows? test is vacuous"
-    fp_full.unpersist()
-    spark.catalog.clearCache()
 
 
 # --- sources hygiene (round-4 ADVICE) ---------------------------------------
@@ -639,13 +587,19 @@ def test_across_dedup_prefilter_parity(spark):
 
 
 def test_across_prefilter_big_side_ships_only_candidates(spark):
-    """Pass 2 on the big side must emit EXACTLY the positions whose h1
-    occurs in the small side's key set — the cross-corpus analogue of the
-    self_similar prefilter invariant."""
+    """Pass 2 on the big side must emit EXACTLY the positions whose
+    minimizer key occurs in the small side's key set — the cross-corpus
+    analogue of the self_similar prefilter invariant."""
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    from deduplicate_text_datasets_spark.config import ROLLHASH_X1
     from deduplicate_text_datasets_spark.operators.suffix import (
+        minimizer_width,
         window_fingerprints,
+        window_hashes,
         window_keys,
     )
+    from deduplicate_text_datasets_spark.sources.corpus import doc_payload
 
     docs_a, docs_b = _across_sides(spark)
     keys_b = np.sort(
@@ -654,17 +608,19 @@ def test_across_prefilter_big_side_ships_only_candidates(spark):
         .toPandas()["k"]
         .to_numpy(np.int64)
     )
-    fp_a_full = window_fingerprints(docs_a, SS_CFG).cache()
-    expected = (
-        fp_a_full.filter(
-            F.col("h1").isin([int(k) for k in keys_b])
-        ).count()
-    )
+    # brute-force minimizer key of every A window: the lowest hash among
+    # its w k-grams, over A's corpus in doc_id order
+    rows = sorted((r["doc_id"], r["text"]) for r in docs_a.collect())
+    corpus = b"".join(doc_payload(i, t, True) for i, t in rows)
+    L = SS_CFG.length_threshold
+    w = minimizer_width(L)
+    kh = window_hashes(np.frombuffer(corpus, np.uint8), L - w + 1, ROLLHASH_X1)
+    keys_a = sliding_window_view(kh, w).min(axis=1).view(np.int64)
+    expected = int(np.isin(keys_a, keys_b).sum())
     bc = spark.sparkContext.broadcast(keys_b)
     n_pre = window_fingerprints(docs_a, SS_CFG, dup_keys_bc=bc).count()
     assert n_pre == expected
-    assert 0 < n_pre < fp_a_full.count()
-    fp_a_full.unpersist()
+    assert 0 < n_pre < len(keys_a)
     spark.catalog.clearCache()
 
 
@@ -947,7 +903,7 @@ def test_mappass_parity_with_oracle(spark, docs, fixture_pdf):
 def test_mappass_group_straddles_arrow_batches(spark, docs, fixture_pdf):
     """Force 3-row Arrow batches so every real cluster straddles batch
     boundaries inside the kernel — the pending-group reassembly must keep
-    output exact; and with prefilter composed on top."""
+    output exact."""
     from deduplicate_text_datasets_spark.operators.suffix import self_similar
 
     base = _oracle_clusters(fixture_pdf, SS_CFG)
@@ -959,12 +915,6 @@ def test_mappass_group_straddles_arrow_batches(spark, docs, fixture_pdf):
         spark.catalog.clearCache()
         got = sorted(tuple(r) for r in self_similar(docs, SS_CFG).collect())
         assert got == base
-        spark.catalog.clearCache()
-        pre = sorted(
-            tuple(r)
-            for r in self_similar(docs, SS_CFG, prefilter=True).collect()
-        )
-        assert pre == base
     finally:
         spark.conf.set(key, old)
         spark.catalog.clearCache()

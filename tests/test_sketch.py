@@ -93,7 +93,7 @@ def test_sketch_contains_dispatch():
 
 def test_self_similar_bloom_parity(spark, docs):
     """Forcing the Bloom path (guard of 1 key) must be bit-identical to the
-    unfiltered plan — no warning, no fallback."""
+    exact-key-set plan — no warning, no fallback."""
     import warnings
 
     from deduplicate_text_datasets_spark.operators.suffix import self_similar
@@ -105,7 +105,7 @@ def test_self_similar_bloom_parity(spark, docs):
         # the Bloom path must NOT warn (ResourceWarnings from py4j
         # socket teardown are unrelated — only escalate UserWarning)
         warnings.simplefilter("error", UserWarning)
-        bl = self_similar(docs, SS_CFG, prefilter=True, prefilter_max_keys=1)
+        bl = self_similar(docs, SS_CFG, prefilter_max_keys=1)
         got = sorted(tuple(r) for r in bl.collect())
     assert got == base
     spark.catalog.clearCache()
