@@ -17,9 +17,8 @@ This package provides both halves natively on Spark DataFrames:
 - ``operators.strike``   — removal application (scripts/finish_dedup_wiki40b.py)
 - ``operators.connected_components`` — small-star/large-star clustering
 - ``operators.exact`` / ``operators.ngram`` / ``operators.ann`` /
-  ``operators.textstats`` / ``operators.multimodal`` — training-data-pipeline
-  extensions (exact dedup, n-gram Jaccard, embedding ANN, text analysis,
-  multimodal plumbing)
+  ``operators.textstats`` — training-data-pipeline extensions (exact dedup,
+  n-gram Jaccard, embedding ANN, text analysis)
 
 Everything is DataFrame-first: Catalyst plans the relational stages, and the
 only Python on the hot path is vectorized Arrow/pandas kernels.

@@ -21,8 +21,7 @@ Baseline policy, in order (each rule portable, no lookaround):
 
 Everything a real extractor adds (boilerplate removal, block-level
 newlines, charset sniffing beyond UTF-8) belongs behind
-``extract_text_udf_seam`` — a named integration point exactly like the
-multimodal decoder seam.
+``extract_text_udf_seam``, a named integration point.
 """
 
 from __future__ import annotations
@@ -74,10 +73,9 @@ def extract_text_sql(expr: str) -> str:
 
 def extract_text_udf_seam(html: Column | str) -> Column:
     """Named seam for a REAL extractor (trafilatura/resiliparse as an
-    Arrow-batched pandas UDF). Not available in this container; raising
+    Arrow-batched pandas UDF). No such extractor is a dependency; raising
     here keeps the integration point explicit instead of silently
-    substituting the regex baseline (same pattern as the multimodal
-    decoder seam, operators/multimodal.py)."""
+    substituting the regex baseline."""
     raise NotImplementedError(
         "no production HTML extractor in this environment — plug a "
         "pandas_udf wrapping trafilatura.extract/resiliparse here, or use "

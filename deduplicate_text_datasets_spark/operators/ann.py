@@ -3,20 +3,17 @@
 Brute-force cosine top-k is the exact baseline: a broadcast join of the
 (small) query set against all vectors, the dot product evaluated JVM-side
 with zip_with/aggregate in double precision, ranked per query with a
-window. Two scale paths restrict each query to a candidate subset:
-
-- LSH bucketing (random hyperplanes — the same family as SimHash), data-
-  independent, sized analytically via ``lsh_tables_for``;
-- an IVF index (spherical k-means coarse quantizer, FAISS ``IndexIVFFlat``
-  shape): vectors are assigned to their nearest of ``nlist`` centroids and
-  a query scores only its ``nprobe`` nearest lists. Data-dependent, so it
-  adapts to clustered embedding spaces where hyperplane buckets split
-  natural clusters. ``nprobe == nlist`` degenerates to exact brute force
-  (every vector is in exactly one list), which is the oracle-checkable
-  configuration the ``ann_ivf_topk`` gate runs.
+window. The scale path is an IVF index (spherical k-means coarse
+quantizer, FAISS ``IndexIVFFlat`` shape): vectors are assigned to their
+nearest of ``nlist`` centroids and a query scores only its ``nprobe``
+nearest lists. ``nprobe == nlist`` degenerates to exact brute force (every
+vector is in exactly one list), which is the oracle-checkable
+configuration the ``ann_ivf_topk`` gate runs.
 
 For embedding-based near-duplicate detection, ``cosine_pairs`` returns all
-pairs above a cosine threshold within LSH buckets.
+pairs above a cosine threshold within banded random-hyperplane LSH
+buckets (the same family as SimHash), data-independent and sized
+analytically via ``lsh_tables_for``.
 """
 
 from __future__ import annotations
@@ -158,79 +155,6 @@ def cosine_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-HYPERPLANE_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("bucket", T.LongType(), False),
-    ]
-)
-
-
-def hyperplane_buckets(
-    emb: DataFrame, dim: int, nbits: int = 16, vec_col: str = "embedding"
-) -> DataFrame:
-    """Random-hyperplane LSH bucket per vector (seeded, deterministic).
-    Vectorized kernel: one (batch x dim) @ (dim x nbits) matmul per batch."""
-    rng = np.random.RandomState(ANN_SEED)
-    planes = rng.standard_normal((dim, nbits))
-    weights = (1 << np.arange(nbits, dtype=np.uint64)).astype(np.uint64)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            bits = (m @ planes) >= 0
-            buckets = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "bucket": buckets.astype(np.int64),
-                }
-            )
-
-    return emb.select("vec_id", vec_col).mapInPandas(kernel, HYPERPLANE_SCHEMA)
-
-
-def cosine_topk_lsh(
-    emb: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    nbits: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: only candidates sharing the query's hyperplane
-    bucket are scored. Recall/cost tradeoff via nbits (fewer bits = bigger
-    buckets = higher recall)."""
-    b_all = hyperplane_buckets(emb, dim, nbits, vec_col)
-    b_q = hyperplane_buckets(
-        queries.select(F.col("query_id").alias("vec_id"), vec_col), dim, nbits, vec_col
-    ).select(F.col("vec_id").alias("query_id"), "bucket")
-    cands = (
-        b_q.join(b_all, "bucket")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    q = queries.select("query_id", F.col(vec_col).alias("q_vec"))
-    v = emb.select(F.col("vec_id").alias("neighbor_id"), F.col(vec_col).alias("v"))
-    scored = (
-        cands.join(F.broadcast(q), "query_id")
-        .join(v, "neighbor_id")
-        .withColumn(
-            "cosine",
-            _dot(F.col("q_vec"), F.col("v"))
-            / (_norm(F.col("q_vec")) * _norm(F.col("v"))),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -535,12 +459,29 @@ def _probe_lists(
     )
 
 
-def _ivf_rank(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """Score probed lists and take per-query top-k. The probe frame is tiny
-    (|queries| * nprobe rows) and broadcast, so the big assigned frame never
-    shuffles for the candidate join; only the surviving candidates (an
-    nprobe/nlist fraction of the corpus per query) cross the top-k window's
-    exchange."""
+def ivf_topk(
+    emb: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 10,
+    nlist: int = 64,
+    nprobe: int = 8,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate cosine top-k through an in-session IVF index:
+    train -> assign -> probe nprobe lists -> exact-score -> window top-k.
+    Returns (query_id, rank, neighbor_id, cosine); nprobe == nlist is
+    exactly brute force (gate-checkable against the cosine_topk oracle).
+
+    The probe frame is tiny (|queries| * nprobe rows) and broadcast, so the
+    big assigned frame never shuffles for the candidate join; only the
+    surviving candidates (an nprobe/nlist fraction of the corpus per query)
+    cross the top-k window's exchange."""
+    from ..plans.caching import scoped_persist
+
+    cents = train_centroids(emb, dim, nlist, vec_col)
+    assigned = scoped_persist(ivf_assign(emb, cents, vec_col).repartition("list_id"))
+    probes = _probe_lists(queries, cents, nprobe, vec_col)
     cands = assigned.join(F.broadcast(probes), "list_id").filter(
         F.col("query_id") != F.col("vec_id")
     )
@@ -556,73 +497,3 @@ def _ivf_rank(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
             F.round("cosine", 6).alias("cosine"),
         )
     )
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    nlist: int = 64,
-    nprobe: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k through an in-session IVF index:
-    train -> assign -> probe nprobe lists -> exact-score -> window top-k.
-    Returns (query_id, rank, neighbor_id, cosine); nprobe == nlist is
-    exactly brute force (gate-checkable against the cosine_topk oracle).
-    For build-once/query-many reuse across sessions, use build_ivf_index /
-    ivf_topk_indexed."""
-    from ..plans.caching import scoped_persist
-
-    cents = train_centroids(emb, dim, nlist, vec_col)
-    assigned = scoped_persist(ivf_assign(emb, cents, vec_col).repartition("list_id"))
-    probes = _probe_lists(queries, cents, nprobe, vec_col)
-    return _ivf_rank(assigned, probes, k)
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    dim: int,
-    nlist: int = 64,
-    vec_col: str = "embedding",
-) -> None:
-    """Persist an IVF index: {path}/centroids.parquet (nlist small rows) +
-    {path}/lists.parquet clustered by list_id so a probe's file scan prunes
-    to its lists (build-once/query-many, same shape as operators/sa_index).
-    """
-    spark = emb.sparkSession
-    cents = train_centroids(emb, dim, nlist, vec_col)
-    cent_rows = [
-        (int(i), [float(x) for x in cents[i]]) for i in range(cents.shape[0])
-    ]
-    spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids.parquet")
-    (
-        ivf_assign(emb, cents, vec_col)
-        .repartition("list_id")
-        .sortWithinPartitions("list_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/lists.parquet")
-    )
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Answer top-k from a persisted IVF index (no training, no assignment
-    pass — the read of lists.parquet prunes to probed lists via the pushed
-    list_id IN (...) filter when queries are few)."""
-    crows = spark.read.parquet(f"{path}/centroids.parquet").collect()
-    crows.sort(key=lambda r: r["list_id"])
-    cents = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in crows])
-    assigned = spark.read.parquet(f"{path}/lists.parquet")
-    probes = _probe_lists(queries, cents, nprobe, vec_col)
-    return _ivf_rank(assigned, probes, k)

@@ -229,7 +229,7 @@ def verify_pairs_across(
     persisted index) without cross-contamination."""
     from fractions import Fraction
 
-    from ..plans.caching import driver_guard, local_frame, probe, resident
+    from ..plans.caching import driver_guard, local_frame, probe, resident, veto
 
     frac = Fraction(cfg.jaccard_threshold).limit_denominator(1_000_000)
     num, den = frac.numerator, frac.denominator
@@ -242,9 +242,17 @@ def verify_pairs_across(
     # Integer threshold + int/int double division are computed
     # identically, so the edge set AND the reported jaccard are bit-equal
     # (pinned by test). The edges stay resident for neardup_clusters'
-    # driver CC fast path.
+    # driver CC fast path. Resident pairs over the verify guard log a veto.
     pairs_pdf = resident(pairs)
-    if pairs_pdf is not None and len(pairs_pdf) <= driver_guard("verify"):
+    verify_guard = driver_guard("verify")
+    if pairs_pdf is not None and len(pairs_pdf) > verify_guard:
+        veto(
+            "minhash.verify",
+            len(pairs_pdf),
+            verify_guard,
+            "resident candidate pairs over the verify guard",
+        )
+    elif pairs_pdf is not None:
         guard = driver_guard("lsh")
         sh_a = probe(
             "minhash.verify", shingled_a.select("doc_id", "sh"), guard, persist=False

@@ -5,10 +5,10 @@ A plain join on the bucket key puts a size-n bucket's n^2/2 pairs into ONE
 reducer task, and webtext boilerplate makes such hot buckets. The policy,
 for a cap and a ceiling smax: buckets sized 2..cap join plainly, buckets
 up to smax go through an exact grid-salted join, larger ones are dropped.
-``skewed_self_pairs`` and ``skewed_cross_pairs`` apply it to caller-built
-frames; ``bucket_self_pairs`` and ``bucket_cross_pairs`` put the LSH
-driver path (the numpy twins ``driver_bucket_pairs`` and
-``driver_bucket_cross_pairs``) in front of them.
+``skewed_self_pairs`` applies it to caller-built frames;
+``bucket_self_pairs`` puts the LSH driver path (the numpy twin
+``driver_bucket_pairs``) in front of it, and ``bucket_cross_pairs`` is the
+bipartite join with its own driver path (``driver_bucket_cross_pairs``).
 
 The grid redistributes a hot bucket's exact pair set over k x k cells:
 
@@ -433,53 +433,6 @@ def grid_salted_cross_pairs(
     return lhs.join(rhs, keys + ["_ci", "_cj"]).select("a", "b")
 
 
-def skewed_cross_pairs(
-    buckets_a: DataFrame,
-    buckets_b: DataFrame,
-    joint: DataFrame,
-    key_cols: Sequence[str],
-    cap: int,
-    smax: int,
-) -> DataFrame:
-    """(a from ``buckets_a``, b from ``buckets_b``): one row per pair of
-    ``doc_id`` values sharing a ``key_cols`` bucket, per shared bucket (no
-    distinct) — the bipartite twin of :func:`skewed_self_pairs`.
-
-    ``joint`` holds one row per bucket present on BOTH sides, with the
-    side sizes ``na`` and ``nb``; a bucket is hot when either side is over
-    ``cap``. The caller partitions and persists the frames.
-    """
-    keys = list(key_cols)
-    plain_keys = joint.filter(
-        (F.col("na") <= cap) & (F.col("nb") <= cap)
-    ).select(*keys)
-    pairs = (
-        buckets_a.join(plain_keys, keys)
-        .select(*keys, F.col("doc_id").alias("a"))
-        .join(
-            buckets_b.join(plain_keys, keys).select(
-                *keys, F.col("doc_id").alias("b")
-            ),
-            keys,
-        )
-        .select("a", "b")
-    )
-    over = (F.col("na") > cap) | (F.col("nb") > cap)
-    if not joint.filter(over).limit(1).count():
-        return pairs
-    hot_keys = joint.filter(
-        over & (F.col("na") <= smax) & (F.col("nb") <= smax)
-    ).select(*keys, "na", "nb")
-    return pairs.unionByName(
-        grid_salted_cross_pairs(
-            buckets_a.join(hot_keys, keys),
-            buckets_b.join(hot_keys, keys),
-            keys,
-            cap,
-        )
-    )
-
-
 def bucket_cross_pairs(
     buckets_a: DataFrame,
     buckets_b: DataFrame,
@@ -488,10 +441,13 @@ def bucket_cross_pairs(
     salted_bucket_max: int,
 ) -> DataFrame:
     """Distinct (a from ``buckets_a``, b from ``buckets_b``) pairs of
-    ``doc_id`` values sharing a ``key_cols`` bucket:
-    :func:`skewed_cross_pairs` behind the LSH driver path (two bounded
-    pulls plus :func:`driver_bucket_cross_pairs`, as in
-    :func:`bucket_self_pairs`).
+    ``doc_id`` values sharing a ``key_cols`` bucket, the bipartite
+    counterpart of :func:`bucket_self_pairs`: the LSH driver path (two
+    bounded pulls plus :func:`driver_bucket_cross_pairs`) in front of the
+    skew policy. A bucket present on both sides is hot when either side
+    is over ``max_bucket_size``: plain buckets join on the key, hot ones
+    up to ``salted_bucket_max`` per side go through
+    :func:`grid_salted_cross_pairs`, larger ones are dropped.
     """
     from ..plans.caching import driver_guard, scoped_persist
 
@@ -515,9 +471,34 @@ def bucket_cross_pairs(
     # tiny (bucket-overlap keys only), but read by both branches and the
     # hot-bucket probe: persist so the two size aggs run once
     joint = scoped_persist(na.join(nb, keys))
-    pairs = skewed_cross_pairs(
-        buckets_a, buckets_b, joint, keys, max_bucket_size, salted_bucket_max
+    cap, smax = max_bucket_size, salted_bucket_max
+    plain_keys = joint.filter(
+        (F.col("na") <= cap) & (F.col("nb") <= cap)
+    ).select(*keys)
+    pairs = (
+        buckets_a.join(plain_keys, keys)
+        .select(*keys, F.col("doc_id").alias("a"))
+        .join(
+            buckets_b.join(plain_keys, keys).select(
+                *keys, F.col("doc_id").alias("b")
+            ),
+            keys,
+        )
+        .select("a", "b")
     )
+    over = (F.col("na") > cap) | (F.col("nb") > cap)
+    if joint.filter(over).limit(1).count():
+        hot_keys = joint.filter(
+            over & (F.col("na") <= smax) & (F.col("nb") <= smax)
+        ).select(*keys, "na", "nb")
+        pairs = pairs.unionByName(
+            grid_salted_cross_pairs(
+                buckets_a.join(hot_keys, keys),
+                buckets_b.join(hot_keys, keys),
+                keys,
+                cap,
+            )
+        )
     # both size aggs read every cached partition: drop the probe's copies
     if guard > 0:
         for r in probed:

@@ -50,7 +50,6 @@ from ..sources.corpus import (
 )
 
 _U64 = np.uint64
-_MASK64 = (1 << 64) - 1
 _MIX = np.uint64(0xFF51AFD7ED558CCD)
 
 
@@ -1273,31 +1272,6 @@ def _batched_match_lens(
             resolved[i] = True
         d += 1
     return best
-
-
-def _match_lens_loop(
-    buf: np.ndarray, sa: np.ndarray, q: np.ndarray, qpos: np.ndarray,
-    probe_cap: int,
-) -> np.ndarray:
-    """Naive per-probe binary-search kernel (the pre-r03 implementation) —
-    kept as the test oracle and the bench comparator for the batched
-    kernel."""
-    out = np.zeros(len(qpos), dtype=np.int64)
-    for ix, i in enumerate(qpos):
-        probe = q[i : i + probe_cap]
-        loi, hii = 0, len(sa)
-        while loi < hii:
-            mid = (loi + hii) // 2
-            if _sa_compare(buf, sa[mid], probe) < 0:
-                loi = mid + 1
-            else:
-                hii = mid
-        best = 0
-        for j in (loi - 1, loi):
-            if 0 <= j < len(sa):
-                best = max(best, _lcp(buf[sa[j] :], probe))
-        out[ix] = best
-    return out
 
 
 def find_training_data(

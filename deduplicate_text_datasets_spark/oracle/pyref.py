@@ -11,6 +11,8 @@ from __future__ import annotations
 import struct
 from collections import defaultdict
 
+import numpy as np
+
 PRE_SEP = b"\xff\xff"  # scripts/load_dataset.py:31-32
 
 
@@ -174,4 +176,31 @@ def longest_match_lengths(corpus: bytes, query: bytes, cap: int = 65536) -> list
             if best == len(q):
                 break
         out.append(best)
+    return out
+
+
+def _match_lens_loop(
+    buf: np.ndarray, sa: np.ndarray, q: np.ndarray, qpos: np.ndarray,
+    probe_cap: int,
+) -> np.ndarray:
+    """Naive per-probe binary-search kernel over a suffix array (the
+    pre-r03 implementation): the test oracle for suffix._batched_match_lens
+    on inputs too large for ``longest_match_lengths``."""
+    from ..operators.suffix import _lcp, _sa_compare
+
+    out = np.zeros(len(qpos), dtype=np.int64)
+    for ix, i in enumerate(qpos):
+        probe = q[i : i + probe_cap]
+        loi, hii = 0, len(sa)
+        while loi < hii:
+            mid = (loi + hii) // 2
+            if _sa_compare(buf, sa[mid], probe) < 0:
+                loi = mid + 1
+            else:
+                hii = mid
+        best = 0
+        for j in (loi - 1, loi):
+            if 0 <= j < len(sa):
+                best = max(best, _lcp(buf[sa[j] :], probe))
+        out[ix] = best
     return out

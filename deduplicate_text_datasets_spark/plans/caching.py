@@ -146,9 +146,9 @@ def probe(
 
 
 def veto(stage: str, rows: int, guard: int, reason: str) -> None:
-    """Log that ``stage``, placed on the driver by :func:`probe`, runs its
-    distributed plan after all because its driver twin exceeded
-    ``guard``: one more ``distributed`` record carrying the probed rows
+    """Log that ``stage``, whose input is on the driver, runs its
+    distributed plan after all because its driver twin would exceed
+    ``guard``: one more ``distributed`` record carrying the input rows
     and a ``reason``, so the stage's last record is its placement."""
     _record(stage, "distributed", rows, guard, reason)
 

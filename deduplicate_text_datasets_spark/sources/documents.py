@@ -7,15 +7,19 @@ Canonical schema (BASELINE.json input_hint):
 plus an engine-added ``doc_id`` (long, dense, deterministic by url order)
 that all downstream operators key on.
 
-Two physical inputs are supported:
+``read_documents`` reads two physical table shapes:
   * the canonical Iceberg/parquet web-page table above;
-  * the driver test tables ``/root/testdata/sf*/documents.parquet``
+  * the test-data tables ``sf*/documents.parquet``
     (doc_id, text, lang, source, n_chars), which are lifted into the
     canonical shape.
 
+``read_text_corpus`` reads raw txt / jsonl / csv corpora.
+
 Reference parity: the reference ingests TFDS/HF datasets into a flat byte
 corpus (scripts/load_dataset.py:49-92); here the *table* is the corpus and
-the byte layout is derived lazily (see sources/corpus.py).
+the byte layout is derived lazily (see sources/corpus.py). A TFDS or HF
+dataset enters as a table export (parquet or jsonl) through the readers
+above.
 """
 
 from __future__ import annotations
@@ -296,230 +300,6 @@ def synth_documents(
         spark.range(0, n, 1, numPartitions=max(1, n // 2000))
         .mapInPandas(gen, DOCUMENTS_SCHEMA)
     )
-
-
-def _hf_split_size(datasets_mod, name: str, split: str) -> int:
-    """Split row count from dataset METADATA only (no example download):
-    load_dataset_builder reads the dataset card/info, the analogue of the
-    reference asking len(ds) before forking its mp.Pool shards
-    (load_dataset_hf.py:59-63)."""
-    builder = datasets_mod.load_dataset_builder(name)
-    info_splits = getattr(builder.info, "splits", None) or {}
-    if split not in info_splits:
-        raise ValueError(
-            f"split {split!r} not in {name} (splits: {sorted(info_splits)})"
-        )
-    return int(info_splits[split].num_examples)
-
-
-def read_sharded_text(
-    spark: SparkSession,
-    n: int,
-    shard_loader,
-    url_prefix: str,
-    docs_per_shard: int = 50_000,
-) -> DataFrame:
-    """Core distributed external-dataset reader: ``shard_loader(lo, hi) ->
-    list[str]`` runs on EXECUTORS (cloudpickled into mapInPandas tasks),
-    one task per contiguous [lo, hi) id slice — the Spark analogue of the
-    reference's mp.Pool shard loop (load_dataset_hf.py:59-90). The driver
-    only needs the total row count ``n``; no example text ever crosses it.
-    doc_ids are dense and deterministic for free (= slice offset), no
-    assign_dense_ids pass needed."""
-    bounds = [
-        (lo, min(lo + docs_per_shard, n)) for lo in range(0, n, docs_per_shard)
-    ] or [(0, 0)]
-    # range-partition on lo: exactly one [lo, hi) bound per task. Hash
-    # partitioning on lo could land several bounds in one partition (their
-    # loads would serialize within that task) and leave others empty —
-    # parallelism below the shard count (round-4 ADVICE).
-    shard_df = spark.createDataFrame(
-        pd.DataFrame(bounds, columns=["lo", "hi"])
-    ).repartitionByRange(len(bounds), "lo")
-
-    def load(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                lo, hi = int(lo), int(hi)
-                if hi <= lo:
-                    continue
-                texts = shard_loader(lo, hi)
-                if len(texts) != hi - lo:
-                    raise RuntimeError(
-                        f"shard_loader({lo}, {hi}) returned {len(texts)} "
-                        f"rows, expected {hi - lo} — doc_ids would desync"
-                    )
-                yield pd.DataFrame(
-                    {"doc_id": range(lo, hi), "text": [str(t) for t in texts]}
-                )
-
-    raw = shard_df.mapInPandas(load, "doc_id long, text string")
-    return raw.select(
-        "doc_id",
-        F.concat(F.lit(url_prefix), F.col("doc_id")).alias("url"),
-        F.lit(EPOCH).cast("timestamp").alias("warc_ts"),
-        F.encode("text", "UTF-8").alias("html"),
-        F.col("text").cast("string").alias("text"),
-        F.lit("und").alias("lang"),
-    )
-
-
-def read_hf_dataset(
-    spark: SparkSession,
-    name: str,
-    split: str = "train",
-    text_key: str = "text",
-    docs_per_shard: int = 50_000,
-    streaming: bool = True,
-) -> DataFrame:
-    """HF-datasets ingestion (reference scripts/load_dataset_hf.py:51-90:
-    datasets.load_dataset sharded across an mp.Pool).
-
-    Distributed by construction: the driver reads only the split's row
-    count from dataset metadata (_hf_split_size — no example download),
-    then each EXECUTOR task loads its own contiguous slice inside
-    read_sharded_text's mapInPandas. A C4-sized split never materializes
-    on the driver (the round-3 ``ds.to_pandas()`` seam is gone).
-
-    Executors load one of two ways (round-4 ADVICE):
-
-    * ``streaming=True`` (default): ``load_dataset(..., streaming=True)``
-      + ``.skip(lo).take(hi-lo)`` — no per-node download-and-prepare of
-      the whole split; each task streams shards and discards the first
-      ``lo`` records. skip() is O(lo) record-reads but touches only the
-      compressed source files sequentially (no arrow materialization, no
-      HF file-lock contention), which at C4 scale beats every node paying
-      a full prepare. Prefer this unless the dataset's shards are already
-      prepared node-locally.
-    * ``streaming=False``: the HF slice syntax ``split[lo:hi]`` — NOTE
-      this prepares (downloads + arrow-izes) the FULL split into each
-      node's HF cache before slicing, serialized per node on HF file
-      locks. Only use when every node has the split pre-cached (e.g. a
-      shared warm HF_HOME), where slicing prepared arrow beats streaming.
-
-    The container ships no huggingface ``datasets`` — like
-    ``functions.text.gpt2_tokenizer_udf`` this raises a clear
-    NotImplementedError at the exact integration point instead of silently
-    substituting (the sharded plumbing itself is tested through
-    read_sharded_text with a fake loader, tests/test_round4.py; the
-    streaming loader with a fake ``datasets`` module, tests/test_round5.py).
-    """
-    try:
-        import datasets  # type: ignore  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "HF dataset ingestion needs the 'datasets' package (not in "
-            "this container). Use read_text_corpus for txt/jsonl/csv "
-            "globs or read_documents for parquet/Iceberg tables; at scale, "
-            "export the dataset to parquet and point read_documents at it."
-        ) from exc
-
-    n = _hf_split_size(datasets, name, split)
-
-    def load_slice(lo: int, hi: int) -> list:
-        import datasets as ds_mod  # executor-side import
-
-        return _hf_load_slice(
-            ds_mod, name, split, text_key, streaming, lo, hi
-        )
-
-    return read_sharded_text(
-        spark, n, load_slice, f"hf://{name}/{split}/", docs_per_shard
-    )
-
-
-def _hf_load_slice(
-    ds_mod, name: str, split: str, text_key: str, streaming: bool,
-    lo: int, hi: int,
-) -> list:
-    """One executor task's slice load (module-level so the fake-module
-    tests can drive it without a worker-side import seam)."""
-    if streaming:
-        stream = ds_mod.load_dataset(name, split=split, streaming=True)
-        out = []
-        for ex in stream.skip(lo).take(hi - lo):
-            if text_key not in ex:
-                raise ValueError(
-                    f"no {text_key!r} key in {name}:{split} example "
-                    f"(keys: {sorted(ex)})"
-                )
-            out.append(ex[text_key])
-        return out
-    shard = ds_mod.load_dataset(name, split=f"{split}[{lo}:{hi}]")
-    if text_key not in shard.column_names:
-        raise ValueError(
-            f"no {text_key!r} column in {name}:{split} "
-            f"(columns: {shard.column_names})"
-        )
-    return list(shard[text_key])
-
-
-def read_tfds_dataset(
-    spark: SparkSession,
-    name: str,
-    split: str = "train",
-    text_key: str = "text",
-    docs_per_shard: int = 50_000,
-) -> DataFrame:
-    """TFDS ingestion (reference scripts/load_dataset.py:49-51: tfds.load,
-    the loader behind the wiki40b walkthrough).
-
-    Same sharded design as read_hf_dataset: the driver reads only
-    ``tfds.builder(name).info.splits[split].num_examples`` (metadata),
-    then each EXECUTOR task loads its own ``split[lo:hi]`` sub-split (TFDS
-    shares the HF absolute-slicing syntax) inside read_sharded_text's
-    mapInPandas — never a full-split driver materialization. Each node
-    needs the TFDS data dir populated (tfds prepares per-node on first
-    touch; point TFDS_DATA_DIR at shared storage on a real cluster).
-
-    No tensorflow-datasets in this container, so the import raises a clear
-    NotImplementedError; the sharded path itself is exercised with a fake
-    ``tensorflow_datasets`` module (tests/test_round5.py).
-    """
-    try:
-        import tensorflow_datasets as tfds  # type: ignore
-    except ImportError as exc:
-        raise NotImplementedError(
-            "TFDS ingestion needs the 'tensorflow-datasets' package (not "
-            "in this container). Use read_text_corpus for txt/jsonl/csv "
-            "globs or read_documents for parquet/Iceberg tables; at scale, "
-            "export the dataset to parquet and point read_documents at it."
-        ) from exc
-
-    info_splits = tfds.builder(name).info.splits
-    if split not in info_splits:
-        raise ValueError(
-            f"split {split!r} not in {name} "
-            f"(splits: {sorted(info_splits)})"
-        )
-    n = int(info_splits[split].num_examples)
-
-    def load_slice(lo: int, hi: int) -> list:
-        import tensorflow_datasets as tfds_mod  # executor-side import
-
-        return _tfds_load_slice(tfds_mod, name, split, text_key, lo, hi)
-
-    return read_sharded_text(
-        spark, n, load_slice, f"tfds://{name}/{split}/", docs_per_shard
-    )
-
-
-def _tfds_load_slice(
-    tfds_mod, name: str, split: str, text_key: str, lo: int, hi: int
-) -> list:
-    """One executor task's TFDS sub-split load (module-level for the
-    fake-module tests, mirroring _hf_load_slice)."""
-    ds = tfds_mod.load(name, split=f"{split}[{lo}:{hi}]")
-    out = []
-    for ex in tfds_mod.as_numpy(ds):
-        if text_key not in ex:
-            raise ValueError(
-                f"no {text_key!r} key in {name}:{split} example "
-                f"(keys: {sorted(ex)})"
-            )
-        v = ex[text_key]
-        out.append(v.decode("utf-8") if isinstance(v, bytes) else str(v))
-    return out
 
 
 def read_text_corpus(spark: SparkSession, path: str, fmt: str = "auto") -> DataFrame:

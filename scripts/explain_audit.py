@@ -7,6 +7,9 @@ Checks (per plan, printed + asserted where marked):
   * no CartesianProduct except the declared exact-ANN baseline   [assert]
   * exchanges (shuffles) counted — the budget documented per operator.
 
+Every driver guard is set to 0, so each size-adaptive stage shows its
+distributed plan.
+
 Usage: python scripts/explain_audit.py [sf_dir]
 """
 
@@ -28,6 +31,18 @@ from deduplicate_text_datasets_spark.config import (  # noqa: E402
 from deduplicate_text_datasets_spark.session import get_spark  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+# Audit the distributed plans, the ones a 100-TB corpus runs: at the default
+# guards a small sf_dir puts size-adaptive stages on the driver, whose
+# local-relation plans carry no WholeStageCodegen subtree.
+for _guard in (
+    "SPARK_GRAFT_OFFSETS_DRIVER_MAX",
+    "SPARK_GRAFT_LSH_DRIVER_MAX",
+    "SPARK_GRAFT_LSH_DRIVER_PAIR_MAX",
+    "SPARK_GRAFT_VERIFY_DRIVER_MAX",
+    "SPARK_GRAFT_CC_DRIVER_MAX",
+    "SPARK_GRAFT_INTERVALS_DRIVER_MAX",
+):
+    os.environ[_guard] = "0"
 CFG = ExactSubstrConfig(length_threshold=100, shard_bytes=32768, overlap_bytes=1024)
 
 
@@ -155,15 +170,6 @@ def main() -> None:
     audit("simhash_pairs", simhash_pairs(docs, SimHashConfig()))
     audit("cosine_topk (broadcast q)", cosine_topk(emb, queries), allow_cartesian=True)
     audit("cosine_pairs lsh", cosine_pairs(emb, dim=64, threshold=0.5, bits=4))
-    from deduplicate_text_datasets_spark.operators.multimodal import (
-        exact_media_duplicates,
-    )
-
-    media = docs.selectExpr(
-        "doc_id", "'image' as media_type", "html as payload",
-        "cast(null as map<string,string>) as meta",
-    )
-    audit("exact_media_duplicates", exact_media_duplicates(media))
     from deduplicate_text_datasets_spark.operators.paragraphs import (
         paragraph_dedup,
         repeated_paragraphs,

@@ -1,5 +1,5 @@
 """Training-data-pipeline extensions: text analysis, embedding ANN,
-multimodal plumbing — vs driver-side numpy/python oracles."""
+paragraph dedup and SemDeDup — vs driver-side numpy/python oracles."""
 
 from __future__ import annotations
 
@@ -10,13 +10,6 @@ from pyspark.sql import functions as F
 from deduplicate_text_datasets_spark.operators.ann import (
     cosine_pairs,
     cosine_topk,
-    cosine_topk_lsh,
-    hyperplane_buckets,
-)
-from deduplicate_text_datasets_spark.operators.multimodal import (
-    exact_media_duplicates,
-    extract_features,
-    frame_sample,
 )
 from deduplicate_text_datasets_spark.operators.textstats import (
     doc_stats,
@@ -70,22 +63,6 @@ def test_cosine_topk_empty_queries(spark, emb):
     assert out.count() == 0
 
 
-def test_cosine_topk_lsh_recall(spark, emb):
-    """Random-hyperplane LSH must recover truly-similar neighbors (the
-    agreement probability per bit is 1-θ/π, ≈0.99 at cosine 0.999); random
-    gaussian pairs (cosine ~0.3) are legitimately missed."""
-    df, vecs = emb
-    queries = df.filter(F.col("vec_id").isin([10, 20])).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    approx = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in cosine_topk_lsh(df, queries, dim=16, k=3, nbits=4).collect()
-    }
-    assert approx[(10, 1)] == 11
-    assert approx[(20, 1)] == 21
-
-
 def test_cosine_pairs_finds_planted(spark, emb):
     df, _ = emb
     pairs = {
@@ -120,14 +97,6 @@ def test_cosine_pairs_lsh_matches_exact(spark, emb):
         if _cos(vecs[a], vecs[b]) >= 0.6
     }
     assert {(a, b) for a, b, _ in exact} == truth
-
-
-def test_hyperplane_buckets_deterministic(spark, emb):
-    df, _ = emb
-    b1 = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets(df, 16, 8).collect()}
-    b2 = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets(df, 16, 8).collect()}
-    assert b1 == b2
-    assert b1[20] == b1[21]  # identical vectors share a bucket
 
 
 @pytest.fixture(scope="module")
@@ -165,48 +134,6 @@ def test_quality_score_bounds(spark, textdocs):
     got = {r["doc_id"]: r["quality"] for r in quality_score(textdocs).collect()}
     assert all(0 <= v <= 1 for v in got.values())
     assert got[3] < got[0]  # one-token doc scores below a real sentence
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        (0, "image", bytes(range(256)) * 4, {"w": "16", "h": "16"}),
-        (1, "image", bytes(range(256)) * 4, {"w": "16", "h": "16"}),  # dup payload
-        (2, "audio", b"\x00\x01" * 500, {"sr": "16000"}),
-        (3, "video", bytes(range(100)) * 40, {"fps": "30"}),
-    ]
-    from deduplicate_text_datasets_spark.operators.multimodal import MEDIA_SCHEMA
-
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_extract_features_fake_decoder(spark, media):
-    got = {r["doc_id"]: r for r in extract_features(media, dim=8).collect()}
-    assert len(got) == 4
-    assert got[0]["content_sha"] == got[1]["content_sha"]
-    assert got[0]["feature"] == got[1]["feature"]
-    assert abs(sum(got[0]["feature"]) - 1.0) < 1e-9  # normalized histogram
-    assert got[0]["n_bytes"] == 1024
-
-
-def test_extract_features_real_decoder_stub(spark, media):
-    import py4j.protocol
-
-    with pytest.raises(Exception):  # NotImplementedError surfaces via Py4J
-        extract_features(media, dim=8, decoder="real").collect()
-
-
-def test_frame_sample(spark, media):
-    frames = frame_sample(media, every_n_bytes=512, frame_bytes=64).collect()
-    v = [r for r in frames if r["doc_id"] == 3]
-    assert len(v) == 8  # 4000 bytes / 512
-    assert all(len(r["frame"]) == 64 for r in v[:-1])
-
-
-def test_exact_media_duplicates(spark, media):
-    got = {r["doc_id"]: r["group_id"] for r in exact_media_duplicates(media).collect()}
-    assert got[0] == got[1] == 0
-    assert got[2] == 2 and got[3] == 3
 
 
 def test_cosine_pairs_salted_buckets_parity(spark, emb):
@@ -290,33 +217,6 @@ def test_ivf_partial_probe_recall(spark, clustered_emb):
         hits += len(truth & got.get(q, set()))
         total += len(truth)
     assert hits / total >= 0.9, f"recall@5 {hits}/{total}"
-
-
-def test_ivf_index_roundtrip(spark, emb, tmp_path):
-    """build_ivf_index + ivf_topk_indexed answers identically to the
-    in-session path at the same config (build-once/query-many parity,
-    same contract as operators/sa_index)."""
-    from deduplicate_text_datasets_spark.operators.ann import (
-        build_ivf_index,
-        ivf_topk,
-        ivf_topk_indexed,
-    )
-
-    df, _ = emb
-    path = str(tmp_path / "ivf")
-    build_ivf_index(df, path, dim=16, nlist=8)
-    queries = df.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    live = {
-        tuple(r)
-        for r in ivf_topk(df, queries, dim=16, k=5, nlist=8, nprobe=3).collect()
-    }
-    stored = {
-        tuple(r)
-        for r in ivf_topk_indexed(spark, path, queries, k=5, nprobe=3).collect()
-    }
-    assert stored == live
 
 
 def test_ivf_centroids_deterministic_and_reseeded(spark):

@@ -1,15 +1,14 @@
 """Pipeline-level behavior: checkpoint/resume with lineage counters
-(north_rule) and incremental streaming ingest."""
+(north_rule), contamination reports and prepare_training_data."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from deduplicate_text_datasets_spark.config import EngineConfig, MinHashConfig
+from deduplicate_text_datasets_spark.config import EngineConfig
 from deduplicate_text_datasets_spark.plans.checkpoints import (
     StageStore,
     config_fingerprint,
@@ -67,142 +66,6 @@ def test_neardup_with_store_resumes(spark, docs, tmp_path_factory):
     store2 = make_store(spark, base, cfg)
     out2 = neardup_clusters(docs, cfg, store=store2).orderBy("doc_id").collect()
     assert [tuple(r) for r in out1] == [tuple(r) for r in out2]
-
-
-def test_streaming_incremental_dedup(spark, docs, tmp_path_factory):
-    from deduplicate_text_datasets_spark.streaming.ingest import (
-        build_index,
-        read_decisions,
-        start_incremental_dedup,
-    )
-
-    base = tmp_path_factory.mktemp("stream")
-    index_dir = str(base / "index")
-    input_dir = str(base / "incoming")
-    output_dir = str(base / "out")
-    checkpoint_dir = str(base / "ckpt")
-    os.makedirs(input_dir)
-
-    cfg = MinHashConfig()
-    build_index(docs, cfg, index_dir)
-
-    # new batch: one exact copy of doc 0, one near copy of the longest doc
-    # (single-word edit on a short doc legitimately drops Jaccard below the
-    # 0.8 threshold — pick a long base so the near-dup stays above it)
-    rows = docs.filter(F.col("doc_id") < 20).collect()
-    t0 = [r for r in rows if r["doc_id"] == 0][0]["text"]
-    t4 = max((r["text"] for r in rows), key=lambda t: len(t.split()))
-    words = t4.split()
-    words[3] = "zzznovelword"
-    near = " ".join(words)
-    new = spark.createDataFrame(
-        [
-            (1000, "https://new/0", t0, "en"),
-            (1001, "https://new/1", near, "en"),
-            (1002, "https://new/2", " ".join(f"qq{i}" for i in range(120)), "en"),
-        ],
-        "doc_id long, url string, text string, lang string",
-    )
-    new.write.mode("overwrite").parquet(input_dir)
-
-    q = start_incremental_dedup(
-        spark, input_dir, index_dir, output_dir, checkpoint_dir, cfg,
-        schema=new.schema, available_now=True,
-    )
-    q.awaitTermination(120)
-    out = {
-        r["doc_id"]: r["verdict"]
-        for r in read_decisions(spark, output_dir).collect()
-    }
-    assert out[1000] == "exact"
-    assert out[1001] == "near"
-    assert out[1002] == "novel"
-
-    # ---- the index GREW by the novel doc: a second batch containing a
-    # near-copy of 1002 (novel in batch 0, never in the base corpus) and an
-    # exact copy of it must now be flagged against batch 0's doc ----
-    fresh = " ".join(f"qq{i}" for i in range(120))
-    w = fresh.split()
-    w[5] = "slightlydifferent"
-    near2 = " ".join(w)  # 5 of 116 shingles differ: J ≈ 0.92 >= 0.8
-    b2 = spark.createDataFrame(
-        [
-            (2000, "https://new/3", fresh, "en"),       # exact of 1002
-            (2001, "https://new/4", near2, "en"),       # near of 1002
-            (2002, "https://new/5", "wholly other payload " * 40, "en"),
-            (2003, "https://new/6", "wholly other payload " * 40, "en"),
-        ],
-        "doc_id long, url string, text string, lang string",
-    )
-    b2.write.mode("append").parquet(input_dir)
-    q2 = start_incremental_dedup(
-        spark, input_dir, index_dir, output_dir, checkpoint_dir, cfg,
-        schema=new.schema, available_now=True,
-    )
-    q2.awaitTermination(120)
-    rows = {
-        r["doc_id"]: (r["verdict"], r["matched_doc"])
-        for r in read_decisions(spark, output_dir).collect()
-    }
-    assert rows[2000] == ("exact", 1002)
-    assert rows[2001] == ("near", 1002)
-    # intra-batch first-seen-wins: 2003 is an exact copy of 2002
-    assert rows[2002][0] == "novel"
-    assert rows[2003] == ("exact", 2002)
-
-    # ---- replay convergence: re-running the batch with its own increment
-    # already on disk must reproduce the decisions, not self-match ----
-    from deduplicate_text_datasets_spark.streaming.ingest import dedup_batch
-
-    last_batch = max(
-        int(d.split("_")[1])
-        for d in os.listdir(output_dir)
-        if d.startswith("batch_")
-    )
-    replay = {
-        r["doc_id"]: (r["verdict"], r["matched_doc"])
-        for r in dedup_batch(
-            spark, b2, cfg, index_dir, batch_id=last_batch
-        ).collect()
-    }
-    assert replay[2000] == ("exact", 1002)
-    assert replay[2002][0] == "novel"
-    assert replay[2003] == ("exact", 2002)
-
-
-def test_streaming_probe_salted_parity(spark, docs, tmp_path_factory):
-    """Forcing every index bucket through the bipartite salted grid
-    (cap=2) must reproduce the plain probe's decisions — the skew guard
-    re-distributes the probe join, never changes it."""
-    from deduplicate_text_datasets_spark.streaming.ingest import (
-        build_index,
-        dedup_batch,
-    )
-
-    base = tmp_path_factory.mktemp("probe")
-    cfg = MinHashConfig()
-    index_dir = str(base / "idx")
-    build_index(docs, cfg, index_dir)
-    rows = docs.limit(6).collect()
-    batch = spark.createDataFrame(
-        [(5000 + i, f"https://b/{i}", r["text"], "en") for i, r in enumerate(rows)]
-        + [(6000, "https://b/x", " ".join(f"zz{i}" for i in range(80)), "en")],
-        "doc_id long, url string, text string, lang string",
-    )
-    plain = {
-        r["doc_id"]: (r["verdict"], r["matched_doc"])
-        for r in dedup_batch(spark, batch, cfg, index_dir).collect()
-    }
-    salted_cfg = MinHashConfig(max_bucket_size=2, salted_bucket_max=10**6)
-    index_dir2 = str(base / "idx2")
-    build_index(docs, salted_cfg, index_dir2)
-    salted = {
-        r["doc_id"]: (r["verdict"], r["matched_doc"])
-        for r in dedup_batch(spark, batch, salted_cfg, index_dir2).collect()
-    }
-    assert plain == salted
-    assert all(plain[5000 + i][0] == "exact" for i in range(6))
-    assert plain[6000][0] == "novel"
 
 
 def test_contamination_report_levels(spark):

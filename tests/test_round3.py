@@ -1,14 +1,13 @@
 """Round-3 coverage: tokenized-mode ExactSubstr (reference --tokenize,
 README.md:74,125; main.rs:762-768), the batched match-length kernel, the
 SA-index overlap guard + persisted build config, exact-frame checks for the
-two rows-only gate queries (minhash signatures, simhash fingerprints), the
-de-skewed media dedup, and the HF-ingestion seam.
+two rows-only gate queries (minhash signatures, simhash fingerprints), and
+the byte-sized scan fan-out.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,9 +22,9 @@ from deduplicate_text_datasets_spark.functions.text import (
     tokenized_documents,
 )
 from deduplicate_text_datasets_spark.oracle import pyref
+from deduplicate_text_datasets_spark.oracle.pyref import _match_lens_loop
 from deduplicate_text_datasets_spark.operators.suffix import (
     _batched_match_lens,
-    _match_lens_loop,
     count_occurrences,
     find_training_data,
     self_similar,
@@ -355,43 +354,7 @@ def test_simhash_candidates_no_window(spark, docs):
     cand.count()  # and it still executes
 
 
-# --- media dedup: hot payload, no window, payloads off the shuffle ---------
-
-
-def test_exact_media_duplicates_hot_payload(spark):
-    from deduplicate_text_datasets_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        exact_media_duplicates,
-    )
-
-    hot = b"\x89PNG" + b"h" * 500
-    rows = [(i, "image", hot, None) for i in range(200)] + [
-        (1000 + i, "audio", b"RIFF" + bytes([i]) * 100, None) for i in range(5)
-    ]
-    media = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "media_type", "payload", "meta"]),
-        schema=MEDIA_SCHEMA,
-    )
-    out = exact_media_duplicates(media)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    got = {r["doc_id"]: (r["group_id"], r["group_size"]) for r in out.collect()}
-    for i in range(200):
-        assert got[i] == (0, 200)
-    for i in range(5):
-        assert got[1000 + i] == (1000 + i, 1)
-
-
-# --- sources: HF seam, byte-sized fan-out ----------------------------------
-
-
-def test_read_hf_dataset_raises_cleanly(spark):
-    from deduplicate_text_datasets_spark.sources.documents import (
-        read_hf_dataset,
-    )
-
-    with pytest.raises(NotImplementedError, match="datasets"):
-        read_hf_dataset(spark, "c4", split="train")
+# --- sources: byte-sized fan-out ------------------------------------------
 
 
 def test_size_bytes_parser():

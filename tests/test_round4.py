@@ -1,7 +1,7 @@
 """Round-4 coverage: token-mode strike-out end to end (the last ExactSubstr
-stage that assumed a string corpus), B-side strike in across_dedup,
-distributed HF ingestion plumbing (no driver materialization), scoped cache
-lifecycle, and the SA-fallback guards from round-3 ADVICE.
+stage that assumed a string corpus), B-side strike in across_dedup, the
+scan fan-out size parser, scoped cache lifecycle, and the SA-fallback
+guards from round-3 ADVICE.
 """
 
 from __future__ import annotations
@@ -216,77 +216,7 @@ def test_across_dedup_strikes_both_sides(spark, fixture_pdf):
         assert got_b[uid] == want, f"B-side doc {uid} splice mismatch"
 
 
-# --- distributed HF ingestion plumbing --------------------------------------
-
-
-def test_read_sharded_text_plumbing(spark):
-    """The executor-side shard loader drives the canonical frame: dense
-    deterministic doc_ids, one loader call per [lo, hi) slice, canonical
-    schema — and nothing but the row count on the driver."""
-    from deduplicate_text_datasets_spark.sources.documents import (
-        read_sharded_text,
-    )
-
-    def loader(lo, hi):
-        return [f"shard text {i}" for i in range(lo, hi)]
-
-    df = read_sharded_text(spark, 23, loader, "hf://fake/train/", 5)
-    assert df.columns == ["doc_id", "url", "warc_ts", "html", "text", "lang"]
-    rows = df.orderBy("doc_id").collect()
-    assert [r["doc_id"] for r in rows] == list(range(23))
-    assert rows[7]["text"] == "shard text 7"
-    assert rows[7]["url"] == "hf://fake/train/7"
-    assert bytes(rows[3]["html"]) == b"shard text 3"
-
-
-def test_read_sharded_text_desync_guard(spark):
-    from deduplicate_text_datasets_spark.sources.documents import (
-        read_sharded_text,
-    )
-
-    def bad_loader(lo, hi):
-        return ["only one row"]
-
-    df = read_sharded_text(spark, 10, bad_loader, "x://", 5)
-    with pytest.raises(Exception, match="desync"):
-        df.collect()
-
-
-def test_hf_split_size_metadata_only():
-    """Split sizing must come from load_dataset_builder (metadata), never
-    load_dataset (examples)."""
-    from deduplicate_text_datasets_spark.sources.documents import (
-        _hf_split_size,
-    )
-
-    class FakeSplit:
-        num_examples = 42
-
-    class FakeInfo:
-        splits = {"train": FakeSplit()}
-
-    class FakeBuilder:
-        info = FakeInfo()
-
-    class FakeDatasets:
-        def load_dataset_builder(self, name):
-            return FakeBuilder()
-
-        def load_dataset(self, *a, **k):  # pragma: no cover - guard
-            raise AssertionError("driver must not load examples")
-
-    assert _hf_split_size(FakeDatasets(), "c4", "train") == 42
-    with pytest.raises(ValueError, match="split"):
-        _hf_split_size(FakeDatasets(), "c4", "validation")
-
-
-def test_read_tfds_dataset_raises_cleanly(spark):
-    from deduplicate_text_datasets_spark.sources.documents import (
-        read_tfds_dataset,
-    )
-
-    with pytest.raises(NotImplementedError, match="tensorflow-datasets"):
-        read_tfds_dataset(spark, "wiki40b/test")
+# --- sources: byte-sized fan-out ------------------------------------------
 
 
 def test_size_bytes_fractional():

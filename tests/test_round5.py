@@ -1,7 +1,8 @@
-"""Round-5 coverage: path-keyed SA-index overlap memo, TFDS/HF sharded
-loaders (streaming HF path per round-4 ADVICE), one-bound-per-task shard
-fan-out, injected multimodal decoders, and the small ADVICE hygiene fixes
-(size-conf warning, AcrossDedupResult iteration deprecation).
+"""Round-5 coverage: path-keyed SA-index overlap memo, the small ADVICE
+hygiene fixes (size-conf warning, AcrossDedupResult iteration
+deprecation), the xxh64 and expected-result oracles, the across_dedup
+prefilter, chunked kernel emit, the duplicate-window census and the
+mappass dedup pass.
 """
 
 from __future__ import annotations
@@ -94,236 +95,6 @@ def test_across_result_iter_deprecated():
         assert tuple(res) == (1, 2, 3)
     # named fields carry the full symmetric result
     assert (res.dups_b, res.ranges_b, res.deduped_b) == (4, 5, 6)
-
-
-def test_sharded_text_one_bound_per_task(spark):
-    """repartitionByRange on lo gives every [lo, hi) bound its own task —
-    hash partitioning could serialize several shard loads in one task and
-    leave other slots idle (round-4 ADVICE)."""
-    from deduplicate_text_datasets_spark.sources.documents import (
-        read_sharded_text,
-    )
-
-    def loader(lo, hi):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        return [f"p{pid}" for _ in range(lo, hi)]
-
-    df = read_sharded_text(spark, 23, loader, "x://", 5)  # 5 bounds
-    by_bound = {
-        r["doc_id"] // 5: r["text"] for r in df.select("doc_id", "text").collect()
-    }
-    assert len(by_bound) == 5
-    assert len(set(by_bound.values())) == 5, (
-        f"shard bounds shared tasks: {by_bound}"
-    )
-
-
-# --- HF streaming slice loader (round-4 ADVICE medium) ----------------------
-
-
-class _FakeHFStream:
-    """Records skip/take and serves dict examples like an IterableDataset."""
-
-    def __init__(self, rows, calls):
-        self._rows = rows
-        self._calls = calls
-
-    def skip(self, n):
-        self._calls.append(("skip", n))
-        return _FakeHFStream(self._rows[n:], self._calls)
-
-    def take(self, n):
-        self._calls.append(("take", n))
-        return _FakeHFStream(self._rows[:n], self._calls)
-
-    def __iter__(self):
-        return iter(self._rows)
-
-
-class _FakeHFDatasets:
-    def __init__(self, n=23):
-        self.calls = []
-        self._rows = [{"text": f"doc {i}", "junk": i} for i in range(n)]
-
-    def load_dataset(self, name, split=None, streaming=False):
-        self.calls.append(("load_dataset", name, split, streaming))
-        if streaming:
-            return _FakeHFStream(self._rows, self.calls)
-        # slice syntax path: split like 'train[lo:hi]'
-        lo, hi = split[split.index("[") + 1 : -1].split(":")
-        rows = self._rows[int(lo) : int(hi)]
-
-        class _Shard:
-            column_names = ["text", "junk"]
-
-            def __getitem__(self, key):
-                return [r[key] for r in rows]
-
-        return _Shard()
-
-
-def test_hf_slice_loader_streaming_no_full_prepare():
-    """streaming=True must stream + skip/take — never issue a full-split
-    (or slice-syntax) prepare that downloads the whole split per node."""
-    from deduplicate_text_datasets_spark.sources.documents import (
-        _hf_load_slice,
-    )
-
-    fake = _FakeHFDatasets()
-    out = _hf_load_slice(fake, "c4", "train", "text", True, 10, 15)
-    assert out == [f"doc {i}" for i in range(10, 15)]
-    assert ("load_dataset", "c4", "train", True) in fake.calls
-    assert ("skip", 10) in fake.calls and ("take", 5) in fake.calls
-    # no slice-syntax (prepared) load anywhere
-    assert not any(
-        c[0] == "load_dataset" and not c[3] for c in fake.calls
-    )
-
-
-def test_hf_slice_loader_prepared_path():
-    from deduplicate_text_datasets_spark.sources.documents import (
-        _hf_load_slice,
-    )
-
-    fake = _FakeHFDatasets()
-    out = _hf_load_slice(fake, "c4", "train", "text", False, 5, 9)
-    assert out == [f"doc {i}" for i in range(5, 9)]
-    assert ("load_dataset", "c4", "train[5:9]", False) in fake.calls
-
-
-def test_hf_streaming_sharded_e2e(spark):
-    """The streaming slice loader driving the real sharded reader end to
-    end. The fake module is defined INSIDE the test so cloudpickle ships
-    it by value into the executor tasks (the tests module itself is not
-    importable on workers)."""
-    from deduplicate_text_datasets_spark.sources.documents import (
-        _hf_load_slice,
-        read_sharded_text,
-    )
-
-    class Stream:
-        def __init__(self, rows):
-            self._rows = rows
-
-        def skip(self, n):
-            return Stream(self._rows[n:])
-
-        def take(self, n):
-            return Stream(self._rows[:n])
-
-        def __iter__(self):
-            return iter(self._rows)
-
-    class FakeDS:
-        def load_dataset(self, name, split=None, streaming=False):
-            assert streaming, "e2e loader must use the streaming path"
-            return Stream([{"text": f"doc {i}"} for i in range(23)])
-
-    def loader(lo, hi):
-        return _hf_load_slice(FakeDS(), "c4", "train", "text", True, lo, hi)
-
-    df = read_sharded_text(spark, 23, loader, "hf://c4/train/", 5)
-    rows = df.orderBy("doc_id").collect()
-    assert [r["text"] for r in rows] == [f"doc {i}" for i in range(23)]
-    assert rows[4]["url"] == "hf://c4/train/4"
-
-
-# --- TFDS sharded loader (round-4 verdict item 6) ----------------------------
-
-
-class _FakeTFDS:
-    """tfds.load / tfds.as_numpy / tfds.builder stand-in; examples carry
-    bytes text like real TFDS text features."""
-
-    def __init__(self, n=17):
-        self.calls = []
-        self._rows = [{"text": f"wiki {i}".encode()} for i in range(n)]
-        n_total = n
-
-        class _Split:
-            num_examples = n_total
-
-        class _Info:
-            splits = {"train": _Split()}
-
-        class _Builder:
-            info = _Info()
-
-        self._builder = _Builder()
-
-    def builder(self, name):
-        self.calls.append(("builder", name))
-        return self._builder
-
-    def load(self, name, split=None):
-        self.calls.append(("load", name, split))
-        lo, hi = split[split.index("[") + 1 : -1].split(":")
-        return self._rows[int(lo) : int(hi)]
-
-    def as_numpy(self, ds):
-        return iter(ds)
-
-
-def test_tfds_load_slice():
-    from deduplicate_text_datasets_spark.sources.documents import (
-        _tfds_load_slice,
-    )
-
-    fake = _FakeTFDS()
-    out = _tfds_load_slice(fake, "wiki40b", "train", "text", 3, 8)
-    assert out == [f"wiki {i}" for i in range(3, 8)]  # bytes decoded
-    assert ("load", "wiki40b", "train[3:8]") in fake.calls
-
-
-def test_tfds_sharded_e2e(spark, monkeypatch):
-    """read_tfds_dataset with a fake tensorflow_datasets module: driver
-    reads split metadata only; executors load [lo:hi] sub-splits through
-    the real sharded plumbing (the loader closure re-imports the module,
-    so the monkeypatched sys.modules entry must be picklable — we inject
-    via the module-level slice function instead, same pattern as HF)."""
-    from deduplicate_text_datasets_spark.sources.documents import (
-        _tfds_load_slice,
-        read_sharded_text,
-    )
-
-    class FakeTFDS:
-        def load(self, name, split=None):
-            lo, hi = split[split.index("[") + 1 : -1].split(":")
-            return [
-                {"text": f"wiki {i}".encode()}
-                for i in range(int(lo), int(hi))
-            ]
-
-        def as_numpy(self, ds):
-            return iter(ds)
-
-    def loader(lo, hi):
-        return _tfds_load_slice(FakeTFDS(), "wiki40b", "train", "text", lo, hi)
-
-    df = read_sharded_text(spark, 17, loader, "tfds://wiki40b/train/", 4)
-    rows = df.orderBy("doc_id").collect()
-    assert [r["text"] for r in rows] == [f"wiki {i}" for i in range(17)]
-    assert rows[0]["url"] == "tfds://wiki40b/train/0"
-
-
-def test_tfds_metadata_and_raise(monkeypatch):
-    """Driver half of read_tfds_dataset: metadata-only sizing + clean raise
-    without the package."""
-    import sys
-
-    from deduplicate_text_datasets_spark.sources import documents as docs_mod
-
-    # without the package: clean NotImplementedError naming alternatives
-    monkeypatch.setitem(sys.modules, "tensorflow_datasets", None)
-    with pytest.raises((NotImplementedError, ImportError)):
-        docs_mod.read_tfds_dataset(None, "wiki40b")
-
-    # with a fake package: unknown split surfaces the available ones
-    monkeypatch.setitem(sys.modules, "tensorflow_datasets", _FakeTFDS())
-    with pytest.raises(ValueError, match="splits"):
-        docs_mod.read_tfds_dataset(None, "wiki40b", split="validation")
 
 
 # --- pure-Python xxh64 oracle (round-4 verdict item 4 groundwork) ------------
@@ -462,86 +233,6 @@ def test_expected_tokenized_matches_engine(spark, docs):
     )
     assert got_dd == want_dd
     spark.catalog.clearCache()
-
-
-# --- multimodal: injected decoder (round-4 verdict item 7) -------------------
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    import pandas as pd
-
-    from deduplicate_text_datasets_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 1, 2],
-            "media_type": ["image", "image", "audio"],
-            "payload": [bytes([i] * (32 + i)) for i in range(3)],
-            "meta": [{"w": "8"}, {"w": "8"}, {"sr": "16k"}],
-        }
-    )
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
-def test_extract_features_injected_decoder(media):
-    """A caller-supplied decoder callable rides the seam into the Arrow
-    kernel — environments with PIL/ffmpeg get the real path with no code
-    edits (round-4 verdict item 7)."""
-    from deduplicate_text_datasets_spark.operators.multimodal import (
-        extract_features,
-    )
-
-    def my_decoder(payload, media_type, dim):
-        v = np.zeros(dim)
-        v[0] = len(payload)
-        v[1] = 1.0 if media_type == "audio" else 0.0
-        return v
-
-    rows = {
-        r["doc_id"]: r
-        for r in extract_features(media, dim=4, decoder=my_decoder).collect()
-    }
-    assert rows[0]["feature"][0] == 32.0
-    assert rows[2]["feature"][1] == 1.0  # audio flag
-    assert rows[1]["n_bytes"] == 33
-
-
-def test_extract_features_decoder_validation(media):
-    from deduplicate_text_datasets_spark.operators.multimodal import (
-        extract_features,
-    )
-
-    with pytest.raises(ValueError, match="decoder"):
-        extract_features(media, decoder="ffmpeg")
-
-    def bad_shape(payload, media_type, dim):
-        return np.zeros(dim + 1)
-
-    with pytest.raises(Exception, match="shape"):
-        extract_features(media, dim=4, decoder=bad_shape).collect()
-
-
-def test_extract_features_pil_decoder(media):
-    """Real-decoder smoke: only runs where PIL exists (not this container)."""
-    PIL_Image = pytest.importorskip("PIL.Image")
-
-    from deduplicate_text_datasets_spark.operators.multimodal import (
-        extract_features,
-    )
-
-    def pil_decoder(payload, media_type, dim):
-        import io
-
-        from PIL import Image
-
-        img = Image.open(io.BytesIO(payload)).convert("L").resize((dim, 1))
-        return np.asarray(img, dtype=np.float64).ravel() / 255.0
-
-    # would need real image payloads; presence of PIL is the gate
-    assert PIL_Image is not None
 
 
 # --- across_dedup small-side key prefilter (round-5) -------------------------

@@ -366,7 +366,8 @@ def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
     """One log record per placement decision: default placement puts the
     LSH stage of a small neardup_clusters on the driver; with its guard at
     0 the stage is distributed and no probe runs; a pair budget the driver
-    twin exceeds vetoes the driver placement with one more record."""
+    twin exceeds vetoes the driver placement with one more record; driver
+    candidate pairs over the verify guard log verify's veto."""
     import logging
 
     from deduplicate_text_datasets_spark.plans.caching import PLACEMENT_LOG
@@ -396,6 +397,19 @@ def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
         assert probed.placement == "driver"
         assert vetoed.placement == "distributed" and vetoed.guard == 1
         assert vetoed.rows == probed.rows and vetoed.reason
+        caplog.clear()
+        monkeypatch.delenv("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX")
+        monkeypatch.setenv("SPARK_GRAFT_VERIFY_DRIVER_MAX", "1")
+        neardup_clusters(d, EngineConfig())
+        lsh, verify = [
+            r
+            for r in caplog.records
+            if getattr(r, "stage", None) in ("lsh.candidates", "minhash.verify")
+        ]
+        assert lsh.stage == "lsh.candidates" and lsh.placement == "driver"
+        assert verify.stage == "minhash.verify"
+        assert verify.placement == "distributed" and verify.guard == 1
+        assert verify.rows > 1 and verify.reason
 
 
 def test_ann_partial_topk_many_batches(spark):
