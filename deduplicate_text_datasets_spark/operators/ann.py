@@ -8,7 +8,9 @@ quantizer, FAISS ``IndexIVFFlat`` shape): vectors are assigned to their
 nearest of ``nlist`` centroids and a query scores only its ``nprobe``
 nearest lists. ``nprobe == nlist`` degenerates to exact brute force (every
 vector is in exactly one list), which is the oracle-checkable
-configuration the ``ann_ivf_topk`` gate runs.
+configuration the ``ann_ivf_topk`` gate runs. ``build_ivf_index`` persists
+the index for build-once/query-many reuse; ``ivf_topk_indexed`` answers
+from it.
 
 For embedding-based near-duplicate detection, ``cosine_pairs`` returns all
 pairs above a cosine threshold within banded random-hyperplane LSH
@@ -459,29 +461,12 @@ def _probe_lists(
     )
 
 
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    nlist: int = 64,
-    nprobe: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k through an in-session IVF index:
-    train -> assign -> probe nprobe lists -> exact-score -> window top-k.
-    Returns (query_id, rank, neighbor_id, cosine); nprobe == nlist is
-    exactly brute force (gate-checkable against the cosine_topk oracle).
-
-    The probe frame is tiny (|queries| * nprobe rows) and broadcast, so the
-    big assigned frame never shuffles for the candidate join; only the
-    surviving candidates (an nprobe/nlist fraction of the corpus per query)
-    cross the top-k window's exchange."""
-    from ..plans.caching import scoped_persist
-
-    cents = train_centroids(emb, dim, nlist, vec_col)
-    assigned = scoped_persist(ivf_assign(emb, cents, vec_col).repartition("list_id"))
-    probes = _probe_lists(queries, cents, nprobe, vec_col)
+def _ivf_rank(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Score probed lists and take per-query top-k. The probe frame is tiny
+    (|queries| * nprobe rows) and broadcast, so the big assigned frame never
+    shuffles for the candidate join; only the surviving candidates (an
+    nprobe/nlist fraction of the corpus per query) cross the top-k window's
+    exchange."""
     cands = assigned.join(F.broadcast(probes), "list_id").filter(
         F.col("query_id") != F.col("vec_id")
     )
@@ -497,3 +482,73 @@ def ivf_topk(
             F.round("cosine", 6).alias("cosine"),
         )
     )
+
+
+def ivf_topk(
+    emb: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 10,
+    nlist: int = 64,
+    nprobe: int = 8,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate cosine top-k through an in-session IVF index:
+    train -> assign -> probe nprobe lists -> exact-score -> window top-k.
+    Returns (query_id, rank, neighbor_id, cosine); nprobe == nlist is
+    exactly brute force (gate-checkable against the cosine_topk oracle).
+    For build-once/query-many reuse across sessions, use build_ivf_index /
+    ivf_topk_indexed."""
+    from ..plans.caching import scoped_persist
+
+    cents = train_centroids(emb, dim, nlist, vec_col)
+    assigned = scoped_persist(ivf_assign(emb, cents, vec_col).repartition("list_id"))
+    probes = _probe_lists(queries, cents, nprobe, vec_col)
+    return _ivf_rank(assigned, probes, k)
+
+
+def build_ivf_index(
+    emb: DataFrame,
+    path: str,
+    dim: int,
+    nlist: int = 64,
+    vec_col: str = "embedding",
+) -> None:
+    """Persist an IVF index: {path}/centroids.parquet (nlist small rows) +
+    {path}/lists.parquet clustered by list_id so a probe's file scan prunes
+    to its lists (build-once/query-many, same shape as operators/sa_index).
+    """
+    spark = emb.sparkSession
+    cents = train_centroids(emb, dim, nlist, vec_col)
+    cent_rows = [
+        (int(i), [float(x) for x in cents[i]]) for i in range(cents.shape[0])
+    ]
+    spark.createDataFrame(
+        cent_rows, "list_id int, centroid array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids.parquet")
+    (
+        ivf_assign(emb, cents, vec_col)
+        .repartition("list_id")
+        .sortWithinPartitions("list_id")
+        .write.mode("overwrite")
+        .parquet(f"{path}/lists.parquet")
+    )
+
+
+def ivf_topk_indexed(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int = 10,
+    nprobe: int = 8,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Answer top-k from a persisted IVF index (no training, no assignment
+    pass — the read of lists.parquet prunes to probed lists via the pushed
+    list_id IN (...) filter when queries are few)."""
+    crows = spark.read.parquet(f"{path}/centroids.parquet").collect()
+    crows.sort(key=lambda r: r["list_id"])
+    cents = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in crows])
+    assigned = spark.read.parquet(f"{path}/lists.parquet")
+    probes = _probe_lists(queries, cents, nprobe, vec_col)
+    return _ivf_rank(assigned, probes, k)
