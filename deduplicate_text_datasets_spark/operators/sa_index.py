@@ -19,8 +19,9 @@ overlap guarantee (a query longer than overlap_bytes+1 would undercount
 boundary-straddling occurrences — the indexed query operators raise).
 
 The query operators run the same per-shard lookups as the live operators
-in suffix.py (suffix._shard_counts / _shard_positions / _shard_match_lens);
-only the source of each shard's (lo, own_hi, buf, sa) differs.
+in suffix.py (suffix._shard_counts / _shard_positions / _shard_match_lens),
+each one lockstep descent per shard for the whole query batch; only the
+source of each shard's (lo, own_hi, buf, sa) differs.
 
 ``buf`` is the shard's corpus bytes including the trailing overlap
 (HACKSIZE design, make_suffix_array.py:23,47); ``sa`` is the suffix array
@@ -121,7 +122,8 @@ def build_suffix_index(
     """documents -> suffix_index frame (one row per shard).
 
     The expensive part (per-shard SA construction) runs exactly once here;
-    every query operator below is a binary search over the stored arrays.
+    every query operator below is one batched descent over the stored
+    arrays per shard.
     """
     if "byte_start" not in docs.columns:
         # persisted: the offsets lineage feeds the total-bytes action AND
@@ -234,8 +236,9 @@ def find_training_data_indexed(
 ) -> DataFrame:
     """find-training-data (main.rs:730-805) against the prebuilt index:
     per query offset, the longest common prefix with any indexed suffix.
-    All probes of a query advance through the lockstep batched kernel
-    (suffix._batched_match_lens) — no per-probe Python binary search.
+    All probes of all queries advance through one lockstep descent per
+    shard (suffix._descend_match_lens), as count_occurrences_indexed's
+    prefix ranges do — no per-query or per-probe Python binary search.
 
     Note: match_len is a prefix-match statistic (not an occurrence count),
     so it needs no overlap-length guard — a cross-boundary match longer

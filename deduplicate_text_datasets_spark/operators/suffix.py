@@ -28,12 +28,17 @@ the overlap ownership rule (SURVEY.md §4.3). One per-shard lookup per query
 kind (_shard_counts, _shard_positions, _shard_match_lens) serves both the
 live operators here, which build each shard's SA in the same task
 (_shard_sa, the only SA builder), and the prebuilt index in sa_index.py.
+Each lookup answers a whole query batch with one lockstep descent of the
+shard's SA (_prefix_ranges for counts and positions, _descend_match_lens
+for match lengths): every probe of every query narrows its SA range in the
+same vectorized bisection steps, so a call pays no per-query Python
+search.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -658,11 +663,12 @@ def cluster_samples(
     The sample is read at the cluster head (min member position; the
     reference dumps the run's shared prefix, which is identical at every
     member). Extraction is an interval join of the head windows against
-    the doc offsets plus a per-cluster byte-assembly kernel — the window
-    may straddle documents (or contain separator bytes), exactly like the
-    reference's raw corpus reads.
+    the doc offsets, then one byte-assembly kernel per partition over the
+    join rows sorted by cluster, not one pandas call per cluster (about
+    2.5 ms each, and AQE may coalesce every cluster into one task) — the
+    window may straddle documents (or contain separator bytes), exactly
+    like the reference's raw corpus reads.
     """
-    from ..sources.corpus import doc_payload
     from .intervals import interval_join
 
     L = cfg.length_threshold
@@ -676,34 +682,61 @@ def cluster_samples(
     )
     hit = interval_join(ranges, docs_with_offsets)
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        start = int(pdf["start"].iloc[0])
-        end = int(pdf["end"].iloc[0])
-        buf = np.zeros(end - start, dtype=np.uint8)
-        for doc_id, byte_start, text in zip(
-            pdf["doc_id"], pdf["byte_start"], pdf["text"]
-        ):
-            payload = doc_payload(int(doc_id), text, cfg.with_separators)
-            ds, de = int(byte_start), int(byte_start) + len(payload)
-            a, b = max(ds, start), min(de, end)
-            if b > a:
-                buf[a - start : b - start] = np.frombuffer(
-                    payload, dtype=np.uint8
-                )[a - ds : b - ds]
-        return pd.DataFrame(
-            {
-                "cluster_id": [start],
-                "cluster_size": [int(pdf["cluster_size"].iloc[0])],
-                "sample": [buf.tobytes()],
-            }
-        )
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # batches are sorted by start within the partition; the last
+        # cluster of a batch may continue in the next, so it is carried
+        pend: list[pd.DataFrame] = []
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            s = pdf["start"].to_numpy()
+            tail = int(np.flatnonzero(s != s[-1])[-1]) + 1 if s[0] != s[-1] else 0
+            if tail:
+                yield _assemble_samples(
+                    pd.concat([*pend, pdf.iloc[:tail]]), cfg.with_separators
+                )
+                pend = []
+            pend.append(pdf.iloc[tail:])
+        if pend:
+            yield _assemble_samples(pd.concat(pend), cfg.with_separators)
 
     return (
         hit.select(
             "start", "end", "cluster_size", "doc_id", "byte_start", "text"
         )
-        .groupBy("start")
-        .applyInPandas(lambda pdf: assemble(pdf), CLUSTER_SAMPLE_SCHEMA)
+        .repartition("start")
+        .sortWithinPartitions("start")
+        .mapInPandas(kernel, CLUSTER_SAMPLE_SCHEMA)
+    )
+
+
+def _assemble_samples(pdf: pd.DataFrame, with_separators: bool) -> pd.DataFrame:
+    """Rows of whole clusters, sorted by start -> one (cluster_id,
+    cluster_size, sample) row per cluster: each doc row copies its overlap
+    with [start, end) into the cluster's slice of one flat buffer."""
+    from ..sources.corpus import doc_payload
+
+    start = pdf["start"].to_numpy(np.int64)
+    end = pdf["end"].to_numpy(np.int64)
+    head = np.flatnonzero(np.r_[True, start[1:] != start[:-1]])
+    width = end[head] - start[head]
+    base = np.cumsum(width) - width
+    row_base = np.repeat(base, np.diff(np.r_[head, len(start)])) - start
+    out = bytearray(int(width.sum()))
+    for i, (doc_id, byte_start, text) in enumerate(
+        zip(pdf["doc_id"], pdf["byte_start"], pdf["text"])
+    ):
+        payload = doc_payload(int(doc_id), text, with_separators)
+        ds = int(byte_start)
+        a, b = max(ds, int(start[i])), min(ds + len(payload), int(end[i]))
+        if b > a:
+            out[row_base[i] + a : row_base[i] + b] = payload[a - ds : b - ds]
+    return pd.DataFrame(
+        {
+            "cluster_id": start[head],
+            "cluster_size": pdf["cluster_size"].to_numpy(np.int64)[head],
+            "sample": [bytes(out[o : o + w]) for o, w in zip(base, width)],
+        }
     )
 
 
@@ -879,47 +912,6 @@ def suffix_array(buf: np.ndarray) -> np.ndarray:
     return order
 
 
-def _sa_compare(buf: np.ndarray, start: int, q: np.ndarray) -> int:
-    """Compare corpus suffix buf[start:] with query q lexicographically on
-    the first len(q) bytes: -1 suffix < q, 0 prefix-match, 1 suffix > q."""
-    seg = buf[start : start + len(q)]
-    if len(seg) < len(q):
-        qq = q[: len(seg)]
-        neq = np.nonzero(seg != qq)[0]
-        if len(neq) == 0:
-            return -1  # shorter suffix with matching prefix sorts first
-        i = neq[0]
-        return -1 if seg[i] < qq[i] else 1
-    neq = np.nonzero(seg != q)[0]
-    if len(neq) == 0:
-        return 0
-    i = neq[0]
-    return -1 if seg[i] < q[i] else 1
-
-
-def _sa_range(buf: np.ndarray, sa: np.ndarray, q: np.ndarray) -> tuple[int, int]:
-    """Double binary search -> [first, last) SA rows whose suffix starts
-    with q (count_occurances kernel, src/main.rs:286-366). Counts
-    overlapping occurrences by construction ("aaaa".count("aa") == 3,
-    main.rs:629-632)."""
-    lo, hi = 0, len(sa)
-    while lo < hi:  # first suffix >= q (prefix-match counts as >=)
-        mid = (lo + hi) // 2
-        if _sa_compare(buf, sa[mid], q) < 0:
-            lo = mid + 1
-        else:
-            hi = mid
-    first = lo
-    hi = len(sa)
-    while lo < hi:  # first suffix that is > q and not prefixed by q
-        mid = (lo + hi) // 2
-        if _sa_compare(buf, sa[mid], q) <= 0:
-            lo = mid + 1
-        else:
-            hi = mid
-    return first, lo
-
-
 QUERY_HITS_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.LongType(), False),
@@ -950,69 +942,365 @@ def _check_query_lengths(queries: list[tuple[int, bytes]], overlap) -> None:
         )
 
 
-def _query_arrays(queries: list[tuple[int, bytes]]) -> list[tuple[int, np.ndarray]]:
-    return [(int(qid), np.frombuffer(q, dtype=np.uint8)) for qid, q in queries]
+class QueryBatch(NamedTuple):
+    """One call's queries, packed once on the driver: ``raw`` holds every
+    query's bytes followed by a _CHUNK zero pad, query i at ``start[i]``,
+    so a lockstep descent addresses any probe of any query by one offset
+    into one buffer."""
+
+    qids: np.ndarray
+    raw: np.ndarray
+    start: np.ndarray
+    qlen: np.ndarray
+
+    def lanes(self) -> np.ndarray:
+        """Sentinel lanes of ``raw`` with every pad lane at 0, so a read
+        past a query's end resolves to the sentinel, as it does past the
+        end of a suffix."""
+        ext = _sentinel_ext(self.raw)
+        pad = (self.start + self.qlen)[:, None] + np.arange(_CHUNK)
+        ext[pad.ravel()] = 0
+        return ext
+
+
+def _query_arrays(queries: list[tuple[int, bytes]]) -> QueryBatch:
+    pad = bytes(_CHUNK)
+    qlen = np.array([len(q) for _, q in queries], dtype=np.int64)
+    return QueryBatch(
+        qids=np.array([int(qid) for qid, _ in queries], dtype=np.int64),
+        raw=np.frombuffer(b"".join(bytes(q) + pad for _, q in queries), np.uint8),
+        start=np.cumsum(qlen + _CHUNK) - (qlen + _CHUNK),
+        qlen=qlen,
+    )
+
+
+# --- lockstep suffix-array descent ----------------------------------------
+#
+# The reference runs find-training-data over EVERY token offset of large
+# query files with 176 threads (main.rs:778) and answers count-occurrences
+# from a prebuilt index in ~ms (README.md:98); a per-query (let alone
+# per-probe) Python binary search pays its fixed numpy cost per call at
+# that shape. Here ALL probes of ALL queries in a call advance together
+# through one lane-parallel binary search per shard: each step gathers
+# one 4-byte suffix chunk per probe and narrows every probe's SA range at
+# once. Chunks are 16-bit sentinel lanes (byte+1, 0 past the end) so a
+# suffix end never falsely matches a probe byte — exact even for
+# corpora/queries containing NUL bytes (packed-u16 token corpora have
+# them in every high byte < 256). At most _PROBE_BATCH probes descend
+# together, which bounds a descent's working set whatever the batch size.
+
+_CHUNK = 4  # bytes compared per descent level
+_PROBE_BATCH = 1 << 20  # probes (or SA rows, for owned starts) per pass
+_LCP_BLOCK = 1 << 20  # byte pairs compared per finish round
+_LCP_LOCKSTEP = 512  # bytes per pair matched in lockstep before a contiguous compare
+
+
+def _sentinel_ext(arr: np.ndarray) -> np.ndarray:
+    """uint16 lanes byte+1 with a trailing zero pad (reads past the end
+    of any suffix resolve to the 0 sentinel)."""
+    ext = np.zeros(len(arr) + _CHUNK, dtype=np.uint16)
+    np.add(arr, 1, out=ext[: len(arr)], dtype=np.uint16)
+    return ext
+
+
+def _chunk_at(ext: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    """Packed 4-lane chunk starting at each idx (clamped reads land in the
+    zero pad, i.e. the sentinel)."""
+    last = len(ext) - 1
+    v = np.zeros(len(idx), dtype=np.uint64)
+    for b in range(_CHUNK):
+        v = (v << np.uint64(16)) | ext[np.minimum(idx + b, last)]
+    return v
+
+
+def _lane_lcp(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Leading equal 16-bit lanes between packed chunks (0..4)."""
+    xor = x ^ y
+    cnt = np.zeros(len(x), dtype=np.int64)
+    alive = np.ones(len(x), dtype=bool)
+    for b in range(_CHUNK):
+        lane = (xor >> np.uint64(16 * (_CHUNK - 1 - b))) & np.uint64(0xFFFF)
+        alive &= lane == 0
+        cnt += alive
+    return cnt
+
+
+def _vbisect(
+    ext: np.ndarray,
+    sa: np.ndarray,
+    off: int,
+    lo: np.ndarray,
+    hi: np.ndarray,
+    pk: np.ndarray,
+    side: str,
+) -> np.ndarray:
+    """searchsorted of each probe chunk pk[i] within its own SA range
+    [lo[i], hi[i]) on the depth-``off`` suffix chunk — all probes bisect in
+    lockstep (each iteration is one vectorized gather+compare)."""
+    lo = lo.copy()
+    hi = hi.copy()
+    nsa = len(sa)
+    while True:
+        run = lo < hi
+        if not run.any():
+            return lo
+        mid = (lo + hi) >> 1
+        kv = _chunk_at(ext, sa[np.minimum(mid, nsa - 1)] + off)
+        go = (kv < pk) if side == "left" else (kv <= pk)
+        adv = run & go
+        lo = np.where(adv, mid + 1, lo)
+        hi = np.where(run & ~go, mid, hi)
+
+
+def _prefix_ranges(
+    ext: np.ndarray, sa: np.ndarray, qext: np.ndarray, start: np.ndarray,
+    qlen: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """[first, last) SA rows whose suffix starts with each query (the
+    count_occurances double binary search, src/main.rs:286-366), for every
+    query at once. Counts overlapping occurrences by construction
+    ("aaaa".count("aa") == 3, main.rs:629-632); an empty query gets an
+    empty range.
+
+    Per level every live query bisects left with its next chunk and right
+    with the same chunk whose lanes past the query end read 0xFFFF (above
+    any byte lane): the rows between are exactly the suffixes that extend
+    the matched prefix by the query's next <= 4 bytes. A query ends at its
+    last chunk or as soon as its range empties."""
+    m = len(start)
+    first = np.zeros(m, dtype=np.int64)
+    last = np.where(qlen > 0, len(sa), 0).astype(np.int64)
+    for s in range(0, m, _PROBE_BATCH):
+        act = s + np.nonzero(qlen[s : s + _PROBE_BATCH] > 0)[0]
+        off = 0
+        while len(act):
+            rem = qlen[act] - off
+            pk = _chunk_at(qext, start[act] + off)
+            fill = np.clip(_CHUNK - rem, 0, _CHUNK).astype(np.uint64) * np.uint64(16)
+            pk_hi = pk | ((np.uint64(1) << fill) - np.uint64(1))
+            l2 = _vbisect(ext, sa, off, first[act], last[act], pk, "left")
+            r2 = _vbisect(ext, sa, off, l2, last[act], pk_hi, "right")
+            first[act] = l2
+            last[act] = r2
+            act = act[(rem > _CHUNK) & (r2 > l2)]
+            off += _CHUNK
+    return first, last
+
+
+def _lcp_many(
+    buf: np.ndarray, a: np.ndarray, q: np.ndarray, b: np.ndarray, lim: np.ndarray
+) -> np.ndarray:
+    """Longest common prefix of buf[a[i]:] and q[b[i]:], capped at lim[i]
+    (callers cap it at the bytes left on both sides). All pairs compare
+    blocks in lockstep and a pair leaves at its first mismatch; the block
+    doubles each round while all pairs together compare at most
+    _LCP_BLOCK bytes. A pair still matching after _LCP_LOCKSTEP bytes
+    finishes with one contiguous compare: a gathered byte costs tens of
+    times a contiguous one, so past a few hundred bytes (a whole-document
+    duplicate) the per-pair call is the cheaper side."""
+    out = np.zeros(len(a), dtype=np.int64)
+    act = np.nonzero(lim > 0)[0]
+    seen, w = 0, 8  # every active pair has matched its first `seen` bytes
+    while len(act) and seen < _LCP_LOCKSTEP:
+        w = max(1, min(2 * w, _LCP_BLOCK // len(act)))
+        cols = np.arange(w)
+        k = np.minimum(lim[act] - seen, w)
+        ia = np.minimum(a[act, None] + seen + cols, len(buf) - 1)
+        ib = np.minimum(b[act, None] + seen + cols, len(q) - 1)
+        stop = (buf[ia] != q[ib]) | (cols >= k[:, None])
+        first = np.where(stop.any(axis=1), stop.argmax(axis=1), w)
+        out[act] = seen + first
+        seen += w
+        act = act[(first == w) & (out[act] < lim[act])]
+    for i in act:
+        x, y, m = a[i] + seen, b[i] + seen, lim[i] - seen
+        neq = np.flatnonzero(buf[x : x + m] != q[y : y + m])
+        out[i] = seen + (neq[0] if len(neq) else m)
+    return out
+
+
+def _descend_match_lens(
+    buf: np.ndarray, ext: np.ndarray, sa: np.ndarray, qraw: np.ndarray,
+    qext: np.ndarray, gpos: np.ndarray, qlen: np.ndarray,
+) -> np.ndarray:
+    """For each probe (the qlen[i] bytes of qraw at gpos[i]), the longest
+    common prefix with ANY suffix of buf: max_j lcp(buf[sa[j]:], probe).
+
+    Per descent level d the surviving probes (those matching the first
+    4*d bytes of some suffix) narrow their tie range with two lockstep
+    bisections; a probe whose range empties takes its final partial-chunk
+    LCP from the two suffixes adjacent to its insertion point (sorted
+    order makes common-prefix length unimodal around it). Work per level
+    is O(active * log n) gathers, and the active set shrinks to just the
+    long-match probes.
+    """
+    n = len(sa)
+    m = len(gpos)
+    best = np.zeros(m, dtype=np.int64)
+    lo = np.zeros(m, dtype=np.int64)
+    hi = np.full(m, n, dtype=np.int64)
+    resolved = np.zeros(m, dtype=bool)
+    d = 0
+    while not resolved.all():
+        off = _CHUNK * d
+        rem = qlen - off
+        # probe exhausted with a live range => some suffix matched all of it
+        done = (~resolved) & (rem <= 0)
+        best[done] = qlen[done]
+        resolved |= done
+        act = np.nonzero(~resolved)[0]
+        if len(act) == 0:
+            break
+        pk = _chunk_at(qext, gpos[act] + off)
+        l2 = _vbisect(ext, sa, off, lo[act], hi[act], pk, "left")
+        r2 = _vbisect(ext, sa, off, l2, hi[act], pk, "right")
+        empty = l2 == r2
+        if empty.any():
+            ei = act[empty]
+            le = l2[empty]
+            pke = pk[empty]
+            cand = np.zeros(len(ei), dtype=np.int64)
+            for dj in (-1, 0):
+                j = le + dj
+                ok = (j >= lo[ei]) & (j < hi[ei])
+                sv = _chunk_at(ext, sa[np.where(ok, j, 0)] + off)
+                ll = np.minimum(_lane_lcp(pke, sv), rem[ei])
+                cand = np.maximum(cand, np.where(ok, ll, 0))
+            best[ei] = off + cand
+            resolved[ei] = True
+        ni = act[~empty]
+        lo[ni] = l2[~empty]
+        hi[ni] = r2[~empty]
+        # Narrow-range early-out: <= 2 candidate suffixes left. Finish them
+        # with one blockwise LCP scan instead of descending 4 bytes per
+        # round — a whole-document duplicate (match_len ~ doc bytes) would
+        # otherwise cost len/4 lockstep rounds. The max-LCP suffix is
+        # inside [lo, hi): anything outside matches < base bytes.
+        base = _CHUNK * (d + 1)
+        fin = ni[((hi[ni] - lo[ni]) <= 2) & (qlen[ni] > base)]
+        if len(fin):
+            cand = np.zeros(len(fin), dtype=np.int64)
+            for dj in (0, 1):
+                j = lo[fin] + dj
+                ok = j < hi[fin]
+                a = sa[np.where(ok, j, 0)] + base
+                lim = np.where(ok, np.minimum(qlen[fin] - base, len(buf) - a), 0)
+                ll = _lcp_many(buf, a, qraw, gpos[fin] + base, lim)
+                cand = np.maximum(cand, ll)
+            best[fin] = base + cand
+            resolved[fin] = True
+        d += 1
+    return best
+
+
+def _match_lens(
+    buf: np.ndarray, sa: np.ndarray, qraw: np.ndarray, qext: np.ndarray,
+    gpos: np.ndarray, qlen: np.ndarray,
+) -> np.ndarray:
+    """_descend_match_lens over _PROBE_BATCH probes at a time."""
+    best = np.zeros(len(gpos), dtype=np.int64)
+    if len(sa) == 0:
+        return best
+    ext = _sentinel_ext(buf)
+    for s in range(0, len(gpos), _PROBE_BATCH):
+        t = slice(s, s + _PROBE_BATCH)
+        best[t] = _descend_match_lens(buf, ext, sa, qraw, qext, gpos[t], qlen[t])
+    return best
+
+
+def _batched_match_lens(
+    buf: np.ndarray, sa: np.ndarray, q: np.ndarray, qpos: np.ndarray,
+    probe_cap: int,
+) -> np.ndarray:
+    """For each probe (suffix of q starting at qpos[i], capped), the
+    longest common prefix with ANY suffix of buf. Exact: equals
+    max_j lcp(buf[sa[j]:], q[qpos[i]:qpos[i]+cap]). The one-query case of
+    the batched descent."""
+    batch = _query_arrays([(0, q.tobytes())])
+    qpos = qpos.astype(np.int64)
+    qlen = np.maximum(np.minimum(len(q) - qpos, probe_cap), 0)
+    return _match_lens(buf, sa, batch.raw, batch.lanes(), qpos, qlen)
 
 
 # --- per-shard lookups -----------------------------------------------------
 #
-# One function per query kind, each over one shard's (lo, own_hi, buf, sa):
-# the live operators below feed them a suffix array built in the same task
-# (_shard_sa), the sa_index operators one read from the prebuilt index.
+# One function per query kind, each over one shard's (lo, own_hi, buf, sa)
+# and a whole QueryBatch: one lockstep descent per shard answers every
+# query of the call. The live operators below feed them a suffix array
+# built in the same task (_shard_sa), the sa_index operators one read from
+# the prebuilt index.
 
 
 def _owned_starts(
-    lo: int, own_hi: int, buf: np.ndarray, sa: np.ndarray, q: np.ndarray
-) -> np.ndarray:
-    """Global start offsets of q's occurrences that this shard owns."""
-    first, last = _sa_range(buf, sa, q)
-    starts = sa[first:last] + lo
-    return starts[starts < own_hi]
-
-
-def _shard_counts(lo, own_hi, buf, sa, qarr) -> pd.DataFrame:
-    """(query_id, cnt, first_pos) per query with an owned occurrence."""
-    rows = []
-    for qid, q in qarr:
-        if len(q) == 0:
-            continue
-        owned = _owned_starts(lo, own_hi, buf, sa, q)
-        if len(owned):
-            rows.append((qid, int(len(owned)), int(owned.min())))
-    return pd.DataFrame(rows, columns=["query_id", "cnt", "first_pos"]).astype(
-        {"query_id": "int64", "cnt": "int64", "first_pos": "int64"}
-    )
-
-
-def _shard_positions(lo, own_hi, buf, sa, qarr) -> pd.DataFrame:
-    """(query_id, pos) for every owned occurrence."""
-    out_q: list[int] = []
-    out_p: list[int] = []
-    for qid, q in qarr:
-        if len(q) == 0:
-            continue
-        owned = _owned_starts(lo, own_hi, buf, sa, q)
-        out_q.extend([qid] * len(owned))
-        out_p.extend(owned.tolist())
-    return pd.DataFrame({"query_id": out_q, "pos": out_p}).astype(
-        {"query_id": "int64", "pos": "int64"}
-    )
-
-
-def _shard_match_lens(lo, own_hi, buf, sa, qarr, probe_cap, step) -> pd.DataFrame:
-    """(query_id, qpos, match_len): per query offset, the longest prefix
-    of that query suffix occurring anywhere in the shard buffer."""
-    frames = []
-    for qid, q in qarr:
-        qpos = np.arange(0, len(q), step, dtype=np.int64)
-        lens = _batched_match_lens(buf, sa, q, qpos, probe_cap)
-        frames.append(
-            pd.DataFrame({"query_id": qid, "qpos": qpos, "match_len": lens})
+    lo: int, own_hi: int, sa: np.ndarray, first: np.ndarray, last: np.ndarray
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(query index, global start) of every owned occurrence — the SA rows
+    [first[i], last[i]) whose start this shard owns — in query order, in
+    pieces of about _PROBE_BATCH rows (one query's rows stay in one
+    piece)."""
+    n = last - first
+    ends = np.cumsum(n)
+    i = 0
+    while i < len(n):
+        before = ends[i] - n[i]
+        j = max(i + 1, int(np.searchsorted(ends, before + _PROBE_BATCH, "right")))
+        cnt = n[i:j]
+        qix = np.repeat(np.arange(i, j), cnt)
+        rows = np.arange(ends[j - 1] - before) + np.repeat(
+            first[i:j] - (ends[i:j] - cnt - before), cnt
         )
-    if not frames:
-        cols = ("query_id", "qpos", "match_len")
-        return pd.DataFrame({c: np.empty(0, np.int64) for c in cols})
-    return pd.concat(frames, ignore_index=True)
+        starts = sa[rows] + lo
+        keep = starts < own_hi
+        yield qix[keep], starts[keep]
+        i = j
+
+
+def _shard_ranges(buf, sa, batch: QueryBatch) -> tuple[np.ndarray, np.ndarray]:
+    return _prefix_ranges(
+        _sentinel_ext(buf), sa, batch.lanes(), batch.start, batch.qlen
+    )
+
+
+def _shard_counts(lo, own_hi, buf, sa, batch: QueryBatch) -> pd.DataFrame:
+    """(query_id, cnt, first_pos) per query with an owned occurrence."""
+    cnt = np.zeros(len(batch.qids), dtype=np.int64)
+    first_pos = np.zeros(len(batch.qids), dtype=np.int64)
+    for qix, starts in _owned_starts(lo, own_hi, sa, *_shard_ranges(buf, sa, batch)):
+        if len(qix):
+            heads = np.flatnonzero(np.r_[True, qix[1:] != qix[:-1]])
+            cnt[qix[heads]] = np.diff(np.r_[heads, len(qix)])
+            first_pos[qix[heads]] = np.minimum.reduceat(starts, heads)
+    hit = cnt > 0
+    return pd.DataFrame(
+        {"query_id": batch.qids[hit], "cnt": cnt[hit], "first_pos": first_pos[hit]}
+    )
+
+
+def _shard_positions(lo, own_hi, buf, sa, batch: QueryBatch) -> pd.DataFrame:
+    """(query_id, pos) for every owned occurrence."""
+    pieces = list(_owned_starts(lo, own_hi, sa, *_shard_ranges(buf, sa, batch)))
+    qix = np.concatenate([p[0] for p in pieces]) if pieces else np.empty(0, np.int64)
+    pos = np.concatenate([p[1] for p in pieces]) if pieces else np.empty(0, np.int64)
+    return pd.DataFrame({"query_id": batch.qids[qix], "pos": pos})
+
+
+def _shard_match_lens(
+    lo, own_hi, buf, sa, batch: QueryBatch, probe_cap, step
+) -> pd.DataFrame:
+    """(query_id, qpos, match_len): per query offset (every ``step``-th),
+    the longest prefix of that query suffix occurring anywhere in the
+    shard buffer."""
+    nprobe = -(-batch.qlen // step)
+    qix = np.repeat(np.arange(len(nprobe)), nprobe)
+    first = np.repeat(np.cumsum(nprobe) - nprobe, nprobe)
+    qpos = (np.arange(len(qix)) - first) * step
+    qlen = np.minimum(batch.qlen[qix] - qpos, probe_cap)
+    lens = _match_lens(
+        buf, sa, batch.raw, batch.lanes(), batch.start[qix] + qpos, qlen
+    )
+    return pd.DataFrame(
+        {"query_id": batch.qids[qix], "qpos": qpos, "match_len": lens}
+    )
 
 
 def _per_shard(shards, fn, *args) -> Iterator[pd.DataFrame]:
@@ -1116,164 +1404,6 @@ MATCH_LEN_SCHEMA = T.StructType(
 )
 
 
-def _lcp(a: np.ndarray, b: np.ndarray) -> int:
-    m = min(len(a), len(b))
-    if m == 0:
-        return 0
-    neq = np.nonzero(a[:m] != b[:m])[0]
-    return int(neq[0]) if len(neq) else m
-
-
-# --- batched match-length kernel (vectorized find-training-data) ----------
-#
-# The reference runs find-training-data over EVERY token offset of large
-# query files with 176 threads (main.rs:778); a per-probe Python binary
-# search (one numpy allocation per comparison) is orders slower at that
-# shape. Here ALL probes advance together through a lane-parallel binary
-# search: each step gathers one 4-byte suffix chunk per probe and narrows
-# every probe's SA range at once. Chunks are 16-bit sentinel lanes
-# (byte+1, 0-padded) so a suffix end never falsely matches a probe byte —
-# exact even for corpora/queries containing NUL bytes (packed-u16 token
-# corpora have them in every high byte < 256).
-
-_CHUNK = 4  # bytes compared per descent level
-
-
-def _sentinel_ext(arr: np.ndarray) -> np.ndarray:
-    """uint64 lanes byte+1 with trailing zero pad (reads past the end of
-    any suffix resolve to the 0 sentinel)."""
-    return np.concatenate(
-        [arr.astype(np.uint64) + np.uint64(1), np.zeros(_CHUNK, dtype=np.uint64)]
-    )
-
-
-def _chunk_at(ext: np.ndarray, idx: np.ndarray) -> np.ndarray:
-    """Packed 4-lane chunk starting at each idx (clamped reads land in the
-    zero pad, i.e. the sentinel)."""
-    last = len(ext) - 1
-    v = np.zeros(len(idx), dtype=np.uint64)
-    for b in range(_CHUNK):
-        v = (v << np.uint64(16)) | ext[np.minimum(idx + b, last)]
-    return v
-
-
-def _lane_lcp(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Leading equal 16-bit lanes between packed chunks (0..4)."""
-    xor = x ^ y
-    cnt = np.zeros(len(x), dtype=np.int64)
-    alive = np.ones(len(x), dtype=bool)
-    for b in range(_CHUNK):
-        lane = (xor >> np.uint64(16 * (_CHUNK - 1 - b))) & np.uint64(0xFFFF)
-        alive &= lane == 0
-        cnt += alive
-    return cnt
-
-
-def _vbisect(
-    ext: np.ndarray,
-    sa: np.ndarray,
-    off: int,
-    lo: np.ndarray,
-    hi: np.ndarray,
-    pk: np.ndarray,
-    side: str,
-) -> np.ndarray:
-    """searchsorted of each probe chunk pk[i] within its own SA range
-    [lo[i], hi[i]) on the depth-``off`` suffix chunk — all probes bisect in
-    lockstep (each iteration is one vectorized gather+compare)."""
-    lo = lo.copy()
-    hi = hi.copy()
-    nsa = len(sa)
-    while True:
-        run = lo < hi
-        if not run.any():
-            return lo
-        mid = (lo + hi) >> 1
-        kv = _chunk_at(ext, sa[np.minimum(mid, nsa - 1)] + off)
-        go = (kv < pk) if side == "left" else (kv <= pk)
-        adv = run & go
-        lo = np.where(adv, mid + 1, lo)
-        hi = np.where(run & ~go, mid, hi)
-
-
-def _batched_match_lens(
-    buf: np.ndarray, sa: np.ndarray, q: np.ndarray, qpos: np.ndarray,
-    probe_cap: int,
-) -> np.ndarray:
-    """For each probe (suffix of q starting at qpos[i], capped), the
-    longest common prefix with ANY suffix of buf. Exact: equals
-    max_j lcp(buf[sa[j]:], q[qpos[i]:qpos[i]+cap]).
-
-    Per descent level d the surviving probes (those matching the first
-    4*d bytes of some suffix) narrow their tie range with two lockstep
-    bisections; a probe whose range empties takes its final partial-chunk
-    LCP from the two suffixes adjacent to its insertion point (sorted
-    order makes common-prefix length unimodal around it). Work per level
-    is O(active * log n) gathers, and the active set shrinks to just the
-    long-match probes.
-    """
-    n = len(sa)
-    m = len(qpos)
-    best = np.zeros(m, dtype=np.int64)
-    if m == 0 or n == 0:
-        return best
-    ext = _sentinel_ext(buf)
-    qext = _sentinel_ext(q)
-    qpos = qpos.astype(np.int64)
-    qlen = np.maximum(np.minimum(len(q) - qpos, probe_cap), 0)
-    lo = np.zeros(m, dtype=np.int64)
-    hi = np.full(m, n, dtype=np.int64)
-    resolved = np.zeros(m, dtype=bool)
-    d = 0
-    while not resolved.all():
-        off = _CHUNK * d
-        rem = qlen - off
-        # probe exhausted with a live range => some suffix matched all of it
-        done = (~resolved) & (rem <= 0)
-        best[done] = qlen[done]
-        resolved |= done
-        act = np.nonzero(~resolved)[0]
-        if len(act) == 0:
-            break
-        pk = _chunk_at(qext, qpos[act] + off)
-        l2 = _vbisect(ext, sa, off, lo[act], hi[act], pk, "left")
-        r2 = _vbisect(ext, sa, off, lo[act], hi[act], pk, "right")
-        empty = l2 == r2
-        if empty.any():
-            ei = act[empty]
-            le = l2[empty]
-            pke = pk[empty]
-            cand = np.zeros(len(ei), dtype=np.int64)
-            for dj in (-1, 0):
-                j = le + dj
-                ok = (j >= lo[ei]) & (j < hi[ei])
-                sv = _chunk_at(ext, sa[np.where(ok, j, 0)] + off)
-                ll = np.minimum(_lane_lcp(pke, sv), rem[ei])
-                cand = np.maximum(cand, np.where(ok, ll, 0))
-            best[ei] = off + cand
-            resolved[ei] = True
-        ni = act[~empty]
-        lo[ni] = l2[~empty]
-        hi[ni] = r2[~empty]
-        # Narrow-range early-out: <= 2 candidate suffixes left. Finish each
-        # with one flat numpy LCP scan instead of descending 4 bytes per
-        # round — a whole-document duplicate (match_len ~ doc bytes) would
-        # otherwise cost len/4 lockstep rounds. The max-LCP suffix is
-        # inside [lo, hi): anything outside matches < base bytes.
-        base = _CHUNK * (d + 1)
-        for i in ni[(hi[ni] - lo[ni]) <= 2]:
-            if base >= qlen[i]:
-                continue  # the rem<=0 branch resolves it next round
-            qs = q[qpos[i] + base : qpos[i] + qlen[i]]
-            bst = 0
-            for j in range(lo[i], hi[i]):
-                bst = max(bst, _lcp(buf[sa[j] + base :], qs))
-            best[i] = base + bst
-            resolved[i] = True
-        d += 1
-    return best
-
-
 def find_training_data(
     docs: DataFrame,
     queries: list[tuple[int, bytes]],
@@ -1287,8 +1417,8 @@ def find_training_data(
     the longest prefix of that query suffix occurring anywhere in the
     corpus, probe-capped (main.rs:525-526 cap 65536).
 
-    Per shard: binary-search the query suffix in the shard SA, LCP against
-    both neighbors; global answer = max over shards
+    Per shard: every query suffix descends the shard SA in one lockstep
+    batch, LCP against the neighbors of its insertion point; global answer = max over shards
     (groupBy(query_id, qpos).max — partial agg first).
 
     Cross-shard caveat (documented approximation, same class as the
@@ -1319,7 +1449,7 @@ def find_positions(
     total: int | None = None,
 ) -> DataFrame:
     """All occurrence positions of each query (SuffixTable::positions,
-    src/table.rs:250-307): the same per-shard double binary search as
+    src/table.rs:250-307): the same per-shard prefix-range descent as
     count_occurrences, emitting every owned start offset."""
     _check_query_lengths(queries, cfg.overlap_bytes)
     return _live_sa_query(

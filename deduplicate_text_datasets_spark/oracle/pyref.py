@@ -179,6 +179,56 @@ def longest_match_lengths(corpus: bytes, query: bytes, cap: int = 65536) -> list
     return out
 
 
+def _lcp(a: np.ndarray, b: np.ndarray) -> int:
+    m = min(len(a), len(b))
+    if m == 0:
+        return 0
+    neq = np.nonzero(a[:m] != b[:m])[0]
+    return int(neq[0]) if len(neq) else m
+
+
+def _sa_compare(buf: np.ndarray, start: int, q: np.ndarray) -> int:
+    """Compare corpus suffix buf[start:] with query q lexicographically on
+    the first len(q) bytes: -1 suffix < q, 0 prefix-match, 1 suffix > q."""
+    seg = buf[start : start + len(q)]
+    if len(seg) < len(q):
+        qq = q[: len(seg)]
+        neq = np.nonzero(seg != qq)[0]
+        if len(neq) == 0:
+            return -1  # shorter suffix with matching prefix sorts first
+        i = neq[0]
+        return -1 if seg[i] < qq[i] else 1
+    neq = np.nonzero(seg != q)[0]
+    if len(neq) == 0:
+        return 0
+    i = neq[0]
+    return -1 if seg[i] < q[i] else 1
+
+
+def _sa_range(buf: np.ndarray, sa: np.ndarray, q: np.ndarray) -> tuple[int, int]:
+    """Double binary search -> [first, last) SA rows whose suffix starts
+    with q (count_occurances kernel, src/main.rs:286-366), one query at a
+    time: the test oracle for suffix._prefix_ranges. Counts overlapping
+    occurrences by construction ("aaaa".count("aa") == 3,
+    main.rs:629-632)."""
+    lo, hi = 0, len(sa)
+    while lo < hi:  # first suffix >= q (prefix-match counts as >=)
+        mid = (lo + hi) // 2
+        if _sa_compare(buf, sa[mid], q) < 0:
+            lo = mid + 1
+        else:
+            hi = mid
+    first = lo
+    hi = len(sa)
+    while lo < hi:  # first suffix that is > q and not prefixed by q
+        mid = (lo + hi) // 2
+        if _sa_compare(buf, sa[mid], q) <= 0:
+            lo = mid + 1
+        else:
+            hi = mid
+    return first, lo
+
+
 def _match_lens_loop(
     buf: np.ndarray, sa: np.ndarray, q: np.ndarray, qpos: np.ndarray,
     probe_cap: int,
@@ -186,7 +236,6 @@ def _match_lens_loop(
     """Naive per-probe binary-search kernel over a suffix array (the
     pre-r03 implementation): the test oracle for suffix._batched_match_lens
     on inputs too large for ``longest_match_lengths``."""
-    from ..operators.suffix import _lcp, _sa_compare
 
     out = np.zeros(len(qpos), dtype=np.int64)
     for ix, i in enumerate(qpos):

@@ -472,3 +472,133 @@ def test_prefilter_pass2_ships_only_candidates(spark, small_docs, small_pdf):
     assert len(got) < len(mk), "fixture has no singleton windows? test is vacuous"
     bc.destroy()
     spark.catalog.clearCache()
+
+
+# --- batched suffix-array descent ------------------------------------------
+
+
+def _descent_shard():
+    """One shard: separator-framed docs with repeats, NUL and 0xff bytes,
+    owned range cut short of the buffer end (the trailing overlap)."""
+    rng = np.random.RandomState(17)
+    texts = [b"the cat sat on the mat. " * 3, b"a\x00b\xff\xffc" * 5, b"aaaaaaaa"]
+    texts += [rng.bytes(rng.randint(5, 90)) for _ in range(12)]
+    texts += [texts[0][:70], b"zz\x00\x00zz"]
+    corpus, _ = pyref.build_corpus(texts, with_separators=True)
+    buf = np.frombuffer(corpus, np.uint8)
+    return corpus, buf, suffix_array(buf), 5000, 5000 + len(buf) - 40
+
+
+def _descent_queries(corpus):
+    rng = np.random.RandomState(5)
+    qs = [b"", b"\x00", b"\xff", b"\xff\xff", b"a\x00b\xff", b"aa", b"aaaa"]
+    qs += [corpus[-k:] for k in (1, 3, 9, 70)]  # the shard's tail
+    for n in list(range(1, 10)) + [63, 64, 65, 77, 100]:
+        at = rng.randint(0, len(corpus) - n)
+        qs.append(corpus[at : at + n])
+        qs.append(corpus[at : at + n - 1] + b"Q")  # absent, mostly
+    qs += [b"QQQQ", b"the cat sat on the mat. the cat", b"absent" * 12]
+    return [(3 * i + 2, q) for i, q in enumerate(qs)]
+
+
+def _check_counts_positions(corpus, buf, sa, lo, own_hi, queries):
+    from deduplicate_text_datasets_spark.operators.suffix import (
+        _query_arrays,
+        _shard_counts,
+        _shard_positions,
+    )
+
+    batch = _query_arrays(queries)
+    counts = _shard_counts(lo, own_hi, buf, sa, batch)
+    got_counts = {
+        int(r.query_id): (int(r.cnt), int(r.first_pos))
+        for r in counts.itertuples()
+    }
+    pos = _shard_positions(lo, own_hi, buf, sa, batch)
+    got_pos = {}
+    for qid, p in zip(pos["query_id"], pos["pos"]):
+        got_pos.setdefault(int(qid), []).append(int(p))
+    want_counts, want_pos = {}, {}
+    for qid, q in queries:
+        if not q:
+            continue
+        first, last = pyref._sa_range(buf, sa, np.frombuffer(q, np.uint8))
+        owned = sorted(p + lo for p in sa[first:last] if p + lo < own_hi)
+        scan, at = [], corpus.find(q)
+        while at != -1:  # overlapping occurrences
+            if at + lo < own_hi:
+                scan.append(at + lo)
+            at = corpus.find(q, at + 1)
+        assert owned == scan, qid
+        if owned:
+            want_counts[qid] = (len(owned), owned[0])
+            want_pos[qid] = owned
+    assert got_counts == want_counts
+    assert {q: sorted(p) for q, p in got_pos.items()} == want_pos
+    assert len(want_counts) > 10 and len(want_counts) < len(queries) - 3
+
+
+def test_batched_prefix_ranges_counts_and_positions():
+    """One lockstep prefix-range descent answers a whole query batch
+    exactly as the per-query double binary search and a brute-force
+    overlapping scan do: partial chunks, absent and empty queries, NUL and
+    0xff bytes, and queries ending at the shard's last byte."""
+    corpus, buf, sa, lo, own_hi = _descent_shard()
+    _check_counts_positions(corpus, buf, sa, lo, own_hi, _descent_queries(corpus))
+
+
+def _check_match_lens(corpus, buf, sa, queries):
+    from deduplicate_text_datasets_spark.oracle.pyref import _match_lens_loop
+    from deduplicate_text_datasets_spark.operators.suffix import (
+        _query_arrays,
+        _shard_match_lens,
+    )
+
+    batch = _query_arrays(queries)
+    for cap, step in ((65536, 1), (7, 3), (64, 2)):
+        got = _shard_match_lens(0, len(buf), buf, sa, batch, cap, step)
+        for qid, q in queries:
+            qa = np.frombuffer(q, np.uint8)
+            qpos = np.arange(0, len(qa), step, dtype=np.int64)
+            rows = got[got["query_id"] == qid]
+            assert rows["qpos"].tolist() == qpos.tolist()
+            want = _match_lens_loop(buf, sa, qa, qpos, cap)
+            assert np.array_equal(rows["match_len"].to_numpy(), want), (qid, cap)
+
+
+def test_batched_match_lens_query_batch():
+    """A 40-query batch in one descent equals the per-probe loop, at
+    several (probe_cap, step), with queries that run past the buffer end
+    and whole-document matches (the blockwise finish)."""
+    corpus, buf, sa, _, _ = _descent_shard()
+    rng = np.random.RandomState(9)
+    queries = []
+    for qid in range(40):
+        kind = qid % 4
+        if kind == 0:  # runs past the buffer end
+            q = corpus[-rng.randint(1, 60) :] + rng.bytes(5)
+        elif kind == 1:  # a long in-corpus match
+            at = rng.randint(0, len(corpus) - 150)
+            q = corpus[at : at + rng.randint(20, 150)] + b"Q"
+        elif kind == 2:
+            q = rng.bytes(rng.randint(0, 30))
+        else:
+            q = b"the cat sat on the mat. " * 4 + b"\x00\xff"
+        queries.append((qid, q))
+    _check_match_lens(corpus, buf, sa, queries)
+
+
+def test_batched_descent_spans_probe_chunks(monkeypatch):
+    """Batches larger than one descent's probe cap run as several chunks,
+    finish rounds narrower than one long match, and matches longer than
+    the lockstep finish (the contiguous compare) give the same answers."""
+    from deduplicate_text_datasets_spark.operators import suffix
+
+    monkeypatch.setattr(suffix, "_PROBE_BATCH", 7)
+    monkeypatch.setattr(suffix, "_LCP_BLOCK", 40)
+    monkeypatch.setattr(suffix, "_LCP_LOCKSTEP", 24)
+    corpus, buf, sa, lo, own_hi = _descent_shard()
+    queries = _descent_queries(corpus)
+    _check_counts_positions(corpus, buf, sa, lo, own_hi, queries)
+    long = [(998, corpus[10:120] + b"Q" + corpus[121:200]), (999, corpus[10:300])]
+    _check_match_lens(corpus, buf, sa, queries[:12] + long)

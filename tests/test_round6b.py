@@ -370,7 +370,7 @@ def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
     candidate pairs over the verify guard log verify's veto."""
     import logging
 
-    from deduplicate_text_datasets_spark.plans.caching import PLACEMENT_LOG
+    from deduplicate_text_datasets_spark.plans.caching import PLACEMENT_LOG, cache_scope
     from deduplicate_text_datasets_spark.plans.pipeline import neardup_clusters
 
     def lsh_records():
@@ -380,19 +380,22 @@ def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
 
     d = _docs(spark)
     with caplog.at_level(logging.INFO, logger=PLACEMENT_LOG):
-        neardup_clusters(d, EngineConfig())
+        with cache_scope():
+            neardup_clusters(d, EngineConfig())
         (rec,) = lsh_records()
         assert rec.placement == "driver" and 0 < rec.rows <= rec.guard
         caplog.clear()
         monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_MAX", "0")
-        neardup_clusters(d, EngineConfig())
+        with cache_scope():
+            neardup_clusters(d, EngineConfig())
         (rec,) = lsh_records()
         assert rec.placement == "distributed"
         assert rec.rows is None and rec.guard == 0
         caplog.clear()
         monkeypatch.delenv("SPARK_GRAFT_LSH_DRIVER_MAX")
         monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", "1")
-        neardup_clusters(d, EngineConfig())
+        with cache_scope():
+            neardup_clusters(d, EngineConfig())
         probed, vetoed = lsh_records()
         assert probed.placement == "driver"
         assert vetoed.placement == "distributed" and vetoed.guard == 1
@@ -400,7 +403,8 @@ def test_placement_log_records_lsh_decision(spark, monkeypatch, caplog):
         caplog.clear()
         monkeypatch.delenv("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX")
         monkeypatch.setenv("SPARK_GRAFT_VERIFY_DRIVER_MAX", "1")
-        neardup_clusters(d, EngineConfig())
+        with cache_scope():
+            neardup_clusters(d, EngineConfig())
         lsh, verify = [
             r
             for r in caplog.records
