@@ -53,4 +53,53 @@ def _tune_allocator() -> None:
         pass
 
 
+def _gate_zip_refresh() -> None:
+    """Make a zipimporter re-read its archive's directory only when the
+    archive changed on disk.
+
+    Before every task, ``pyspark.worker.main`` runs ``setup_spark_files``,
+    which ends in ``importlib.invalidate_caches()``. On CPython 3.10-3.12
+    ``zipimporter.invalidate_caches`` re-parses the archive's whole
+    central directory, and a worker holds one zipimporter per imported
+    package directory of pyspark.zip (16 importers x 1,328 entries with
+    Spark 4.1.2). Measured on 4 cores: that refresh was 0.86 s of a
+    profiled 1.0 s ``worker.main``; a trivial task on a reused worker
+    burned 0.15-0.30 s of CPU, and an index-lookup count stage's executor
+    run time fell from 1,217 ms to 445 ms with this gate.
+
+    The gate stamps each importer with ``os.stat`` of its archive
+    (mtime_ns, size, inode) at each refresh and skips the refresh while
+    the stamp is unchanged, so an archive that was rewritten or replaced
+    is still re-read. The package is imported in a Python worker while
+    its first task's command is unpickled, after that task's refresh,
+    and importers created before the install carry no stamp: the first
+    two tasks of each fresh worker still pay, later ones do not.
+    No-op elsewhere: on 3.13+ the method only drops the cache entry.
+    """
+    import os
+    import sys
+    import zipimport
+
+    if not (3, 10) <= sys.version_info[:2] < (3, 13):
+        return
+    refresh = zipimport.zipimporter.invalidate_caches
+    if getattr(refresh, "_stat_gated", False):  # re-import or reload
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+            refresh(self)
+            self._archive_stamp = stamp
+
+    invalidate_caches._stat_gated = True
+    invalidate_caches.__wrapped__ = refresh
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 _tune_allocator()
+_gate_zip_refresh()

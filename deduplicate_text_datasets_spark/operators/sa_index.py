@@ -30,10 +30,10 @@ the reference's width-compressed pointer encoding (ceil(log2 n / 8)
 bytes, main.rs:571) quantized to 4/8 bytes; readers infer the width from
 len(sa)/len(buf), so pre-round-6 int64 indexes stay readable.
 
-Scale note: a row carries ~9 bytes per corpus byte (text + 8-byte SA), so
-``shard_bytes`` bounds the Arrow batch per row. Index builds should use
-shard_bytes <= 32 MiB (~300 MB/row) to stay well inside Arrow/parquet
-single-cell limits; queries stream one row at a time.
+Scale note: a row carries ~5 bytes per corpus byte (text + int32 SA; ~9
+only for int64 shards), so ``shard_bytes`` bounds the Arrow batch per row.
+Index builds should use shard_bytes <= 32 MiB (~160 MB/row) to stay well
+inside Arrow/parquet single-cell limits; queries stream one row at a time.
 """
 
 from __future__ import annotations

@@ -488,6 +488,23 @@ def _dup_group_rows(pdf: pd.DataFrame, min_count: int) -> pd.DataFrame:
     )
 
 
+def _one_group_rows(segments: list[np.ndarray], min_count: int):
+    """Duplicate rows of ONE complete (h1, h2) group from its ascending pos
+    segments (the ``_dup_group_rows`` result for a single run)."""
+    pos = np.concatenate(segments)
+    n = len(pos)
+    if n >= min_count:
+        yield from _emit_chunks(
+            pd.DataFrame(
+                {
+                    "pos": pos,
+                    "cluster_id": np.full(n, pos[0], np.int64),
+                    "cluster_size": np.full(n, n, np.int64),
+                }
+            )
+        )
+
+
 def find_duplicates_mappass(
     fingerprints: DataFrame, cfg: ExactSubstrConfig
 ) -> DataFrame:
@@ -509,9 +526,9 @@ def find_duplicates_mappass(
     so we fix min-member, SURVEY.md §7).
 
     Memory: the kernel buffers at most one straddling group between Arrow
-    batches (60k-dup C4 boilerplate window ~= 1.4 MB; a pathological
-    10^8-member group ~= 2.4 GB, bounded by the hottest single window's
-    dup count).
+    batches, as its int64 positions only (60k-dup C4 boilerplate window
+    ~= 0.5 MB; a pathological 10^8-member group ~= 0.8 GB, bounded by the
+    hottest single window's dup count).
     """
     min_count = max(2, cfg.frequency_threshold + 1)
     clustered = fingerprints.repartition("h1", "h2").sortWithinPartitions(
@@ -519,40 +536,37 @@ def find_duplicates_mappass(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: list[pd.DataFrame] = []  # segments of the trailing group
+        # the trailing group straddling Arrow batches: its rows share
+        # ``key``, so only their pos segments are carried
+        pend: list[np.ndarray] = []
         key: tuple[int, int] | None = None
         for pdf in batches:
             if not len(pdf):
                 continue
             h1 = pdf["h1"].to_numpy()
             h2 = pdf["h2"].to_numpy()
-            first = (int(h1[0]), int(h2[0]))
-            last = (int(h1[-1]), int(h2[-1]))
-            brk = np.nonzero((h1 != last[0]) | (h2 != last[1]))[0]
-            cut = int(brk[-1]) + 1 if len(brk) else 0
-            head, tail = pdf.iloc[:cut], pdf.iloc[cut:]
-            if pend and first != key:
-                # pending group closed exactly at the batch boundary
-                out = _dup_group_rows(
-                    pd.concat(pend, ignore_index=True), min_count
-                )
+            pos = pdf["pos"].to_numpy()
+            start = 0
+            if pend:
+                if (int(h1[0]), int(h2[0])) == key:
+                    brk = np.nonzero((h1 != key[0]) | (h2 != key[1]))[0]
+                    start = int(brk[0]) if len(brk) else len(pdf)
+                    pend.append(pos[:start].copy())
+                if start == len(pdf):
+                    continue  # the whole batch extends the pending group
+                yield from _one_group_rows(pend, min_count)
                 pend = []
+            brk = np.nonzero((h1 != h1[-1]) | (h2 != h2[-1]))[0]
+            cut = int(brk[-1]) + 1 if len(brk) else 0
+            cut = max(cut, start)  # rows [cut:) are the batch's last group
+            if cut > start:
+                out = _dup_group_rows(pdf.iloc[start:cut], min_count)
                 if len(out):
                     yield from _emit_chunks(out)
-            if len(head):
-                if pend:
-                    head = pd.concat([*pend, head], ignore_index=True)
-                    pend = []
-                out = _dup_group_rows(head, min_count)
-                if len(out):
-                    yield from _emit_chunks(out)
-            if len(tail):
-                pend.append(tail)
-                key = last
+            pend = [pos[cut:].copy()]
+            key = (int(h1[-1]), int(h2[-1]))
         if pend:
-            out = _dup_group_rows(pd.concat(pend, ignore_index=True), min_count)
-            if len(out):
-                yield from _emit_chunks(out)
+            yield from _one_group_rows(pend, min_count)
 
     return clustered.mapInPandas(kernel, DUPLICATES_SCHEMA)
 

@@ -20,7 +20,9 @@ def get_spark(
 ) -> SparkSession:
     # NOTE: Python workers get glibc allocator tuning via the package's
     # _tune_allocator() (deduplicate_text_datasets_spark/__init__.py) — it
-    # measurably removes the mmap/refault cycle for numpy kernels. Do NOT
+    # measurably removes the mmap/refault cycle for numpy kernels — and
+    # _gate_zip_refresh(), which stops each task re-reading pyspark.zip's
+    # directory (most of a reused worker's per-task CPU on 3.10-3.12). Do NOT
     # export MALLOC_* env to the JVM: forcing the JVM's native mallocs
     # through the sbrk main arena stalls its many threads on the (host-
     # serialized) fault path — observed as whole-job hangs.
