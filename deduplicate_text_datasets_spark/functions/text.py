@@ -18,25 +18,6 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda x: x != "")
 
 
-def shingles(words: Column, w: int) -> Column:
-    """w-word shingles (space-joined). Docs shorter than w words produce a
-    single whole-doc shingle (Lee et al. 2021 NearDup definition)."""
-    return F.when(
-        F.size(words) >= w,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - w + 1),
-            lambda i: F.concat_ws(" ", F.slice(words, i, w)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-
-
-def shingle_hashes(col: Column | str, w: int) -> Column:
-    """Distinct xxhash64 values of the doc's w-word shingles."""
-    return F.array_distinct(
-        F.transform(shingles(tokens(col), w), lambda s: F.xxhash64(s))
-    )
-
-
 def doc_fingerprint(col: Column | str) -> Column:
     """Order-sensitive 64-bit document fingerprint over normalized tokens
     (rolling-hash style content address for exact-dup grouping)."""

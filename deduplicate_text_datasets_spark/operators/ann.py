@@ -44,13 +44,18 @@ def _norm(a: Column) -> Column:
 
 
 def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize once so cosine reduces to a dot product."""
-    n = _norm(F.col(vec_col))
-    return emb.withColumn(
-        "unit",
-        F.when(
-            n > 0, F.transform(vec_col, lambda x: x.cast("double") / n)
-        ).otherwise(F.transform(vec_col, lambda x: F.lit(0.0))),
+    """Pre-normalize once so cosine reduces to a dot product. The norm is
+    its own column: captured in the lambda, it is recomputed per element."""
+    n = F.col("_norm")
+    return (
+        emb.withColumn("_norm", _norm(F.col(vec_col)))
+        .withColumn(
+            "unit",
+            F.when(
+                n > 0, F.transform(vec_col, lambda x: x.cast("double") / n)
+            ).otherwise(F.transform(vec_col, lambda x: F.lit(0.0))),
+        )
+        .drop("_norm")
     )
 
 

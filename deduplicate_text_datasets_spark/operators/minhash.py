@@ -6,7 +6,7 @@ README.md:367-376); the algorithm is Lee et al. 2021 (arXiv:2107.06499)
 
 Plan shape (all DataFrame; one vectorized Arrow kernel for signatures):
 
-  docs ── shingle_hashes (Catalyst exprs) ──► (doc_id, sh: array<long>)
+  docs ── doc_shingles (Catalyst exprs)  ──► (doc_id, sh: array<long>)
        ── mapInPandas numpy kernel        ──► (doc_id, sig: array<long>)
        ── posexplode bands + xxhash64     ──► (doc_id, band, bucket)
        ── groupBy bucket (size-capped)    ──► candidate pairs (self-join)
@@ -51,8 +51,7 @@ def doc_shingles(docs: DataFrame, cfg: MinHashConfig, text_col: str = "text") ->
     of the joined string: the token-hash array is materialized once as a
     column and each window is hash-of-slice — ~20x cheaper than building
     2M+ shingle strings per 12k docs (measured), with identical distinct-set
-    semantics up to 64-bit collisions. ``functions.text.shingle_hashes``
-    keeps the string-identity variant.
+    semantics up to 64-bit collisions.
     """
     w = cfg.shingle_words
     d = docs.withColumn(

@@ -8,8 +8,9 @@ are judged against (SURVEY.md §5.2, Phase 0).
 
 from __future__ import annotations
 
+import re
 import struct
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 import numpy as np
 
@@ -36,6 +37,29 @@ def build_corpus(
         out += doc_bytes(uid, t, with_separators)
         sizes.append(len(out))
     return bytes(out), sizes
+
+
+def repetition_stats(text: str | None, n: int = 3) -> tuple[int, int, int]:
+    """(dup_line_ppm, top_ngram_ppm, dup_ngram_ppm) of one document, as
+    operators/textstats.repetition_stats defines them: tokens are the
+    lowercased text split on ``[^a-z0-9]+`` runs (functions/text.py
+    TOKEN_SPLIT_RE), grams are n consecutive tokens joined by ' ', and
+    every ratio is the integer (1000000 * x) // y, 0 when y is 0."""
+    if text is None:
+        return 0, 0, 0
+    lines = [ln for ln in text.split("\n") if ln]
+    dup_line = (
+        (1_000_000 * (len(lines) - len(set(lines)))) // len(lines) if lines else 0
+    )
+    toks = [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+    counts = Counter(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+    chars = {g: c * len(g) for g, c in counts.items()}
+    tot = sum(chars.values())
+    if tot == 0:
+        return dup_line, 0, 0
+    top = max(chars.values())
+    dup = sum(v for g, v in chars.items() if counts[g] >= 2)
+    return dup_line, (1_000_000 * top) // tot, (1_000_000 * dup) // tot
 
 
 def naive_suffix_array(b: bytes) -> list[int]:

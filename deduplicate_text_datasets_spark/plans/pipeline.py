@@ -502,35 +502,23 @@ def prepare_training_data(
     operational check the reference does by hand with file sizes
     (make_suffix_array.py:59-86 verify loop).
     """
-    from ..operators.textstats import lang_id, quality_score, repetition_stats
+    from ..operators.textstats import policy_signals
     from .caching import scoped_persist
 
-    flags_plan = (
-        docs.select("doc_id")
-        .join(lang_id(docs).select("doc_id", "lang_pred"), "doc_id")
-        .join(quality_score(docs).select("doc_id", "quality"), "doc_id")
-        .join(
-            repetition_stats(docs).select("doc_id", "dup_ngram_ppm"), "doc_id"
-        )
-        .select(
-            "doc_id",
-            (F.col("lang_pred") == lang).alias("lang_ok"),
-            (F.col("quality") * 1_000_000 >= min_quality_ppm).alias(
-                "quality_ok"
-            ),
-            (F.col("dup_ngram_ppm") <= max_dup_ngram_ppm).alias(
-                "repetition_ok"
-            ),
-        )
-        .withColumn(
-            "policy_ok",
-            F.col("lang_ok") & F.col("quality_ok") & F.col("repetition_ok"),
-        )
+    lang_ok = F.col("lang_pred") == lang
+    quality_ok = F.col("quality") * 1_000_000 >= min_quality_ppm
+    repetition_ok = F.col("dup_ngram_ppm") <= max_dup_ngram_ppm
+    flags_plan = policy_signals(docs).select(
+        "doc_id",
+        lang_ok.alias("lang_ok"),
+        quality_ok.alias("quality_ok"),
+        repetition_ok.alias("repetition_ok"),
+        (lang_ok & quality_ok & repetition_ok).alias("policy_ok"),
     )
 
     # persisted: the flags feed the filter, and through it every action of
     # the round (LSH and md5 probes, offsets, fingerprints, stage_counts);
-    # unpersisted, each one re-ran the textstats joins
+    # unpersisted, each one re-ran the tokenizer and the repetition fold
     flags = (
         store.stage("policy_flags", lambda: flags_plan)
         if store
