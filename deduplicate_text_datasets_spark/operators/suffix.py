@@ -37,7 +37,6 @@ search.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, NamedTuple
 
 import numpy as np
@@ -95,7 +94,7 @@ def _powers(x: int, n: int, inverse: bool) -> np.ndarray:
 #: (each worker interleaving both variants, drift-immune): 1.30x at 8
 #: workers, 1.32-1.34x at 32 — largest exactly in the wide memory-bound
 #: regime the 8->32 scaling leg measures.
-_FP_BLOCK = int(os.environ.get("SPARK_GRAFT_FP_BLOCK", str(1 << 15)))
+_FP_BLOCK = 1 << 15
 
 _M64 = (1 << 64) - 1
 
@@ -316,7 +315,7 @@ WINDOW_KEY_SCHEMA = T.StructType([T.StructField("k", T.LongType(), False)])
 # concurrent tasks). The position-emitting kernels therefore use the
 # Spark 4.1 ITERATOR form of applyInPandas and yield bounded slices:
 # 2^21 rows x 24 B ≈ 48 MiB per batch, constant in shard width.
-_EMIT_ROWS = int(os.environ.get("SPARK_GRAFT_FP_EMIT_ROWS", str(1 << 21)))
+_EMIT_ROWS = 1 << 21
 
 
 def _emit_chunks(out: pd.DataFrame, rows: int | None = None):
@@ -367,8 +366,23 @@ def window_fingerprints(
     position — or per candidate position when ``dup_keys_bc`` is set).
     ``docs`` may already carry offsets; if not they are added."""
     docs, total = _offsets_and_total(docs, cfg, total)
+    return shard_fingerprints(
+        shard_layout(docs, cfg, total), cfg, total, dup_keys_bc, emit_rows
+    )
+
+
+def shard_fingerprints(
+    layout: DataFrame,
+    cfg: ExactSubstrConfig,
+    total: int,
+    dup_keys_bc=None,
+    emit_rows: int | None = None,
+) -> DataFrame:
+    """:func:`window_fingerprints` over an existing :func:`shard_layout`
+    frame, so a caller that also runs pass 1 on it lays the shards out
+    once."""
     return _map_shards(
-        shard_layout(docs, cfg, total),
+        layout,
         lambda g: _fingerprint_kernel(g, cfg, total, dup_keys_bc),
         FINGERPRINT_SCHEMA,
         emit_rows,
@@ -574,6 +588,9 @@ def find_duplicates_mappass(
 #: largest minimizer-key set broadcast as an exact sorted array (128 MB);
 #: above it the set becomes a Bloom sketch
 SKETCH_MAX_KEYS = 1 << 24
+#: size bound of the Bloom sketch's broadcast bitmap: about 53M keys at
+#: 10 bits per key and under 1% false positives
+BLOOM_MAX_BYTES = 64 << 20
 
 
 def _key_sketch_bc(dup_keys: DataFrame, max_keys: int):
@@ -583,7 +600,7 @@ def _key_sketch_bc(dup_keys: DataFrame, max_keys: int):
     above it: Bloom false positives only ADD candidate positions
     (discarded by the exact post-shuffle (h1, h2) grouping), false
     negatives are impossible, so recall is exact at ANY key count with a
-    bounded broadcast (SPARK_GRAFT_FP_BLOOM_MAX_BYTES, default 64 MiB).
+    bounded broadcast (BLOOM_MAX_BYTES).
     """
     from ..plans.caching import probe, scoped_broadcast, scoped_persist
     from .sketch import build_bloom_sketch
@@ -596,12 +613,31 @@ def _key_sketch_bc(dup_keys: DataFrame, max_keys: int):
     if key_pdf is not None:
         return scoped_broadcast(sc, np.sort(key_pdf["k"].to_numpy(np.int64)))
     n = dup_keys.count()
-    max_bytes = int(
-        os.environ.get("SPARK_GRAFT_FP_BLOOM_MAX_BYTES", str(64 << 20))
-    )
     return scoped_broadcast(
-        sc, build_bloom_sketch(dup_keys, n, max_bytes=max_bytes)
+        sc, build_bloom_sketch(dup_keys, n, max_bytes=BLOOM_MAX_BYTES)
     )
+
+
+def shard_key_sketch(
+    layout: DataFrame,
+    cfg: ExactSubstrConfig,
+    total: int,
+    min_count: int,
+    max_keys: int,
+):
+    """Pass 1 over a scope-persisted :func:`shard_layout` frame: the
+    minimizer keys its shards select at least ``min_count`` times, as a
+    broadcast membership sketch (:func:`_key_sketch_bc`, exact set up to
+    ``max_keys``, Bloom above). Each distinct minimizer position of a
+    shard counts once, so ``min_count=1`` keeps every key of the corpus."""
+    dup_keys = (
+        _map_shards(layout, lambda g: _key_kernel(g, cfg, total), WINDOW_KEY_SCHEMA)
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= min_count)
+        .select("k")
+    )
+    return _key_sketch_bc(dup_keys, max_keys)
 
 
 def self_similar(
@@ -616,11 +652,11 @@ def self_similar(
     Aiken, *Winnowing*, SIGMOD 2003) over one scope-persisted
     shard_layout, so the range sampling and the text exchange run once:
 
-      pass 1  _key_kernel: one minimizer key per distinct minimizer
-              position per shard (about 2/(w+1) of positions, w = L // 2)
-              -> groupBy(k), keep count >= max(2, frequency_threshold+1)
-              -> _key_sketch_bc broadcasts the keys (an exact sorted set
-              up to ``prefilter_max_keys``, Bloom above).
+      pass 1  shard_key_sketch: one minimizer key per distinct
+              minimizer position per shard (about 2/(w+1) of positions,
+              w = L // 2) -> groupBy(k), keep count >=
+              max(2, frequency_threshold+1) -> broadcast the keys (an
+              exact sorted set up to ``prefilter_max_keys``, Bloom above).
       pass 2  the fingerprint kernel emits (h1, h2, pos) only for windows
               whose minimizer key is in the set; find_duplicates_mappass
               then clusters them exactly as it would the full frame.
@@ -640,19 +676,8 @@ def self_similar(
     docs, total = _offsets_and_total(docs, cfg, total)
     layout = scoped_persist(shard_layout(docs, cfg, total))
     min_count = max(2, cfg.frequency_threshold + 1)
-    dup_keys = (
-        _map_shards(layout, lambda g: _key_kernel(g, cfg, total), WINDOW_KEY_SCHEMA)
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_count)
-        .select("k")
-    )
-    dup_keys_bc = _key_sketch_bc(dup_keys, prefilter_max_keys)
-    fp = _map_shards(
-        layout,
-        lambda g: _fingerprint_kernel(g, cfg, total, dup_keys_bc),
-        FINGERPRINT_SCHEMA,
-    )
+    dup_keys_bc = shard_key_sketch(layout, cfg, total, min_count, prefilter_max_keys)
+    fp = shard_fingerprints(layout, cfg, total, dup_keys_bc)
     return find_duplicates_mappass(fp, cfg)
 
 

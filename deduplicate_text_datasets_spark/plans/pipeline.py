@@ -30,7 +30,7 @@ from ..operators.exact import exact_duplicate_edges
 from ..operators.intervals import coalesce_positions
 from ..operators.minhash import near_duplicate_edges
 from ..operators.strike import apply_removals
-from ..operators.suffix import self_similar
+from ..operators.suffix import SKETCH_MAX_KEYS, self_similar
 from ..sources.corpus import corpus_total_bytes, with_offsets
 from .checkpoints import StageStore, config_fingerprint
 
@@ -259,8 +259,7 @@ def across_dedup(
     docs_a: DataFrame,
     docs_b: DataFrame,
     cfg: EngineConfig,
-    prefilter: bool | None = None,
-    prefilter_max_keys: int | None = None,
+    prefilter_max_keys: int = SKETCH_MAX_KEYS,
 ) -> AcrossDedupResult:
     """Cross-corpus contamination pipeline (README.md:324-340:
     across-similar + collect + strike — the reference runs collect/finish
@@ -270,84 +269,68 @@ def across_dedup(
     and vice versa; each side gets its own coalesced remove_ranges and
     struck documents. Unpacking as a 3-tuple still yields the A side.
 
-    prefilter=True (the at-scale mode; env SPARK_GRAFT_ACROSS_PREFILTER):
-    the production shape is wildly asymmetric — A = the 100-TB train
+    The production shape is wildly asymmetric — A = the 100-TB train
     corpus, B = a GB-scale eval set (the reference's wiki40b-vs-C4 runs).
     Both semi-joins only care about windows present in BOTH corpora, and
     such a window has the same minimizer key on both sides (the key
-    self_similar counts in its pass 1). So:
+    self_similar counts in its pass 1). So, over the smaller corpus's one
+    scope-persisted shard layout:
 
-      pass 1  the minimizer-key kernel over the smaller corpus ->
-              distinct -> collect + broadcast (guarded by
-              ``prefilter_max_keys``, default 2^24 = 128 MB; env
-              SPARK_GRAFT_ACROSS_PREFILTER_MAX_KEYS).
-      pass 2  the BIG side's fingerprint kernel runs with that set as a
-              map-side filter: only windows whose minimizer key occurs in
-              the small corpus ride the exchange.
+      pass 1  suffix.shard_key_sketch with min_count 1: every distinct
+              minimizer key of the smaller corpus, broadcast as an exact
+              set up to ``prefilter_max_keys`` (2^24 = 128 MB), Bloom
+              above.
+      pass 2  the smaller side ships all of its windows; the BIG side's
+              fingerprint kernel runs with the key set as a map-side
+              filter, so only windows whose minimizer key occurs in the
+              small corpus ride the exchange.
 
     Exactness: equal windows share their minimizer key, so every true
-    cross-corpus match survives on both sides (dups_b semi-joins against
-    the PREFILTERED keys_a, but an A window dropped by the prefilter has
-    a key absent from B and so could never match a B window); key
-    collisions only ADD big-side candidates, which the exact (h1, h2)
-    semi-join then discards. Above the broadcast guard the key set
-    degrades to a bounded Bloom sketch instead of switching off
-    (suffix._key_sketch_bc) — recall stays exact at any key count.
+    cross-corpus match survives on both sides (the small side's semi-join
+    runs against the PREFILTERED big-side keys, but a big-side window
+    dropped by the prefilter has a key absent from the small corpus and
+    so could never match a small-side window); key collisions and Bloom
+    false positives only ADD big-side candidates, which the exact
+    (h1, h2) semi-join then discards — recall stays exact at any key
+    count.
     """
-    import os
-
     from ..operators.suffix import (
-        SKETCH_MAX_KEYS,
         across_similar,
+        shard_fingerprints,
+        shard_key_sketch,
+        shard_layout,
         window_fingerprints,
-        window_keys,
     )
-    from ..sources.corpus import corpus_total_bytes, with_offsets
     from .caching import scoped_persist
 
-    if prefilter is None:
-        prefilter = os.environ.get("SPARK_GRAFT_ACROSS_PREFILTER", "0") == "1"
-    if prefilter_max_keys is None:
-        prefilter_max_keys = int(
-            os.environ.get(
-                "SPARK_GRAFT_ACROSS_PREFILTER_MAX_KEYS", SKETCH_MAX_KEYS
-            )
-        )
-
-    da = scoped_persist(with_offsets(docs_a, cfg.exact.with_separators))
-    db = scoped_persist(with_offsets(docs_b, cfg.exact.with_separators))
+    ex = cfg.exact
+    da = scoped_persist(with_offsets(docs_a, ex.with_separators))
+    db = scoped_persist(with_offsets(docs_b, ex.with_separators))
     total_a = corpus_total_bytes(da)
     total_b = corpus_total_bytes(db)
 
-    bc_a = bc_b = None  # pass-2 map-side filters for fp_a / fp_b
-    if prefilter:
-        from ..operators.suffix import _key_sketch_bc
+    def small_and_big(small, small_total, big, big_total):
+        # the small side's layout feeds its pass 1 and its pass 2
+        layout = scoped_persist(shard_layout(small, ex, small_total))
+        bc = shard_key_sketch(layout, ex, small_total, 1, prefilter_max_keys)
+        return (
+            shard_fingerprints(layout, ex, small_total),
+            window_fingerprints(big, ex, big_total, bc),
+        )
 
-        small_is_b = total_b <= total_a
-        key_docs, key_total = (db, total_b) if small_is_b else (da, total_a)
-        keys_df = window_keys(key_docs, cfg.exact, key_total).distinct()
-        # same sketch policy as self_similar: exact set under the guard,
-        # Bloom above it (recall exact — FPs only add big-side candidates
-        # the exact (h1, h2) semi-join discards)
-        bc = _key_sketch_bc(keys_df, prefilter_max_keys)
-        if small_is_b:
-            bc_a = bc
-        else:
-            bc_b = bc
-
+    if total_b <= total_a:
+        fp_b, fp_a = small_and_big(db, total_b, da, total_a)
+    else:
+        fp_a, fp_b = small_and_big(da, total_a, db, total_b)
     # each fingerprint frame feeds both the distinct-keys side and the
     # semi-join probe side — persist or the shard kernels run twice per
     # side. Co-partitioned on the window key: the distinct aggs run on the
     # cached partitioning and the two semi-joins co-locate without
     # re-exchanging either side.
-    fp_a = scoped_persist(
-        window_fingerprints(da, cfg.exact, total_a, bc_a).repartition("h1", "h2")
-    )
-    fp_b = scoped_persist(
-        window_fingerprints(db, cfg.exact, total_b, bc_b).repartition("h1", "h2")
-    )
-    dups_a, dups_b = across_similar(fp_a, fp_b, cfg.exact)
-    L = cfg.exact.length_threshold
+    fp_a = scoped_persist(fp_a.repartition("h1", "h2"))
+    fp_b = scoped_persist(fp_b.repartition("h1", "h2"))
+    dups_a, dups_b = across_similar(fp_a, fp_b, ex)
+    L = ex.length_threshold
     # ranges/deduped as memoized thunks: coalesce_positions may probe its
     # input's size at plan-construction time (intervals.py driver-merge),
     # so building a side eagerly here would materialize dup positions the
@@ -362,7 +345,7 @@ def across_dedup(
                 ranges = coalesce_positions(dups, L)
             return ranges
 
-        return get_ranges, lambda: apply_removals(docs_off, get_ranges(), cfg.exact)
+        return get_ranges, lambda: apply_removals(docs_off, get_ranges(), ex)
 
     get_ranges_a, get_deduped_a = side(dups_a, da)
     get_ranges_b, get_deduped_b = side(dups_b, db)

@@ -29,13 +29,6 @@ ALLOWED = {
     "SPARK_GRAFT_VERIFY_DRIVER_MAX",
     "SPARK_GRAFT_CC_DRIVER_MAX",
     "SPARK_GRAFT_INTERVALS_DRIVER_MAX",
-    # ExactSubstr prefilters and their Bloom sketch
-    "SPARK_GRAFT_ACROSS_PREFILTER",
-    "SPARK_GRAFT_ACROSS_PREFILTER_MAX_KEYS",
-    "SPARK_GRAFT_FP_BLOOM_MAX_BYTES",
-    # fingerprint kernel blocking and output batch size
-    "SPARK_GRAFT_FP_BLOCK",
-    "SPARK_GRAFT_FP_EMIT_ROWS",
     # session settings
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_ADVISORY_MB",

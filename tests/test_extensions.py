@@ -219,33 +219,6 @@ def test_ivf_partial_probe_recall(spark, clustered_emb):
     assert hits / total >= 0.9, f"recall@5 {hits}/{total}"
 
 
-def test_ivf_index_roundtrip(spark, emb, tmp_path):
-    """build_ivf_index + ivf_topk_indexed answers identically to the
-    in-session path at the same config (build-once/query-many parity,
-    same contract as operators/sa_index)."""
-    from deduplicate_text_datasets_spark.operators.ann import (
-        build_ivf_index,
-        ivf_topk,
-        ivf_topk_indexed,
-    )
-
-    df, _ = emb
-    path = str(tmp_path / "ivf")
-    build_ivf_index(df, path, dim=16, nlist=8)
-    queries = df.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    live = {
-        tuple(r)
-        for r in ivf_topk(df, queries, dim=16, k=5, nlist=8, nprobe=3).collect()
-    }
-    stored = {
-        tuple(r)
-        for r in ivf_topk_indexed(spark, path, queries, k=5, nprobe=3).collect()
-    }
-    assert stored == live
-
-
 def test_ivf_centroids_deterministic_and_reseeded(spark):
     """Training is deterministic under any input partitioning (hash-based
     sample, seeded init), and empty clusters reseed instead of dying: 120

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from deduplicate_text_datasets_spark.config import ExactSubstrConfig
+from deduplicate_text_datasets_spark.oracle import pyref
 from deduplicate_text_datasets_spark.sources.documents import (
     DOCUMENTS_SCHEMA,
     synth_documents_pandas,
@@ -238,14 +239,18 @@ def test_expected_tokenized_matches_engine(spark, docs):
 # --- across_dedup small-side key prefilter (round-5) -------------------------
 
 
-def _across_sides(spark):
-    """Asymmetric split of a fresh fixture: even doc_ids -> A (bigger, gets
-    the straddle docs), odd -> B. Exact-dup roles (k-1, k) with k odd give
+def _across_split():
+    """Asymmetric split of a fresh fixture: even doc_ids and odd doc_ids
+    (the bigger corpus). Exact-dup roles (k-1, k) with k odd give
     cross-side contamination at L=50 once docs are >= ~60 bytes."""
     pdf = synth_documents_pandas(40, size_lo=60, size_hi=200)
-    docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA)
-    return docs.filter(F.col("doc_id") % 2 == 0), docs.filter(
-        F.col("doc_id") % 2 == 1
+    return pdf[pdf["doc_id"] % 2 == 0], pdf[pdf["doc_id"] % 2 == 1]
+
+
+def _across_sides(spark):
+    """The even (A) and odd (B) sides of :func:`_across_split` as frames."""
+    return tuple(
+        spark.createDataFrame(p, schema=DOCUMENTS_SCHEMA) for p in _across_split()
     )
 
 
@@ -261,20 +266,86 @@ def _across_key(res):
     )
 
 
+def _corpus(pdf, with_separators):
+    """(corpus bytes, doc boundaries, doc texts, doc ids) in doc_id order,
+    the layout with_offsets gives the same documents."""
+    pdf = pdf.sort_values("doc_id")
+    ids = [int(i) for i in pdf["doc_id"]]
+    texts = [t.encode("utf-8") for t in pdf["text"]]
+    out, sizes = bytearray(), [0]
+    for uid, t in zip(ids, texts):
+        out += pyref.doc_bytes(uid, t, with_separators)
+        sizes.append(len(out))
+    return bytes(out), sizes, texts, ids
+
+
+def _pyref_across_key(pdf_a, pdf_b, cfg):
+    """:func:`_across_key` of across_dedup's answer, computed by
+    oracle/pyref: across-similar positions, collect, strike."""
+    L, sep = cfg.length_threshold, cfg.with_separators
+    corpus_a, sizes_a, texts_a, ids_a = _corpus(pdf_a, sep)
+    corpus_b, sizes_b, texts_b, ids_b = _corpus(pdf_b, sep)
+    dups_a, dups_b = pyref.across_similar_positions(corpus_a, corpus_b, L)
+
+    def side(dups, sizes, texts, ids):
+        ranges = pyref.collect_ranges(dups, L)
+        deduped = pyref.apply_removals(texts, sizes, ranges, sep)
+        return sorted(dups), sorted(ranges), sorted(zip(ids, deduped))
+
+    return (
+        *side(dups_a, sizes_a, texts_a, ids_a),
+        *side(dups_b, sizes_b, texts_b, ids_b),
+    )
+
+
 def test_across_dedup_prefilter_parity(spark):
-    """prefilter mode must be bit-identical to the default plan on all six
-    output frames."""
+    """across_dedup, which always prefilters the bigger corpus by the
+    smaller one's minimizer keys, must give pyref's answer on all six
+    output frames, with the bigger corpus as A and as B."""
     from deduplicate_text_datasets_spark.config import EngineConfig
     from deduplicate_text_datasets_spark.plans.pipeline import across_dedup
 
     cfg = EngineConfig(exact=SS_CFG)
-    docs_a, docs_b = _across_sides(spark)
-    base = _across_key(across_dedup(docs_a, docs_b, cfg))
-    assert base[0] and base[3], "fixture must contaminate both sides"
-    spark.catalog.clearCache()
-    pre = _across_key(across_dedup(docs_a, docs_b, cfg, prefilter=True))
-    assert pre == base
-    spark.catalog.clearCache()
+    even, odd = _across_split()
+    sep = SS_CFG.with_separators
+    assert len(_corpus(even, sep)[0]) < len(_corpus(odd, sep)[0])
+    for pdf_a, pdf_b in ((odd, even), (even, odd)):
+        want = _pyref_across_key(pdf_a, pdf_b, SS_CFG)
+        assert want[0] and want[3], "fixture must contaminate both sides"
+        docs_a, docs_b = (
+            spark.createDataFrame(p, schema=DOCUMENTS_SCHEMA) for p in (pdf_a, pdf_b)
+        )
+        assert _across_key(across_dedup(docs_a, docs_b, cfg)) == want
+        spark.catalog.clearCache()
+
+
+def test_across_dedup_key_sketch_follows_smaller_side(spark, caplog):
+    """across_dedup always prefilters: one call logs exactly one
+    suffix.key_sketch decision, and its probed rows are the distinct
+    minimizer keys of the smaller corpus, whichever argument that is."""
+    import logging
+
+    from deduplicate_text_datasets_spark.config import EngineConfig
+    from deduplicate_text_datasets_spark.operators.suffix import window_keys
+    from deduplicate_text_datasets_spark.plans.caching import PLACEMENT_LOG
+    from deduplicate_text_datasets_spark.plans.pipeline import across_dedup
+
+    cfg = EngineConfig(exact=SS_CFG)
+    small, big = _across_sides(spark)  # even doc_ids are the smaller corpus
+    n_small = window_keys(small, SS_CFG).distinct().count()
+    assert n_small != window_keys(big, SS_CFG).distinct().count()
+    for docs_a, docs_b in ((big, small), (small, big)):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=PLACEMENT_LOG):
+            across_dedup(docs_a, docs_b, cfg)
+        recs = [
+            r
+            for r in caplog.records
+            if getattr(r, "stage", None) == "suffix.key_sketch"
+        ]
+        assert len(recs) == 1
+        assert recs[0].rows == n_small
+        spark.catalog.clearCache()
 
 
 def test_across_prefilter_big_side_ships_only_candidates(spark):

@@ -112,6 +112,8 @@ def test_self_similar_bloom_parity(spark, docs):
 
 
 def test_across_dedup_bloom_parity(spark):
+    """across_dedup's small-side key set forced onto the Bloom path (guard
+    of 1 key) must give the same answer as the exact key set."""
     from deduplicate_text_datasets_spark.config import EngineConfig
     from deduplicate_text_datasets_spark.plans.pipeline import across_dedup
 
@@ -134,9 +136,7 @@ def test_across_dedup_bloom_parity(spark):
     base = key(across_dedup(docs_a, docs_b, cfg))
     assert base[0] and base[1]
     spark.catalog.clearCache()
-    got = key(
-        across_dedup(docs_a, docs_b, cfg, prefilter=True, prefilter_max_keys=1)
-    )
+    got = key(across_dedup(docs_a, docs_b, cfg, prefilter_max_keys=1))
     assert got == base
     spark.catalog.clearCache()
 

@@ -1,9 +1,12 @@
 """The policy filter's text signals: repetition_stats against the
 pure-Python reference on degenerate documents, and the shape of the
-executed plans (one tokenization per row, no exchange, no join)."""
+executed plans (one tokenization per row, no exchange, no join), and the
+driver's inline quality_scores and doc_stats queries against the package
+operators."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from deduplicate_text_datasets_spark.config import EngineConfig, ExactSubstrConfig
@@ -100,3 +103,58 @@ def test_policy_filter_is_one_projection(spark, tmp_path):
         assert "Join" not in plan, plan
     assert rep.count("split(lower(") == 1, rep
     assert flags.count("split(lower(") == 1, flags
+
+
+def test_entry_queries_match_textstats_operators(spark, tmp_path):
+    """The driver's quality_scores and doc_stats queries re-derive their
+    formulas inline, so their oracle hashes gate those copies. Pin each
+    copy to the package operator it stands for: quality_score (through
+    policy_signals) and doc_stats, on one corpus whose token counts
+    straddle the 20-token length rule."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import __spark_entry__ as entry
+    from deduplicate_text_datasets_spark.operators.textstats import (
+        doc_stats,
+        quality_score,
+    )
+
+    synth = synth_documents_pandas(40, size_lo=30, size_hi=400)
+    extra = [" ".join([w] * n) for n in range(41) for w in ("word", "a")]
+    extra += ["The cat and the dog. " * 3, "supercalifragilistic " * 25]
+    pdf = pd.concat(
+        [
+            synth,
+            synth.iloc[[0] * len(extra)].assign(
+                doc_id=range(len(synth), len(synth) + len(extra)), text=extra
+            ),
+        ],
+        ignore_index=True,
+    )
+    spark.createDataFrame(pdf, schema=DOCUMENTS_SCHEMA).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sf_dir = str(tmp_path)
+    docs = entry._docs(spark, sf_dir)
+
+    quality = {r["doc_id"]: r["quality"] for r in quality_score(docs).collect()}
+    ppm = {
+        r["doc_id"]: r["quality_ppm"]
+        for r in entry._q_quality_scores(spark, sf_dir).collect()
+    }
+    assert quality.keys() == ppm.keys() and len(ppm) == len(pdf)
+    for i, q in quality.items():
+        assert abs(q * 1e6 - ppm[i]) <= 1, (i, q, ppm[i])
+        assert (q * 1_000_000 >= 750_000) == (ppm[i] >= 750_000), (i, q, ppm[i])
+    assert len({v >= 750_000 for v in ppm.values()}) == 2
+
+    stats = {r["doc_id"]: r for r in doc_stats(docs).collect()}
+    copy = {r["doc_id"]: r for r in entry._q_doc_stats(spark, sf_dir).collect()}
+    assert stats.keys() == copy.keys()
+    for i, s in stats.items():
+        c = copy[i]
+        for col in ("n_bytes", "n_tokens", "en_stopwords"):
+            assert s[col] == c[col], (i, col)
+        ratio = Decimal(repr(c["space_count"] / max(c["n_bytes"], 1)))
+        want = float(ratio.quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+        assert s["space_ratio"] == want, (i, s["space_ratio"], want)
