@@ -2,10 +2,11 @@
 
 ``collect`` in the reference (cmd_collect, src/main.rs:1408-1526) sorts all
 duplicate positions (parallel sort + k-way heap merge) then folds them into
-maximal byte ranges (main.rs:1505-1521). Spark-native: a range exchange
-replaces the heap merge; the fold is a per-partition vectorized kernel plus
-one tiny global pass over the per-partition boundary ranges — no
-single-partition window over the full position set.
+maximal byte ranges (main.rs:1505-1521). Spark-native: a range exchange on
+``pos`` replaces the heap merge, and the fold is a per-partition vectorized
+kernel. Only each partition's first and last folded range can still merge
+across a partition seam (the edge rule, see :func:`coalesce_positions`), so
+the seam pass moves at most two ranges per partition through one task.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -23,6 +24,9 @@ RANGE_SCHEMA = T.StructType(
         T.StructField("start", T.LongType(), False),
         T.StructField("end", T.LongType(), False),
     ]
+)
+EDGE_SCHEMA = T.StructType(
+    RANGE_SCHEMA.fields + [T.StructField("edge", T.BooleanType(), False)]
 )
 
 
@@ -56,204 +60,80 @@ def _ranges_frame(spark, arr: np.ndarray) -> DataFrame:
 def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
     """duplicate positions (col ``pos``) -> remove_ranges(start, end).
 
-    Stage 1: range-repartition + in-partition sort (Catalyst SortExec —
-             the distributed analogue of the reference's parallel sort +
-             heap merge), then a vectorized per-partition fold.
-    Stage 2: per-partition range lists are already maximal except at
-             partition seams; the seam merge is the hierarchical
-             ``_merge_sorted_partitions`` pass — no global-order window,
-             so a C4-scale remove list (millions of ranges) never funnels
-             through one partition.
+    Range-repartition on ``pos`` + in-partition sort (Catalyst SortExec —
+    the distributed analogue of the reference's parallel sort + heap
+    merge), then a vectorized per-partition fold that flags each
+    partition's first and last range as an ``edge``.
+
+    The edge rule rests on two invariants: every window has the same
+    length L, so each folded range is ``[first pos, last pos + L)``; and
+    the range partitioning keeps equal positions in one partition and puts
+    every position of partition k+1 above every position of partition k.
+    A range that is neither first nor last in its partition therefore
+    starts after every earlier range ends and ends before every later
+    range starts: it is final. Only the edge ranges (at most two per
+    partition) go through one single-partition ``_local_merge``, which
+    also joins chains through partitions that hold a single range.
 
     Size-adaptive: under the intervals guard the whole fold is one numpy
-    pass on the driver — the sampling job, range exchange, per-partition
-    fold and seam machinery all collapse into the probe. The probe
-    persists its input, so the (possibly expensive) lineage runs exactly
-    once on either path. The driver result keeps its ranges resident for
-    the strike fast path (strike.apply_removals).
+    pass on the driver. The narrow input is persisted first, so the
+    (possibly expensive) lineage runs exactly once at either placement:
+    for the probe's count and pull, or for the range partitioner's
+    sampling job and the exchange. The driver result keeps its ranges
+    resident for the strike fast path (strike.apply_removals).
     """
-    from ..plans.caching import driver_guard, probe
+    from ..plans.caching import driver_guard, probe, scoped_persist
 
-    pos_narrow = positions.select(F.col("pos").cast("long"))
-    pdf = probe("intervals.coalesce", pos_narrow, driver_guard("intervals"))
+    pos_narrow = scoped_persist(positions.select(F.col("pos").cast("long")))
+    pdf = probe(
+        "intervals.coalesce", pos_narrow, driver_guard("intervals"), persist=False
+    )
     if pdf is not None:
         folded = _fold_positions(np.sort(pdf["pos"].to_numpy(np.int64)), length)
         return _ranges_frame(positions.sparkSession, folded)
-    parts = pos_narrow.repartitionByRange(
-        "pos"
-    ).sortWithinPartitions("pos")
+    parts = pos_narrow.repartitionByRange("pos").sortWithinPartitions("pos")
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks = [pdf["pos"].to_numpy() for pdf in batches if len(pdf)]
         if not chunks:
             return
         ranges = _fold_positions(np.concatenate(chunks), length)
-        yield pd.DataFrame({"start": ranges[:, 0], "end": ranges[:, 1]})
+        edge = np.zeros(len(ranges), dtype=bool)
+        edge[[0, -1]] = True
+        yield pd.DataFrame({"start": ranges[:, 0], "end": ranges[:, 1], "edge": edge})
 
-    local = parts.mapInPandas(fold, RANGE_SCHEMA)
-    return _merge_sorted_partitions(local, adjacency=True, gap=0)
+    # two consumers: the final ranges and the edge ranges
+    folded = scoped_persist(parts.mapInPandas(fold, EDGE_SCHEMA))
+
+    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        chunks = [pdf.to_numpy(dtype=np.int64) for pdf in batches if len(pdf)]
+        if not chunks:
+            return
+        merged = _local_merge(np.concatenate(chunks))
+        yield pd.DataFrame({"start": merged[:, 0], "end": merged[:, 1]})
+
+    seams = (
+        folded.filter("edge")
+        .select("start", "end")
+        .repartition(1)
+        .sortWithinPartitions("start")
+        .mapInPandas(merge, RANGE_SCHEMA)
+    )
+    return folded.filter(~F.col("edge")).select("start", "end").unionByName(seams)
 
 
-def _local_merge(arr: np.ndarray, adjacency: bool, gap: int) -> np.ndarray:
-    """Vectorized in-memory interval union of a (k, 2) array sorted by
-    (start, end): new group where start exceeds the running max end (+gap).
-    """
+def _local_merge(arr: np.ndarray) -> np.ndarray:
+    """Vectorized union of a (k, 2) range array sorted by start: a new
+    range starts where start > the running max end (touching ranges
+    merge, as in the reference fold)."""
     if len(arr) == 0:
         return arr
     prev_max = np.maximum.accumulate(arr[:, 1])
     flag = np.empty(len(arr), dtype=bool)
     flag[0] = True
-    if adjacency:
-        flag[1:] = arr[1:, 0] > prev_max[:-1] + gap
-    else:
-        flag[1:] = arr[1:, 0] >= prev_max[:-1] + gap
-    gid = np.cumsum(flag) - 1
-    starts = arr[flag, 0]
+    flag[1:] = arr[1:, 0] > prev_max[:-1]
     ends = np.maximum.reduceat(arr[:, 1], np.nonzero(flag)[0])
-    return np.stack([starts, ends], axis=1)[: gid[-1] + 1]
-
-
-def _merge_sorted_partitions(
-    ranges: DataFrame, adjacency: bool, gap: int
-) -> DataFrame:
-    """Interval union of a frame whose partitions are range-ordered by
-    ``start`` and sorted within each partition — WITHOUT a global-order
-    window (the round-1 seam pass moved every range to one partition,
-    VERDICT #5). Hierarchical, same pattern as corpus.with_offsets:
-
-      1. per-partition vectorized local merge (mapInPandas), emitting each
-         partition's running-max-so-far alongside;
-      2. per-partition max-end totals -> cumulative prefix max over the
-         tiny (#partitions-row) stats frame;
-      3. per-row new-group flag from (local running max ⊔ previous
-         partitions' max); group ids = local cumsum + broadcast per-
-         partition flag-count offsets;
-      4. groupBy(group).agg(min(start), max(end)).
-
-    Only the #partitions-row stats frames ever pass through a single-
-    partition window.
-    """
-    merged_schema = T.StructType(
-        [
-            T.StructField("pid", T.IntegerType(), False),
-            T.StructField("rn", T.LongType(), False),
-            T.StructField("start", T.LongType(), False),
-            T.StructField("end", T.LongType(), False),
-            T.StructField("lmax_prev", T.LongType(), True),
-        ]
-    )
-
-    def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        chunks = [
-            pdf[["start", "end"]].to_numpy(dtype=np.int64)
-            for pdf in batches
-            if len(pdf)
-        ]
-        if not chunks:
-            return
-        m = _local_merge(np.concatenate(chunks), adjacency, gap)
-        lmax_prev = np.empty(len(m), dtype=object)
-        lmax_prev[0] = None
-        if len(m) > 1:
-            lmax_prev[1:] = np.maximum.accumulate(m[:-1, 1])
-        yield pd.DataFrame(
-            {
-                "pid": np.int32(pid),
-                "rn": np.arange(len(m), dtype=np.int64),
-                "start": m[:, 0],
-                "end": m[:, 1],
-                "lmax_prev": lmax_prev,
-            }
-        )
-
-    # Persist the locally-merged frame: it is TINY (one row per locally
-    # maximal range — ranges, not positions) but has FOUR consumers below
-    # (stats agg, stats join, fstats agg, fstats join). Unpersisted, each
-    # consumer re-executes the whole upstream lineage — including the
-    # full dup-position range exchange and, when the caller's input is
-    # itself unpersisted, everything above it. Measured at the 30k-doc
-    # stress profile: the same 229 MB position exchange was written 4x
-    # and re-read ~12x through here before this persist.
-    from ..plans.caching import driver_guard, probe, scoped_persist
-
-    p = scoped_persist(ranges.mapInPandas(local, merged_schema))
-    # Size-adaptive seam merge: the locally-merged frame is one row per
-    # locally-MAXIMAL range, already orders of magnitude smaller than the
-    # input positions. Under the intervals guard the seam merge is one
-    # vectorized _local_merge on the driver instead of ~8 stages of stats
-    # windows + broadcast joins — whose per-stage fixed cost dominates
-    # exactly when the range list is small. Above it (C4-scale remove
-    # lists) the hierarchical pass runs. Both paths are the same
-    # associative interval union; parity is pytest-pinned.
-    pdf = probe(
-        "intervals.merge",
-        p.select("start", "end"),
-        driver_guard("intervals"),
-        persist=False,
-    )
-    if pdf is not None:
-        arr = pdf.to_numpy(dtype=np.int64)
-        if len(arr):
-            arr = arr[np.lexsort((arr[:, 1], arr[:, 0]))]
-        return _ranges_frame(ranges.sparkSession, _local_merge(arr, adjacency, gap))
-    stats = p.groupBy("pid").agg(
-        F.max("end").alias("_pmax"), F.sum(F.lit(1)).alias("_cnt")
-    )
-    w_prev = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    stats = stats.withColumn("_pmax_prev", F.max("_pmax").over(w_prev))
-
-    p = p.join(F.broadcast(stats.select("pid", "_pmax_prev")), "pid")
-    prev_all = F.when(
-        F.col("lmax_prev").isNull(), F.col("_pmax_prev")
-    ).otherwise(
-        F.greatest(F.col("lmax_prev"), F.coalesce("_pmax_prev", "lmax_prev"))
-    )
-    cmp = (
-        F.col("start") <= prev_all + F.lit(gap)
-        if adjacency
-        else F.col("start") < prev_all + F.lit(gap)
-    )
-    p = p.withColumn(
-        "_flag",
-        F.when(prev_all.isNull() | ~cmp, F.lit(1)).otherwise(F.lit(0)),
-    )
-    w_in = Window.partitionBy("pid").orderBy("rn").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    p = p.withColumn("_lgrp", F.sum("_flag").over(w_in))
-    fstats = p.groupBy("pid").agg(F.sum("_flag").alias("_fn"))
-    fstats = fstats.withColumn(
-        "_foff", F.coalesce(F.sum("_fn").over(w_prev), F.lit(0))
-    )
-    p = p.join(F.broadcast(fstats.select("pid", "_foff")), "pid").withColumn(
-        "_grp", F.col("_foff") + F.col("_lgrp")
-    )
-    return (
-        p.groupBy("_grp")
-        .agg(F.min("start").alias("start"), F.max("end").alias("end"))
-        .select("start", "end")
-    )
-
-
-def union_intervals(
-    ranges: DataFrame, adjacency: bool = False, gap: int = 0
-) -> DataFrame:
-    """Merge overlapping (and, if ``adjacency``, exactly-touching) intervals
-    into maximal [start, end) ranges.
-
-    Range-repartition + in-partition sort, then the hierarchical
-    ``_merge_sorted_partitions`` pass — scales to arbitrarily large range
-    frames (no global-order window anywhere).
-    """
-    parts = (
-        ranges.select(F.col("start").cast("long"), F.col("end").cast("long"))
-        .repartitionByRange("start", "end")
-        .sortWithinPartitions("start", "end")
-    )
-    return _merge_sorted_partitions(parts, adjacency=adjacency, gap=gap)
+    return np.stack([arr[flag, 0], ends], axis=1)
 
 
 def interval_join(

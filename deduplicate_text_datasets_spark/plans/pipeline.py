@@ -217,8 +217,8 @@ class AcrossDedupResult:
     Fields may be passed as values or as 0-arg thunks; thunks are invoked
     (and memoized) on first attribute access. The thunk form is what keeps
     the laziness contract now that coalesce_positions may run a bounded
-    size probe when its plan is CONSTRUCTED (intervals.py driver-merge
-    fast path): building e.g. ranges_a is deferred until someone reads it.
+    size probe when its plan is CONSTRUCTED (the ``intervals.coalesce``
+    probe): building e.g. ranges_a is deferred until someone reads it.
     """
 
     _FIELDS = (
@@ -332,7 +332,7 @@ def across_dedup(
     dups_a, dups_b = across_similar(fp_a, fp_b, ex)
     L = ex.length_threshold
     # ranges/deduped as memoized thunks: coalesce_positions may probe its
-    # input's size at plan-construction time (intervals.py driver-merge),
+    # input's size at plan-construction time (the intervals.coalesce probe),
     # so building a side eagerly here would materialize dup positions the
     # caller never asked for (e.g. contamination_report reads only the B
     # side; the across gate query only dups_a)

@@ -1,6 +1,6 @@
 """Round-2 additions: persisted SA index, --only_save_one cluster samples,
-hierarchical interval union, hierarchical dense-id assignment, sinks
-dispatch, hot-window skew fixture."""
+hierarchical dense-id assignment, sinks dispatch, hot-window skew
+fixture."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from deduplicate_text_datasets_spark.config import ExactSubstrConfig
-from deduplicate_text_datasets_spark.operators.intervals import union_intervals
 from deduplicate_text_datasets_spark.operators.sa_index import (
     build_suffix_index,
     count_occurrences_indexed,
@@ -155,44 +154,6 @@ def test_cluster_samples_only_save_one(spark, docs, oracle_corpus):
             corpus[m["pos"] : m["pos"] + L]
             == bytes(by_head[m["cluster_id"]]["sample"])
         )
-
-
-def _naive_union(ivals, adjacency, gap):
-    out = []
-    for s, e in sorted(ivals):
-        if out and (
-            s <= out[-1][1] + gap if adjacency else s < out[-1][1] + gap
-        ):
-            out[-1][1] = max(out[-1][1], e)
-        else:
-            out.append([s, e])
-    return {(s, e) for s, e in out}
-
-
-@pytest.mark.parametrize("adjacency", [False, True])
-def test_union_intervals_matches_naive(spark, adjacency):
-    rng = np.random.RandomState(7 + adjacency)
-    starts = rng.randint(0, 20000, size=3000)
-    lens = rng.randint(1, 60, size=3000)
-    ivals = [(int(s), int(s + l)) for s, l in zip(starts, lens)]
-    df = spark.createDataFrame(ivals, "start long, end long")
-    got = {(r["start"], r["end"]) for r in union_intervals(df, adjacency=adjacency).collect()}
-    assert got == _naive_union(ivals, adjacency, 0)
-
-
-def test_union_intervals_no_global_window(spark):
-    """The seam pass must not funnel all ranges through one partition: the
-    physical plan may not contain a partition-less window (VERDICT #5)."""
-    df = spark.range(0, 100000).select(
-        (F.col("id") * 70).alias("start"), (F.col("id") * 70 + 50).alias("end")
-    )
-    out = union_intervals(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # every Window in the plan must be partitioned by something
-    for line in plan.splitlines():
-        if "Window" in line and "windowspecdefinition" in line.lower():
-            assert "pid" in line, f"unpartitioned window in plan: {line}"
-    assert out.count() == 100000  # gaps of 20 -> nothing merges
 
 
 def test_hot_window_skew_fixture(spark):

@@ -4,7 +4,6 @@ query may change what it computes).
 
 Covered here:
   * connected_components driver fast path vs the distributed star rounds
-  * intervals driver seam-merge vs the hierarchical distributed pass
   * cosine_topk numpy kernel vs the Catalyst HOF formula (exact doubles)
 """
 
@@ -12,7 +11,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -76,44 +74,6 @@ def test_driver_components_numpy_kernel():
         20: 20, 21: 20,
         100: 100, 101: 100, 102: 100,
     }
-
-
-@pytest.mark.parametrize("adjacency", [False, True])
-def test_union_intervals_driver_merge_parity(spark, monkeypatch, adjacency):
-    from deduplicate_text_datasets_spark.operators.intervals import (
-        union_intervals,
-    )
-
-    rows = [(i * 13 % 997, i * 13 % 997 + 5 + (i % 7)) for i in range(300)]
-    df = spark.createDataFrame(rows, "start long, end long")
-    fast = {
-        (r["start"], r["end"])
-        for r in union_intervals(df, adjacency=adjacency).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_INTERVALS_DRIVER_MAX", "0")
-    slow = {
-        (r["start"], r["end"])
-        for r in union_intervals(df, adjacency=adjacency).collect()
-    }
-    assert fast == slow and fast
-
-
-def test_coalesce_positions_driver_merge_parity(spark, monkeypatch):
-    from deduplicate_text_datasets_spark.operators.intervals import (
-        coalesce_positions,
-    )
-
-    pos = spark.createDataFrame(
-        [((i * 37) % 5000,) for i in range(800)], "pos long"
-    )
-    fast = sorted(
-        (r["start"], r["end"]) for r in coalesce_positions(pos, 25).collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_INTERVALS_DRIVER_MAX", "0")
-    slow = sorted(
-        (r["start"], r["end"]) for r in coalesce_positions(pos, 25).collect()
-    )
-    assert fast == slow and fast
 
 
 def test_cosine_topk_matches_hof_formula(spark):
