@@ -6,7 +6,8 @@ maximal byte ranges (main.rs:1505-1521). Spark-native: a range exchange on
 ``pos`` replaces the heap merge, and the fold is a per-partition vectorized
 kernel. Only each partition's first and last folded range can still merge
 across a partition seam (the edge rule, see :func:`coalesce_positions`), so
-the seam pass moves at most two ranges per partition through one task.
+the seam pass moves at most two ranges per partition through one task;
+when the folded ranges fit the driver guard they are merged on the driver.
 """
 
 from __future__ import annotations
@@ -75,11 +76,13 @@ def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
     partition) go through one single-partition ``_local_merge``, which
     also joins chains through partitions that hold a single range.
 
-    Size-adaptive: under the intervals guard the whole fold is one numpy
-    pass on the driver. The narrow input is persisted first, so the
+    Size-adaptive, at two sites under the one intervals guard: at most
+    that many positions are folded in one numpy pass on the driver; above
+    it, at most that many folded ranges are merged on the driver instead
+    of through the seam step. The narrow input is persisted first, so the
     (possibly expensive) lineage runs exactly once at either placement:
     for the probe's count and pull, or for the range partitioner's
-    sampling job and the exchange. The driver result keeps its ranges
+    sampling job and the exchange. A driver result keeps its ranges
     resident for the strike fast path (strike.apply_removals).
     """
     from ..plans.caching import driver_guard, probe, scoped_persist
@@ -102,8 +105,22 @@ def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
         edge[[0, -1]] = True
         yield pd.DataFrame({"start": ranges[:, 0], "end": ranges[:, 1], "edge": edge})
 
-    # two consumers: the final ranges and the edge ranges
+    # read by the merge probe, the final ranges and the edge ranges
     folded = scoped_persist(parts.mapInPandas(fold, EDGE_SCHEMA))
+    # A remove list is far shorter than its positions: under the guard,
+    # merge every folded range on the driver so the result stays resident
+    # for the strike fast path. Non-edge ranges are final, so this is the
+    # same merge as the seam step below.
+    pdf = probe(
+        "intervals.merge",
+        folded.select("start", "end"),
+        driver_guard("intervals"),
+        persist=False,
+    )
+    if pdf is not None:
+        arr = pdf.to_numpy(dtype=np.int64)
+        merged = _local_merge(arr[np.argsort(arr[:, 0])])
+        return _ranges_frame(positions.sparkSession, merged)
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks = [pdf.to_numpy(dtype=np.int64) for pdf in batches if len(pdf)]

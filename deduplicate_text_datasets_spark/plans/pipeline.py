@@ -218,7 +218,8 @@ class AcrossDedupResult:
     (and memoized) on first attribute access. The thunk form is what keeps
     the laziness contract now that coalesce_positions may run a bounded
     size probe when its plan is CONSTRUCTED (the ``intervals.coalesce``
-    probe): building e.g. ranges_a is deferred until someone reads it.
+    and ``intervals.merge`` probes): building e.g. ranges_a is deferred
+    until someone reads it.
     """
 
     _FIELDS = (

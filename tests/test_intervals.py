@@ -1,8 +1,9 @@
-"""coalesce_positions: the remove-list fold at both placements.
+"""coalesce_positions: the remove-list fold at each placement.
 
 The distributed plan folds each range partition of the positions and
 merges only each partition's first and last range (its edges) in one
-single-partition step. These tests pin it to the reference fold
+single-partition step, or merges every folded range on the driver when
+they fit the guard. These tests pin it to the reference fold
 (``pyref.collect_ranges``) at 1, 8 and 64 range partitions, on inputs
 whose seams cut clusters of touching windows.
 """
@@ -52,7 +53,10 @@ CASES = {
     "chain": _chain,
     "clusters": _clusters,
     "duplicates": _duplicates,
+    "empty": lambda: [],
     "single": lambda: [12345],
+    # an unsorted input with repeats and mixed gaps
+    "strided": lambda: [(i * 37) % 5000 for i in range(800)],
 }
 
 
@@ -86,15 +90,13 @@ def test_coalesce_positions_matches_collect_ranges(
     pos = spark.createDataFrame([(p,) for p in positions], "pos long")
     partitions(n_parts)
     assert _ranges(coalesce_positions(pos, L)) == want
+    # positions over the guard: the fold is distributed, and the folded
+    # ranges are merged on the driver whenever they fit the guard
+    guard = len(positions) - 1
+    monkeypatch.setenv("SPARK_GRAFT_INTERVALS_DRIVER_MAX", str(guard))
+    assert _ranges(coalesce_positions(pos, L)) == want
     monkeypatch.setenv("SPARK_GRAFT_INTERVALS_DRIVER_MAX", "0")
     assert _ranges(coalesce_positions(pos, L)) == want
-
-
-def test_coalesce_positions_empty_both_placements(spark, monkeypatch):
-    empty = spark.createDataFrame([], "pos long")
-    assert coalesce_positions(empty, L).collect() == []
-    monkeypatch.setenv("SPARK_GRAFT_INTERVALS_DRIVER_MAX", "0")
-    assert coalesce_positions(empty, L).collect() == []
 
 
 def test_coalesce_positions_plan_shape(spark, monkeypatch):
@@ -109,20 +111,3 @@ def test_coalesce_positions_plan_shape(spark, monkeypatch):
     assert plan.count("SinglePartition") == 1, plan
     assert out.count() == 100000  # gaps of 20 -> nothing merges
 
-
-def test_coalesce_positions_driver_merge_parity(spark, monkeypatch):
-    from deduplicate_text_datasets_spark.operators.intervals import (
-        coalesce_positions,
-    )
-
-    pos = spark.createDataFrame(
-        [((i * 37) % 5000,) for i in range(800)], "pos long"
-    )
-    fast = sorted(
-        (r["start"], r["end"]) for r in coalesce_positions(pos, 25).collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_INTERVALS_DRIVER_MAX", "0")
-    slow = sorted(
-        (r["start"], r["end"]) for r in coalesce_positions(pos, 25).collect()
-    )
-    assert fast == slow and fast
